@@ -117,7 +117,7 @@ def _dot(a: str, b: str) -> Column:
     addition order as DuckDB's ``list_dot_product`` loop, so cosine is
     bit-exact cross-engine (verified over all 124,750 sf0.01 pairs).
 
-    r14 measurement note: an index-fold spelling
+    Why not an index fold: the spelling
     (``aggregate(sequence(0, size-1), 0.0, (acc,i) -> acc+a[i]*b[i])``)
     looked 2.8x faster in a synthetic microbench but was 30-70% SLOWER
     across the real registered queries (similarity_topk_cosine 1.87 ->
@@ -148,6 +148,62 @@ def _embeddings(t: Catalog) -> DataFrame:
     return e.repartition(n_parts, "vec_id").withColumn(
         "nrm", F.sqrt(_dot("emb", "emb"))
     )
+
+
+def _cos_ab() -> Column:
+    """Raw (unquantized) cosine between the ``a`` and ``b`` sides of a pair
+    join over ``(vec_id, emb, nrm)`` frames."""
+    return _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
+
+
+def _pair_scan(e: DataFrame, *scores: Column) -> DataFrame:
+    """``(id_lo, id_hi, *scores)``: every unordered pair of ``e`` rows
+    exactly once, the exact O(n²) scan behind every all-pairs query.
+
+    ``scores`` read the two sides as ``a.*`` and ``b.*``.  The join keeps
+    ``a.vec_id < b.vec_id`` with ``b`` broadcast, so the repartitioned
+    probe side spreads the work over every core and each pair is scored
+    once (``_both_directions`` then emits both orientations; a union of two
+    directed scans would run the join and the folds twice).  Callers
+    quantize with ``r4`` in the NEXT projection: r4 references its input
+    several times, and an interpreted fold inlined into it would be
+    evaluated once per reference."""
+    a, b = e.alias("a"), e.alias("b")
+    return a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id")).select(
+        F.col("a.vec_id").alias("id_lo"), F.col("b.vec_id").alias("id_hi"), *scores
+    )
+
+
+def _both_directions(
+    half: DataFrame, *same: str, nb: str = "nb", **directed: tuple[str, str]
+) -> DataFrame:
+    """Explode each ``(id_lo, id_hi, ...)`` pair row into its two directed
+    rows ``(vec_id, <nb>, *same, *directed)`` from the one evaluated row.
+    ``same`` columns are symmetric and copied to both; each ``directed``
+    entry ``name=(lo_src, hi_src)`` takes ``lo_src`` on the row whose
+    vec_id is id_lo and ``hi_src`` on the row whose vec_id is id_hi."""
+
+    def side(i: int) -> Column:
+        ids = ("id_lo", "id_hi")
+        return F.struct(
+            F.col(ids[i]).alias("vec_id"),
+            F.col(ids[1 - i]).alias(nb),
+            *[F.col(c).alias(c) for c in same],
+            *[F.col(src[i]).alias(name) for name, src in directed.items()],
+        )
+
+    return half.select(F.explode(F.array(side(0), side(1))).alias("_p")).select("_p.*")
+
+
+def _vec_rank(
+    df: DataFrame, name: str, *order: Column | str, k: int | None = None, nb: str = "nb"
+) -> DataFrame:
+    """Add ``name`` = the BIGINT row_number of each row within its vec_id,
+    ordered by ``order`` then the ``nb`` id tie-break; with ``k``, keep
+    ranks <= k."""
+    w = W.partitionBy("vec_id").orderBy(*order, nb)
+    ranked = df.withColumn(name, F.row_number().over(w).cast("long"))
+    return ranked if k is None else ranked.filter(F.col(name) <= k)
 
 
 _DUCK_EMB = """
@@ -381,21 +437,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical keep = lower vec_id.  The exact-pairs spec; the ANN scale path
     is ``similarity_ivf_bucketed`` / the BRP-LSH rows-only query."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t)
-    a = e.alias("a")
-    b = e.alias("b")
     return (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
+        _pair_scan(_embeddings(t), _cos_ab().alias("_cos_raw"))
         .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias("_cos_raw"),
-        )
-        .select(
-            "vec_a",
-            "vec_b",
+            F.col("id_lo").alias("vec_a"),
+            F.col("id_hi").alias("vec_b"),
             r4("_cos_raw").alias("cos_sim"),
-            F.least(F.col("vec_a"), F.col("vec_b")).alias("keep_vec_id"),
+            F.col("id_lo").alias("keep_vec_id"),  # id_lo < id_hi
         )
         .filter(F.col("cos_sim") >= 0.4)
         .select("vec_a", "vec_b", "cos_sim", "keep_vec_id")
@@ -431,48 +479,13 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probe side is pre-partitioned (see ``_embeddings``) and the build
     side broadcast, so the pair scan parallelizes across all cores."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t)
-    a = e.alias("a")
-    b = e.alias("b")
-    # Each unordered pair's fold is evaluated ONCE: join on a < b, then emit
-    # BOTH directions from the same row with explode(array(struct, struct)).
-    # (A unionAll of two selects over the half-join re-executes the join and
-    # the fold per branch — Spark does not share un-persisted subplans across
-    # union arms, which doubles the physical n² work.)  Cosine is symmetric
-    # and the zip_with products commute elementwise, so both directions carry
-    # the identical double.  The fold is also materialized in an inner
-    # projection before rounding — r4(X) references X four times and
-    # interpreted HOFs get no reliable subexpression elimination.
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias("_cos_raw"),
-        )
-        .select("id_lo", "id_hi", r4("_cos_raw").alias("cos_sim"))
+    # Cosine is symmetric and the zip_with products commute elementwise, so
+    # both directions of a pair carry the identical double.
+    half = _pair_scan(_embeddings(t), _cos_ab().alias("_cos_raw")).select(
+        "id_lo", "id_hi", r4("_cos_raw").alias("cos_sim")
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"),
-                    F.col("id_hi").alias("neighbor_id"),
-                    F.col("cos_sim").alias("cos_sim"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"),
-                    F.col("id_lo").alias("neighbor_id"),
-                    F.col("cos_sim").alias("cos_sim"),
-                ),
-            )
-        ).alias("_p")
-    ).select("_p.vec_id", "_p.neighbor_id", "_p.cos_sim")
-    w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    pairs = _both_directions(half, "cos_sim", nb="neighbor_id")
+    return _vec_rank(pairs, "rank", F.col("cos_sim").desc(), k=5, nb="neighbor_id")
 
 
 _N_IVF_CENTROIDS = 8
@@ -511,70 +524,17 @@ def similarity_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 neighbors only within the bucket.
 
     Scale: candidate set shrinks from n to n/n_buckets per query — the
-    centroid table broadcasts, and the in-bucket search joins the
-    repartitioned query side against the BROADCAST coded side.  At 100 TB
-    the centroids come from MLlib KMeans instead; the plumbing is
-    identical.
-
-    r14 join-strategy retrofit (the ``similarity_ivfpq_nprobe`` r11
-    discipline, guide §2.5/§3.1): the bucket equi-join has only
-    {_N_IVF_CENTROIDS} distinct keys, so a shuffled join bottlenecks at
-    {_N_IVF_CENTROIDS} tasks regardless of cluster width; broadcasting
-    the database side and explicitly repartitioning the query side keeps
-    the O(n·bucket) cosine work at full parallelism (explicit partition
-    counts are exempt from AQE coalescing).  Measured 2.5x on the
-    in-bucket scan+rank at sf0.1."""
+    centroid table broadcasts, and the in-bucket search is ``_bucket_topk``.
+    At 100 TB the centroids come from MLlib KMeans instead; the plumbing
+    is identical."""
     t = Catalog(spark, sf_dir)
     e = _embeddings(t)
-    c = (
-        e.filter(F.col("vec_id") < _N_IVF_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("emb").alias("cemb"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
     assign = (
-        e.crossJoin(F.broadcast(c))
-        .select(
-            "vec_id",
-            "centroid_id",
-            (_dot("emb", "cemb") / (F.col("nrm") * F.col("cnrm"))).alias("_ccos_raw"),
-        )
-        .select("vec_id", "centroid_id", r4("_ccos_raw").alias("ccos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "centroid_id")
-            ),
-        )
+        _ivf_ranks(e)
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("centroid_id").alias("bucket_id"))
     )
-    ea = e.join(assign, "vec_id")
-    a = ea.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).alias("a")
-    b = ea.alias("b")
-    pairs = (
-        a.join(
-            F.broadcast(b),
-            (F.col("a.bucket_id") == F.col("b.bucket_id"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("a.bucket_id").alias("bucket_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias("_cos_raw"),
-        )
-        .select("vec_id", "bucket_id", "neighbor_id", r4("_cos_raw").alias("cos_sim"))
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-    )
+    return _bucket_topk(e.join(assign, "vec_id"), 3)
 
 
 @register("dedup_minhash_mllib")
@@ -640,12 +600,13 @@ def _bucket_topk(ea: DataFrame, k: int) -> DataFrame:
     n·(bucket size) instead of n² — the IVF search step shared by the
     deterministic and KMeans-centroid variants.
 
-    r14 join-strategy retrofit (guide §2.5/§3.1, the
-    ``similarity_ivfpq_nprobe`` discipline): the bucket equi-join has
-    only n_buckets distinct keys, so a shuffled join caps at n_buckets
-    tasks; repartition the query side on vec_id and BROADCAST the coded
-    side so the cosine scan runs at full parallelism and the downstream
-    vec_id window reuses the same partitioning (no extra exchange)."""
+    Join strategy: the bucket equi-join has only n_buckets distinct keys,
+    so a shuffled join caps at n_buckets tasks whatever the cluster width;
+    repartition the query side on vec_id (explicit partition counts are
+    exempt from AQE coalescing) and BROADCAST the coded side so the cosine
+    scan runs at full parallelism and the downstream vec_id window reuses
+    the same partitioning (no extra exchange).  Measured 2.5x on the
+    in-bucket scan+rank at sf0.1 against the shuffled join."""
     a = ea.repartition(
         ea.sparkSession.sparkContext.defaultParallelism, "vec_id"
     ).alias("a")
@@ -660,15 +621,11 @@ def _bucket_topk(ea: DataFrame, k: int) -> DataFrame:
             F.col("a.vec_id").alias("vec_id"),
             F.col("a.bucket_id").alias("bucket_id"),
             F.col("b.vec_id").alias("neighbor_id"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias("_cos_raw"),
+            _cos_ab().alias("_cos_raw"),
         )
         .select("vec_id", "bucket_id", "neighbor_id", r4("_cos_raw").alias("cos_sim"))
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _vec_rank(pairs, "rank", F.col("cos_sim").desc(), k=k, nb="neighbor_id")
 
 
 @register("similarity_ivf_kmeans")
@@ -727,38 +684,11 @@ def similarity_pca_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", vector_to_array("pv").alias("emb"))
         .withColumn("nrm", F.sqrt(_dot("emb", "emb")))
     )
-    a = red.alias("a")
-    b = red.alias("b")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias("_cos_raw"),
-        )
-        .select("id_lo", "id_hi", r4("_cos_raw").alias("cos_sim"))
+    half = _pair_scan(red, _cos_ab().alias("_cos_raw")).select(
+        "id_lo", "id_hi", r4("_cos_raw").alias("cos_sim")
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"),
-                    F.col("id_hi").alias("neighbor_id"),
-                    F.col("cos_sim").alias("cos_sim"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"),
-                    F.col("id_lo").alias("neighbor_id"),
-                    F.col("cos_sim").alias("cos_sim"),
-                ),
-            )
-        ).alias("_p")
-    ).select("_p.vec_id", "_p.neighbor_id", "_p.cos_sim")
-    w = W.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    pairs = _both_directions(half, "cos_sim", nb="neighbor_id")
+    return _vec_rank(pairs, "rank", F.col("cos_sim").desc(), k=5, nb="neighbor_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3732,51 +3662,30 @@ def dedup_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     more buckets — identical plumbing."""
     t = Catalog(spark, sf_dir)
     e = _embeddings(t)
-    c = e.filter(F.col("vec_id") < _N_IVF_CENTROIDS).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("emb").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
     assign = (
-        e.crossJoin(F.broadcast(c))
-        .select(
-            "vec_id",
-            "centroid_id",
-            (_dot("emb", "cemb") / (F.col("nrm") * F.col("cnrm"))).alias("_ccos_raw"),
-        )
-        # quantize in a SEPARATE projection: r4's isnan/signum/floor each
-        # reference their input once, so inlining the 64-dim fold directly
-        # would expand it 4x (round-7 lesson)
-        .select("vec_id", "centroid_id", r4("_ccos_raw").alias("ccos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "centroid_id")
-            ),
-        )
+        _ivf_ranks(e)
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("centroid_id").alias("bucket_id"), "ccos")
     )
     ea = e.join(assign, "vec_id")
-    u = ea.alias("u")
-    v = ea.alias("v")
-    # each unordered pair's 64-dim cosine fold is computed ONCE (u < v);
-    # both directed orientations are then emitted by a 2-element explode —
-    # halves the dominant cost vs a u != v join (cosine is symmetric)
+    a = ea.alias("a")
+    b = ea.alias("b")
+    # Each unordered in-bucket pair's cosine fold is computed ONCE (a < b)
+    # and both orientations come from ``_both_directions``.  The scan stays
+    # inline instead of using ``_pair_scan``: it is a bucket-keyed equi-join,
+    # not the broadcast all-pairs scan.
     half = (
-        u.join(
-            v,
-            (F.col("u.bucket_id") == F.col("v.bucket_id"))
-            & (F.col("u.vec_id") < F.col("v.vec_id")),
+        a.join(
+            b,
+            (F.col("a.bucket_id") == F.col("b.bucket_id"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col("u.vec_id").alias("uid"),
-            F.col("u.ccos").alias("cu"),
-            F.col("v.vec_id").alias("vid"),
-            F.col("v.ccos").alias("cv"),
-            (
-                _dot("u.emb", "v.emb") / (F.col("u.nrm") * F.col("v.nrm"))
-            ).alias("_cs_raw"),
+            F.col("a.vec_id").alias("id_lo"),
+            F.col("a.ccos").alias("c_lo"),
+            F.col("b.vec_id").alias("id_hi"),
+            F.col("b.ccos").alias("c_hi"),
+            _cos_ab().alias("_cs_raw"),
         )
         # threshold on the RAW cosine with the algebraically identical
         # integer predicate (floor(x*1e4+0.5) >= 3000  <=>  x*1e4+0.5 >=
@@ -3785,33 +3694,17 @@ def dedup_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # isnan/signum/floor tree; the quantized cs is then projected over
         # only the surviving pairs
         .filter(F.col("_cs_raw") * 10000.0 + 0.5 >= _SEMDEDUP_TAU * 10000.0)
-        .select("uid", "cu", "vid", "cv", r4("_cs_raw").alias("cs"))
+        .select("id_lo", "c_lo", "id_hi", "c_hi", r4("_cs_raw").alias("cs"))
         .filter(F.col("cs") >= _SEMDEDUP_TAU)
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("uid").alias("uid"),
-                    F.col("cu").alias("cu"),
-                    F.col("vid").alias("vid"),
-                    F.col("cv").alias("cv"),
-                ),
-                F.struct(
-                    F.col("vid").alias("uid"),
-                    F.col("cv").alias("cu"),
-                    F.col("uid").alias("vid"),
-                    F.col("cu").alias("cv"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    nn = pairs.groupBy("uid").agg(
+    # cu = the row's own centroid-cosine, cv = its near-duplicate's
+    pairs = _both_directions(half, cu=("c_lo", "c_hi"), cv=("c_hi", "c_lo"))
+    nn = pairs.groupBy("vec_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_near"),
         F.max(
             F.when(
                 (F.col("cv") < F.col("cu"))
-                | ((F.col("cv") == F.col("cu")) & (F.col("vid") < F.col("uid"))),
+                | ((F.col("cv") == F.col("cu")) & (F.col("nb") < F.col("vec_id"))),
                 1,
             ).otherwise(0)
         )
@@ -3819,7 +3712,7 @@ def dedup_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dropped"),
     )
     return (
-        assign.join(nn, assign.vec_id == nn.uid, "left")
+        assign.join(nn, "vec_id", "left")
         .select(
             "vec_id",
             "bucket_id",
@@ -4500,9 +4393,6 @@ def similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"n{d}")
         )
     e = e.select(*sel)
-    a, b = e.alias("a"), e.alias("b")
-    # One evaluation per unordered pair, both directions emitted from the
-    # same row (cosine is symmetric) — the similarity_topk_cosine pattern.
     # The four prefix dot products come from ONE product array with
     # chained partial sums at 8/16/32/64: a left fold of the next slice
     # seeded with the previous checkpoint IS the longer prefix fold's
@@ -4515,12 +4405,8 @@ def similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col(f"a.n{d}").alias(f"an{d}") for d in dims + [64]
     ] + [F.col(f"b.n{d}").alias(f"bn{d}") for d in dims + [64]]
     half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            F.expr("zip_with(a.emb, b.emb, (x,y) -> x*y)").alias("prods"),
-            *norms,
+        _pair_scan(
+            e, F.expr("zip_with(a.emb, b.emb, (x,y) -> x*y)").alias("prods"), *norms
         )
         .withColumn(
             "s8",
@@ -4549,29 +4435,9 @@ def similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    cs = [F.col(f"c{d}").alias(f"c{d}") for d in dims + [64]]
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"), F.col("id_hi").alias("nb"), *cs
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"), F.col("id_lo").alias("nb"), *cs
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    ranked = pairs.select(
-        "vec_id",
-        "nb",
-        *[
-            F.row_number()
-            .over(W.partitionBy("vec_id").orderBy(F.col(f"c{d}").desc(), "nb"))
-            .alias(f"r{d}")
-            for d in dims + [64]
-        ],
-    )
+    ranked = _both_directions(half, *[f"c{d}" for d in dims + [64]])
+    for d in dims + [64]:
+        ranked = _vec_rank(ranked, f"r{d}", F.col(f"c{d}").desc())
     per = ranked.groupBy("vec_id").agg(
         *[
             F.sum(
@@ -4664,49 +4530,19 @@ def similarity_hamming_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     packs the 64 bits into one BIGINT and XOR/popcounts — the ranking
     this query certifies is identical."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t)
-    a, b = e.alias("a"), e.alias("b")
     ham = F.expr(
         "aggregate(zip_with(a.emb, b.emb,"
         " (x, y) -> case when (x > 0d) = (y > 0d) then 0 else 1 end),"
         " 0, (acc, v) -> acc + v)"
     ).cast("long")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            ham.alias("ham"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias(
-                "_cos"
-            ),
-        )
-        .select("id_lo", "id_hi", "ham", r4("_cos").alias("c64"))
-    )
-    # Hamming and cosine are both symmetric: emit both directions from the
-    # one evaluated row (the similarity_topk_cosine pattern)
-    fields = [F.col("ham").alias("ham"), F.col("c64").alias("c64")]
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"), F.col("id_hi").alias("nb"), *fields
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"), F.col("id_lo").alias("nb"), *fields
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    ranked = pairs.select(
-        "vec_id",
-        "ham",
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy("ham", "nb"))
-        .alias("rh"),
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy(F.col("c64").desc(), "nb"))
-        .alias("rc"),
+    half = _pair_scan(
+        _embeddings(t), ham.alias("ham"), _cos_ab().alias("_cos")
+    ).select("id_lo", "id_hi", "ham", r4("_cos").alias("c64"))
+    # Hamming and cosine are both symmetric
+    ranked = _vec_rank(
+        _vec_rank(_both_directions(half, "ham", "c64"), "rh", "ham"),
+        "rc",
+        F.col("c64").desc(),
     )
     h = ranked.groupBy("vec_id").agg(
         F.sum(F.when((F.col("rh") <= 5) & (F.col("rc") <= 5), 1).otherwise(0))
@@ -5643,7 +5479,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the greedy loop runs ENTIRELY on the executors as one SQL
     ``aggregate`` fold per query (the ``tokenizer_unigram_encode``
-    discipline, r14) over a CANDIDATES-ONLY state — {_MMR_TOPC}
+    discipline) over a CANDIDATES-ONLY state — {_MMR_TOPC}
     candidates per query plus their pairwise sims as a bounded map from
     one lookup join — so the whole selection is a single groupBy +
     projection, never a corpus rescan and never {_MMR_K} driver round
@@ -5656,42 +5492,11 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking composes downstream of retrieval."""
     t = Catalog(spark, sf_dir)
     e = _embeddings(t).localCheckpoint()
-    a, b = e.alias("a"), e.alias("b")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (
-                _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("_co"),
-        )
-        .select("id_lo", "id_hi", r4("_co").alias("co"))
+    half = _pair_scan(e, _cos_ab().alias("_co")).select(
+        "id_lo", "id_hi", r4("_co").alias("co")
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"),
-                    F.col("id_hi").alias("nb"),
-                    F.col("co").alias("co"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"),
-                    F.col("id_lo").alias("nb"),
-                    F.col("co").alias("co"),
-                ),
-            )
-        ).alias("x")
-    ).select("x.*")
     cand = (
-        pairs.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("co").desc(), "nb")
-            ),
-        )
-        .filter(F.col("rn") <= _MMR_TOPC)
+        _vec_rank(_both_directions(half, "co"), "rn", F.col("co").desc(), k=_MMR_TOPC)
         .select("vec_id", "nb", F.col("co").alias("rel"))
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .localCheckpoint()
@@ -6198,42 +6003,15 @@ def embedding_int8_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "rec", F.expr("transform(emb, x -> mn + round((x - mn) / scale) * scale)")
     ).withColumn("rnrm", F.sqrt(_dot("rec", "rec")))
-    a, b = e.alias("a"), e.alias("b")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (_dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))).alias(
-                "_co"
-            ),
-            (_dot("a.rec", "b.rec") / (F.col("a.rnrm") * F.col("b.rnrm"))).alias(
-                "_cq"
-            ),
-        )
-        .select("id_lo", "id_hi", r4("_co").alias("co"), r4("_cq").alias("cq"))
-    )
-    fields = [F.col("co").alias("co"), F.col("cq").alias("cq")]
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"), F.col("id_hi").alias("nb"), *fields
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"), F.col("id_lo").alias("nb"), *fields
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    ranked = pairs.select(
-        "vec_id",
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy(F.col("co").desc(), "nb"))
-        .alias("ro"),
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy(F.col("cq").desc(), "nb"))
-        .alias("rq"),
+    half = _pair_scan(
+        e,
+        _cos_ab().alias("_co"),
+        (_dot("a.rec", "b.rec") / (F.col("a.rnrm") * F.col("b.rnrm"))).alias("_cq"),
+    ).select("id_lo", "id_hi", r4("_co").alias("co"), r4("_cq").alias("cq"))
+    ranked = _vec_rank(
+        _vec_rank(_both_directions(half, "co", "cq"), "ro", F.col("co").desc()),
+        "rq",
+        F.col("cq").desc(),
     )
     h = ranked.groupBy("vec_id").agg(
         F.sum(F.when((F.col("ro") <= 5) & (F.col("rq") <= 5), 1).otherwise(0))
@@ -6260,19 +6038,20 @@ _PQ_M, _PQ_D, _PQ_K = 8, 8, 16  # subspaces × dims/subspace × codebook size
 
 
 def _ivf_ranks(e: DataFrame) -> DataFrame:
-    """(vec_id, centroid_id, rn): every vector's full cosine ranking of
-    the {_N_IVF_CENTROIDS} deterministic coarse centroids (r4-quantized
-    cosine desc, centroid-id tie-break) — ONE definition of the
-    assignment rule shared by ``similarity_ivfpq_topk`` (rn = 1 is the
-    bucket) and ``similarity_ivf_nprobe_sweep`` (rn <= nprobe is the
-    probe set), so a quantization or tie change can never desync
-    them."""
+    """(vec_id, centroid_id, ccos, rn): every vector's full cosine ranking
+    of the {_N_IVF_CENTROIDS} deterministic coarse centroids (the vectors
+    with vec_id < {_N_IVF_CENTROIDS}; r4-quantized cosine ``ccos`` desc,
+    centroid-id tie-break) — ONE definition of the assignment rule.  rn = 1
+    is a vector's bucket (``similarity_ivf_bucketed``,
+    ``dedup_semdedup_ivf``, ``similarity_ivfpq_topk``) and rn <= nprobe its
+    probe set (``similarity_ivf_nprobe_sweep``, ``similarity_ivfpq_nprobe``),
+    so a quantization or tie change can never desync them."""
     c = e.filter(F.col("vec_id") < _N_IVF_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
     )
-    return (
+    scored = (
         e.crossJoin(F.broadcast(c))
         .select(
             "vec_id",
@@ -6282,62 +6061,20 @@ def _ivf_ranks(e: DataFrame) -> DataFrame:
             ),
         )
         .select("vec_id", "centroid_id", r4("_ccos_raw").alias("ccos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(
-                    F.col("ccos").desc(), "centroid_id"
-                )
-            ),
-        )
-        .select("vec_id", "centroid_id", "rn")
     )
+    return _vec_rank(scored, "rn", F.col("ccos").desc(), nb="centroid_id")
 
 
-def _exact_top3(e: DataFrame) -> DataFrame:
-    """(vec_id, nb): exact cosine top-3 over the whole corpus from ONE
-    half-pair scan (each unordered pair evaluated once, exploded to both
-    directions) — the documented sampled-oracle regime both index evals
-    measure themselves against, extracted so their ground truth is one
-    definition."""
-    a, b = e.alias("a"), e.alias("b")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (
-                _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("_co"),
-        )
-        .select("id_lo", "id_hi", r4("_co").alias("co"))
+def _exact_topk(e: DataFrame, k: int) -> DataFrame:
+    """(vec_id, nb, cos, rn): every vector's exact r4-cosine top-k over the
+    whole corpus from ONE ``_pair_scan`` — the documented sampled-oracle
+    ground truth that the IVF, PQ and graph indexes measure themselves
+    against, one definition for all of them.  The O(n²) pair stream feeds
+    exactly one window pass and is never materialized."""
+    half = _pair_scan(e, _cos_ab().alias("_co")).select(
+        "id_lo", "id_hi", r4("_co").alias("cos")
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"),
-                    F.col("id_hi").alias("nb"),
-                    F.col("co").alias("co"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"),
-                    F.col("id_lo").alias("nb"),
-                    F.col("co").alias("co"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    return (
-        pairs.withColumn(
-            "ro",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("co").desc(), "nb")
-            ),
-        )
-        .filter(F.col("ro") <= 3)
-        .select("vec_id", "nb")
-    )
+    return _vec_rank(_both_directions(half, "cos"), "rn", F.col("cos").desc(), k=k)
 
 
 def _pq_codes(vecs: DataFrame, vcol: str, tag: str | None = None) -> DataFrame:
@@ -6574,59 +6311,23 @@ def embedding_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mseq"),
     )
-    a, b = r.alias("a"), r.alias("b")
-    # raw dots in one projection, r4 in the next: r4 references its input
-    # three times (isnan/signum/abs) and CollapseProject would re-evaluate
-    # an inlined interpreted fold each time (the int8 twin's pattern)
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (
-                _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("_co"),
-            (
-                F.col("a.qq") - 2 * _dot("a.emb", "b.rec") + F.col("b.rr")
-            ).alias("_adc_ab"),
-            (
-                F.col("b.qq") - 2 * _dot("b.emb", "a.rec") + F.col("a.rr")
-            ).alias("_adc_ba"),
-        )
-        .select(
-            "id_lo",
-            "id_hi",
-            r4("_co").alias("co"),
-            r4("_adc_ab").alias("adc_ab"),
-            r4("_adc_ba").alias("adc_ba"),
-        )
+    # ADC is asymmetric (full-precision query, reconstructed database
+    # vector): each pair row carries both orientations' distances
+    half = _pair_scan(
+        r,
+        _cos_ab().alias("_co"),
+        (F.col("a.qq") - 2 * _dot("a.emb", "b.rec") + F.col("b.rr")).alias("_adc_ab"),
+        (F.col("b.qq") - 2 * _dot("b.emb", "a.rec") + F.col("a.rr")).alias("_adc_ba"),
+    ).select(
+        "id_lo",
+        "id_hi",
+        r4("_co").alias("co"),
+        r4("_adc_ab").alias("adc_ab"),
+        r4("_adc_ba").alias("adc_ba"),
     )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("vec_id"),
-                    F.col("id_hi").alias("nb"),
-                    F.col("co").alias("co"),
-                    F.col("adc_ab").alias("adc"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("vec_id"),
-                    F.col("id_lo").alias("nb"),
-                    F.col("co").alias("co"),
-                    F.col("adc_ba").alias("adc"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    ranked = pairs.select(
-        "vec_id",
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy(F.col("co").desc(), "nb"))
-        .alias("ro"),
-        F.row_number()
-        .over(W.partitionBy("vec_id").orderBy("adc", "nb"))
-        .alias("ra"),
+    pairs = _both_directions(half, "co", adc=("adc_ab", "adc_ba"))
+    ranked = _vec_rank(
+        _vec_rank(pairs, "ro", F.col("co").desc()), "ra", "adc"
     )
     h = ranked.groupBy("vec_id").agg(
         F.sum(F.when((F.col("ro") <= 5) & (F.col("ra") <= 5), 1).otherwise(0))
@@ -6896,10 +6597,10 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rnorm4").cast("long").alias("sq"),
         F.count(F.lit(1)).cast("long").alias("cn"),
     )
-    ex3 = _exact_top3(e)
-    # r14 join-strategy retrofit (guide §2.5/§3.1): the bucket pair join
-    # keys on {_N_IVF_CENTROIDS} distinct bucket_ids — a shuffled join
-    # caps the whole ADC scan at {_N_IVF_CENTROIDS} tasks.  Broadcast the
+    ex3 = _exact_topk(e, 3).select("vec_id", "nb")
+    # Join strategy: the bucket pair join keys on {_N_IVF_CENTROIDS}
+    # distinct bucket_ids — a shuffled join caps the whole ADC scan at
+    # {_N_IVF_CENTROIDS} tasks.  Broadcast the
     # coded database side instead: the stream (query) side keeps its
     # vec_id partitioning from the r⋈assign join of two checkpointed
     # vec_id-partitioned inputs, so both downstream rank windows reuse it
@@ -6928,41 +6629,27 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "nb", r4("_adc").alias("adc"), r4("_adcr").alias("adcr"))
     )
-    # r14 2nd pass: bp feeds TWO rank windows, and after the broadcast
-    # retrofit there is no exchange under them for ReusedExchange to
-    # dedup — so the whole ADC pair scan (two _dot folds per pair) ran
-    # once per branch inside the final job.  One eager checkpoint on bp
+    # bp feeds TWO rank windows, and with the database side broadcast
+    # there is no exchange under them for ReusedExchange to dedup — so
+    # the whole ADC pair scan (two _dot folds per pair) would run once
+    # per branch inside the final job.  One eager checkpoint on bp
     # makes it a single scan that both branches read back; the branch
     # windows (different orderBys) still sort CONCURRENTLY inside the
     # final job.  (The no-extra-job alternative — chaining the two
     # row_numbers as consecutive Window operators over one child —
-    # measured 40% SLOWER at sf0.1 (13.9 vs 9.0 s same-session stash
-    # A/B): it serializes the two full sorts that the duplicated
-    # branches ran in parallel, and at sf0.1 the scan is cheaper than a
+    # measured 40% SLOWER at sf0.1 (13.9 vs 9.0 s, same-session A/B): it
+    # serializes the two full sorts that the duplicated branches run in
+    # parallel, and at sf0.1 the scan is cheaper than a
     # sort.  The checkpoint keeps the scan single AND the sorts
     # parallel.)
     bp = bp.repartition(
         spark.sparkContext.defaultParallelism, "vec_id"
     ).localCheckpoint()
-    pq3 = (
-        bp.withColumn(
-            "rq",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy("adc", "nb")
-            ),
-        )
-        .filter(F.col("rq") <= 3)
-        .select("vec_id", "nb", F.lit(1).alias("hit"))
+    pq3 = _vec_rank(bp, "rq", "adc", k=3).select(
+        "vec_id", "nb", F.lit(1).alias("hit")
     )
-    pq3r = (
-        bp.withColumn(
-            "rq",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy("adcr", "nb")
-            ),
-        )
-        .filter(F.col("rq") <= 3)
-        .select("vec_id", "nb", F.lit(1).alias("hit_r"))
+    pq3r = _vec_rank(bp, "rq", "adcr", k=3).select(
+        "vec_id", "nb", F.lit(1).alias("hit_r")
     )
     h = (
         ex3.join(pq3, ["vec_id", "nb"], "left")
@@ -7107,7 +6794,7 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bsz = assign.groupBy("bucket_id").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    ex3 = _exact_top3(e)
+    ex3 = _exact_topk(e, 3).select("vec_id", "nb")
     # the probe rank of each exact neighbor's home bucket, per query
     hx = (
         ex3.join(
@@ -7295,7 +6982,7 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
 
-    # r14 (guide §2.6): the three eager materializations after e — the PQ
+    # The three eager materializations after e — the PQ
     # reconstruction, the coarse ranking, and the O(n²) sampled-oracle
     # exact scan — are INDEPENDENT pipelines over the same checkpointed
     # input; submit them from two driver threads (the _gann_nnd_compare
@@ -7314,7 +7001,8 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpointed: the O(n²) sampled-oracle scan is read by one hits
         # join per probe level and must not recompute per branch
         return (
-            _exact_top3(e)
+            _exact_topk(e, 3)
+            .select("vec_id", "nb")
             .repartition(spark.sparkContext.defaultParallelism, "vec_id")
             .localCheckpoint()
         )
@@ -7389,13 +7077,7 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.explode(F.expr("filter(top, x -> x is not null)")).alias("x")
     ).select("vec_id", "x.prank", "x.adc", "x.nb")
     per_np = [
-        tops.filter(F.col("prank") <= np)
-        .withColumn(
-            "rq2",
-            F.row_number().over(W.partitionBy("vec_id").orderBy("adc", "nb")),
-        )
-        .filter(F.col("rq2") <= 3)
-        .select(
+        _vec_rank(tops.filter(F.col("prank") <= np), "rq2", "adc", k=3).select(
             F.lit(np).cast("long").alias("nprobe"), "vec_id", "nb"
         )
         for np in _NPROBES
@@ -8495,61 +8177,6 @@ def _gann_walk(
 _gann_walk.__doc__ = _gann_walk.__doc__.format(beam=_GANN_BEAM, hops=_GANN_HOPS)
 
 
-def _gann_exact_ranked(e: DataFrame) -> DataFrame:
-    """The exact degree-{deg} ranked-edge table (vec_id, nb, cos, rn) from
-    ONE all-pairs scan — the documented oracle regime for graph builds.
-    The O(n²) pair stream is consumed by EXACTLY ONE window pass and
-    never materialized: the ranked-edge table (32k rows at sf0.1) is the
-    only checkpoint, feeding the graph (rn <= deg), the exact top-3
-    ground truth (rn <= 3 — a subset, since deg >= 3), AND the
-    entry-point aggregate.  Each unordered pair is scored ONCE and
-    exploded into both directions."""
-    a, b = e.alias("a"), e.alias("b")
-    half = (
-        a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_lo"),
-            F.col("b.vec_id").alias("id_hi"),
-            (
-                _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("_co"),
-        )
-        .select("id_lo", "id_hi", r4("_co").alias("co"))
-    )
-    p = (
-        half.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("id_lo").alias("vec_id"),
-                        F.col("id_hi").alias("nb"),
-                        F.col("co").alias("cos"),
-                    ),
-                    F.struct(
-                        F.col("id_hi").alias("vec_id"),
-                        F.col("id_lo").alias("nb"),
-                        F.col("co").alias("cos"),
-                    ),
-                )
-            ).alias("x")
-        )
-        .select("x.*")
-    )
-    return (
-        p.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nb")
-            ),
-        )
-        .filter(F.col("rn") <= _GANN_DEG)
-        .localCheckpoint()
-    )
-
-
-_gann_exact_ranked.__doc__ = _gann_exact_ranked.__doc__.format(deg=_GANN_DEG)
-
-
 def _gann_entry_hub(edges: DataFrame) -> int:
     """1-row entry-point collect (the bounded ANALYZE exception): the hub
     whose kept neighborhood is tightest — argmax over per-node BIGINT
@@ -8656,7 +8283,10 @@ def similarity_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a navigable neighbor graph instead of a full scan."""
     t = Catalog(spark, sf_dir)
     e = _embeddings(t).localCheckpoint()
-    ranked = _gann_exact_ranked(e)
+    # the exact ranked-edge table is the only checkpoint: it feeds the
+    # graph (rn <= deg), the top-3 ground truth (rn <= 3, a subset since
+    # deg >= 3) and the entry-hub aggregate
+    ranked = _exact_topk(e, _GANN_DEG).localCheckpoint()
     g = ranked.select(F.col("vec_id").alias("node"), "nb")
     exact3 = ranked.filter(F.col("rn") <= 3).select("vec_id", "nb")
     entry_id = _gann_entry_hub(ranked)
@@ -8665,8 +8295,7 @@ def similarity_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hop (which would reshuffle 4M rows per hop at sf0.1): the dot and
     # divide commute elementwise, so these are the identical r4 doubles
     # the pair scan produced — the search_mmr_rerank precedent.  The walk
-    # itself is the shared ``_gann_walk`` kernel (r13: single-sourced with
-    # the NND-graph search).
+    # itself is the ``_gann_walk`` kernel shared with the NND-graph search.
     qids = e.select(F.col("vec_id").alias("qid"))
     visited = _gann_walk(e, g, qids, entry_id)
     ann3 = (
@@ -8826,7 +8455,7 @@ def _nnd_build(
         .alias("h"),
     )
     a, b = hk.alias("a"), hk.alias("b")
-    g = (
+    mates = (
         a.join(
             F.broadcast(b),
             (F.col("b.h") % _NND_BUCKETS == F.col("a.h") % _NND_BUCKETS)
@@ -8849,13 +8478,9 @@ def _nnd_build(
                 )
             ),
         )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy("ph", "nb")
-            ),
-        )
-        .filter(F.col("rn") <= _NND_DEG)
+    )
+    g = (
+        _vec_rank(mates, "rn", "ph", k=_NND_DEG)
         .select("vec_id", "nb")
         .localCheckpoint()
     )
@@ -8907,12 +8532,10 @@ def _nnd_build(
             # top-k window's partitioning (no extra exchange)
             .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         )
-        # r15 fusion (guide §1.2/§2.4 job-count discipline): the candidate
-        # table and the refined graph were TWO eager checkpoints per round;
-        # n_scored (candidates per node) now rides the top-k window's own
-        # exchange as an unordered count-over-partition, so each round is
-        # ONE eager job and the window reuses the repartition's vec_id
-        # partitioning (the old post-checkpoint window paid a fresh
+        # One eager job per round: n_scored (candidates per node) rides the
+        # top-k window's own exchange as an unordered count-over-partition,
+        # and the window reuses the repartition's vec_id partitioning (a
+        # window after a separate candidate checkpoint would pay a fresh
         # exchange — ExistingRDD loses partitioning info).  n_scored is
         # identical: _score is an inner broadcast join on keys that always
         # resolve (both sides are the embedding table), so scored rows are
@@ -8920,22 +8543,14 @@ def _nnd_build(
         # 1), so no (vec_id, n_scored) pair is lost by the rn filter.
         # keep cos on the refined edges: the final round's graph feeds the
         # entry-hub aggregate of the composed search query
+        # count window FIRST (= below the rank window in the plan): if the
+        # optimizer ever inserts a WindowGroupLimit under the rn-filter,
+        # the full-partition count has already been computed
+        scored = _score(cand).withColumn(
+            "n_scored", F.count(F.lit(1)).over(W.partitionBy("vec_id")).cast("long")
+        )
         g2 = (
-            _score(cand)
-            # count window FIRST (= below the rank window in the plan): if
-            # the optimizer ever inserts a WindowGroupLimit under the
-            # rn-filter, the full-partition count has already been computed
-            .withColumn(
-                "n_scored",
-                F.count(F.lit(1)).over(W.partitionBy("vec_id")).cast("long"),
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nb")
-                ),
-            )
-            .filter(F.col("rn") <= _NND_DEG)
+            _vec_rank(scored, "rn", F.col("cos").desc(), k=_NND_DEG)
             .select("vec_id", "nb", "cos", "n_scored")
             .localCheckpoint()
         )
@@ -9046,7 +8661,8 @@ def similarity_nndescent_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         rounds = rounds.unionByName(part)
     # TRUE top-deg graph on the vec_id % {mod} node SAMPLE — the
     # documented sampled-oracle regime: the EVAL side samples, the build
-    # side above ran on every node
+    # side above ran on every node.  Not ``_pair_scan``: the query side is
+    # the sample, so the scan is directed (sample -> all), not unordered.
     aa, bb = e.alias("a"), e.alias("b")
     p = (
         aa.filter(F.col("a.vec_id") % _NND_SAMPLE_MOD == 0)
@@ -9054,20 +8670,12 @@ def similarity_nndescent_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_id"),
             F.col("b.vec_id").alias("nb"),
-            (
-                _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("_co"),
+            _cos_ab().alias("_co"),
         )
         .select("vec_id", "nb", r4("_co").alias("cos"))
     )
     tg = (
-        p.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nb")
-            ),
-        )
-        .filter(F.col("rn") <= _NND_DEG)
+        _vec_rank(p, "rn", F.col("cos").desc(), k=_NND_DEG)
         .select("vec_id", F.col("nb").alias("tnb"))
         .localCheckpoint()
     )
@@ -9253,7 +8861,7 @@ def _gann_nnd_compare(spark: SparkSession, e: DataFrame) -> DataFrame:
     # scheduler pattern) — results are identical, wall-clock is max()
     # instead of sum()
     def _exact_side():
-        ranked = _gann_exact_ranked(e)
+        ranked = _exact_topk(e, _GANN_DEG).localCheckpoint()
         return ranked, _gann_entry_hub(ranked)
 
     def _nnd_side():

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults are sized by env vars so the same entrypoint works in
-tests (local[32]) and would carry to a real cluster (where most of these
-configs are cluster-managed).  Scale notes:
+Local-mode cores come from ``SPARK_GRAFT_CPUS`` and the driver heap from
+physical RAM, so the same entrypoint works in tests on any box and would
+carry to a real cluster (where most of these configs are cluster-managed).
+Scale notes:
 
 - AQE on: runtime partition coalescing + skew-join splitting — the reference's
   data is heavily skewed (top 5.3% of products carry 79.9% of volume, see
@@ -21,6 +22,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Half of physical RAM (MemTotal), capped at 16g.  In local mode the
+    driver JVM is the whole engine; a heap cap at or above physical RAM
+    lets the kernel OOM-kill it before Java's GC ever feels pressure, and
+    the other half is left for Python workers and the page cache."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(total_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -34,20 +44,14 @@ def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
         # NOTE: no session-wide nanosAsLong pin — catalog.read_events sets it
         # per-session only when the events footer actually says TIMESTAMP(NANOS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # no \r progress bars on stdout: they flood line-capture harnesses
-        # (the r5 driver lost bench.py's JSON line to them) and serve nothing
-        # in a headless run
+        # (a bench's one-line JSON result got lost in them) and serve
+        # nothing in a headless run
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # scale-dependent overrides stay parameterised (guide §1.2 step 3 /
-    # r14 verdict item 7): semicolon-separated k=v pairs, empty by default
-    # so the driver's bench session is unchanged unless explicitly tuned
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -3,6 +3,7 @@ from __future__ import annotations
 import threading
 
 import pytest
+from py4j.protocol import Py4JError
 
 # Pre-warm pyspark.ml's import graph ONCE, single-threaded: the operators
 # import MLlib lazily inside their bodies, and Python's per-module import
@@ -26,7 +27,32 @@ def spark():
 
     spark = get_spark("hackatonbigdata-tests")
     yield spark
-    spark.stop()
+    if _jvm_error(spark) is None:  # a dead JVM was already reported
+        spark.stop()
+
+
+def _jvm_error(spark) -> Exception | None:
+    """The py4j error of a trivial call into the driver JVM, or None."""
+    try:
+        spark._jvm.java.lang.System.nanoTime()
+    except (Py4JError, OSError) as exc:
+        return exc
+    return None
+
+
+@pytest.fixture(autouse=True)
+def _spark_alive(request):
+    """Before each test that uses ``spark``, ping the driver JVM over py4j.
+    A dead JVM (e.g. OOM-killed) ends the run once, naming the cause,
+    instead of failing every later test with ConnectionRefusedError."""
+    if "spark" in request.fixturenames:
+        exc = _jvm_error(request.getfixturevalue("spark"))
+        if exc is not None:
+            pytest.exit(
+                "Spark driver JVM is unreachable (killed or crashed?), "
+                f"ending the run: {exc!r}",
+                returncode=1,
+            )
 
 
 # --- shared query-DataFrame cache (r15 suite-runtime fix) -------------------

@@ -4,6 +4,8 @@ path) checked mechanically from the executed plan."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hackatonbigdata_spark.plans.audit import plan_stats, read_schema_columns
@@ -531,3 +533,28 @@ def test_round14_ops_bounded_shuffles(spark):
     assert s.shuffles <= 2, f"graph_modularity_weighted: got {s.shuffles}"
     s = plan_stats(QUERIES["graph_pagerank_weighted"](spark, SF_DIR))
     assert s.shuffles <= 5 * _PR_ITERS, f"graph_pagerank_weighted: got {s.shuffles}"
+
+
+# Exact all-pairs cosine queries: each unordered pair is joined once
+# (a.vec_id < b.vec_id, build side broadcast) and exploded to both
+# directions.  A union of two directed scans would plan two
+# BroadcastNestedLoopJoins and double the O(n²) work.
+ALL_PAIRS_COSINE = [
+    "dedup_embedding_cosine",
+    "similarity_topk_cosine",
+    "similarity_pca_cosine",
+    "similarity_matryoshka_eval",
+    "similarity_hamming_binary",
+    "embedding_int8_ranking",
+    "embedding_pq_eval",
+]
+
+
+@pytest.mark.parametrize("name", ALL_PAIRS_COSINE)
+def test_all_pairs_cosine_scores_each_pair_once(spark, name):
+    # a fresh DataFrame, not the sweep's shared one: once a query has run,
+    # the adaptive plan prints its final AND its initial plan
+    df = QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = len(re.findall(r"\bBroadcastNestedLoopJoin\b", plan))
+    assert n == 1, f"{name} plans {n} BroadcastNestedLoopJoins, want 1"

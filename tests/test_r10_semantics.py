@@ -573,7 +573,7 @@ def test_nprobe1_recall_equals_ivfpq_bucket_ceiling(spark):
     nprobe=1 and the composed index eval's bucket_ceiling3 are the SAME
     quantity by definition (fraction of exact top-3 neighbors whose home
     bucket is the query's top-1 bucket, floor-quantized the same way) —
-    both now derive from the shared _ivf_ranks/_exact_top3 helpers, and
+    both now derive from the shared _ivf_ranks/_exact_topk helpers, and
     this pin keeps any future divergence loud."""
     sweep = {
         r.nprobe: r
