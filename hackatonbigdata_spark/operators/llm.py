@@ -963,6 +963,10 @@ JOIN (SELECT component_id, count(*) AS n_docs FROM comp GROUP BY component_id) s
 """
 
 
+# min-label propagation rounds (= dup-graph diameter) before failing loudly
+_COMPONENTS_MAX_ROUNDS = 20
+
+
 @register("dedup_cluster_components", oracle=_COMPONENTS_ORACLE)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: connected components over the MinHash-LSH dup
@@ -1014,7 +1018,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     prev_sum = seed_obs.get["s"]
-    for rnd in range(1, 21):
+    for rnd in range(1, _COMPONENTS_MAX_ROUNDS + 1):
         prop = edges.join(labels, edges.db == labels.doc_id).select(
             F.col("da").alias("doc_id"), "component_id"
         )
@@ -1025,8 +1029,9 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # sync at rounds 1,3,5,...: the min-neighbor seed already IS the
         # fixpoint for diameter-2 clusters (the common case), so the first
-        # certification fires after a single join instead of two
-        if rnd % 2 == 1:
+        # certification fires after a single join instead of two; the
+        # last round is always certified
+        if rnd % 2 == 1 or rnd == _COMPONENTS_MAX_ROUNDS:
             obs = Observation()
             labels = labels.observe(
                 obs, F.sum("component_id").alias("s")
@@ -1035,6 +1040,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
+    else:
+        raise RuntimeError(
+            "min-label propagation did not reach a fixpoint in "
+            f"{_COMPONENTS_MAX_ROUNDS} rounds; raise _COMPONENTS_MAX_ROUNDS"
+        )
     sizes = labels.groupBy("component_id").agg(F.count(F.lit(1)).alias("component_size"))
     return (
         labels.join(F.broadcast(sizes), "component_id")
@@ -9812,18 +9822,8 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
             + beta * beta * _dot("mu", "mu")
         ).alias("nq1"),
     )
-    # r15 measurement note — probe-side respread tried and DROPPED: an
-    # isolated test (checkpointed probe side, 1 vs 32 partitions) showed
-    # the re-rank scan 3.8 vs 1.3 s, suggesting the mu-join's exchange
-    # coalesces the scan input; but a repartition(32, qid) here is
-    # REMOVED by the optimizer (the join output is already
-    # hashpartitioning(qid, 32) — the plan is bit-identical, verified in
-    # plans/r15/search_rocchio_feedback_top1job_{before,after}.txt), and
-    # the two real candidates (the no-op repartition; broadcast(mu) so
-    # the scan inherits e's partitioning with no coalescible exchange)
-    # both measured flat across interleaved 4-pass A/Bs (smj min 6.26 s
-    # vs bcast 6.73 s, distributions overlapping).  The query's wall is
-    # the 4-job sequential chain + session noise, not scan parallelism.
+    # no repartition("qid") before the re-rank scan: the mu join already
+    # hash-partitions by qid, so the optimizer removes it as a no-op
     w1 = W.partitionBy("qid").orderBy(F.col("s1").desc(), F.col("neighbor_id"))
     top1 = (
         qf.join(F.broadcast(b), F.col("qid") != F.col("neighbor_id"))

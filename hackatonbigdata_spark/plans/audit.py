@@ -25,9 +25,20 @@ class PlanStats:
     has_python_udf: bool
 
 
+def _final_plan(df: DataFrame) -> str:
+    """The executed physical plan as text: the final plan once an adaptive
+    query has run, the current one before.  The adaptive node's own text
+    also prints the Initial Plan after a run, which would count every
+    operator twice."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
 def plan_stats(df: DataFrame) -> PlanStats:
     """Summarize the executed (post-AQE-planning) physical plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _final_plan(df)
     n_exchange = plan.count("Exchange")
     n_broadcast = plan.count("BroadcastExchange")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -51,7 +62,7 @@ def plan_stats(df: DataFrame) -> PlanStats:
 def read_schema_columns(df: DataFrame) -> list[list[str]]:
     """Column lists actually read by each parquet scan (projection pruning
     evidence: a 2-column query must not scan 16 columns)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _final_plan(df)
     out = []
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         cols = [c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()]
@@ -66,7 +77,7 @@ def unpartitioned_windows(df: DataFrame) -> int:
     before the ordering columns and carry no ASC/DESC marker, so a spec
     whose first argument is already directional (or that starts at the
     frame) has an empty partition clause."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _final_plan(df)
     n = 0
     for m in re.finditer(r"windowspecdefinition\(([^()]*?)(?:,\s*specifiedwindowframe|\))", plan):
         args = m.group(1).strip()

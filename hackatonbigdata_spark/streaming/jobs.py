@@ -1,4 +1,4 @@
-"""M6 — live Structured Streaming jobs over the ``events`` table.
+"""Live Structured Streaming jobs over the ``events`` table.
 
 The reference is batch-only; these jobs give the engine the incremental
 execution mode for the same event semantics defined (and oracle-checked) in
@@ -13,7 +13,7 @@ batch/stream consistency guarantee — plus multi-file (one file = one
 micro-batch) streams that inject within-watermark LATE events to pin the
 out-of-order paths.
 
-Out-of-order discipline (r7): every ORDER-dependent custom kernel
+Out-of-order discipline: every ORDER-dependent custom kernel
 (sessionizer, funnel, Markov transitions, running TWA, running drawdown)
 keeps a bounded buffer of in-horizon events and treats only data behind
 the watermark as final — compacted into an O(1) accumulator — because a
@@ -21,6 +21,16 @@ late-but-within-watermark event can re-order, re-split, or merge what a
 naive kernel would have already folded (or, in append mode, already
 emitted).  Append-mode deltas are made retractable (negative counts)
 where the consumer aggregates them.
+
+Bounded-state sketches (space-saving top-k, KMV, bottom-k sample,
+count-min, grid histogram, Bloom, HLL per hour; KLL per day) share one
+state lifecycle, ``_bucket_sketch_stream``: state is keyed by the
+event-time bucket, and the single eviction rule removes it, emitting
+nothing, once its event-time timeout fires or the watermark reaches the
+bucket end (the timeout is the bucket end).
+Each sketch supplies only its schemas, how a pandas chunk becomes items,
+its pure fold, how the sketch is stored and what rows it emits.  The
+user-keyed kernels keep their own lifecycle, with the reason at each.
 
 Scale: state is keyed by (window, low-cardinality dim) or user_id; the
 10-minute watermark bounds both the compacted state and every in-horizon
@@ -382,6 +392,7 @@ def stateful_user_counter_stream(events: DataFrame) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
         )
 
+    # own lifecycle: keyed by user, no bucket end to evict at (NoTimeout)
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -685,7 +696,7 @@ def transition_counts_stream(events: DataFrame) -> DataFrame:
     rows (prev, next, count); the consumer aggregates deltas, exactly how
     a streaming transition matrix is maintained in production.
 
-    Adjacency is ORDER-dependent, so (r7) the deltas are RETRACTABLE
+    Adjacency is ORDER-dependent, so the deltas are RETRACTABLE
     (Flink-style): state = the last FINALIZED event type plus a bounded
     buffer of in-horizon events; each invocation re-sorts the buffer,
     recomputes the tail's transition counts, and emits the difference
@@ -733,6 +744,7 @@ def transition_counts_stream(events: DataFrame) -> DataFrame:
                 ]
             )
 
+    # own lifecycle: keyed by user, out-of-order buffer, append-mode deltas
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -750,7 +762,7 @@ def time_weighted_avg_stream(events: DataFrame) -> DataFrame:
     """Running time-weighted average per user as a custom stateful
     operator — the live twin of the batch ``time_weighted_avg`` query.
 
-    The held-value integral is ORDER-dependent, so (r7) state = the
+    The held-value integral is ORDER-dependent, so state = the
     FINALIZED accumulator (last finalized point + Σv·dt in 1e-4 integer
     units + Σdt over events with ts < watermark) plus a bounded buffer of
     in-horizon events; each invocation re-sorts the buffer, recomputes
@@ -808,6 +820,7 @@ def time_weighted_avg_stream(events: DataFrame) -> DataFrame:
                 }
             )
 
+    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -865,7 +878,7 @@ def running_drawdown_stream(events: DataFrame) -> DataFrame:
     series as a custom stateful operator — the live twin of the
     ``window_max_drawdown`` measure, re-based onto the event stream.
 
-    The cumulative path is ORDER-dependent, so (r7) the state splits into
+    The cumulative path is ORDER-dependent, so the state splits into
     a FINALIZED accumulator (cum/peak/maxdd over events whose ts has
     passed the watermark — no earlier event can still arrive) plus a
     bounded buffer of in-horizon events; each invocation re-sorts the
@@ -923,6 +936,7 @@ def running_drawdown_stream(events: DataFrame) -> DataFrame:
             }
         )
 
+    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -947,7 +961,7 @@ def burnrate_stream(events: DataFrame) -> DataFrame:
     ROWS semantics over existing hours, exactly like the batch window.
 
     Keyed by a constant shard here because the batch semantics are global;
-    production keys by service.  State IS bounded (r7, per ADVICE): each
+    production keys by service.  State IS bounded: each
     batch evicts grid hours that sit more than 5 ROWS-frame positions
     before the watermark hour — no surviving or future row's 6-hour frame
     can reach them (touched hours are >= the watermark hour, and a frame
@@ -1032,6 +1046,7 @@ def burnrate_stream(events: DataFrame) -> DataFrame:
         if rows:
             yield pd.DataFrame(rows)
 
+    # own lifecycle: one constant shard whose hourly grid evicts itself
     return (
         events.withWatermark("ts", WATERMARK)
         # materialized column, not groupBy(lit): grouping expressions must
@@ -1054,9 +1069,8 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
     the same discipline the built-in ``session_window`` uses — because a
     late-but-within-watermark event can extend a session, split it
     differently, or MERGE two apparent sessions into one, and append-mode
-    output cannot retract an early emission (the r6 version emitted on
-    in-batch gap closure and silently assumed in-order arrival across
-    micro-batches; the multi-batch out-of-order test now pins this).
+    output cannot retract an early emission (a multi-batch out-of-order
+    test pins this).
 
     Per user the state is the bounded buffer of (ts, quantized value)
     events still inside the merge horizon.  Each invocation folds the
@@ -1108,7 +1122,7 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
                     )
         if not buf and not new_events:
             # a key invoked with only empty chunks and no prior state has
-            # nothing to track (r7, per ADVICE)
+            # nothing to track
             return
         wm_ms = state.getCurrentWatermarkMs()
         buf, final, timeout_us = session_step(buf, new_events, wm_ms * 1000)
@@ -1126,6 +1140,7 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
         if final:
             yield pd.DataFrame([row(uid, s) for s in final])
 
+    # own lifecycle: keyed by user, append mode, timeout at a session close
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -1205,6 +1220,7 @@ def funnel_stage_kernel_stream(events: DataFrame) -> DataFrame:
             ]
         )
 
+    # own lifecycle: keyed by user, pruned stage buffers, NoTimeout
     return (
         events.withWatermark("ts", WATERMARK)
         .select("user_id", "ts", "event_type")
@@ -1215,6 +1231,78 @@ def funnel_stage_kernel_stream(events: DataFrame) -> DataFrame:
             stateStructType=state_schema,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+# --- bounded-state sketches per time bucket ----------------------------------
+
+_BUCKET_US = {"hour": 3600 * 1_000_000, "day": 24 * 3600 * 1_000_000}
+
+
+def _bucket_sketch_update(bucket, empty, load, items, fold, store, emit):
+    """The ``applyInPandasWithState`` update shared by the sketch streams
+    keyed by an event-time ``bucket`` ("hour" or "day").  Per call: evict
+    the state, emitting nothing, once it timed out or the watermark reached
+    the bucket end (no event for the bucket can still be accepted, and its
+    final rows went out with its last data batch); otherwise gather
+    ``items(pdf)`` over the chunks, and when there are any, fold them into
+    the sketch (``load(*stored)`` or ``empty()``), store ``(*store(sketch),
+    n)``, set the timeout to max(bucket end, watermark + 1), which is the
+    bucket end (a watermark at or past it evicted above) and emit
+    ``emit(sketch)`` rows stamped with the bucket and ``n_total``, the
+    events absorbed so far."""
+    import pandas as pd  # noqa: PLC0415 — worker-side import
+
+    span_us = _BUCKET_US[bucket]
+
+    def update(key, pdfs, state: GroupState):
+        b = key[0]
+        end_ms = (pd.Timestamp(b).value // 1_000 + span_us) // 1000
+        wm_ms = state.getCurrentWatermarkMs()
+        if state.hasTimedOut or wm_ms >= end_ms:
+            if state.exists:
+                state.remove()
+            return
+        new = [it for pdf in pdfs for it in items(pdf)]
+        if not new:
+            return
+        if state.exists:
+            *stored, n = state.get
+            sketch = load(*stored)
+        else:
+            sketch, n = empty(), 0
+        n += len(new)
+        sketch = fold(sketch, new)
+        state.update((*store(sketch), n))
+        state.setTimeoutTimestamp(max(end_ms, wm_ms + 1))
+        yield pd.DataFrame(
+            [{bucket: b, "n_total": n, **row} for row in emit(sketch)]
+        )
+
+    return update
+
+
+def _user_ids(pdf) -> list:
+    return [int(u) for u in pdf["user_id"]]
+
+
+def _bucket_sketch_stream(
+    events, bucket, out_schema, state_schema, **sketch
+) -> DataFrame:
+    """Run ``_bucket_sketch_update(bucket, **sketch)`` per watermarked
+    bucket in update mode, evicted by event-time timeout."""
+    col = F.date_trunc("hour", "ts") if bucket == "hour" else F.to_date("ts")
+    return (
+        events.withWatermark("ts", WATERMARK)
+        .withColumn(bucket, col)
+        .groupBy(bucket)
+        .applyInPandasWithState(
+            _bucket_sketch_update(bucket, **sketch),
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -1266,76 +1354,34 @@ def heavyhitters_topk_stream(events: DataFrame, k: int = HH_K) -> DataFrame:
     users the exact counts), so no out-of-order buffer is needed — unlike
     the path-dependent kernels above.
 
-    State is evicted when the watermark passes the hour's end (no event
-    for the bucket can still be accepted): an event-time timeout fires the
-    cleanup, mirroring the burn-rate kernel's pruning discipline.
+    State is evicted when the watermark reaches the hour's end (no event
+    for the bucket can still be accepted), by the event-time timeout of
+    the shared ``_bucket_sketch_stream`` lifecycle.
 
     Batch twin: ``stream_hourly_heavy_hitters`` (oracled); the streaming
     test pins stream == batch exactly because sf events have < 32 distinct
     users per hour."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
+    return _bucket_sketch_stream(
+        events,
+        "hour",
         "hour timestamp, n_total long, rnk long, user_id long,"
-        " n_events long, err long"
-    )
-    state_schema = (
-        "keys array<long>, cnts array<long>, errs array<long>, n long"
-    )
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            keys, cnts, errs, n = state.get
-            counters = {k_: [c, e] for k_, c, e in zip(keys, cnts, errs)}
-        else:
-            counters, n = {}, 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            # no event for this hour can still be accepted — final top-3
-            # was emitted with the last data batch; free the sketch
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(int(u) for u in pdf["user_id"])
-        if not items:
-            return
-        n += len(items)
-        spacesaving_update(counters, items, k)
-        ks = list(counters)
-        state.update(
-            (ks, [counters[x][0] for x in ks], [counters[x][1] for x in ks], n)
-        )
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            [
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "rnk": i + 1,
-                    "user_id": k_,
-                    "n_events": ce[0],
-                    "err": ce[1],
-                }
-                for i, (k_, ce) in enumerate(spacesaving_topk(counters, 3))
-            ]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        " n_events long, err long",
+        "keys array<long>, cnts array<long>, errs array<long>, n long",
+        empty=dict,
+        load=lambda keys, cnts, errs: {
+            k_: [c, e] for k_, c, e in zip(keys, cnts, errs)
+        },
+        items=_user_ids,
+        fold=lambda counters, new: spacesaving_update(counters, new, k),
+        store=lambda counters: (
+            list(counters),
+            [c for c, _ in counters.values()],
+            [e for _, e in counters.values()],
+        ),
+        emit=lambda counters: [
+            {"rnk": i + 1, "user_id": k_, "n_events": ce[0], "err": ce[1]}
+            for i, (k_, ce) in enumerate(spacesaving_topk(counters, 3))
+        ],
     )
 
 
@@ -1404,58 +1450,25 @@ def distinct_kmv_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
     (estimate, exact?) stamped with ``n_total`` events absorbed, so the
     final row per hour is the one with the maximum n_total.  State is
     evicted by event-time timeout once the watermark passes the hour end,
-    mirroring the heavy-hitters kernel's pruning discipline.
+    like every bucketed sketch.
 
     Batch twin: ``stream_hourly_distinct`` (oracled exact per-hour
     COUNT(DISTINCT)); the streaming test pins stream == batch exactly
     because sf events hold < 32 distinct users per hour (the sketch is
     exact under budget)."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
-        "hour timestamp, n_total long, n_users long, exact boolean"
-    )
-    state_schema = "hashes array<long>, n long"
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            hashes, n = state.get
-            sketch = set(hashes)
-        else:
-            sketch, n = set(), 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(int(u) for u in pdf["user_id"])
-        if not items:
-            return
-        n += len(items)
-        kmv_update(sketch, items, k)
-        state.update((sorted(sketch), n))
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        est, exact = kmv_estimate(sketch, k)
-        yield pd.DataFrame(
-            [{"hour": hour, "n_total": n, "n_users": est, "exact": exact}]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucket_sketch_stream(
+        events,
+        "hour",
+        "hour timestamp, n_total long, n_users long, exact boolean",
+        "hashes array<long>, n long",
+        empty=set,
+        load=set,
+        items=_user_ids,
+        fold=lambda sketch, new: kmv_update(sketch, new, k),
+        store=lambda sketch: (sorted(sketch),),
+        emit=lambda sketch: [
+            dict(zip(("n_users", "exact"), kmv_estimate(sketch, k)))
+        ],
     )
 
 
@@ -1507,74 +1520,27 @@ def sample_bottomk_stream(events: DataFrame, k: int = SAMPLE_K) -> DataFrame:
     ranked sample stamped with ``n_total`` events absorbed; final rows per
     hour are those with the maximum n_total.  State evicts by event-time
     timeout once the watermark passes the hour end."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
+    return _bucket_sketch_stream(
+        events,
+        "hour",
         "hour timestamp, n_total long, rnk long, event_id long,"
-        " user_id long, h long"
-    )
-    state_schema = (
-        "hs array<long>, ids array<long>, uids array<long>, n long"
-    )
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            hs, ids, uids, n = state.get
-            sample = sorted(zip(hs, ids, uids))
-        else:
-            sample, n = [], 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(
-                (int(e), int(u))
-                for e, u in zip(pdf["event_id"], pdf["user_id"])
-            )
-        if not items:
-            return
-        n += len(items)
-        sample = bottomk_update(sample, items, k)
-        state.update(
-            (
-                [h for h, _, _ in sample],
-                [e for _, e, _ in sample],
-                [u for _, _, u in sample],
-                n,
-            )
-        )
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            [
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "rnk": i + 1,
-                    "event_id": eid,
-                    "user_id": uid,
-                    "h": h,
-                }
-                for i, (h, eid, uid) in enumerate(sample)
-            ]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        " user_id long, h long",
+        "hs array<long>, ids array<long>, uids array<long>, n long",
+        empty=list,
+        load=lambda hs, ids, uids: sorted(zip(hs, ids, uids)),
+        items=lambda pdf: [
+            (int(e), int(u)) for e, u in zip(pdf["event_id"], pdf["user_id"])
+        ],
+        fold=lambda sample, new: bottomk_update(sample, new, k),
+        store=lambda sample: (
+            [h for h, _, _ in sample],
+            [e for _, e, _ in sample],
+            [u for _, _, u in sample],
+        ),
+        emit=lambda sample: [
+            {"rnk": i + 1, "event_id": eid, "user_id": uid, "h": h}
+            for i, (h, eid, uid) in enumerate(sample)
+        ],
     )
 
 
@@ -1725,6 +1691,7 @@ def trailing_count_dgim_stream(
             }
         )
 
+    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -1803,57 +1770,20 @@ def freq_cms_stream(
     the same counter cells as grouped sums over the same md5 bucket
     hash).  State evicts by event-time timeout once the watermark passes
     the hour end, mirroring the other sketch kernels."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = "hour timestamp, n_total long, user_id long, est long"
-    state_schema = "cnts array<long>, n long"
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            cnts, n = state.get
-            counters = list(cnts)
-        else:
-            counters, n = [0] * (d * w), 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(int(u) for u in pdf["user_id"])
-        if not items:
-            return
-        n += len(items)
-        cms_update(counters, items, d, w)
-        state.update((counters, n))
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            [
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "user_id": u,
-                    "est": cms_query(counters, u, d, w),
-                }
-                for u in monitored
-            ]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucket_sketch_stream(
+        events,
+        "hour",
+        "hour timestamp, n_total long, user_id long, est long",
+        "cnts array<long>, n long",
+        empty=lambda: [0] * (d * w),
+        load=list,
+        items=_user_ids,
+        fold=lambda counters, new: cms_update(counters, new, d, w),
+        store=lambda counters: (counters,),
+        emit=lambda counters: [
+            {"user_id": u, "est": cms_query(counters, u, d, w)}
+            for u in monitored
+        ],
     )
 
 
@@ -1913,62 +1843,28 @@ def value_quantiles_histogram_stream(
     absorbed; final rows per hour are those with the maximum n_total;
     state evicts by event-time timeout once the watermark passes the
     hour end."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
 
-    out_schema = (
-        "hour timestamp, n_total long, pct int, cent long, value double"
-    )
-    state_schema = "cents array<long>, cnts array<long>, n long"
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            cents, cnts, n = state.get
-            counter = dict(zip(cents, cnts))
-        else:
-            counter, n = {}, 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(hist_cent(float(v)) for v in pdf["value"])
-        if not items:
-            return
-        n += len(items)
-        hist_update(counter, items)
-        ks = sorted(counter)
-        state.update((ks, [counter[c] for c in ks], n))
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
+    def emit(counter):
         rows = []
         for pct in pcts:
             cent, _ = hist_quantile(counter, pct)
-            rows.append(
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "pct": pct,
-                    "cent": cent,
-                    "value": cent / 100.0,
-                }
-            )
-        yield pd.DataFrame(rows)
+            rows.append({"pct": pct, "cent": cent, "value": cent / 100.0})
+        return rows
 
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucket_sketch_stream(
+        events,
+        "hour",
+        "hour timestamp, n_total long, pct int, cent long, value double",
+        "cents array<long>, cnts array<long>, n long",
+        empty=dict,
+        load=lambda cents, cnts: dict(zip(cents, cnts)),
+        items=lambda pdf: [hist_cent(float(v)) for v in pdf["value"]],
+        fold=hist_update,
+        store=lambda counter: (
+            sorted(counter),
+            [counter[c] for c in sorted(counter)],
+        ),
+        emit=emit,
     )
 
 
@@ -2044,58 +1940,19 @@ def bloom_membership_stream(
     reconstructs the same lit-bit set as a DISTINCT over the same md5
     positions).  State evicts by event-time timeout once the watermark
     passes the hour end, mirroring the other sketch kernels."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
-        "hour timestamp, n_total long, n_bits_set long, est_users double"
-    )
-    state_schema = "bits array<long>, n long"
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            stored, n = state.get
-            bits = set(stored)
-        else:
-            bits, n = set(), 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(int(u) for u in pdf["user_id"])
-        if not items:
-            return
-        n += len(items)
-        bloom_update(bits, items, m, k)
-        state.update((sorted(bits), n))
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            [
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "n_bits_set": len(bits),
-                    "est_users": bloom_estimate(bits, m, k),
-                }
-            ]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucket_sketch_stream(
+        events,
+        "hour",
+        "hour timestamp, n_total long, n_bits_set long, est_users double",
+        "bits array<long>, n long",
+        empty=set,
+        load=set,
+        items=_user_ids,
+        fold=lambda bits, new: bloom_update(bits, new, m, k),
+        store=lambda bits: (sorted(bits),),
+        emit=lambda bits: [
+            {"n_bits_set": len(bits), "est_users": bloom_estimate(bits, m, k)}
+        ],
     )
 
 
@@ -2191,59 +2048,23 @@ def hll_distinct_stream(events: DataFrame, m: int = HLL_M) -> DataFrame:
     a grouped max over the same md5 hex rule).  State evicts by
     event-time timeout once the watermark passes the hour end,
     mirroring the other sketch kernels."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
+    return _bucket_sketch_stream(
+        events,
+        "hour",
         "hour timestamp, n_total long, n_zero_registers long,"
-        " est_users double"
-    )
-    state_schema = "regs array<long>, n long"
-    hour_us = 3600 * 1_000_000
-
-    def update(key, pdfs, state: GroupState):
-        hour = key[0]
-        hour_end_ms = (pd.Timestamp(hour).value // 1_000 + hour_us) // 1000
-        if state.exists:
-            stored, n = state.get
-            regs = list(stored)
-        else:
-            regs, n = [0] * m, 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= hour_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(int(u) for u in pdf["user_id"])
-        if not items:
-            return
-        n += len(items)
-        hll_update(regs, items, m)
-        state.update((regs, n))
-        state.setTimeoutTimestamp(max(hour_end_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            [
-                {
-                    "hour": hour,
-                    "n_total": n,
-                    "n_zero_registers": sum(1 for r in regs if r == 0),
-                    "est_users": hll_estimate(regs, m),
-                }
-            ]
-        )
-
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        " est_users double",
+        "regs array<long>, n long",
+        empty=lambda: [0] * m,
+        load=list,
+        items=_user_ids,
+        fold=lambda regs, new: hll_update(regs, new, m),
+        store=lambda regs: (regs,),
+        emit=lambda regs: [
+            {
+                "n_zero_registers": sum(1 for r in regs if r == 0),
+                "est_users": hll_estimate(regs, m),
+            }
+        ],
     )
 
 
@@ -2357,90 +2178,52 @@ def kll_quantiles_stream(
     the maximum n_total; the streaming tests pin them within err_bound
     of the exact per-day order statistics, and equal to them whenever
     err_bound == 0."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
 
-    out_schema = (
-        "day date, n_total long, err_bound long, pct int,"
-        " w_total long, value double"
-    )
-    state_schema = (
-        "vs array<double>, ids array<long>, lvls array<int>,"
-        " err long, n long"
-    )
-    day_us = 24 * 3600 * 1_000_000
+    def load(vs, ids, lvls, err):
+        levels: list = [[] for _ in range(max(lvls) + 1 if lvls else 1)]
+        for v, i, lv in zip(vs, ids, lvls):
+            levels[lv].append((v, i))
+        return levels, err
 
-    def update(key, pdfs, state: GroupState):
-        day = key[0]
-        day_end_ms = (
-            pd.Timestamp(day).value // 1_000 + day_us
-        ) // 1000
-        if state.exists:
-            vs, ids, lvls, err, n = state.get
-            levels: list = [[] for _ in range(max(lvls) + 1 if lvls else 1)]
-            for v, i, lv in zip(vs, ids, lvls):
-                levels[lv].append((v, i))
-            st = (levels, err)
-        else:
-            st, n = ([], 0), 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut or wm_ms >= day_end_ms:
-            if state.exists:
-                state.remove()
-            return
-        items = []
-        for pdf in pdfs:
-            items.extend(
-                (float(v), int(i))
-                for v, i in zip(pdf["value"], pdf["event_id"])
-                if v is not None
-            )
-        if not items:
-            return
-        # deterministic within-batch order: the engine's row order inside
-        # a micro-batch is not a contract, (value, id) is
-        items.sort()
-        n += len(items)
-        st = kll_update(st, items, k)
-        levels, err = st
+    def store(st):
         flat = [
             (v, i, lv)
-            for lv, lvl_items in enumerate(levels)
+            for lv, lvl_items in enumerate(st[0])
             for v, i in sorted(lvl_items)
         ]
-        state.update(
-            (
-                [v for v, _, _ in flat],
-                [i for _, i, _ in flat],
-                [lv for _, _, lv in flat],
-                err,
-                n,
-            )
+        return (
+            [v for v, _, _ in flat],
+            [i for _, i, _ in flat],
+            [lv for _, _, lv in flat],
+            st[1],
         )
-        state.setTimeoutTimestamp(max(day_end_ms, wm_ms + 1))
+
+    def emit(st):
         rows = []
         for pct in pcts:
             val, w_total = kll_quantile(st, pct)
             rows.append(
-                {
-                    "day": day,
-                    "n_total": n,
-                    "err_bound": err,
-                    "pct": pct,
-                    "w_total": w_total,
-                    "value": val,
-                }
+                {"err_bound": st[1], "pct": pct, "w_total": w_total, "value": val}
             )
-        yield pd.DataFrame(rows)
+        return rows
 
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .withColumn("day", F.to_date("ts"))
-        .groupBy("day")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucket_sketch_stream(
+        events,
+        "day",
+        "day date, n_total long, err_bound long, pct int,"
+        " w_total long, value double",
+        "vs array<double>, ids array<long>, lvls array<int>,"
+        " err long, n long",
+        empty=lambda: ([], 0),
+        load=load,
+        items=lambda pdf: [
+            (float(v), int(i))
+            for v, i in zip(pdf["value"], pdf["event_id"])
+            if v is not None
+        ],
+        # deterministic within-batch order: the engine's row order inside
+        # a micro-batch is not a contract, (value, id) is
+        fold=lambda st, new: kll_update(st, sorted(new), k),
+        store=store,
+        emit=emit,
     )

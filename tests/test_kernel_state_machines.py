@@ -623,3 +623,152 @@ def test_kll_compactor_invariants_under_any_chunking(tape, cuts):
         K,
     )
     check(m, items)
+
+
+# --- the bucketed-sketch state adapter ---------------------------------------
+# ``_bucket_sketch_update`` is the whole applyInPandasWithState lifecycle of
+# the per-bucket sketch streams; a fake GroupState drives it without a JVM.
+
+HOUR_MS = 3600 * 1000
+
+
+class FakeGroupState:
+    """The slice of ``GroupState`` the adapter calls."""
+
+    def __init__(self, value=None, wm_ms=0, timed_out=False):
+        self.value = value
+        self.wm_ms = wm_ms
+        self.hasTimedOut = timed_out
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
+def _distinct_users_update(bucket="hour"):
+    """An exact distinct-user sketch behind the adapter."""
+    from hackatonbigdata_spark.streaming.jobs import _bucket_sketch_update
+
+    return _bucket_sketch_update(
+        bucket,
+        empty=set,
+        load=set,
+        items=lambda pdf: [int(u) for u in pdf["user_id"]],
+        fold=lambda users, new: users | set(new),
+        store=lambda users: (sorted(users),),
+        emit=lambda users: [{"n_users": len(users)}],
+    )
+
+
+def _bucket_key(bucket):
+    import datetime
+
+    import pandas as pd
+
+    if bucket == "day":
+        return (datetime.date(2024, 3, 1),), 24 * HOUR_MS
+    return (pd.Timestamp("2024-03-01 10:00:00"),), HOUR_MS
+
+
+def _key_start_ms(key):
+    import pandas as pd
+
+    return pd.Timestamp(key[0]).value // 1_000_000
+
+
+def _users(*ids):
+    import pandas as pd
+
+    return pd.DataFrame({"user_id": list(ids)})
+
+
+def test_bucket_adapter_call_without_items_changes_nothing():
+    """Only empty chunks (or none): no row, no state write, no timeout."""
+    update = _distinct_users_update()
+    key, _ = _bucket_key("hour")
+    for value in (None, ([3, 5], 7)):
+        for pdfs in ([], [_users()], [_users(), _users()]):
+            state = FakeGroupState(value, wm_ms=_key_start_ms(key))
+            assert list(update(key, pdfs, state)) == []
+            assert state.value == value
+            assert state.timeout_ms is None
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.sampled_from(["hour", "day"]),
+    st.lists(
+        st.tuples(
+            st.lists(st.integers(0, 9), min_size=1, max_size=6),
+            st.integers(-10 * HOUR_MS, 24 * HOUR_MS - 1),
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+)
+def test_bucket_adapter_accumulates_n_total_and_clamps_timeout(bucket, calls):
+    """Before the bucket end: every call with items folds them, stores
+    ``n`` last, stamps the bucket and the running ``n_total`` on its rows
+    and sets the timeout to max(bucket end, watermark + 1) — the bucket
+    end itself, since a watermark at or past it evicts instead."""
+    update = _distinct_users_update(bucket)
+    key, span_ms = _bucket_key(bucket)
+    start_ms = _key_start_ms(key)
+    state = FakeGroupState()
+    seen, n = set(), 0
+    for users, wm_offset in calls:
+        wm_ms = start_ms + min(wm_offset, span_ms - 1)
+        state.wm_ms = wm_ms
+        (out,) = list(update(key, [_users(*users)], state))
+        seen |= set(users)
+        n += len(users)
+        assert out.to_dict("records") == [
+            {bucket: key[0], "n_total": n, "n_users": len(seen)}
+        ]
+        assert state.value == (sorted(seen), n)
+        end_ms = start_ms + span_ms
+        assert state.timeout_ms == max(end_ms, wm_ms + 1) == end_ms
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.sampled_from(["hour", "day"]),
+    st.integers(0, 3 * 24 * HOUR_MS),
+    st.booleans(),
+    st.booleans(),
+)
+def test_bucket_adapter_evicts_at_bucket_end_or_timeout(
+    bucket, past_end_ms, timed_out, has_state
+):
+    """Once the watermark reaches the bucket end, or the state timed out,
+    the state is removed and nothing is emitted, whatever the chunks."""
+    update = _distinct_users_update(bucket)
+    key, span_ms = _bucket_key(bucket)
+    end_ms = _key_start_ms(key) + span_ms
+    if timed_out:
+        wm_ms = end_ms - 1 - past_end_ms % span_ms  # inside the bucket
+    else:
+        wm_ms = end_ms + past_end_ms
+    state = FakeGroupState(
+        ([1, 2], 2) if has_state else None, wm_ms=wm_ms, timed_out=timed_out
+    )
+    assert list(update(key, [_users(4, 5)], state)) == []
+    assert not state.exists
+    assert state.timeout_ms is None

@@ -152,6 +152,16 @@ def test_largestar_equals_propagation(spark):
     assert prop, "sf0.001 corpus contains planted near-dup clusters"
 
 
+def test_propagation_raises_at_its_round_cap(spark, monkeypatch):
+    """A cap under which no fixpoint can be certified must raise, naming
+    the cap, instead of returning unconverged labels."""
+    import hackatonbigdata_spark.operators.llm as llm
+
+    monkeypatch.setattr(llm, "_COMPONENTS_MAX_ROUNDS", 0)
+    with pytest.raises(RuntimeError, match="fixpoint in 0 rounds"):
+        llm.dedup_cluster_components(spark, SF_DIR)
+
+
 def test_priority_names_all_registered():
     """Round-3 regression guard: every _PRIORITY name must resolve to a
     registered query, so the verification window can't silently shrink."""
