@@ -15,6 +15,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = (
     "region",
@@ -42,15 +43,15 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     real cluster the deploy does this once per job; here it is one zip of
     the source tree per session (idempotent, guarded).
 
-    r15 hardening (exposed by the thread-pooled test sweeps): the zip is
-    now (1) named by a CONTENT hash of the shipped sources — the old
-    ``os.getpid()`` key collided across process lifetimes (Linux reuses
-    pids), silently shipping a STALE zip from a dead process's run of a
-    different source tree; (2) built to a temp name and ``os.replace``d
-    atomically — a concurrent caller used to ``addPyFile`` a half-written
-    zip, and Spark then failed every task with "exists and does not match
-    contents" once the bytes settled; (3) serialized behind a process-wide
-    lock with a double-checked session flag."""
+    The zip is (1) named by a CONTENT hash of the shipped sources — a
+    pid-based name collides across process lifetimes (Linux reuses pids)
+    and can ship a stale zip of a different source tree; (2) built to a
+    temp name and ``os.replace``d atomically — a concurrent caller could
+    otherwise ``addPyFile`` a half-written zip, and Spark then fails every
+    task with "exists and does not match contents" once the bytes settle;
+    (3) serialized behind a process-wide lock with a double-checked
+    session flag, because the test sweeps build queries from several
+    threads."""
     sc = spark.sparkContext
     if getattr(sc, "_hbd_pkg_shipped", False):
         return
@@ -88,19 +89,20 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         sc._hbd_pkg_shipped = True
 
 
-# Footer-type cache keyed on (probe file, mtime): one pyarrow metadata read
-# per events path per process, invalidated if the driver regenerates the
-# data in-process with a different physical type.
-_EVENTS_TS_NANOS: dict[tuple[str, float], bool] = {}
+# Footer-schema cache keyed on (probe file, mtime): one pyarrow metadata read
+# per events path per process, invalidated if the data is regenerated
+# in-process with a different physical type.
+_EVENTS_SCHEMA: dict[tuple[str, float], StructType] = {}
 
 
-def events_ts_is_nanos(path: str) -> bool:
-    """True when ``events.ts`` is parquet TIMESTAMP(NANOS) — Spark's reader
-    rejects that type unless ``nanosAsLong`` makes it a raw int64; False for
-    a normal us/ms timestamp column, which reads natively.  Checked from the
-    parquet footer (driver-side, milliseconds) instead of being hard-coded,
-    because the two generations of test data disagree on the physical type.
-    """
+def events_schema(path: str) -> StructType:
+    """Spark schema of the events parquet at ``path`` (a file or a
+    directory of part files), read from its footer on the driver: no
+    schema-inference job.  A TIMESTAMP(NANOS) ``ts`` is declared ``bigint``
+    so Spark reads its raw int64; Spark rejects that parquet type as a
+    timestamp, and a supplied schema is honoured by the vectorized reader,
+    the row reader and the file stream source alike, with no session
+    config."""
     import glob  # noqa: PLC0415 — driver-side only
 
     probe = path
@@ -116,32 +118,48 @@ def events_ts_is_nanos(path: str) -> bool:
             )
         probe = parts[0]
     key = (probe, os.path.getmtime(probe))
-    if key not in _EVENTS_TS_NANOS:
+    if key not in _EVENTS_SCHEMA:
         import pyarrow.parquet as pq  # noqa: PLC0415 — driver-side only
+        from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
 
-        ts_type = str(pq.read_schema(probe).field("ts").type)
-        _EVENTS_TS_NANOS[key] = ts_type.startswith("timestamp[ns")
-    return _EVENTS_TS_NANOS[key]
+        arrow = pq.read_schema(probe)
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+        if str(arrow.field("ts").type).startswith("timestamp[ns"):
+            schema = StructType(
+                [StructField("ts", LongType()) if f.name == "ts" else f for f in schema]
+            )
+        _EVENTS_SCHEMA[key] = schema
+    return _EVENTS_SCHEMA[key]
+
+
+def scan_events(spark: SparkSession, sf_dir: str, stream: bool = False) -> DataFrame:
+    """The one events reader, batch or ``readStream``: the footer schema is
+    supplied, and ``ts`` lands as ``timestamp_ntz`` truncated to
+    microseconds — what DuckDB reads — whatever the physical timestamp
+    type, so event-time semantics match the oracle."""
+    path = f"{sf_dir.rstrip('/')}/events.parquet"
+    schema = events_schema(path)
+    if stream:
+        # the file stream source needs a directory base path; glob down to
+        # the events file inside the sf dir
+        src = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+    else:
+        src = spark.read.schema(schema).parquet(path)
+    if isinstance(schema["ts"].dataType, LongType):
+        # int64 nanoseconds since the epoch, wall clock: truncate to us
+        ts = F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ'1970-01-01 00:00:00')")
+    else:
+        ts = F.col("ts").cast("timestamp_ntz")
+    return src.withColumn("ts", ts)
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dtype-aware events read: footer decides the ``ts`` normalization so
-    the engine survives the driver regenerating the data with a different
-    physical timestamp type.  Either way the column lands as
-    ``timestamp_ntz`` truncated to microseconds — identical to what DuckDB
-    sees — so event-time semantics match the oracle."""
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    if events_ts_is_nanos(path):
-        # TIMESTAMP(NANOS): readable only as int64; truncate ns -> us.
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path).withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
-        )
-    # us/ms timestamp: native read; normalize to ntz for oracle parity.
-    return spark.read.parquet(path).withColumn(
-        "ts", F.col("ts").cast("timestamp_ntz")
-    )
+    """Batch events read (see ``scan_events``)."""
+    return scan_events(spark, sf_dir)
 
 
 class Catalog:

@@ -930,9 +930,8 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared fixpoint oracle for BOTH component algorithms: min-label propagation
-# and large-star/small-star provably compute the same component minima over
-# the same candidate-edge set, so one recursive CTE verifies either.
+# Connected components over the candidate-edge set as a recursive CTE: each
+# doc's component id is the minimum doc id it can reach.
 _COMPONENTS_ORACLE = f"""
 WITH RECURSIVE {_DUCK_SHINGLES},
 {_duck_sig()},
@@ -968,6 +967,7 @@ _COMPONENTS_MAX_ROUNDS = 20
 
 
 @register("dedup_cluster_components", oracle=_COMPONENTS_ORACLE)
+@register("dedup_cluster_largestar", oracle=_COMPONENTS_ORACLE)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: connected components over the MinHash-LSH dup
     graph (candidate pairs with estimated Jaccard ≥ 0.5), canonical doc =
@@ -983,13 +983,17 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     with fewer joins.  Convergence is detected by the (exact, integer) sum
     of labels going unchanged; labels only ever decrease, so checking every
     SECOND round still certifies the fixpoint, and the sum rides the
-    checkpoint job itself via ``observe`` — zero extra driver round-trips
-    (the r3 version ran a separate agg job per certification).  The oracle
-    states the same fixpoint as a recursive CTE.  Scale: rounds = graph
-    diameter (dup clusters are shallow); each round is one keyed join +
-    one keyed agg, lineage kept O(1) by the periodic localCheckpoint.  At
-    larger graphs use the large-star/small-star variant or GraphFrames —
-    same dataflow."""
+    checkpoint job itself via ``observe`` — zero extra driver round-trips.
+    The oracle states the same fixpoint as a recursive CTE.
+
+    ``dedup_cluster_largestar`` is this same query: min-label propagation
+    measured faster than large-star/small-star (Kiveris et al.) on the
+    shallow dup graphs of the test data, so one algorithm serves both
+    names.  Scale:
+    rounds = graph diameter (dup clusters are shallow), capped at
+    ``_COMPONENTS_MAX_ROUNDS`` with a loud failure past it; each round is
+    one keyed join + one keyed agg, lineage kept O(1) by the periodic
+    localCheckpoint."""
     from pyspark.sql import Observation  # noqa: PLC0415
 
     cand = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
@@ -1056,140 +1060,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_canonical"
             ),
         )
-    )
-
-
-@register("dedup_cluster_largestar", oracle=_COMPONENTS_ORACLE)
-def dedup_cluster_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    O(log n)-round scale path for deep dup graphs, where plain min-label
-    propagation needs rounds = graph diameter.  Each large-star hangs every
-    strictly-larger neighbor of a node off the minimum of its neighborhood;
-    each small-star re-hangs the smaller neighbors — the graph flattens
-    doubly-exponentially toward a star per component, after which one
-    min-over-neighborhood step reads off the component minimum.
-
-    Same input (MinHash-LSH candidates at est-Jaccard ≥ 0.5) and same
-    output contract as ``dedup_cluster_components``, and verified against
-    the SAME recursive-CTE oracle (both algorithms compute the component
-    minimum of the identical edge set, so one fixpoint statement checks
-    either); tests additionally pin exact equality between the two.
-
-    Scale: every round is two keyed aggregates + a join on the CURRENT edge
-    set, which only shrinks toward one edge per non-root node; convergence
-    (edge multiset stable) is detected by count+checksum riding the
-    checkpoint job via ``observe`` — no separate driver action.  Because a
-    checksum can collide (and the loop caps at 15 rounds), the final labels
-    are CERTIFIED post-loop: every ORIGINAL edge must join two
-    identically-labeled endpoints.  Star rounds only ever add edges within
-    a component, so over-merge is impossible by construction; the
-    certification catches the one remaining failure mode (a split
-    component) and raises instead of returning wrong labels."""
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    cand = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
-    # canonical undirected edges, deduped, on a few partitions (see
-    # dedup_cluster_components for the tiny-graph partitioning rationale)
-    edges = (
-        cand.select(
-            F.least("doc_a", "doc_b").alias("lo"),
-            F.greatest("doc_a", "doc_b").alias("hi"),
-        )
-        .distinct()
-        .repartition(8, "hi")
-        .localCheckpoint(eager=True)
-    )
-    edges0 = edges  # original edge set, kept for the fixpoint certification
-    nodes = (
-        edges.select(F.col("lo").alias("doc_id"))
-        .unionAll(edges.select(F.col("hi").alias("doc_id")))
-        .distinct()
-    )
-    prev_sig = None
-    for _ in range(15):
-        # ---- large-star: for each node u, m = min(N(u) ∪ {u}); emit
-        # (v, m) for every neighbor v > u ---------------------------------
-        bid = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        mins = (
-            bid.groupBy("u")
-            .agg(F.min("v").alias("_mnv"))
-            .select("u", F.least("u", "_mnv").alias("m"))
-        )
-        ls = (
-            bid.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.least("v", "m").alias("lo"), F.greatest("v", "m").alias("hi"))
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-        # ---- small-star: edges point larger→smaller; for each node u,
-        # m = min of its smaller neighbors; re-hang them (and u) off m ----
-        g2 = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        sml = (
-            ls.join(g2, "hi")
-            .select(F.col("lo").alias("a"), F.col("m").alias("b"))
-            .unionAll(g2.select(F.col("hi").alias("a"), F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
-            .distinct()
-        )
-        obs = Observation()
-        edges = sml.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("lo") + F.col("hi")).alias("s"),
-        ).localCheckpoint(eager=True)
-        sig = (obs.get["n"], obs.get["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # converged: every non-root node's edge points at its component min
-    labels = (
-        nodes.join(
-            edges.select(F.col("hi").alias("doc_id"), F.col("lo").alias("cmp")),
-            "doc_id",
-            "left",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("cmp").alias("_mn"))
-        .select(
-            "doc_id",
-            F.coalesce(F.least("doc_id", "_mn"), F.col("doc_id")).alias("component_id"),
-        )
-    )
-    labels = labels.localCheckpoint(eager=True)
-    # Fixpoint certification: a split component would leave some original
-    # edge with differently-labeled endpoints.  One join over the (small)
-    # dup-graph edge set — cheap, and it turns a silent wrong answer from a
-    # checksum collision / round-cap exit into a loud failure.
-    split_edges = (
-        edges0.join(
-            labels.select(F.col("doc_id").alias("lo"), F.col("component_id").alias("_ca")),
-            "lo",
-        )
-        .join(
-            labels.select(F.col("doc_id").alias("hi"), F.col("component_id").alias("_cb")),
-            "hi",
-        )
-        .filter(F.col("_ca") != F.col("_cb"))
-        .count()
-    )
-    if split_edges:
-        raise RuntimeError(
-            f"large-star/small-star did not reach a fixpoint: {split_edges} "
-            "edges still cross component labels after 15 rounds"
-        )
-    sizes = labels.groupBy("component_id").agg(F.count(F.lit(1)).alias("component_size"))
-    return labels.join(F.broadcast(sizes), "component_id").select(
-        "doc_id",
-        "component_id",
-        "component_size",
-        F.when(F.col("doc_id") == F.col("component_id"), 1).otherwise(0).alias(
-            "is_canonical"
-        ),
     )
 
 

@@ -1,26 +1,26 @@
-"""Per-series pandas kernels — the engine's Arrow/`applyInPandas` path.
+"""Per-series models: pandas kernels on the Arrow/`applyInPandas` path, and
+the per-series fits that run as JVM higher-order folds.
 
 SURVEY §2.12: four reference operators are genuinely not expressible as
 fixed-frame windows (EWM with pandas `adjust=True`, rolling autocorr,
-recursive smoothing clamp, per-series model fits like Croston).  Those run
-as grouped-map pandas kernels: each (store) / (store, product) series is one
-small group, Arrow-batched to Python, processed vectorized, returned.
+recursive smoothing clamp, Holt-Winters state).  Those run as grouped-map
+pandas kernels: each (store) / (store, product) series is one small group,
+Arrow-batched to Python, processed vectorized, returned.
 
-Scale: key cardinality is millions of small series — the grouped-map
-shuffle partitions by key and each kernel call is O(series length).
+Croston's constant-α SES and the AR(2) Yule-Walker closed form are
+SEQUENTIAL folds of plain IEEE doubles, so they run as higher-order
+``aggregate`` folds over each series' date-sorted array, with no Python
+worker.  Their DuckDB oracles replay the identical fold over the identical
+list, so JVM and DuckDB produce the same bits; tests/test_series_kernels.py
+pins both against a plain-Python reference fit.  Kernels that lean on
+pandas-internal accumulation schemes (`ewm(adjust=True)`, `.autocorr`,
+Holt-Winters seasonal state) stay rows-only by design with property tests.
 
-Correctness tiers: kernels whose math is a SEQUENTIAL fold of plain IEEE
-doubles (Croston's constant-α SES, the AR(2) Yule-Walker closed form) are
-fully oracled — their DuckDB oracle replays the identical fold over the
-identical date-sorted list, so Python, JVM, and DuckDB produce the same
-bits.  Kernels that lean on pandas-internal accumulation schemes
-(`ewm(adjust=True)`, `.autocorr`, Holt-Winters seasonal state) stay
-rows-only by design with property tests in tests/test_series_kernels.py.
+Scale: key cardinality is millions of small series — one shuffle to the
+series grain, and each series costs O(series length).
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 
@@ -36,15 +36,6 @@ def _daily(t: Catalog) -> DataFrame:
     return t.lineitem.groupBy("l_suppkey", "l_shipdate").agg(
         r4(F.sum("l_quantity")).alias("qty")
     )
-
-
-def py_r4(x: float) -> float:
-    """Python twin of functions.core.r4 (half-away-from-zero at 4dp): the
-    kernels must round exactly like the SQL engines so a kernel query can
-    share its SQL twin's DuckDB oracle.  Python's round() is ties-to-even
-    and diverges on dyadic halves (round(0.03125, 4) = 0.0312 vs 0.0313)."""
-    s = -1.0 if x < 0 else 1.0
-    return s * (math.floor(abs(x) * 10000.0 + 0.5) / 10000.0)
 
 
 _DUCK_DAILY = """daily AS (
@@ -97,8 +88,8 @@ def ewm_pandas_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and p_t = αi_t + (1-α)p_{t-1} are sequential folds over the event-size and
 # event-interval subsequences of the date-sorted daily series.  DuckDB's
 # no-init list_reduce seeds the accumulator with the first element — exactly
-# the kernel's z = sizes[0] / p = intervals[0] initialization — and folds the
-# rest left-to-right, so all three runtimes produce the same doubles.
+# the Spark fold's z = sizes[0] / p = intervals[0] seed — and folds the rest
+# left-to-right, so both engines produce the same doubles.
 _CROSTON_SQL = f"""
 WITH {_DUCK_DAILY}, seq AS (
   SELECT l_suppkey, list(qty ORDER BY l_shipdate) AS qs,
@@ -129,82 +120,44 @@ FROM fit
 
 
 @register("croston_per_series", oracle=_CROSTON_SQL)
-def croston_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Croston's method (SES alpha=0.1 on nonzero sizes and inter-arrival
+@register("croston_ses_sql", oracle=_CROSTON_SQL)
+def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Croston's method (SES alpha=0.1 on event sizes and inter-arrival
     intervals) per store series
     (/root/reference/src/models/intermittent_demand.py:44-175).
     Demand event := day with qty above the series median (so intervals are
     non-trivial on this dense dataset).
 
-    Fully oracled (graduated from rows-only in r5): the SES recurrence is a
-    sequential IEEE fold over the date-sorted series, so this Arrow kernel,
-    the pure-SQL twin ``croston_ses_sql``, and the DuckDB oracle all emit
-    identical bits; tests/test_series_kernels.py pins kernel ≡ twin."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate").reset_index(drop=True)
-        thr = pdf["qty"].median()
-        events = pdf.index[pdf["qty"] > thr]
-        key = int(pdf["l_suppkey"].iloc[0])
-        if len(events) < 2:
-            return pd.DataFrame(
-                {"l_suppkey": [key], "croston_forecast": [None], "n_events": [len(events)]}
-            )
-        sizes = pdf.loc[events, "qty"].to_numpy()
-        intervals = pd.Series(events).diff().dropna().to_numpy(dtype=float)
-        alpha = 0.1
-        z, p = float(sizes[0]), float(intervals[0]) if len(intervals) else 1.0
-        for s in sizes[1:]:
-            z = alpha * float(s) + (1 - alpha) * z
-        for iv in intervals[1:]:
-            p = alpha * float(iv) + (1 - alpha) * p
-        return pd.DataFrame(
-            {
-                "l_suppkey": [key],
-                "croston_forecast": [py_r4(z / p)],
-                "n_events": [len(events)],
-            }
-        )
-
-    t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(
-            kernel, schema="l_suppkey long, croston_forecast double, n_events long"
-        )
-    )
-
-
-@register("croston_ses_sql", oracle=_CROSTON_SQL)
-def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Croston's method as a PURE-SQL fold — no Python anywhere: the same
-    closed-form SES recurrences as ``croston_per_series``, run as JVM
-    higher-order ``aggregate`` folds over each store's date-sorted daily
-    array (the ``ewm_daily_store`` pattern).
+    The SES recurrences run as JVM higher-order ``aggregate`` folds over
+    each store's date-sorted daily array (the ``ewm_daily_store``
+    pattern), seeded with the first size / interval, so the DuckDB oracle's
+    no-init ``list_reduce`` replays the same doubles.  Both registered
+    names are this one fold.
 
     Scale: one shuffle to the series grain, whole-stage-codegen'd folds,
-    state bounded by series length — this is the production path; the Arrow
-    kernel above is the readable spec and the two are bit-identical."""
+    state bounded by series length."""
     t = Catalog(spark, sf_dir)
     seq = _daily(t).groupBy("l_suppkey").agg(
         F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr"),
         F.percentile("qty", F.lit(0.5)).alias("thr"),
     )
-    qs = F.col("arr").getField("qty")
+    # project the qty array once: a getField inside the per-element filter
+    # lambda below would re-extract the whole array for every element
+    ser = seq.select("l_suppkey", F.col("arr").getField("qty").alias("qs"), "thr")
+    qs = F.col("qs")
     # 1-based positions of demand events (days above the series median):
     # the threshold can only ever EQUAL a data point when it IS that sorted
     # element in every engine, so `>` membership is ulp-stable cross-engine.
-    stepped = seq.select(
+    stepped = ser.select(
         "l_suppkey",
         F.filter(
             F.sequence(F.lit(1), F.size(qs)),
             lambda i: F.element_at(qs, i) > F.col("thr"),
         ).alias("idx"),
-        qs.alias("qs"),
+        "qs",
     )
     m = F.size("idx")
-    sizes = F.transform(F.col("idx"), lambda i: F.element_at(F.col("qs"), i))
+    sizes = F.transform(F.col("idx"), lambda i: F.element_at(qs, i))
     n1 = F.greatest(m - 1, F.lit(0))
     ivs = F.zip_with(
         F.slice(F.col("idx"), 2, n1),
@@ -291,43 +244,10 @@ def rolling_autocorr_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ar2_yule_walker_fit(y: list[float]) -> tuple[float, float, float, float] | None:
-    """Closed-form AR(2) fit via the Yule-Walker equations over one series:
-    returns (phi1, phi2, sigma2, forecast_1d) or None when the series is too
-    short or has zero variance.
-
-    Biased autocovariances r_k = (1/n) Σ (y_t - μ)(y_{t+k} - μ); solving
-    | r0 r1 | |φ1|   |r1|
-    | r1 r0 | |φ2| = |r2|   →  φ1 = r1(r0 - r2)/(r0² - r1²),
-                               φ2 = (r0·r2 - r1²)/(r0² - r1²);
-    innovation variance σ² = r0 - φ1·r1 - φ2·r2, one-step forecast
-    ŷ_{n+1} = μ + φ1(y_n - μ) + φ2(y_{n-1} - μ).  Biased (1/n) covariances
-    keep the autocovariance matrix positive-definite, so the solution exists
-    whenever the series is non-constant."""
-    n = len(y)
-    if n < 5:
-        return None
-    mu = sum(y) / n
-    d = [v - mu for v in y]
-    r0 = sum(v * v for v in d) / n
-    if r0 <= 0.0:
-        return None
-    r1 = sum(d[i] * d[i + 1] for i in range(n - 1)) / n
-    r2 = sum(d[i] * d[i + 2] for i in range(n - 2)) / n
-    den = r0 * r0 - r1 * r1
-    if den <= 0.0:
-        return None
-    phi1 = r1 * (r0 - r2) / den
-    phi2 = (r0 * r2 - r1 * r1) / den
-    sigma2 = r0 - phi1 * r1 - phi2 * r2
-    fc = mu + phi1 * (y[-1] - mu) + phi2 * (y[-2] - mu)
-    return phi1, phi2, sigma2, fc
-
-
 # AR(2) Yule-Walker closed form as SQL: μ and the autocovariances r0/r1/r2
 # are sequential 0-seeded sums over the date-sorted list (bit-identical to
-# the kernel's Python sum()), and the φ/σ²/forecast arithmetic is the same
-# double expression tree in all three runtimes.
+# the Spark query's ``_fsum``), and the φ/σ²/forecast arithmetic is the same
+# double expression tree in both engines.
 _AR2_SQL = f"""
 WITH {_DUCK_DAILY}, seq AS (
   SELECT l_suppkey, list(qty ORDER BY l_shipdate) AS qs FROM daily GROUP BY l_suppkey
@@ -363,74 +283,30 @@ FROM p
 
 
 @register("ar2_yule_walker_per_series", oracle=_AR2_SQL)
-def ar2_yule_walker_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register("ar2_yule_walker_sql", oracle=_AR2_SQL)
+def ar2_yule_walker_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AR(2) per-series fit by the closed-form Yule-Walker equations — the
     autoregressive member of the reference's per-series family
     (/root/reference/src/models/arima_temporal.py: per-series ARIMA fits;
     statsmodels is absent in this container, so the AR(p) core is solved in
-    closed form instead of via MLE).  Emits φ1, φ2, the innovation variance,
-    a 1-step-ahead forecast, and the lag-1 autocorrelation implied by the
-    fit, per store daily series.
+    closed form instead of via MLE).  Emits φ1, φ2, the innovation variance
+    and a 1-step-ahead forecast per store daily series.
 
-    Scale: identical shape to the other per-series kernels — one grouped-map
-    shuffle keyed by series, O(series length) per call, no global state.
-    Fully oracled (graduated from rows-only in r5): every sum in the fit is
-    a sequential 0-seeded IEEE fold over the date-sorted series, replayed
-    exactly by the DuckDB oracle and the pure-SQL twin
-    ``ar2_yule_walker_sql``; tests/test_series_kernels.py additionally pins
-    white-noise recovery (φ≈0), exact recovery on a synthetic AR(2),
-    stationarity of the fitted pair, and kernel ≡ twin."""
+    Biased autocovariances r_k = (1/n) Σ (y_t - μ)(y_{t+k} - μ); solving
+    | r0 r1 | |φ1|   |r1|
+    | r1 r0 | |φ2| = |r2|   →  φ1 = r1(r0 - r2)/(r0² - r1²),
+                               φ2 = (r0·r2 - r1²)/(r0² - r1²);
+    innovation variance σ² = r0 - φ1·r1 - φ2·r2, one-step forecast
+    ŷ_{n+1} = μ + φ1(y_n - μ) + φ2(y_{n-1} - μ).  Biased (1/n) covariances
+    keep the autocovariance matrix positive-definite, so the solution exists
+    whenever the series is non-constant; series shorter than 5 days or with
+    zero variance get null fits.
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate").reset_index(drop=True)
-        key = int(pdf["l_suppkey"].iloc[0])
-        fit = ar2_yule_walker_fit([float(v) for v in pdf["qty"]])
-        if fit is None:
-            return pd.DataFrame(
-                {
-                    "l_suppkey": [key],
-                    "phi1": [None],
-                    "phi2": [None],
-                    "sigma2": [None],
-                    "forecast_1d": [None],
-                    "n_days": [len(pdf)],
-                }
-            )
-        phi1, phi2, sigma2, fc = fit
-        return pd.DataFrame(
-            {
-                "l_suppkey": [key],
-                "phi1": [py_r4(phi1)],
-                "phi2": [py_r4(phi2)],
-                "sigma2": [py_r4(sigma2)],
-                "forecast_1d": [py_r4(fc)],
-                "n_days": [len(pdf)],
-            }
-        )
+    Every sum is a sequential 0-seeded IEEE fold (``_fsum``) over the
+    date-sorted series, replayed exactly by the DuckDB oracle.  Both
+    registered names are this one fold.
 
-    t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(
-            kernel,
-            schema=(
-                "l_suppkey long, phi1 double, phi2 double, sigma2 double,"
-                " forecast_1d double, n_days long"
-            ),
-        )
-    )
-
-
-@register("ar2_yule_walker_sql", oracle=_AR2_SQL)
-def ar2_yule_walker_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AR(2) Yule-Walker closed form as a PURE-SQL query — the Arrow kernel's
-    math (autocovariances → φ → σ² → 1-step forecast) re-expressed as JVM
-    higher-order folds over each store's date-sorted daily array.
-
-    Scale: one shuffle to the series grain, codegen'd folds, no Python —
-    the production path; ``ar2_yule_walker_per_series`` is the readable
-    kernel spec and the two are bit-identical (test-pinned)."""
+    Scale: one shuffle to the series grain, codegen'd folds, no Python."""
     t = Catalog(spark, sf_dir)
     seq = _daily(t).groupBy("l_suppkey").agg(
         F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr")

@@ -56,37 +56,23 @@ def _load_all() -> None:
     )
 
 
-# Explicit verification priority: the driver's correctness gate walks the
-# queries() dict in insertion order and checks a bounded prefix per round, so
-# queries that are new, recently modified, or not yet driver-verified must
-# come first.  Names listed here lead (in this order); everything else follows
-# in registration order.  Rotate per round as coverage lands.
+# Verification priority: the driver's correctness gate walks the queries()
+# dict in insertion order and checks a bounded prefix, so the names whose
+# code most recently changed are listed here first, newest change first;
+# every other name follows in registration order.  Every name listed must
+# be registered.
 _PRIORITY: list[str] = [
-    # === ROUND 15 BUDGET (optimization round 2/2; 50-slot driver window) ===
-    # Plan: (1) every query whose CODE PATH this round touched leads — the
-    # _gann_walk guard/NULLS-LAST comparator (3 consumers), the _nnd_build
-    # per-round checkpoint fusion (build + 2 composed consumers), and the
-    # rocchio net-zero touch (respread/broadcast candidates measured and
-    # rejected) — each re-proved against the oracle at sf0.001+sf0.01
-    # (UTC and America/New_York) before placement; the window check is
-    # the audited re-proof.  (2) the entire 26-name
-    # r8-latest ORACLED backlog in registration order (the r14 verdict's
-    # item 8: the rotation moves to the r8 cohort).  (3) the 4 r9-latest
-    # names not re-verified since r9 (similarity_ivfpq_topk already sat in
-    # the r14 window).  (4) the r8 rows-only name LAST (corpus_bpe_encode
-    # records no_oracle by documented design, allow-listed in
-    # tests/test_oracle_parity.py and pinned end-to-end in
-    # tests/test_r8_semantics.py).  5+26+4+1 = 36 <= 50; the oldest driver
-    # evidence moves to r10 next rotation.
-    # --- (1) r15 optimization-round edits (oracle re-proved) --------------
-    "similarity_graph_ann",  # r15 EDIT: map guard + NULLS-LAST comparator
-    "similarity_graph_ann_nnd",  # r15 EDIT: same walk + fused NND rounds
-    "similarity_graph_ann_clustered",  # r15 EDIT: same walk + fused rounds
-    "similarity_nndescent_build",  # r15 EDIT: 1 eager ckpt/round, not 2
-    "search_rocchio_feedback",  # r15: respread + broadcast(mu) tried and
-    #   REJECTED (plan-identical / flat A/B) — window re-proof of the
-    #   net-zero touch (comment-only change at the qf construction)
-    # --- (2) the r8-latest oracled backlog, registration order ------------
+    "ar2_yule_walker_per_series",
+    "ar2_yule_walker_sql",
+    "croston_per_series",
+    "croston_ses_sql",
+    "dedup_cluster_components",
+    "dedup_cluster_largestar",
+    "similarity_graph_ann",
+    "similarity_graph_ann_nnd",
+    "similarity_graph_ann_clustered",
+    "similarity_nndescent_build",
+    "search_rocchio_feedback",
     "corpus_novelty_curve",
     "text_winnowing_stats",
     "corpus_cross_source_overlap",
@@ -113,19 +99,18 @@ _PRIORITY: list[str] = [
     "stream_user_trailing_count",
     "stream_hourly_cms",
     "stream_hourly_value_quantiles",
-    # --- (3) r9-latest names without driver evidence since r9 -------------
     "dedup_lines_ccnet",
     "embedding_pq_eval",
     "mm_ppm_pixel_stats",
     "stream_hourly_bloom",
-    # --- (4) r8 rows-only name: placed last by design ----------------------
     "corpus_bpe_encode",
 ]
+
 
 def _ordered(mapping: dict[str, "QueryFn | str"]) -> dict:
     # Every _PRIORITY name must exist in the full registry: a name that
     # resolves to nothing would silently shrink the driver's verification
-    # window and record phantom work as planned-and-placed (round-3 lesson).
+    # window and record phantom work as planned-and-placed.
     unknown = set(_PRIORITY) - set(_QUERIES)
     if unknown:
         raise ValueError(f"_PRIORITY names not registered anywhere: {sorted(unknown)}")

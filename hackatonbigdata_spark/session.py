@@ -41,8 +41,6 @@ def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # NOTE: no session-wide nanosAsLong pin — catalog.read_events sets it
-        # per-session only when the events footer actually says TIMESTAMP(NANOS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")

@@ -43,9 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
-from hackatonbigdata_spark.catalog import events_ts_is_nanos
+from hackatonbigdata_spark.catalog import scan_events
 from hackatonbigdata_spark.functions.core import r4
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
@@ -244,56 +243,20 @@ def funnel_step(bufs, new_events, wm_us):
     return bufs, ts_out
 
 
-
-def _ts_to_ltz(df: DataFrame, nanos: bool) -> DataFrame:
-    """Normalize ``ts`` to TIMESTAMP (ltz) for watermarking — session tz is
-    pinned UTC so the values equal the batch catalog's timestamp_ntz column.
-    ``nanos`` selects between the int64-nanos read (``nanosAsLong``) and a
-    native us/ms timestamp read; the footer decides (catalog.events_ts_is_nanos)."""
-    if nanos:
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _configure_events_read(spark: SparkSession, sf_dir: str) -> bool:
-    """Set ``nanosAsLong`` only when the footer actually carries
-    TIMESTAMP(NANOS); returns whether the nanos path is active."""
-    nanos = events_ts_is_nanos(f"{sf_dir.rstrip('/')}/events.parquet")
-    if nanos and spark.conf.get(
-        "spark.sql.legacy.parquet.nanosAsLong", "false"
-    ) != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return nanos
-
-
-def events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """File-source streams need an explicit schema; derive it from the batch
-    footer read once (driver-side, cheap)."""
-    _configure_events_read(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet directory — one file = one
     micro-batch under availableNow; in production the same code points at a
-    landing directory or Kafka source.  Applies the same event-time
-    normalization as the batch catalog (dtype-aware, see _ts_to_ltz)."""
-    nanos = _configure_events_read(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(events_schema(spark, sf_dir))
-        # the file stream source needs a directory base path; glob down to
-        # the events file inside the sf dir
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return _ts_to_ltz(stream, nanos)
+    landing directory or Kafka source.  ``ts`` is cast to TIMESTAMP (ltz)
+    for watermarking; the session tz is pinned UTC, so the values equal the
+    batch catalog's timestamp_ntz column."""
+    stream = scan_events(spark, sf_dir, stream=True)
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def read_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read with the same column types as ``read_events_stream`` — the
     twin input for batch/stream consistency tests."""
-    nanos = _configure_events_read(spark, sf_dir)
-    return _ts_to_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"), nanos)
+    return scan_events(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def tumbling_hourly_stream(events: DataFrame) -> DataFrame:

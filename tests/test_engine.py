@@ -43,3 +43,22 @@ def test_queries_fail_cleanly_on_missing_sf_dir(spark):
     fn = all_queries()["flagship_weekly_brand_demand"]
     with pytest.raises(AnalysisException):
         fn(spark, "/root/testdata/sf_does_not_exist").collect()
+
+
+def test_no_package_code_sets_session_config():
+    """Building or running a query must not flip session-global config:
+    the test sweeps build queries from several threads over one session.
+    Settings belong in session.get_spark, reads carry their own options."""
+    import pathlib
+    import re
+
+    import hackatonbigdata_spark
+
+    root = pathlib.Path(hackatonbigdata_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root.parent)}:{i}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.conf\.set\(", line)
+    ]
+    assert not hits, "package code calls .conf.set(:\n" + "\n".join(hits)

@@ -138,20 +138,6 @@ def test_holt_winters_query_shape(spark):
         assert np.isfinite(r.forecast_7d)
 
 
-def test_largestar_equals_propagation(spark):
-    """The O(log n) large-star/small-star components must produce exactly
-    the same (doc_id, component_id, size, canonical) rows as the min-label
-    propagation fixpoint — two algorithms, one answer."""
-    prop = sorted(
-        map(tuple, QUERIES["dedup_cluster_components"](spark, SF_DIR).collect())
-    )
-    star = sorted(
-        map(tuple, QUERIES["dedup_cluster_largestar"](spark, SF_DIR).collect())
-    )
-    assert prop == star
-    assert prop, "sf0.001 corpus contains planted near-dup clusters"
-
-
 def test_propagation_raises_at_its_round_cap(spark, monkeypatch):
     """A cap under which no fixpoint can be certified must raise, naming
     the cap, instead of returning unconverged labels."""

@@ -98,10 +98,6 @@ WINDOW_EXEMPT: dict[str, str] = {
 # (no BatchEvalPython / ArrowEvalPython / FlatMapGroupsInPandas /
 # MapInPandas), so Python never enters a hot path unannounced.
 PYTHON_EXEMPT: dict[str, str] = {
-    "ar2_yule_walker_per_series": "per-series Arrow kernel beside its SQL "
-    "twin ar2_yule_walker_sql",
-    "croston_per_series": "per-series Arrow kernel beside its SQL twin "
-    "croston_ses_sql",
     "ewm_pandas_per_series": "pandas-exact adjust=True EWM, not a recurrence "
     "(ewm_daily_store is the JVM fold)",
     "holt_winters_per_series": "smoothing recursions that depend on their "
@@ -130,11 +126,22 @@ if _SER:
     _WCHUNKS.append(_SER)
 
 
-def _plan_verdict(spark, name: str) -> str | None:
+def _audited_facts(df) -> tuple:
+    """(unpartitioned windows, plan_stats) of ``df``'s pre-run plan.  A new
+    DataFrame over the same logical plan is compiled afresh whether or not
+    ``df`` already ran; once run, ``df``'s own adaptive plan is the final
+    one, re-planned from runtime statistics, so counts read off it would
+    depend on test order."""
+    fresh = df.alias("_plan_audit")
+    return unpartitioned_windows(fresh), plan_stats(fresh)
+
+
+def _plan_verdict(spark, name: str, df=None) -> str | None:
     try:
-        df = cached_query_df(spark, SF_DIR, name, QUERIES[name])
-        n = unpartitioned_windows(df)
-        python = plan_stats(df).has_python_udf
+        if df is None:
+            df = cached_query_df(spark, SF_DIR, name, QUERIES[name])
+        n, stats = _audited_facts(df)
+        python = stats.has_python_udf
     except Exception as exc:  # noqa: BLE001 — report, don't kill the chunk
         return f"{name}: construction/plan failed: {type(exc).__name__}: {str(exc)[:300]}"
     if python != (name in PYTHON_EXEMPT):
@@ -181,6 +188,19 @@ def test_no_unpartitioned_windows_exhaustive(spark, i):
             verdicts = list(pool.map(lambda n: _plan_verdict(spark, n), names))
     bad = [v for v in verdicts if v]
     assert not bad, f"{len(bad)} of {len(names)} failed:\n" + "\n".join(bad)
+
+
+@pytest.mark.parametrize("name", ["cv_hierarchical_folds", "corpus_budget_selection"])
+def test_plan_verdict_is_the_same_before_and_after_a_run(spark, name):
+    """The exhaustive audit judges one stated plan, the pre-run one, so its
+    verdict and the facts behind it do not depend on whether the shared
+    DataFrame already ran.  Once run, these two queries' own adaptive plans
+    count fewer scans (4 -> 0) and fewer unpartitioned windows (5 -> 3)."""
+    df = QUERIES[name](spark, SF_DIR)
+    facts, verdict = _audited_facts(df), _plan_verdict(spark, name, df)
+    df.collect()
+    assert _audited_facts(df) == facts
+    assert _plan_verdict(spark, name, df) == verdict
 
 
 def test_contamination_broadcasts_benchmark_side(spark):
