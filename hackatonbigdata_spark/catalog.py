@@ -98,11 +98,11 @@ _EVENTS_SCHEMA: dict[tuple[str, float], StructType] = {}
 def events_schema(path: str) -> StructType:
     """Spark schema of the events parquet at ``path`` (a file or a
     directory of part files), read from its footer on the driver: no
-    schema-inference job.  A TIMESTAMP(NANOS) ``ts`` is declared ``bigint``
-    so Spark reads its raw int64; Spark rejects that parquet type as a
-    timestamp, and a supplied schema is honoured by the vectorized reader,
-    the row reader and the file stream source alike, with no session
-    config."""
+    schema-inference job.  An INT64 TIMESTAMP(NANOS) ``ts`` is declared
+    ``bigint`` so Spark reads its raw int64; Spark rejects that parquet
+    type as a timestamp, and a supplied schema is honoured by the
+    vectorized reader, the row reader and the file stream source alike,
+    with no session config."""
     import glob  # noqa: PLC0415 — driver-side only
 
     probe = path
@@ -124,7 +124,12 @@ def events_schema(path: str) -> StructType:
 
         arrow = pq.read_schema(probe)
         schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
-        if str(arrow.field("ts").type).startswith("timestamp[ns"):
+        # pyarrow reports Spark's default INT96 timestamps as timestamp[ns]
+        # too, but Spark reads those as timestamps: only INT64 nanos is bigint
+        ts = pq.read_metadata(probe).schema.column(arrow.get_field_index("ts"))
+        if ts.physical_type == "INT64" and str(arrow.field("ts").type).startswith(
+            "timestamp[ns"
+        ):
             schema = StructType(
                 [StructField("ts", LongType()) if f.name == "ts" else f for f in schema]
             )

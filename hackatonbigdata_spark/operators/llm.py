@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import h32, r4
+from hackatonbigdata_spark.functions.fixpoint import iterate
 from hackatonbigdata_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -527,14 +528,8 @@ def similarity_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table broadcasts, and the in-bucket search is ``_bucket_topk``.
     At 100 TB the centroids come from MLlib KMeans instead; the plumbing
     is identical."""
-    t = Catalog(spark, sf_dir)
-    e = _embeddings(t)
-    assign = (
-        _ivf_ranks(e)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("centroid_id").alias("bucket_id"))
-    )
-    return _bucket_topk(e.join(assign, "vec_id"), 3)
+    e = _embeddings(Catalog(spark, sf_dir))
+    return _bucket_topk(e.join(_ivf_buckets(e), "vec_id"), 3)
 
 
 @register("dedup_minhash_mllib")
@@ -980,11 +975,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed min-aggregate (join → union → groupBy.min — no second join back).
     Labels are SEEDED with min(self, min(neighbor)) — the first propagation
     round folded into initialization — so shallow dup clusters converge
-    with fewer joins.  Convergence is detected by the (exact, integer) sum
-    of labels going unchanged; labels only ever decrease, so checking every
-    SECOND round still certifies the fixpoint, and the sum rides the
-    checkpoint job itself via ``observe`` — zero extra driver round-trips.
-    The oracle states the same fixpoint as a recursive CTE.
+    with fewer joins.  ``iterate`` checkpoints every round and stops when
+    the (exact, integer) sum of labels is unchanged: labels only ever
+    decrease, so an unchanged sum is the fixpoint, and the sum rides the
+    checkpoint job itself.  The oracle states the same fixpoint as a
+    recursive CTE.
 
     ``dedup_cluster_largestar`` is this same query: min-label propagation
     measured faster than large-star/small-star (Kiveris et al.) on the
@@ -992,10 +987,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     names.  Scale:
     rounds = graph diameter (dup clusters are shallow), capped at
     ``_COMPONENTS_MAX_ROUNDS`` with a loud failure past it; each round is
-    one keyed join + one keyed agg, lineage kept O(1) by the periodic
+    one keyed join + one keyed agg, lineage kept O(1) by the per-round
     localCheckpoint."""
-    from pyspark.sql import Observation  # noqa: PLC0415
-
     cand = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
     half = cand.select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     # The dup graph is orders of magnitude smaller than the corpus (only
@@ -1010,45 +1003,24 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(8, "db")
         .localCheckpoint(eager=True)
     )
-    seed_obs = Observation()
-    labels = (
-        edges.groupBy("da")
-        .agg(F.min("db").alias("_mn"))
-        .select(
-            F.col("da").alias("doc_id"),
-            F.least(F.col("da"), F.col("_mn")).alias("component_id"),
-        )
-        .observe(seed_obs, F.sum("component_id").alias("s"))
-        .localCheckpoint(eager=True)
+    seed = edges.groupBy("da").agg(F.min("db").alias("_mn")).select(
+        F.col("da").alias("doc_id"),
+        F.least(F.col("da"), F.col("_mn")).alias("component_id"),
     )
-    prev_sum = seed_obs.get["s"]
-    for rnd in range(1, _COMPONENTS_MAX_ROUNDS + 1):
+
+    def min_label_propagation(labels: DataFrame) -> DataFrame:
         prop = edges.join(labels, edges.db == labels.doc_id).select(
             F.col("da").alias("doc_id"), "component_id"
         )
-        labels = (
+        return (
             prop.unionByName(labels.select("doc_id", "component_id"))
             .groupBy("doc_id")
             .agg(F.min("component_id").alias("component_id"))
         )
-        # sync at rounds 1,3,5,...: the min-neighbor seed already IS the
-        # fixpoint for diameter-2 clusters (the common case), so the first
-        # certification fires after a single join instead of two; the
-        # last round is always certified
-        if rnd % 2 == 1 or rnd == _COMPONENTS_MAX_ROUNDS:
-            obs = Observation()
-            labels = labels.observe(
-                obs, F.sum("component_id").alias("s")
-            ).localCheckpoint(eager=True)
-            new_sum = obs.get["s"]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            "min-label propagation did not reach a fixpoint in "
-            f"{_COMPONENTS_MAX_ROUNDS} rounds; raise _COMPONENTS_MAX_ROUNDS"
-        )
+
+    labels = iterate(
+        seed, min_label_propagation, F.sum("component_id"), _COMPONENTS_MAX_ROUNDS
+    )[-1]
     sizes = labels.groupBy("component_id").agg(F.count(F.lit(1)).alias("component_size"))
     return (
         labels.join(F.broadcast(sizes), "component_id")
@@ -3540,13 +3512,8 @@ def dedup_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never all-pairs); the decision is a per-vector aggregate over its
     candidate list.  At scale the centroids come from MLlib KMeans with
     more buckets — identical plumbing."""
-    t = Catalog(spark, sf_dir)
-    e = _embeddings(t)
-    assign = (
-        _ivf_ranks(e)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("centroid_id").alias("bucket_id"), "ccos")
-    )
+    e = _embeddings(Catalog(spark, sf_dir))
+    assign = _ivf_buckets(e)
     ea = e.join(assign, "vec_id")
     a = ea.alias("a")
     b = ea.alias("b")
@@ -5943,6 +5910,19 @@ def _ivf_ranks(e: DataFrame) -> DataFrame:
         .select("vec_id", "centroid_id", r4("_ccos_raw").alias("ccos"))
     )
     return _vec_rank(scored, "rn", F.col("ccos").desc(), nb="centroid_id")
+
+
+def _ivf_buckets(e: DataFrame) -> DataFrame:
+    """(vec_id, bucket_id, ccos): every vector's IVF bucket (rn = 1 of
+    ``_ivf_ranks``), materialized once: a bucket pair scan reads it on
+    both sides, and each lazy read would rerun the centroid cross join."""
+    return (
+        _ivf_ranks(e)
+        .filter(F.col("rn") == 1)
+        .select("vec_id", F.col("centroid_id").alias("bucket_id"), "ccos")
+        .repartition(e.sparkSession.sparkContext.defaultParallelism, "vec_id")
+        .localCheckpoint()
+    )
 
 
 def _exact_topk(e: DataFrame, k: int) -> DataFrame:
@@ -8373,6 +8353,8 @@ def _nnd_build(
             F.lit(0).cast("long").alias("n_scored"),
         )
     ]
+    # fixed rounds in lockstep with the oracle's unroll, not ``iterate``:
+    # there is no convergence test to share
     for r in range(1, _NND_ROUNDS + 1):
         # fresh exprIds on BOTH union branches: a union over a self-join
         # that reuses the checkpointed edge table's attribute ids trips

@@ -401,6 +401,27 @@ def topk_orders_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def basket_pairs(
+    lineitem: DataFrame, min_baskets: int, u: str = "u", v: str = "v", n: str = "nb"
+) -> DataFrame:
+    """``(u, v, n)``: every part pair u < v ordered together in at least
+    ``min_baskets`` order baskets, with ``n`` its basket count — the edge
+    set of the basket co-occurrence graph.  Lazy: callers that read it
+    more than once checkpoint it themselves."""
+    items = lineitem.select("l_orderkey", "l_partkey").distinct()
+    a, b = items.alias("a"), items.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(F.col("a.l_partkey").alias(u), F.col("b.l_partkey").alias(v))
+        .agg(F.count(F.lit(1)).alias(n))
+        .filter(F.col(n) >= min_baskets)
+    )
+
+
 @register(
     "cooccurrence_pairs",
     oracle="""
@@ -423,22 +444,8 @@ def cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (few items per order) so the pair blow-up is bounded — for pathological
     baskets, cap basket size first (standard market-basket practice).
     """
-    t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a = items.alias("a")
-    b = items.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
-        .filter(F.col("n_baskets") >= 2)
-    )
+    lineitem = Catalog(spark, sf_dir).lineitem
+    return basket_pairs(lineitem, 2, "part_a", "part_b", "n_baskets")
 
 
 @register(

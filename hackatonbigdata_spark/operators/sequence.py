@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.fixpoint import iterate
+from hackatonbigdata_spark.operators.relational import basket_pairs
 from hackatonbigdata_spark.registry import register
 
 
@@ -256,22 +258,10 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, aggregate on the destination key.  Edge and rank tables partition
     by node hash; degrees ride along to avoid a second join.  At 100 TB
     lineage grows linearly in iterations, so production would
-    ``localCheckpoint`` every ~5 rounds exactly as ``dedup_cluster_components``
-    does; 5 iterations here keeps the oracle's unrolled CTE chain cheap."""
+    ``localCheckpoint`` every ~5 rounds; 5 iterations here keeps the
+    oracle's unrolled CTE chain cheap."""
     t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
-        .filter(F.col("n_baskets") >= 2)
-        .select("u", "v")
-    )
+    pairs = basket_pairs(t.lineitem, 2).select("u", "v")
     # materialize the edge table once, pre-partitioned on the join key:
     # localCheckpoint stops the lazy plan inlining the co-occurrence
     # self-join into every iteration (6× the work, linear lineage growth —
@@ -941,17 +931,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: counts are integers; the clustering coefficient is one
     exact ratio per node."""
     t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") >= 2)
+        basket_pairs(t.lineitem, 2)
         .select("u", "v")
         .localCheckpoint()  # degree join + three self-joins: build once
     )
@@ -1051,25 +1032,15 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-support cut (the Apriori pruning step — pairs below support never
     leave the aggregate); item counts broadcast back onto the surviving
     pairs; the basket total is one broadcast scalar."""
-    t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
+    lineitem = Catalog(spark, sf_dir).lineitem
+    items = lineitem.select("l_orderkey", "l_partkey").distinct()
     nb = items.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_baskets")
     )
     pc = items.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_part")
     )
-    a, b = items.alias("a"), items.alias("b")
-    pr = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= 3)
-    )
+    pr = basket_pairs(lineitem, 3, n="n_ab")
     d = pr.select(
         F.col("u").alias("antecedent"), F.col("v").alias("consequent"), "n_ab"
     ).unionAll(
@@ -1392,17 +1363,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree table is node-sized; the >= 2-common-neighbor HAVING bounds
     the output to the dense core."""
     t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") >= 2)
+        basket_pairs(t.lineitem, 2)
         .select("u", "v")
         .localCheckpoint()  # feeds adjacency AND the non-edge anti-join
     )
@@ -1506,17 +1468,8 @@ def _lpa_core(t: Catalog):
     Returns (pairs, deg, labels) — consumed by the community readout
     (``graph_label_propagation``) and the partition-quality score
     (``graph_modularity_score``) so both run one code path."""
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") >= 2)
+        basket_pairs(t.lineitem, 2)
         .select("u", "v")
         .localCheckpoint()  # feeds the adjacency both ways + intra counts
     )
@@ -1527,13 +1480,13 @@ def _lpa_core(t: Catalog):
         F.count(F.lit(1)).cast("long").alias("degree")
     )
     labels = deg.select("node", F.col("node").alias("lbl"))
-    # r14 (guide §1.2/§2): the label chain is LINEAR — each round
-    # references its predecessor exactly ONCE (through the adj join), so
-    # the plan grows linearly, not exponentially, and the per-round eager
-    # localCheckpoint the r12c twice-referenced loops need (k-core,
-    # power iteration) only paid {_LPA_ROUNDS} fixed ~0.5 s job-submission
-    # overheads here.  One eager checkpoint AFTER the loop still gives
-    # every caller a flat, materialized-once labels table (the readouts
+    # fixed rounds in lockstep with the oracle, so no ``iterate``: the label
+    # chain is LINEAR — each round references its predecessor exactly ONCE
+    # (through the adj join), so the plan grows linearly, not exponentially,
+    # and the per-round eager localCheckpoint the twice-referenced loops
+    # need (k-core, power iteration) only paid {_LPA_ROUNDS} fixed ~0.5 s
+    # job-submission overheads here.  One eager checkpoint AFTER the loop
+    # still gives every caller a flat, materialized-once labels table (the readouts
     # reference it 2-3x).  Two stash A/B pairs (3-pass min, sf0.1):
     # LPA 4.17/4.74 s with vs 4.51/5.62 s without; modularity 3.85/4.28
     # vs 4.30/5.68 — consistently faster both pairs, modest magnitude.
@@ -1583,7 +1536,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is ONE adjacency⋈labels equi-join + a keyed count
     + a per-node top-1 window — all hash-partitioned by node, no stage
     beyond the edge table's size; the label chain is LINEAR (each round
-    referenced once), so per-round checkpoints were dropped in r14 and
+    referenced once), so there are no per-round checkpoints and
     one eager localCheckpoint after the loop keeps every caller's
     readout flat (see _lpa_core).  At 100 TB the same loop shards by
     node; the classic
@@ -1805,10 +1758,11 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Algorithm: textbook iterative peel per k — drop every node with
     degree < k, recompute, repeat to the FIXED POINT.  Peeling is
     monotone, so the DuckDB oracle runs a fixed {rounds}-round chain
-    (no-ops past convergence) while the Spark side loops live with an
-    eager localCheckpoint per round (plan truncation — the r12b lesson)
-    and an isEmpty early-stop, raising if convergence ever needs more
-    rounds than the oracle covers rather than silently diverging.
+    (no-ops past convergence) while the Spark side runs ``iterate``: an
+    eager localCheckpoint per round truncates the plan each peel
+    references twice, and the peel stops once the edge count is
+    unchanged, raising if convergence ever needs more rounds than the
+    oracle covers rather than silently diverging.
 
     Scale: each round is one degree aggregate + two anti-joins on the
     shrinking edge table; rounds are bounded by the peel depth (small in
@@ -1817,17 +1771,8 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes by degree, peel k in one pass per bucket) changes constant
     factors, not semantics."""
     t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") >= 2)
+        basket_pairs(t.lineitem, 2)
         .select("u", "v")
         .localCheckpoint()  # feeds the full-degree table and both peels
     )
@@ -1839,13 +1784,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def core_nodes(k: int) -> DataFrame:
-        # _KCORE_ROUNDS + 1 convergence CHECKS around at most _KCORE_ROUNDS
-        # filter passes: the oracle chain covers exactly _KCORE_ROUNDS
-        # passes, so a graph converging on the FINAL pass must return, not
-        # raise — but a pass beyond the oracle's depth must still fail
-        # loudly rather than silently diverge from it.
-        edges = pairs
-        for rnd in range(_KCORE_ROUNDS + 1):
+        def peel(edges: DataFrame) -> DataFrame:
             d = (
                 edges.select(F.col("u").alias("node"))
                 .unionAll(edges.select(F.col("v").alias("node")))
@@ -1853,24 +1792,19 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).alias("dg"))
             )
             bad = d.filter(F.col("dg") < k).select("node")
-            if bad.isEmpty():
-                return edges.select(F.col("u").alias("node")).unionAll(
-                    edges.select(F.col("v").alias("node"))
-                ).distinct()
-            if rnd == _KCORE_ROUNDS:
-                break
-            edges = (
-                edges.join(
-                    bad.withColumnRenamed("node", "u"), "u", "anti"
-                )
+            return (
+                edges.join(bad.withColumnRenamed("node", "u"), "u", "anti")
                 .join(bad.withColumnRenamed("node", "v"), "v", "anti")
                 .select("u", "v")
-                .localCheckpoint()  # eager: truncate the per-round plan
             )
-        raise RuntimeError(
-            f"{k}-core peel did not converge in {_KCORE_ROUNDS} rounds; "
-            "raise _KCORE_ROUNDS (the oracle chain) in lockstep"
-        )
+
+        # the oracle chain covers exactly _KCORE_ROUNDS passes, and the
+        # step after the last of them is the no-op that certifies it: a
+        # graph that needs one more pass raises instead of diverging
+        edges = iterate(pairs, peel, F.count(F.lit(1)), _KCORE_ROUNDS + 1)[-1]
+        return edges.select(F.col("u").alias("node")).unionAll(
+            edges.select(F.col("v").alias("node"))
+        ).distinct()
 
     c2 = core_nodes(2).withColumnRenamed("node", "n2")
     c3 = core_nodes(3).withColumnRenamed("node", "n3")
@@ -1968,26 +1902,13 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once) to the node-sized state and aggregates on the
     destination — one shuffle per iteration, the textbook distributed
     power method; the normalizer is a 1-row broadcast.  Per-iteration
-    eager localCheckpoint keeps the two-reference plan linear (the r12b
-    DP lesson).
+    eager localCheckpoint keeps the two-reference plan linear.
 
     Reference parity: extends /root/reference/src/features/
     behavioral_features_engine.py:454-485 (pair counts) to spectral
     structure; the reference has no graph layer."""
     t = Catalog(spark, sf_dir)
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("nb"))
-        .filter(F.col("nb") >= 2)
-        .select("u", "v")
-    )
+    pairs = basket_pairs(t.lineitem, 2).select("u", "v")
     edges = (
         pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition("u")
@@ -1997,6 +1918,8 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("degree")
     )
     x = deg.select("node", F.lit(_EIG_SCALE).cast("long").alias("x"))
+    # fixed iterations in lockstep with the oracle, not ``iterate``: there
+    # is no convergence test to share
     for _ in range(_EIG_ITERS):
         v = (
             edges.join(x.withColumnRenamed("node", "u"), "u")
@@ -2063,17 +1986,8 @@ def _weighted_graph(t: Catalog):
     (see ``_lpa_core``): nodes = parts, an edge iff co-ordered in >= 2
     baskets — only the count survives as ``wt`` instead of being
     dropped."""
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("wt"))
-        .filter(F.col("wt") >= 2)
+        basket_pairs(t.lineitem, 2, n="wt")
         .localCheckpoint()  # feeds adjacency both ways + intra-weight sums
     )
     adj = (
@@ -2100,7 +2014,7 @@ def _wlpa_core(t: Catalog):
     pairs, adj, st = _weighted_graph(t)
     labels = st.select("node", F.col("node").alias("lbl"))
     # linear chain: no per-round checkpoint needed — one eager checkpoint
-    # after the loop (see _lpa_core's r14 note)
+    # after the loop (see _lpa_core)
     for _ in range(_LPA_ROUNDS):
         labels = (
             adj.join(labels.select(F.col("node").alias("nbr"), "lbl"), "nbr")
@@ -2169,8 +2083,8 @@ def graph_label_propagation_weighted(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: identical to the unweighted query — each round is ONE
     adjacency⋈labels equi-join + a keyed weight sum + a per-node top-1
     window, hash-partitioned by node.  The label chain is LINEAR (each
-    round referenced once), so per-round checkpoints were dropped in
-    r14; one eager localCheckpoint after the loop keeps every caller's
+    round referenced once), so there are no per-round checkpoints; one
+    eager localCheckpoint after the loop keeps every caller's
     readout flat (see _wlpa_core).  The weight column rides the same
     shuffles the count used; cost is unchanged at any scale."""
     t = Catalog(spark, sf_dir)

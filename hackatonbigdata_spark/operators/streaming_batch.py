@@ -19,12 +19,15 @@ streaming job partitions cleanly by bucket hash with no skew.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.fixpoint import iterate
 from hackatonbigdata_spark.registry import register
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
@@ -2473,7 +2476,7 @@ def stream_hll_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- KLL-style bounded quantile sketch (round 12) -------------------------
+# --- KLL-style bounded quantile sketch ------------------------------------
 # the ninth sketch-family member: rank-based compaction quantiles on an
 # UNBOUNDED value domain — where the fixed-grid histogram twin above
 # (stream_hourly_value_quantiles) is exact only because values land on
@@ -2594,41 +2597,56 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(spark.sparkContext.defaultParallelism, "d")
     )
-    lvl = vals
-    retained: list[DataFrame] = []
-    for i in range(KLL_LEVELS):
-        r = lvl.select(
-            "d",
+    ret = _kll_cascade(vals, "d").select(
+        "d", "v", "id", F.pow(2, "lvl").cast("long").alias("w")
+    )
+    return _kll_readout(ret.localCheckpoint(), vals)
+
+
+def _kll_cascade(items: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, v, id, lvl)``: the items the KLL compactor cascade keyed
+    on ``keys`` retains, each with its level.  A level holding more than
+    KLL_K items of a key sorts them by (v, id) and promotes the odd ranks
+    to the next level; a level at or under budget is retained whole.  The
+    levels run through ``iterate`` until no key promotes (the oracle's
+    fixed unroll is empty past that point); after KLL_LEVELS levels the
+    remainder is retained at level KLL_LEVELS, because the level budget
+    defines the sketch and is not a convergence cap."""
+    by_key = W.partitionBy(*keys)
+
+    def level(df: DataFrame) -> DataFrame:
+        return df.select(
+            *keys,
             "v",
             "id",
-            F.row_number()
-            .over(W.partitionBy("d").orderBy("v", "id"))
-            .alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy("d")).alias("c"),
-        ).localCheckpoint()
-        retained.append(
-            r.filter(F.col("c") <= KLL_K).select(
-                "d", "v", "id", F.lit(2**i).cast("long").alias("w")
-            )
+            F.row_number().over(by_key.orderBy("v", "id")).alias("rn"),
+            F.count(F.lit(1)).over(by_key).alias("c"),
         )
-        lvl = r.filter((F.col("c") > KLL_K) & (F.col("rn") % 2 == 1)).select(
-            "d", "v", "id"
-        )
-        # every remaining level is empty once no day overflowed here —
-        # stop instead of running the full fixed unroll's empty jobs
-        # (the DuckDB oracle keeps the fixed 14-level unroll; trailing
-        # empty levels contribute nothing, so the results are identical)
-        if lvl.isEmpty():
-            break
-    retained.append(
-        lvl.select(
-            "d", "v", "id", F.lit(2**KLL_LEVELS).cast("long").alias("w")
-        )
+
+    promoted = (F.col("c") > KLL_K) & (F.col("rn") % 2 == 1)
+
+    def compact(r: DataFrame) -> DataFrame:
+        return level(r.filter(promoted).select(*keys, "v", "id"))
+
+    states = iterate(
+        level(items), compact, F.count_if(promoted), KLL_LEVELS - 1, budget=True
     )
-    ret = retained[0]
-    for part in retained[1:]:
-        ret = ret.unionByName(part)
-    ret = ret.localCheckpoint()
+    kept = [
+        r.filter(F.col("c") <= KLL_K).select(*keys, "v", "id", F.lit(i).alias("lvl"))
+        for i, r in enumerate(states)
+    ]
+    kept.append(
+        states[-1]
+        .filter(promoted)
+        .select(*keys, "v", "id", F.lit(len(states)).alias("lvl"))
+    )
+    return reduce(DataFrame.unionByName, kept)
+
+
+def _kll_readout(ret: DataFrame, vals: DataFrame) -> DataFrame:
+    """Per-day p50/p90/p99 from retained ``(d, v, id, w)`` items: the
+    smallest retained value whose cumulative weight reaches
+    ceil(pct·W/100), with each day's event count from ``vals``."""
     vw = ret.groupBy("d", "v").agg(F.sum("w").cast("long").alias("vw"))
     cum = vw.withColumn(
         "cum",
@@ -2641,7 +2659,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     nev = vals.groupBy("d").agg(
         F.count(F.lit(1)).cast("long").alias("n_events")
     )
-    pcts = spark.createDataFrame([(p,) for p in QUANT_PCTS], "pct int")
+    pcts = ret.sparkSession.createDataFrame([(p,) for p in QUANT_PCTS], "pct int")
     need = (
         tot.join(nev, "d")
         .crossJoin(F.broadcast(pcts))
@@ -2669,7 +2687,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- KLL sketch MERGE (round 12b) ------------------------------------------
+# --- KLL sketch MERGE -------------------------------------------------------
 # mergeability is what makes a sketch warehouse-native: store one small
 # sketch per hour, answer the day (or any hour range) by MERGING states
 # instead of rescanning events — the same read the HLL daily merge
@@ -2814,44 +2832,17 @@ def sketch_kll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("id"),
         )
     )
-    # per-hour cascade: retained items keep their LEVEL (the stored state)
-    lvl = hvals.repartition(spark.sparkContext.defaultParallelism, "d")
-    hour_keeps: list[DataFrame] = []
-    for i in range(KLL_LEVELS):
-        r = lvl.select(
-            "d",
-            "h",
-            "v",
-            "id",
-            F.row_number()
-            .over(W.partitionBy("d", "h").orderBy("v", "id"))
-            .alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy("d", "h")).alias("c"),
-        ).localCheckpoint()
-        hour_keeps.append(
-            r.filter(F.col("c") <= KLL_K).select(
-                "d", "h", "v", "id", F.lit(i).alias("lvl")
-            )
-        )
-        lvl = r.filter((F.col("c") > KLL_K) & (F.col("rn") % 2 == 1)).select(
-            "d", "h", "v", "id"
-        )
-        # stop once every (d, h) drained — the day sketch's early-stop
-        # (the oracle's trailing fixed-unroll levels are empty no-ops)
-        if lvl.isEmpty():
-            break
-    hour_keeps.append(
-        lvl.select("d", "h", "v", "id", F.lit(KLL_LEVELS).alias("lvl"))
-    )
-    hret = hour_keeps[0]
-    for part in hour_keeps[1:]:
-        hret = hret.unionByName(part)
+    # per-hour cascade: retained items keep their LEVEL (the stored state);
     # the stored state is the ONE checkpoint: everything upstream is the
     # build (write path), everything downstream is the merge (read path)
-    hret = hret.localCheckpoint()
-    # day-level merge cascade over stored states only; 1-row bounded
-    # collect of the deepest stored level so the early-stop knows when
-    # injection is exhausted
+    hret = _kll_cascade(
+        hvals.repartition(spark.sparkContext.defaultParallelism, "d"), "d", "h"
+    ).localCheckpoint()
+    # day-level merge cascade over stored states only, inline rather than
+    # through ``iterate``: each level injects the stored items of that
+    # level, so an unchanged promotion count is not a fixpoint here.  A
+    # 1-row bounded collect of the deepest stored level tells the
+    # early-stop when injection is exhausted
     top = KLL_LEVELS + _KLLM_EXTRA
     max_lvl = int(hret.agg(F.max("lvl")).collect()[0][0])
     promo = None
@@ -2887,44 +2878,4 @@ def sketch_kll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d", "v", "id", F.lit(2 ** (i + 1)).cast("long").alias("w")
         )
     )
-    ret = merge_keeps[0]
-    for part in merge_keeps[1:]:
-        ret = ret.unionByName(part)
-    vw = ret.groupBy("d", "v").agg(F.sum("w").cast("long").alias("vw"))
-    cum = vw.withColumn(
-        "cum",
-        F.sum("vw").over(W.partitionBy("d").orderBy("v")).cast("long"),
-    )
-    tot = ret.groupBy("d").agg(
-        F.sum("w").cast("long").alias("w_total"),
-        F.count(F.lit(1)).cast("long").alias("n_retained"),
-    )
-    nev = hvals.groupBy("d").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events")
-    )
-    pcts = spark.createDataFrame([(p,) for p in QUANT_PCTS], "pct int")
-    need = (
-        tot.join(nev, "d")
-        .crossJoin(F.broadcast(pcts))
-        .withColumn(
-            "tgt", F.expr("(pct * w_total + 99) div 100").cast("long")
-        )
-    )
-    return (
-        need.join(cum, "d")
-        .filter(F.col("cum") >= F.col("tgt"))
-        .groupBy("d", "pct", "n_events", "w_total", "n_retained")
-        .agg(F.min("v").alias("value"))
-        .select(
-            F.col("d").alias("day"),
-            "pct",
-            "n_events",
-            "w_total",
-            "n_retained",
-            F.when(F.col("n_events") <= KLL_K, 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("is_exact"),
-            "value",
-        )
-    )
+    return _kll_readout(reduce(DataFrame.unionByName, merge_keeps), hvals)

@@ -62,12 +62,28 @@ def _load_all() -> None:
 # every other name follows in registration order.  Every name listed must
 # be registered.
 _PRIORITY: list[str] = [
+    "dedup_cluster_components",
+    "dedup_cluster_largestar",
+    "graph_kcore_decomposition",
+    "sketch_kll_quantiles",
+    "sketch_kll_merge_daily",
+    "similarity_ivf_bucketed",
+    "dedup_semdedup_ivf",
+    "cooccurrence_pairs",
+    "graph_pagerank_parts",
+    "graph_triangle_count",
+    "basket_association_rules",
+    "graph_link_prediction",
+    "graph_label_propagation",
+    "graph_modularity_score",
+    "graph_eigencentrality",
+    "graph_label_propagation_weighted",
+    "graph_modularity_weighted",
+    "graph_pagerank_weighted",
     "ar2_yule_walker_per_series",
     "ar2_yule_walker_sql",
     "croston_per_series",
     "croston_ses_sql",
-    "dedup_cluster_components",
-    "dedup_cluster_largestar",
     "similarity_graph_ann",
     "similarity_graph_ann_nnd",
     "similarity_graph_ann_clustered",

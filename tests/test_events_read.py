@@ -1,9 +1,10 @@
-"""The one events reader on a TIMESTAMP(NANOS) ``ts`` column.
+"""The one events reader on the ``ts`` encodings the shipped data lacks.
 
 The shipped test data stores ``ts`` as microseconds, so the nanosecond path
 is pinned here on a small table written by pyarrow: every reader must give
 the microsecond-truncated wall clock DuckDB reads, and none may touch the
-session's ``nanosAsLong`` setting.
+session's ``nanosAsLong`` setting.  A table Spark writes with its default
+INT96 timestamps must read like DuckDB reads it too.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from hackatonbigdata_spark.catalog import Catalog
+from hackatonbigdata_spark.catalog import Catalog, read_events
 from hackatonbigdata_spark.streaming import jobs
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -73,3 +74,39 @@ def test_nanos_events_read_like_duckdb_without_session_config(spark, tmp_path):
     assert _ts_strings(spark.table("t_nanos_events")) == want
 
     assert spark.conf.get(NANOS_CONF, "false") == conf_before
+
+
+def test_spark_default_int96_events_read_like_duckdb(spark, tmp_path):
+    """Spark writes timestamps as INT96 unless told otherwise, and pyarrow
+    reports INT96 as ``timestamp[ns]`` too; the footer's physical type
+    keeps such a file off the nanosecond path."""
+    sf = tmp_path / "int96"
+    rows = [(1, "2024-03-01 09:00:00.123456", 1.5), (2, "2024-03-01 10:30:00", 2.0)]
+    (
+        spark.createDataFrame(rows, "event_id long, ts string, value double")
+        .select(
+            "event_id",
+            F.to_timestamp("ts").alias("ts"),
+            F.lit(7).cast("long").alias("user_id"),
+            F.lit("view").alias("event_type"),
+            "value",
+            F.lit("{}").alias("props"),
+        )
+        .coalesce(1)
+        .write.parquet(str(sf / "events.parquet"))
+    )
+    part = next((sf / "events.parquet").glob("*.parquet"))
+    assert pq.read_metadata(part).schema.column(1).physical_type == "INT96"
+    con = duckdb.connect()
+    want = sorted(
+        con.execute(
+            f"SELECT event_id, strftime(ts::TIMESTAMP, '%Y-%m-%d %H:%M:%S.%f') "
+            f"FROM '{sf}/events.parquet/*.parquet'"
+        ).fetchall()
+    )
+    con.close()
+    assert want == [(1, "2024-03-01 09:00:00.123456"), (2, "2024-03-01 10:30:00.000000")]
+
+    table = read_events(spark, str(sf))
+    assert dict(table.dtypes)["ts"] == "timestamp_ntz"
+    assert _ts_strings(table) == want

@@ -354,3 +354,12 @@ def test_plan_audit_counts_match_before_and_after_a_run(spark):
     before = _bnlj_count(df)
     df.collect()
     assert _bnlj_count(df) == before == 1
+
+
+@pytest.mark.parametrize("name", ["similarity_ivf_bucketed", "dedup_semdedup_ivf"])
+def test_ivf_assignment_is_evaluated_once(spark, name):
+    """The IVF assignment (``_ivf_ranks``' centroid cross join, one
+    BroadcastNestedLoopJoin) feeds both sides of the bucket pair scan;
+    the plan must not evaluate it once per reader."""
+    n = _bnlj_count(cached_query_df(spark, SF_DIR, name, QUERIES[name]))
+    assert n <= 1, f"{name} plans {n} BroadcastNestedLoopJoins, want at most 1"

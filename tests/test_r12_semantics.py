@@ -18,7 +18,7 @@ from hackatonbigdata_spark.registry import all_queries
 
 QUERIES = all_queries()
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, SF_DIR_T2  # noqa: E402
 
 
 def _dir_file_hashes(path: str) -> dict[str, str]:
@@ -307,20 +307,23 @@ def test_graph_ann_on_recall_vs_cost_chart(spark):
 # --- KLL-style quantile sketch ---------------------------------------------
 
 
-def _kll_batch_python():
+def _kll_batch_python(levels: int | None = None, sf_dir: str = SF_DIR):
     """Pure-Python rederivation of the sketch_kll_quantiles batch
     cascade over DuckDB-loaded events: per-day level-by-level odd-rank
-    compaction, integer-ceil readout, plus the per-day compaction error
-    certificate (sum of 2^l over compacted levels) and the exact sorted
-    values for bound checking."""
+    compaction under a budget of ``levels`` levels (default KLL_LEVELS),
+    integer-ceil readout, plus the per-day compaction error certificate
+    (sum of 2^l over compacted levels), the number of items left over at
+    the top level, and the exact sorted values for bound checking."""
     import duckdb
 
     from hackatonbigdata_spark.sketch_params import KLL_K, KLL_LEVELS
 
+    levels = KLL_LEVELS if levels is None else levels
+
     rows = duckdb.connect().execute(
         "SELECT CAST(ts AS DATE), value, event_id FROM read_parquet(?)"
         " WHERE value IS NOT NULL",
-        [f"{SF_DIR}/events.parquet"],
+        [f"{sf_dir}/events.parquet"],
     ).fetchall()
     by_day: dict = {}
     for d, v, i in rows:
@@ -330,7 +333,7 @@ def _kll_batch_python():
         level = sorted(items)
         retained = []  # (v, w)
         err = 0
-        for lv in range(KLL_LEVELS):
+        for lv in range(levels):
             if len(level) > KLL_K:
                 promoted = level[0::2]
                 err += 1 << lv
@@ -338,7 +341,8 @@ def _kll_batch_python():
             else:
                 retained.extend((v, 1 << lv) for v, _ in level)
                 level = []
-        retained.extend((v, 1 << KLL_LEVELS) for v, _ in level)
+        retained.extend((v, 1 << levels) for v, _ in level)
+        n_top = len(level)
         w_total = sum(w for _, w in retained)
         n_ret = len(retained)
         ests = {}
@@ -360,6 +364,7 @@ def _kll_batch_python():
             "w_total": w_total,
             "n_retained": n_ret,
             "err": err,
+            "n_top": n_top,
             "ests": ests,
             "sorted_vals": sorted(v for v, _ in items),
         }
@@ -402,6 +407,30 @@ def test_sketch_kll_quantiles_matches_python_and_bound(spark):
             assert lo - 2 * exp["err"] <= tgt <= hi + 2 * exp["err"]
     # the sf0.001 day mix must exercise BOTH regimes
     assert n_exact_days > 0 and n_compacted_days > 0
+
+
+def test_sketch_kll_quantiles_keeps_the_remainder_at_the_level_budget(
+    spark, monkeypatch
+):
+    """With a 2-level budget every sf0.01 day (300+ values) still
+    overflows after the last level: the cascade must stop there and
+    retain the remainder at the top level with weight 2^2, exactly as
+    the Python cascade does.  No sf0.001 day holds enough values."""
+    import hackatonbigdata_spark.operators.streaming_batch as sb
+
+    monkeypatch.setattr(sb, "KLL_LEVELS", 2)
+    expected = _kll_batch_python(levels=2, sf_dir=SF_DIR_T2)
+    assert all(exp["n_top"] > 0 for exp in expected.values())
+    rows = sb.sketch_kll_quantiles(spark, SF_DIR_T2).collect()
+    assert len(rows) == 3 * len(expected)
+    for r in rows:
+        exp = expected[r.day]
+        assert (r.n_events, r.w_total, r.n_retained, r.value) == (
+            exp["n_events"],
+            exp["w_total"],
+            exp["n_retained"],
+            exp["ests"][r.pct][0],
+        ), (r.day, r.pct)
 
 
 def test_io_equality_deletes_layout(spark):
