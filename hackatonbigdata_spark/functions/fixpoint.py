@@ -1,7 +1,7 @@
 """The one driver for the loops that run to a fixpoint.
 
-A round materializes its state with one eager ``localCheckpoint``, which
-also truncates the plan the next round builds on, and reads the stop test
+A round materializes its state with one ``materialize``, which also
+truncates the plan the next round builds on, and reads the stop test
 through ``observe`` on that same job, so a round costs one Spark action and
 no more.
 """
@@ -12,10 +12,12 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 
+from hackatonbigdata_spark.functions.materialize import materialize
 
-def _materialize(df: DataFrame, signal: Column) -> tuple[DataFrame, object]:
+
+def _observed(df: DataFrame, signal: Column) -> tuple[DataFrame, object]:
     obs = Observation()
-    df = df.observe(obs, signal.alias("signal")).localCheckpoint(eager=True)
+    df = materialize(df.observe(obs, signal.alias("signal")))
     return df, obs.get["signal"]
 
 
@@ -37,10 +39,10 @@ def iterate(
     fixpoint the loop raises, naming the cap; with ``budget`` the cap is
     instead part of what the caller computes, and the states reached so
     far are returned."""
-    state, prev = _materialize(state, signal)
+    state, prev = _observed(state, signal)
     states = [state]
     for _ in range(max_rounds):
-        state, cur = _materialize(step(state), signal)
+        state, cur = _observed(step(state), signal)
         states.append(state)
         if cur == prev:
             return states

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import iso_dow, r4
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 
 
@@ -1658,7 +1659,8 @@ def trend_theilsen_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/features/temporal_features_engine.py:131-175);
     this is the robust drop-in the same pipeline reads."""
     t = Catalog(spark, sf_dir)
-    m = (
+    # feeds the self-join AND the per-brand stats
+    m = materialize(
         t.lineitem.join(
             F.broadcast(t.part), F.col("l_partkey") == F.col("p_partkey")
         )
@@ -1676,7 +1678,6 @@ def trend_theilsen_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.year("mon") * 12 + F.month("mon")).cast("long").alias("x"),
             "qy",
         )
-        .localCheckpoint()  # feeds the self-join AND the per-brand stats
     )
     a, b = m.alias("a"), m.alias("b")
     pr = a.join(
@@ -1773,13 +1774,12 @@ def ab_test_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavioral_features_engine.py:380-430); this is the test that says
     whether the variation is real."""
     t = Catalog(spark, sf_dir)
-    o = (
+    # feeds margins AND the cell join
+    o = materialize(
         t.events.groupBy(
             F.col("event_type").alias("t"),
             iso_dow(F.col("ts")).cast("long").alias("d"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("obs"))
-        .localCheckpoint()  # feeds margins AND the cell join
+        ).agg(F.count(F.lit(1)).cast("long").alias("obs"))
     )
     rt = o.groupBy("t").agg(F.sum("obs").cast("long").alias("r"))
     ct = o.groupBy("d").agg(F.sum("obs").cast("long").alias("c"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4, wmape_expr
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 
 _ORDER_SQL = "l_shipdate, l_orderkey, l_linenumber"
@@ -2804,13 +2805,12 @@ def stacking_gbt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the compact design matrix once: every boosting round
     # re-reads it, and without this the OOF join re-executes per iteration
-    vec = (
+    vec = materialize(
         VectorAssembler(
             inputCols=["pred_mean", "pred_q75", "pred_store"], outputCol="x"
         )
         .transform(j)
         .coalesce(8)
-        .localCheckpoint()
     )
     model = GBTRegressor(
         featuresCol="x",
@@ -3650,7 +3650,7 @@ def calibration_platt_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     event ``calibration_platt`` uses; output is a 10-bin reliability table
     plus the fitted params echoed as columns.
 
-    Scale: the (xs, y) projection is localCheckpointed once (two doubles a
+    Scale: the (xs, y) projection is materialized once (two doubles a
     row), then each GD step is one full-pass aggregate — the textbook
     distributed-GD layout.  {iters} sequential passes are the honest cost
     of an iterative fit; production fits on the hash-sampled calibration
@@ -3676,33 +3676,30 @@ def calibration_platt_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the labeled projection ONCE: both the GD fit below and
     # the final scoring pass read it, and without this the whole label
     # pipeline (per-supplier median + join + min-max scaling) would run
-    # twice (r7; ~2.5 s of the r6 runtime was that recompute)
-    sc = (
+    # twice
+    sc = materialize(
         lab.crossJoin(F.broadcast(mm))
         .select("l_orderkey", "y", xs.alias("xs"))
-        .localCheckpoint()
     )
     # the GD input is two doubles a row — repartition (NOT coalesce, which
     # would drag the upstream join down to the same width) before
     # checkpointing so the iteration aggregates schedule a handful of
     # tasks each instead of spraying every round across all shuffle
     # partitions
-    cal = (
+    cal = materialize(
         sc.filter(F.col("l_orderkey") % 2 == 0)
         .select("xs", "y")
         .repartition(4)
-        .localCheckpoint()
     )
 
     def z_col(a, b):
         return (a / F.lit(1e9)) * F.col("xs") + (b / F.lit(1e9))
 
     lr = float(_PLATT_LR)
-    # r7: same flat-aggregate GD rework as calibration_quantile_fit (see
+    # the same flat-aggregate GD loop as calibration_quantile_fit (see
     # its loop comment): the (a, b) nano-params live on the driver and
     # are inlined as literals, each step is one flat aggregate + a 1-row
-    # collect, and the arithmetic — and therefore the integer param
-    # trajectory — is bit-identical to the r6 nested-plan form.
+    # collect, and the integer param trajectory is exact.
     a_i, b_i = 1000000000, -500000000
     for _ in range(_PLATT_ITERS):
         z = z_col(F.lit(a_i), F.lit(b_i))
@@ -3840,13 +3837,13 @@ def calibration_quantile_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines and partitionings.  All three taus ride ONE gradient
     pass per step: the driver-held (tau, a, b) params are inlined as
     literals into a single flat aggregate computing all six gradient sums
-    at once (r7; see the loop comment).
+    at once (see the loop comment).
 
     Output: per tau, the fitted nano-params plus the two diagnostics that
     matter — empirical coverage (P[y <= q_tau(x)]; near tau when the fit
     is honest) and mean pinball loss over ALL rows.
 
-    Scale: the (xs, ys) projection is localCheckpointed once (two doubles
+    Scale: the (xs, ys) projection is materialized once (two doubles
     a row); each step is one keyed aggregate over cal x 3 taus.  {iters}
     sequential passes are the honest distributed-GD cost; production fits
     on the calibration half (already the semantics) and would subsample
@@ -3859,39 +3856,38 @@ def calibration_quantile_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("actual").alias("amn"),
         F.max("actual").alias("amx"),
     )
-    sc = f.crossJoin(F.broadcast(mm)).select(
-        "l_orderkey",
-        F.when(
-            F.col("mx") > F.col("mn"),
-            (F.col("forecast") - F.col("mn")) / (F.col("mx") - F.col("mn")),
+    # read by BOTH the fit and the final scoring pass
+    sc = materialize(
+        f.crossJoin(F.broadcast(mm)).select(
+            "l_orderkey",
+            F.when(
+                F.col("mx") > F.col("mn"),
+                (F.col("forecast") - F.col("mn")) / (F.col("mx") - F.col("mn")),
+            )
+            .otherwise(F.lit(0.5))
+            .alias("xs"),
+            F.when(
+                F.col("amx") > F.col("amn"),
+                (F.col("actual") - F.col("amn")) / (F.col("amx") - F.col("amn")),
+            )
+            .otherwise(F.lit(0.5))
+            .alias("ys"),
         )
-        .otherwise(F.lit(0.5))
-        .alias("xs"),
-        F.when(
-            F.col("amx") > F.col("amn"),
-            (F.col("actual") - F.col("amn")) / (F.col("amx") - F.col("amn")),
-        )
-        .otherwise(F.lit(0.5))
-        .alias("ys"),
-    ).localCheckpoint()  # read by BOTH the fit and the final scoring pass
-    cal = (
+    )
+    cal = materialize(
         sc.filter(F.col("l_orderkey") % 2 == 0)
         .select("xs", "ys")
         .repartition(4)
-        .localCheckpoint()
     )
     lr = float(_QFIT_LR)
-    # r7 rework of the GD loop, arithmetic untouched (the nano-unit param
-    # trajectory is bit-identical — the refactor was verified to land on
-    # the same integer state): the 3-row param state lives on the DRIVER
-    # and is inlined as literals, so each step is ONE flat global
-    # aggregate over cal computing all six gradient sums (no 3x broadcast
-    # row blow-up, no groupBy shuffle, no 12-level nested lazy plan whose
-    # codegen compile time dominated the r6 runtime), followed by a 1-row
-    # collect — the same bounded driver round-trip class as the
-    # documented bin-edge collects.  repartition(4) (not coalesce, which
-    # would drag the upstream join down to the same width) sizes the
-    # per-step job for data this small.  r6: 9.7 s warm -> r7: ~4 s.
+    # the 3-row param state lives on the DRIVER and is inlined as
+    # literals, so each step is ONE flat global aggregate over cal
+    # computing all six gradient sums (no 3x broadcast row blow-up, no
+    # groupBy shuffle, no 12-level nested lazy plan whose codegen compile
+    # time would dominate), followed by a 1-row collect — the same bounded
+    # driver round-trip class as the documented bin-edge collects.
+    # repartition(4) (not coalesce, which would drag the upstream join
+    # down to the same width) sizes the per-step job for data this small.
     state = {tq: (0, tq * 100000000) for tq in (1, 5, 9)}
     for _ in range(_QFIT_ITERS):
         aggs = []
@@ -4750,33 +4746,39 @@ def explain_linear_contributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     each one map-side-combined aggregate; the solve and the 3-row
     readout are driver-free column arithmetic on 1-row tables."""
     t = Catalog(spark, sf_dir)
-    m = t.lineitem.select(
-        F.floor(F.col("l_extendedprice") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("x1"),
-        F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long").alias("x2"),
-        F.floor(F.col("l_tax") * 10000 + F.lit(0.5)).cast("long").alias("x3"),
-        F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long").alias("y"),
-    ).localCheckpoint()  # two aggregate passes read this projection
+    # two aggregate passes read this projection
+    m = materialize(
+        t.lineitem.select(
+            F.floor(F.col("l_extendedprice") * 10000 + F.lit(0.5))
+            .cast("long")
+            .alias("x1"),
+            F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long").alias("x2"),
+            F.floor(F.col("l_tax") * 10000 + F.lit(0.5)).cast("long").alias("x3"),
+            F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long").alias("y"),
+        )
+    )
     xp = lambda a, b: F.sum(  # noqa: E731
         (F.col(a).cast("decimal(19,0)") * F.col(b)).cast("decimal(38,0)")
     )
-    s = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("x1").cast("decimal(38,0)")).alias("sx1"),
-        F.sum(F.col("x2").cast("decimal(38,0)")).alias("sx2"),
-        F.sum(F.col("x3").cast("decimal(38,0)")).alias("sx3"),
-        F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
-        xp("x1", "x1").alias("s11"),
-        xp("x1", "x2").alias("s12"),
-        xp("x1", "x3").alias("s13"),
-        xp("x2", "x2").alias("s22"),
-        xp("x2", "x3").alias("s23"),
-        xp("x3", "x3").alias("s33"),
-        xp("x1", "y").alias("sy1"),
-        xp("x2", "y").alias("sy2"),
-        xp("x3", "y").alias("sy3"),
-    ).localCheckpoint()  # feeds the solve AND the per-row MAD pass
+    # feeds the solve AND the per-row MAD pass
+    s = materialize(
+        m.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(F.col("x1").cast("decimal(38,0)")).alias("sx1"),
+            F.sum(F.col("x2").cast("decimal(38,0)")).alias("sx2"),
+            F.sum(F.col("x3").cast("decimal(38,0)")).alias("sx3"),
+            F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
+            xp("x1", "x1").alias("s11"),
+            xp("x1", "x2").alias("s12"),
+            xp("x1", "x3").alias("s13"),
+            xp("x2", "x2").alias("s22"),
+            xp("x2", "x3").alias("s23"),
+            xp("x3", "x3").alias("s33"),
+            xp("x1", "y").alias("sy1"),
+            xp("x2", "y").alias("sy2"),
+            xp("x3", "y").alias("sy3"),
+        )
+    )
     dd = lambda c: F.col(c).cast("double")  # noqa: E731
     c = s.select(
         "n",
@@ -5126,11 +5128,14 @@ def calibration_ece_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile edges + one keyed aggregate) collapsed one step further."""
     t = Catalog(spark, sf_dir)
     f = _with_forecast(t).filter(F.col("forecast").isNotNull())
-    v = f.select(
-        "forecast",
-        F.floor(F.col("forecast") * 10000 + F.lit(0.5)).cast("long").alias("fl"),
-        F.floor(F.col("actual") * 10000 + F.lit(0.5)).cast("long").alias("al"),
-    ).localCheckpoint()  # feeds the quantile edges AND the binned pass
+    # feeds the quantile edges AND the binned pass
+    v = materialize(
+        f.select(
+            "forecast",
+            F.floor(F.col("forecast") * 10000 + F.lit(0.5)).cast("long").alias("fl"),
+            F.floor(F.col("actual") * 10000 + F.lit(0.5)).cast("long").alias("al"),
+        )
+    )
     qs = [
         F.floor(F.percentile("forecast", F.lit(p)) * 10000 + F.lit(0.5))
         / 10000.0

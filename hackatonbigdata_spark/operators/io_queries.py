@@ -799,7 +799,7 @@ def io_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- merge-on-read COMPACTION + snapshot time-travel (round 12) ----------
+# --- merge-on-read COMPACTION + snapshot time-travel ---------------------
 # the two remaining table-format read/maintenance behaviors after file
 # skipping (io_zorder_prune / io_clustered_stats_prune) and merge-on-read
 # (io_mor_deletes): folding delete files back into base files, and reading
@@ -1544,7 +1544,7 @@ def io_bloom_skip_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- snapshot EXPIRY + orphan-file vacuum (round 12) ----------------------
+# --- snapshot EXPIRY + orphan-file vacuum ---------------------------------
 # the fourth table-format maintenance behavior after file skipping,
 # merge-on-read, and compaction: retiring old snapshots and physically
 # reclaiming the files only they reference.
@@ -1727,7 +1727,7 @@ def io_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- partition-spec EVOLUTION (round 13) -----------------------------------
+# --- partition-spec EVOLUTION ----------------------------------------------
 # the remaining core table-format lifecycle behavior after skipping
 # (minmax/z-order/Bloom), merge-on-read deletes, compaction, time travel,
 # CDC reads, and snapshot expiry: changing the partition LAYOUT mid-life

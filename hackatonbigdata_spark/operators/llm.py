@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import h32, r4
 from hackatonbigdata_spark.functions.fixpoint import iterate
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -988,7 +989,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds = graph diameter (dup clusters are shallow), capped at
     ``_COMPONENTS_MAX_ROUNDS`` with a loud failure past it; each round is
     one keyed join + one keyed agg, lineage kept O(1) by the per-round
-    localCheckpoint."""
+    ``materialize``."""
     cand = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
     half = cand.select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     # The dup graph is orders of magnitude smaller than the corpus (only
@@ -998,10 +999,9 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of scheduling overhead per stage.  At a scale where the dup graph is
     # itself large, raise the count — partitions should track |edges|, not
     # the corpus layout.
-    edges = (
+    edges = materialize(
         half.unionAll(half.select(F.col("db").alias("da"), F.col("da").alias("db")))
         .repartition(8, "db")
-        .localCheckpoint(eager=True)
     )
     seed = edges.groupBy("da").agg(F.min("db").alias("_mn")).select(
         F.col("da").alias("doc_id"),
@@ -3148,7 +3148,7 @@ def dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join runs ONCE, shared by the Jaccard and containment branches —
     exactly the oracle's single ``cp`` CTE (containment's directed a<>b
     join is symmetric, so C(A,B)>=t OR C(B,A)>=t on the a<b pair
-    enumerates the same undirected set the member emits).  The r7
+    enumerates the same undirected set the member emits).  A
     semantics test pins each branch's marginal equal to the member
     query's own output, so the sharing provably preserves the members'
     definitions.  The fold is one union + one (doc_a, doc_b)-keyed
@@ -3169,7 +3169,8 @@ def dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(t)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    cp = (
+    # two branches below read it
+    cp = materialize(
         sa.join(sb, "shingle")
         .filter(F.col("sa.doc_id") < F.col("sb.doc_id"))
         .groupBy(F.col("sa.doc_id").alias("doc_a"), F.col("sb.doc_id").alias("doc_b"))
@@ -3182,7 +3183,6 @@ def dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             sz.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb")),
             "doc_b",
         )
-        .localCheckpoint()  # two branches below read it
     )
     jac = F.col("n_common") * F.lit(1.0) / (
         F.col("sza") + F.col("szb") - F.col("n_common")
@@ -3680,7 +3680,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_stop = F.col("n_stop") >= 2
     # compare the 1e-4-quantized ratio (as an integer grid point), same
     # as the oracle: the band edge is engine-independent by construction,
-    # not by luck of identical IEEE division (r7 ADVICE fix)
+    # not by luck of identical IEEE division
     r_symbol = (
         F.floor(F.col("n_sym") * 10000.0 / F.col("n_words") + F.lit(0.5))
         <= 1000
@@ -3728,7 +3728,7 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, by the vocabulary aggregate).  Per round: one partial-aggregated
     pair count + a 1-row collect (the argmax — the same driver-held-scalar
     loop as the GD calibrators), then a narrow map applying the merge.
-    The word table is localCheckpoint'ed each round so plans stay flat.
+    The word table is materialized each round so plans stay flat.
 
     Merged symbols never contain spaces (the tokenizer strips them), so
     the pair tie-break on (l, r) strings is unambiguous."""
@@ -3740,9 +3740,7 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    words = vocab.select(
-        "word", "cnt", F.split("word", "").alias("syms")
-    ).localCheckpoint()
+    words = materialize(vocab.select("word", "cnt", F.split("word", "").alias("syms")))
     merges = []
     for rank in range(1, _N_BPE_MERGES + 1):
         top = (
@@ -3768,19 +3766,21 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         merges.append((rank, l, r, l + r, pair_count))
         # left-to-right greedy merge of (l, r) inside every symbol array;
         # symbols are [a-z0-9]+ so embedding the literals in SQL is safe
-        words = words.select(
-            "word",
-            "cnt",
-            # CASE, not AND: ANSI mode would throw on element_at of an
-            # empty accumulator if the conjunction were evaluated eagerly
-            F.expr(
-                "aggregate(syms, cast(array() as array<string>), (acc, s) ->"
-                " case when size(acc) = 0 then array(s)"
-                f" when element_at(acc, -1) = '{l}' and s = '{r}'"
-                f" then concat(slice(acc, 1, size(acc) - 1), array('{l}{r}'))"
-                " else concat(acc, array(s)) end)"
-            ).alias("syms"),
-        ).localCheckpoint()
+        words = materialize(
+            words.select(
+                "word",
+                "cnt",
+                # CASE, not AND: ANSI mode would throw on element_at of an
+                # empty accumulator if the conjunction were evaluated eagerly
+                F.expr(
+                    "aggregate(syms, cast(array() as array<string>), (acc, s) ->"
+                    " case when size(acc) = 0 then array(s)"
+                    f" when element_at(acc, -1) = '{l}' and s = '{r}'"
+                    f" then concat(slice(acc, 1, size(acc) - 1), array('{l}{r}'))"
+                    " else concat(acc, array(s)) end)"
+                ).alias("syms"),
+            )
+        )
     return spark.createDataFrame(
         merges, "rank long, left string, right string, merged string, pair_count long"
     )
@@ -3924,7 +3924,7 @@ def dedup_chunk_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio quantizes to the 1e-4 grid on both sides.
 
     Scale (100 TB): the chunk instance table (one 8-byte hash per ~48
-    input tokens — never chunk text) is localCheckpoint'ed once and feeds
+    input tokens — never chunk text) is materialized once and feeds
     three hash-keyed aggregates/joins: a per-hash frequency count (map-side
     partial), a per-doc rollup, and the partner self-join keyed on
     chunk_hash — candidate pairs come from hash buckets only, never
@@ -3932,11 +3932,7 @@ def dedup_chunk_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     extreme scale; the standard mitigation (cap or drop hashes with n_occ
     above a boilerplate threshold before pairing) composes here as one
     filter on ``f``."""
-    ch = (
-        text_chunk_windows(spark, sf_dir)
-        .select("doc_id", "chunk_hash")
-        .localCheckpoint()
-    )
+    ch = materialize(text_chunk_windows(spark, sf_dir).select("doc_id", "chunk_hash"))
     f = ch.groupBy("chunk_hash").agg(
         F.count(F.lit(1)).cast("long").alias("n_occ")
     )
@@ -4593,7 +4589,7 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed, feeds BOTH the banded candidate generation (min() is
     # duplicate-insensitive, so the non-distinct table is fine there) and
     # the per-doc distinct-shingle sets scored below
-    sh_all = _doc_shingles(t, distinct=False).localCheckpoint()
+    sh_all = materialize(_doc_shingles(t, distinct=False))
     cand = _minhash_candidates(sh_all)
     arr = sh_all.groupBy("doc_id").agg(F.collect_set("shingle").alias("shs"))
     tj = (
@@ -4937,7 +4933,7 @@ def corpus_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     e4 = F.greatest(F.lit(0).cast("long"), F.col("u4") - F.col("b4"))
-    gt = (
+    gt = materialize(
         us.join(bs, "source")
         .select(
             "source",
@@ -4959,7 +4955,6 @@ def corpus_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("g9"),
         )
-        .localCheckpoint()
     )
     # the trajectory: driver-held BIGINT nano-weights over the bounded
     # 20-row source table (the quality_classifier_gd state discipline)
@@ -5338,15 +5333,14 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/models/cold_start_solutions.py's candidate-pool
     ranking composes downstream of retrieval."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t).localCheckpoint()
+    e = materialize(_embeddings(t))
     half = _pair_scan(e, _cos_ab().alias("_co")).select(
         "id_lo", "id_hi", r4("_co").alias("co")
     )
-    cand = (
+    cand = materialize(
         _vec_rank(_both_directions(half, "co"), "rn", F.col("co").desc(), k=_MMR_TOPC)
-        .select("vec_id", "nb", F.col("co").alias("rel"))
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        .select("vec_id", "nb", F.col("co").alias("rel")),
+        "vec_id",
     )
     # candidate-pair sims recomputed from the broadcast embedding table
     # ({_MMR_TOPC}²-ish rows per query), NOT by re-joining the O(n²) pair
@@ -5394,8 +5388,8 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "d", "s", r4("_sim").alias("sim"))
     )
-    # r14 fold rewrite (guide §2.4, §1.2; the tokenizer_unigram_encode
-    # discipline): the greedy selection is PER-QUERY-LOCAL over a bounded
+    # a fold (the tokenizer_unigram_encode discipline): the greedy
+    # selection is PER-QUERY-LOCAL over a bounded
     # pool — {_MMR_TOPC} candidates and their {_MMR_TOPC}² pairwise sims —
     # so the {_MMR_K} driver-side rounds (each a window + two joins + an
     # eager checkpoint over the full candidate table) collapse into ONE
@@ -5916,12 +5910,11 @@ def _ivf_buckets(e: DataFrame) -> DataFrame:
     """(vec_id, bucket_id, ccos): every vector's IVF bucket (rn = 1 of
     ``_ivf_ranks``), materialized once: a bucket pair scan reads it on
     both sides, and each lazy read would rerun the centroid cross join."""
-    return (
+    return materialize(
         _ivf_ranks(e)
         .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("centroid_id").alias("bucket_id"), "ccos")
-        .repartition(e.sparkSession.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        .select("vec_id", F.col("centroid_id").alias("bucket_id"), "ccos"),
+        "vec_id",
     )
 
 
@@ -6030,7 +6023,7 @@ def _pq_codes(vecs: DataFrame, vcol: str, tag: str | None = None) -> DataFrame:
     return out.drop(tg) if tag is None else out
 
 
-def _pq_reconstructed(spark: SparkSession, e: DataFrame) -> DataFrame:
+def _pq_reconstructed(e: DataFrame) -> DataFrame:
     """Product-quantize an ``_embeddings``-shaped table (vec_id, emb, nrm,
     qq) and return it extended with the PQ reconstruction of the RAW
     vectors (see ``_pq_codes``), plus rr = <rec, rec>.  Shared by
@@ -6038,14 +6031,13 @@ def _pq_reconstructed(spark: SparkSession, e: DataFrame) -> DataFrame:
     ``similarity_ivfpq_topk`` (the composed IVF-PQ index eval), so both
     score the identical codes.
 
-    The output is repartitioned before its checkpoint: AQE coalesces the
-    tiny join output to few partitions, which would serialize any O(n²)
-    probe scan built on top into a single task."""
-    return (
+    The output is hash-partitioned on vec_id before its checkpoint: AQE
+    would coalesce the tiny join output to few partitions, which would
+    serialize any O(n²) probe scan built on top into a single task."""
+    return materialize(
         e.join(_pq_codes(e, "emb"), "vec_id")
-        .withColumn("rr", _dot("rec", "rec"))
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        .withColumn("rr", _dot("rec", "rec")),
+        "vec_id",
     )
 
 
@@ -6154,12 +6146,8 @@ def embedding_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs; a production index probes IVF buckets first
     (``similarity_ivf_bucketed``) and pays ADC only inside them."""
     t = Catalog(spark, sf_dir)
-    e = (
-        _embeddings(t)
-        .withColumn("qq", _dot("emb", "emb"))
-        .localCheckpoint()
-    )
-    r = _pq_reconstructed(spark, e)
+    e = materialize(_embeddings(t).withColumn("qq", _dot("emb", "emb")))
+    r = _pq_reconstructed(e)
     mse = r.select(
         "vec_id",
         F.floor(
@@ -6366,17 +6354,12 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     share one vec_id-partitioned exchange, and codes are m bytes per
     vector per variant."""
     t = Catalog(spark, sf_dir)
-    e = (
-        _embeddings(t)
-        .withColumn("qq", _dot("emb", "emb"))
-        .localCheckpoint()
-    )
-    assign = (
+    e = materialize(_embeddings(t).withColumn("qq", _dot("emb", "emb")))
+    assign = materialize(
         _ivf_ranks(e)
         .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("centroid_id").alias("bucket_id"))
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        .select("vec_id", F.col("centroid_id").alias("bucket_id")),
+        "vec_id",
     )
     # refined centroids: one Lloyd update of the coarse quantizer — the
     # elementwise bucket mean over a 1e-9 BIGINT coordinate grid, so the
@@ -6412,7 +6395,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed inputs with broadcast joins, so it stays a cheap view
     # (its residual norm folds into the r checkpoint below instead of
     # paying a separate scan)
-    mu = mu.localCheckpoint()
+    mu = materialize(mu)
     er = (
         e.join(assign, "vec_id")
         .join(F.broadcast(mu), "bucket_id")
@@ -6424,11 +6407,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         er.select("vec_id", F.lit(1).alias("tg"), F.col("res").alias("v"))
     )
-    recs = (
-        _pq_codes(inp, "v", tag="tg")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
-    )
+    recs = materialize(_pq_codes(inp, "v", tag="tg"), "vec_id")
     rfull = (
         er.join(
             recs.filter(F.col("tg") == 1).select(
@@ -6446,12 +6425,11 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rnorm4"),
         )
     )
-    r = (
+    r = materialize(
         e.join(recs.filter(F.col("tg") == 0).select("vec_id", "rec"), "vec_id")
         .withColumn("rr", _dot("rec", "rec"))
-        .join(rfull, "vec_id")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        .join(rfull, "vec_id"),
+        "vec_id",
     )
     rq = r.agg(
         F.sum("rnorm4").cast("long").alias("sq"),
@@ -6502,9 +6480,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel, and at sf0.1 the scan is cheaper than a
     # sort.  The checkpoint keeps the scan single AND the sorts
     # parallel.)
-    bp = bp.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).localCheckpoint()
+    bp = materialize(bp, "vec_id")
     pq3 = _vec_rank(bp, "rq", "adc", k=3).select(
         "vec_id", "nb", F.lit(1).alias("hit")
     )
@@ -6642,12 +6618,8 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor scoring inside one candidate pool) to the tunable
     multi-pool production layout."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t).localCheckpoint()
-    ranks = (
-        _ivf_ranks(e)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
-    )
+    e = materialize(_embeddings(t))
+    ranks = materialize(_ivf_ranks(e), "vec_id")
     assign = ranks.filter(F.col("rn") == 1).select(
         "vec_id", F.col("centroid_id").alias("bucket_id")
     )
@@ -6836,11 +6808,7 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-pool nearest-neighbor scoring in
     /root/reference/src/models/cold_start_solutions.py:95-205."""
     t = Catalog(spark, sf_dir)
-    e = (
-        _embeddings(t)
-        .withColumn("qq", _dot("emb", "emb"))
-        .localCheckpoint()
-    )
+    e = materialize(_embeddings(t).withColumn("qq", _dot("emb", "emb")))
 
     # The three eager materializations after e — the PQ
     # reconstruction, the coarse ranking, and the O(n²) sampled-oracle
@@ -6849,23 +6817,14 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern) so their jobs interleave on the executors: results are
     # identical, wall-clock is max() instead of sum()
     def _index_side():
-        rr = _pq_reconstructed(spark, e)
-        rk = (
-            _ivf_ranks(e)
-            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .localCheckpoint()
-        )
+        rr = _pq_reconstructed(e)
+        rk = materialize(_ivf_ranks(e), "vec_id")
         return rr, rk
 
     def _exact_side():
         # checkpointed: the O(n²) sampled-oracle scan is read by one hits
         # join per probe level and must not recompute per branch
-        return (
-            _exact_topk(e, 3)
-            .select("vec_id", "nb")
-            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .localCheckpoint()
-        )
+        return materialize(_exact_topk(e, 3).select("vec_id", "nb"), "vec_id")
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fi, fx = pool.submit(_index_side), pool.submit(_exact_side)
@@ -6909,7 +6868,7 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each level, so keeping 3 rows per (query, prank) — <= 12 rows per
     # query — is lossless, and the candidate masses fold into the same
     # pass (sums are one scan, not one per probe level)
-    pruned = (
+    pruned = materialize(
         cand.withColumn(
             "rq",
             F.row_number().over(
@@ -6929,9 +6888,8 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias(f"c{np}")
                 for np in _NPROBES
             ],
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint()
+        ),
+        "vec_id",
     )
     tops = pruned.select(
         "vec_id", F.explode(F.expr("filter(top, x -> x is not null)")).alias("x")
@@ -7328,7 +7286,7 @@ def quality_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold) with the fitted params echoed in nano-units.
 
     Scale (100 TB): the labeled projection is five doubles a row,
-    localCheckpointed once; each GD step is one full-pass flat aggregate —
+    materialized once; each GD step is one full-pass flat aggregate —
     the textbook distributed-GD layout.  Production fits on a hash sample
     (already the even-half semantics here) and scores the full corpus in
     one narrow map."""
@@ -7393,7 +7351,7 @@ def quality_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the five-doubles-a-row labeled projection ONCE — both the
     # GD loop and the final scoring pass read it (same reuse discipline as
     # calibration_platt_exact)
-    lab = (
+    lab = materialize(
         s.join(sym, "doc_id")
         .select(
             "doc_id",
@@ -7408,13 +7366,11 @@ def quality_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x4"),
             y,
         )
-        .localCheckpoint()
     )
-    cal = (
+    cal = materialize(
         lab.filter(F.col("doc_id") % 2 == 0)
         .select("x1", "x2", "x3", "x4", "y")
         .repartition(4)
-        .localCheckpoint()
     )
 
     def z_col(w1, w2, w3, w4, b):
@@ -7709,20 +7665,22 @@ def corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("nc"),
         F.split(_norm_text(), " ").alias("w"),
     )
-    s = w.select(
-        "doc_id",
-        F.floor(
-            (
-                F.least(F.size("w") / 100.0, F.lit(1.0)) * 0.6
-                + F.least(F.col("nc") / 500.0, F.lit(1.0)) * 0.4
+    s = materialize(
+        w.select(
+            "doc_id",
+            F.floor(
+                (
+                    F.least(F.size("w") / 100.0, F.lit(1.0)) * 0.6
+                    + F.least(F.col("nc") / 500.0, F.lit(1.0)) * 0.4
+                )
+                * 10000
+                + F.lit(0.5)
             )
-            * 10000
-            + F.lit(0.5)
+            .cast("long")
+            .alias("score4"),
+            F.size("w").cast("long").alias("n_toks"),
         )
-        .cast("long")
-        .alias("score4"),
-        F.size("w").cast("long").alias("n_toks"),
-    ).localCheckpoint()
+    )
     g = s.groupBy("score4").agg(F.sum("n_toks").cast("long").alias("toks"))
     c = g.withColumn(
         "cum",
@@ -7780,7 +7738,7 @@ def corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph-based ANN (round 12): the index family the ladder lacked — greedy
+# graph-based ANN: the index family the ladder lacked — greedy
 # best-first search over a bounded-degree k-NN neighbor graph (the
 # HNSW/NSG layer-0 read path), deterministic end to end so the whole
 # search is oracle-able.
@@ -7860,19 +7818,19 @@ def _gann_walk(
       tiny state, so fusing halves the walk's wall-clock vs running
       the variants sequentially; returns (qid, variant, node, cos).
 
-    r14 rewrite (guide §2.4, §1.2 — the ``search_mmr_rerank`` /
-    ``tokenizer_unigram_encode`` fold discipline): the walk state per
+    The walk is a fold (the ``search_mmr_rerank`` /
+    ``tokenizer_unigram_encode`` discipline): the walk state per
     (query, variant) is BOUNDED (≤ 1 + beam·deg·hops rows) and every
     hop decision is per-query-local, so the {hops} driver-side hop
-    rounds — each a window + three joins + an eager ``localCheckpoint``
+    rounds — each a window + three joins + an eager ``materialize``
     over the full state table — collapse into ONE executor-side SQL
     ``aggregate`` fold per query row: the graph as a broadcast
     node→neighbors map, the embedding table as a broadcast
     vec_id→(emb, nrm) map, the whole {hops}-hop beam search as one
     projection.
 
-    BOUND (r15, the r14 verdict's guard): the pre-fold walk broadcast
-    the same two tables as JOIN relations, so executor memory holds the
+    BOUND: a join-based walk broadcasts the same two tables as JOIN
+    relations, so executor memory holds the
     full tables either way — but a single MAP VALUE funnels its build
     through ONE ``collect_list`` task and hits Spark's ~2 GB
     single-object serialization ceiling far earlier than a broadcast
@@ -7881,22 +7839,21 @@ def _gann_walk(
     for the sampled-oracle regime over the bounded embeddings fixture.
     Both map builds are guarded by ``raise_error`` at
     {{_GANN_MAP_MAX_ROWS}} rows (the guard rides the same fold job —
-    no extra action); past the bound, use the join-based walk (the
-    pre-r14 shape preserved in git history: per-hop broadcast joins
-    against the node/embedding tables) instead of raising the limit.
+    no extra action); past the bound, use the join-based walk (per-hop
+    broadcast joins against the node/embedding tables) instead of
+    raising the limit.
     Every float op is the identical expression on the identical
     doubles in the identical order (the ``_dot`` zip_with fold, the
     ``r4`` floor-quantize, frontier tie-break (cos desc, node asc) as
-    an array_sort comparator replacing the row_number window) —
-    re-proved bit-identical to the join-based hop loop over every
-    (qid, variant, node, cos) at sf0.01 before the swap, and oracle
-    parity re-proved after it.  The one eager ``localCheckpoint`` on
-    the exploded result replaces the {hops} per-hop ones: the visited
+    an array_sort comparator in place of a row_number window) —
+    bit-identical to the join-based hop loop over every
+    (qid, variant, node, cos) at sf0.01.  One eager ``materialize`` on
+    the exploded result stands for the {hops} per-hop ones: the visited
     state is multi-referenced by every caller's readout (top-3 window +
     eval counts), exactly the case the eager-checkpoint discipline
     exists for.
 
-    Earlier r14 measurement notes (why the intermediate shapes lost):
+    Measured alternatives (why the intermediate shapes lost):
     a "fewer exchanges" join-based restructure (one window over the
     full state + one groupBy merge with lazily-scored NULL rows)
     measured SLOWER (similarity_graph_ann 8.61 s vs 7.08 s at sf0.1,
@@ -7966,8 +7923,8 @@ def _gann_walk(
         )
 
     empty_big = "slice(array(cast(0 as bigint)), 1, 0)"
-    # NULLS LAST explicitly (r15, ADVICE fix): the replaced row_number
-    # window ordered cos DESC = NULLS LAST, and a NULL cos (only possible
+    # NULLS LAST explicitly: a row_number window over cos DESC orders
+    # NULLS LAST, and a NULL cos (only possible
     # from a NaN cosine, i.e. a zero-norm embedding — current data never
     # produces one) must not tie with scored rows and enter the frontier
     # by node order
@@ -8023,14 +7980,13 @@ def _gann_walk(
         f"(n_emb=' || _n_emb || ', n_gnode=' || _n_gnode || ', max="
         f"{_GANN_MAP_MAX_ROWS}); use the join-based walk'), {fold})"
     )
-    return (
+    return materialize(
         rows.select(*keys, F.explode(F.expr(fold)).alias("v"))
         .select(
             *keys,
             F.col("v.node").alias("node"),
             F.col("v.cos").alias("cos"),
         )
-        .localCheckpoint()
     )
 
 
@@ -8142,11 +8098,11 @@ def similarity_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/models/cold_start_solutions.py:95-205, served
     from a navigable neighbor graph instead of a full scan."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t).localCheckpoint()
+    e = materialize(_embeddings(t))
     # the exact ranked-edge table is the only checkpoint: it feeds the
     # graph (rn <= deg), the top-3 ground truth (rn <= 3, a subset since
     # deg >= 3) and the entry-hub aggregate
-    ranked = _exact_topk(e, _GANN_DEG).localCheckpoint()
+    ranked = materialize(_exact_topk(e, _GANN_DEG))
     g = ranked.select(F.col("vec_id").alias("node"), "nb")
     exact3 = ranked.filter(F.col("rn") <= 3).select("vec_id", "nb")
     entry_id = _gann_entry_hub(ranked)
@@ -8339,11 +8295,7 @@ def _nnd_build(
             ),
         )
     )
-    g = (
-        _vec_rank(mates, "rn", "ph", k=_NND_DEG)
-        .select("vec_id", "nb")
-        .localCheckpoint()
-    )
+    g = materialize(_vec_rank(mates, "rn", "ph", k=_NND_DEG).select("vec_id", "nb"))
     # round 0 spends ZERO similarity evaluations — the init is hash-only
     per_round = [
         g.select(
@@ -8411,10 +8363,9 @@ def _nnd_build(
         scored = _score(cand).withColumn(
             "n_scored", F.count(F.lit(1)).over(W.partitionBy("vec_id")).cast("long")
         )
-        g2 = (
+        g2 = materialize(
             _vec_rank(scored, "rn", F.col("cos").desc(), k=_NND_DEG)
             .select("vec_id", "nb", "cos", "n_scored")
-            .localCheckpoint()
         )
         g = g2.select("vec_id", "nb", "cos")
         per_round.append(
@@ -8516,7 +8467,7 @@ def similarity_nndescent_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/models/cold_start_solutions.py:95-205, built
     without its all-pairs similarity matrix."""
     t = Catalog(spark, sf_dir)
-    e = _embeddings(t).localCheckpoint()
+    e = materialize(_embeddings(t))
     gfin, per_round = _nnd_build(spark, e)
     rounds = per_round[0]
     for part in per_round[1:]:
@@ -8536,12 +8487,11 @@ def similarity_nndescent_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "nb", r4("_co").alias("cos"))
     )
-    tg = (
+    tg = materialize(
         _vec_rank(p, "rn", F.col("cos").desc(), k=_NND_DEG)
         .select("vec_id", F.col("nb").alias("tnb"))
-        .localCheckpoint()
     )
-    rounds = rounds.localCheckpoint()
+    rounds = materialize(rounds)
     # build cost over ALL nodes (one n_scored per (round, node))
     tot = (
         rounds.select("round", "vec_id", "n_scored")
@@ -8707,7 +8657,7 @@ def similarity_graph_ann_nnd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a navigable approximate graph with its quality loss measured
     per stage."""
     t = Catalog(spark, sf_dir)
-    return _gann_nnd_compare(spark, _embeddings(t).localCheckpoint())
+    return _gann_nnd_compare(spark, materialize(_embeddings(t)))
 
 
 def _gann_nnd_compare(spark: SparkSession, e: DataFrame) -> DataFrame:
@@ -8723,7 +8673,7 @@ def _gann_nnd_compare(spark: SparkSession, e: DataFrame) -> DataFrame:
     # scheduler pattern) — results are identical, wall-clock is max()
     # instead of sum()
     def _exact_side():
-        ranked = _exact_topk(e, _GANN_DEG).localCheckpoint()
+        ranked = materialize(_exact_topk(e, _GANN_DEG))
         return ranked, _gann_entry_hub(ranked)
 
     def _nnd_side():
@@ -8820,7 +8770,7 @@ similarity_graph_ann_nnd.__doc__ = similarity_graph_ann_nnd.__doc__.format(
 )
 
 
-# --- planted-cluster regime (round 14) -------------------------------------
+# --- planted-cluster regime ------------------------------------------------
 # The synthetic embeddings are near-uniform on the sphere — Dong et al.'s
 # stated hard case for NN-descent, so the composed query's build-loss
 # attribution reads recall_nnd ~ 0.06 there and the recall axis cannot
@@ -8938,7 +8888,7 @@ def similarity_graph_ann_clustered(spark: SparkSession, sf_dir: str) -> DataFram
     (/root/reference/src/models/cold_start_solutions.py:95-205); this is
     the regime where its candidate pools behave like these buckets."""
     t = Catalog(spark, sf_dir)
-    return _gann_nnd_compare(spark, _embeddings_clustered(t).localCheckpoint())
+    return _gann_nnd_compare(spark, materialize(_embeddings_clustered(t)))
 
 
 similarity_graph_ann_clustered.__doc__ = similarity_graph_ann_clustered.__doc__.format(
@@ -8947,7 +8897,7 @@ similarity_graph_ann_clustered.__doc__ = similarity_graph_ann_clustered.__doc__.
 
 
 # ---------------------------------------------------------------------------
-# unigram-LM tokenizer (round 12): the SentencePiece-style counterpart of
+# unigram-LM tokenizer: the SentencePiece-style counterpart of
 # the BPE pair (learn_bpe_merges / corpus_bpe_encode) — and unlike BPE's
 # rows-only driver loop, FULLY ORACLED: Viterbi segmentation is a bounded
 # dynamic program over word positions, so two hard-EM rounds unroll into
@@ -9124,7 +9074,8 @@ def _tok_learn(spark: SparkSession, t: Catalog):
     (the two distributed passes), then two hard-EM rounds driver-side.
     Returns (cand_df, r1, r2) — the candidate-mass DataFrame for
     engine-side joins plus both rounds' piece-usage counts."""
-    wd = (
+    # feeds the candidate grid + the final join
+    wd = materialize(
         t.documents.select(
             F.explode(F.split(_norm_text(), " ")).alias("word")
         )
@@ -9135,9 +9086,8 @@ def _tok_learn(spark: SparkSession, t: Catalog):
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .orderBy(F.col("c").desc(), "word")
         .limit(_TOK_WORD_CAP)
-        .localCheckpoint()  # feeds the candidate grid + the final join
     )
-    cand = (
+    cand = materialize(
         wd.select(
             "word",
             "c",
@@ -9158,7 +9108,6 @@ def _tok_learn(spark: SparkSession, t: Catalog):
         )
         .groupBy("piece")
         .agg(F.sum("c").cast("long").alias("n_sub"))
-        .localCheckpoint()
     )
     # spec-capped learner corpus + vocabulary-bounded mass tables to the
     # driver (the DoReMi bounded-collect exception: |rows| <= cap, never
@@ -9430,8 +9379,8 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ``aggregate`` HOF projection over the distributed distinct-word
     table, and the per-word results join back onto the (source, word)
     counts — NO fact-derived rows ever reach the driver (distinct words
-    grow ~Heaps' law with corpus size, so the r12 driver-loop shape was
-    the repo's one 100 TB collect bottleneck; this is its fix).  The
+    grow ~Heaps' law with corpus size, so a driver-side loop over them
+    would be a 100 TB collect bottleneck).  The
     fact-scale passes are the (source, word) count and that join.
 
     Reference parity: see ``tokenizer_unigram_em`` — the reference has
@@ -9439,7 +9388,8 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Catalog(spark, sf_dir)
     _, _, r2 = _tok_learn(spark, t)
     cost3 = _tok_costs_engine(spark, r2)
-    sw = (
+    # feeds the distinct-word encode + the join
+    sw = materialize(
         t.documents.select(
             "source", F.explode(F.split(_norm_text(), " ")).alias("word")
         )
@@ -9448,7 +9398,6 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()  # feeds the distinct-word encode + the join
     )
     # once per DISTINCT word, on the EXECUTORS: the Viterbi fold under
     # the learned (vocabulary-bounded) cost map; unencodable words yield
@@ -9601,18 +9550,15 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first-stage ranking swaps to the IVF index, the feedback math
     is unchanged)."""
     t = Catalog(spark, sf_dir)
-    # r14 note — lazy checkpoints REVERTED to eager: an eager=False
-    # variant (folding three ~0.5 s job submissions into the final
-    # action) was noise-level in two stash A/B pairs (6.50/7.31 s with
-    # vs 5.49/7.86 s without) BUT every frame here is multi-referenced
-    # (e feeds both pair scans; qv feeds purity-before, the overlap join
-    # AND the centroid), and under the final single action the racing
-    # branch materializations emitted dozens of zombie
-    # accessNonExistentAccumulatorError stack traces per run (isolated
-    # 3-pass re-measure read 8.03 s lazy vs the 7.46 s r13 eager
-    # number).  This is exactly the multi-reference hazard the eager
-    # per-round discipline exists for; eager checkpoints stay.
-    e = _embeddings(t).localCheckpoint()  # corpus side of BOTH pair scans
+    # eager materializations, not lazy (eager=False) ones: folding the
+    # three ~0.5 s job submissions into the final action gained nothing
+    # measurable (3-pass min 8.03 s lazy vs 7.46 s eager), every frame
+    # here is multi-referenced (e feeds both pair scans; top0 feeds
+    # purity-before, the overlap join AND the centroid), and under the
+    # final single action the racing branch materializations emitted
+    # dozens of zombie accessNonExistentAccumulatorError stack traces
+    # per run.
+    e = materialize(_embeddings(t))  # corpus side of BOTH pair scans
     lab = t.embeddings.select("vec_id", F.col("label").cast("long").alias("label"))
     q = (
         e.filter(F.col("vec_id") % _ROC_QMOD == 0)
@@ -9630,7 +9576,8 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("bnrm"),
     )
     w0 = W.partitionBy("qid").orderBy(F.col("s0").desc(), F.col("neighbor_id"))
-    top0 = (
+    # feeds purity-before, overlap AND the centroid
+    top0 = materialize(
         q.join(F.broadcast(b), F.col("qid") != F.col("neighbor_id"))
         .select(
             "qid",
@@ -9641,7 +9588,6 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "qlabel", "neighbor_id", r4("_s").alias("s0"))
         .withColumn("rn", F.row_number().over(w0))
         .filter(F.col("rn") <= _ROC_K)
-        .localCheckpoint()  # feeds purity-before, overlap AND the centroid
     )
     mu = (
         top0.filter(F.col("rn") <= _ROC_FB)
@@ -9677,7 +9623,8 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no repartition("qid") before the re-rank scan: the mu join already
     # hash-partitions by qid, so the optimizer removes it as a no-op
     w1 = W.partitionBy("qid").orderBy(F.col("s1").desc(), F.col("neighbor_id"))
-    top1 = (
+    # feeds purity-after AND the overlap join
+    top1 = materialize(
         qf.join(F.broadcast(b), F.col("qid") != F.col("neighbor_id"))
         .select(
             "qid",
@@ -9691,7 +9638,6 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "qlabel", "neighbor_id", r4("_s").alias("s1"))
         .withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") <= _ROC_K)
-        .localCheckpoint()  # feeds purity-after AND the overlap join
     )
     lb = lab.withColumnRenamed("vec_id", "neighbor_id").withColumnRenamed(
         "label", "nlabel"
@@ -9738,6 +9684,18 @@ def search_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
 search_rocchio_feedback.__doc__ = search_rocchio_feedback.__doc__.format(
     k=_ROC_K, fb=_ROC_FB, beta=_ROC_BETA, qmod=_ROC_QMOD
 )
+
+
+# the NDCG@5 rank discounts on the BIGINT 1e-4 grid, for ranks i = 1..5:
+# w_q = floor(1e4 / log2(i + 1) + 0.5), cum_q = w_q summed over ranks 1..i
+# (the ideal DCG at cutoff i)
+_NDCG_DISCOUNTS = [
+    (1, 10000, 10000),
+    (2, 6309, 16309),
+    (3, 5000, 21309),
+    (4, 4307, 25616),
+    (5, 3869, 29485),
+]
 
 
 @register(
@@ -9813,7 +9771,8 @@ def eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = t.embeddings.select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
-    q = (
+    # feeds the pair scan AND the relevant-count join
+    q = materialize(
         e.filter(F.col("vec_id") % _ROC_QMOD == 0)
         .join(lab, "vec_id")
         .select(
@@ -9822,7 +9781,6 @@ def eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("emb").alias("qemb"),
             F.col("nrm").alias("qnrm"),
         )
-        .localCheckpoint()  # feeds the pair scan AND the relevant-count join
     )
     b = e.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -9849,23 +9807,7 @@ def eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rel", (F.col("label") == F.col("qlabel")).cast("long")
         )
     )
-    w = (
-        spark.range(1, 6)
-        .select(F.col("id").alias("i"))
-        .withColumn(
-            "w_q",
-            F.floor(
-                F.lit(10000.0) / F.log2(F.col("i") + 1) + F.lit(0.5)
-            ).cast("long"),
-        )
-        .withColumn(
-            "cum_q",
-            F.sum("w_q")
-            .over(W.orderBy("i").rowsBetween(W.unboundedPreceding, 0))
-            .cast("long"),
-        )
-        .localCheckpoint()  # 5 rows; silences the global-window audit
-    )
+    w = spark.createDataFrame(_NDCG_DISCOUNTS, "i long, w_q long, cum_q long")
     rtot = (
         q.join(
             lab.withColumnRenamed("vec_id", "cand_id"),
@@ -9980,16 +9922,19 @@ def encode_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    hb = wf.select(
-        "source",
-        "cnt",
-        (_h(F.col("word")) % _FH_BUCKETS).alias("bucket"),
-        F.when(
-            _h(F.concat(F.lit("s:"), F.col("word"))) % 2 == 0, F.lit(1)
+    # feeds the word-level AND bucket-level aggregates
+    hb = materialize(
+        wf.select(
+            "source",
+            "cnt",
+            (_h(F.col("word")) % _FH_BUCKETS).alias("bucket"),
+            F.when(
+                _h(F.concat(F.lit("s:"), F.col("word"))) % 2 == 0, F.lit(1)
+            )
+            .otherwise(F.lit(-1))
+            .alias("sgn"),
         )
-        .otherwise(F.lit(-1))
-        .alias("sgn"),
-    ).localCheckpoint()  # feeds the word-level AND bucket-level aggregates
+    )
     bv = hb.groupBy("source", "bucket").agg(
         F.sum(F.col("sgn") * F.col("cnt")).cast("long").alias("signed_val")
     )

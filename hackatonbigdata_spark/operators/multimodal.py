@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 
 FRAME_BYTES = 256  # fixed-size "frame" granule for the addressing scheme
@@ -1395,11 +1396,13 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "t1", F.expr("aggregate(g1, cast(0 as bigint), (a, v) -> a + v)")
     )
-    hset = tots.select(
-        "doc_id",
-        F.expr(_ph_bands_sql("g0", "t0")).alias("b0"),
-        F.expr(_ph_bands_sql("g1", "t1")).alias("b1"),
-    ).localCheckpoint()
+    hset = materialize(
+        tots.select(
+            "doc_id",
+            F.expr(_ph_bands_sql("g0", "t0")).alias("b0"),
+            F.expr(_ph_bands_sql("g1", "t1")).alias("b1"),
+        )
+    )
     hashes = hset.select(
         "doc_id",
         F.explode(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4
 from hackatonbigdata_spark.functions.fixpoint import iterate
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.operators.relational import basket_pairs
 from hackatonbigdata_spark.registry import register
 
@@ -258,20 +259,19 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, aggregate on the destination key.  Edge and rank tables partition
     by node hash; degrees ride along to avoid a second join.  At 100 TB
     lineage grows linearly in iterations, so production would
-    ``localCheckpoint`` every ~5 rounds; 5 iterations here keeps the
+    ``materialize`` every ~5 rounds; 5 iterations here keeps the
     oracle's unrolled CTE chain cheap."""
     t = Catalog(spark, sf_dir)
     pairs = basket_pairs(t.lineitem, 2).select("u", "v")
     # materialize the edge table once, pre-partitioned on the join key:
-    # localCheckpoint stops the lazy plan inlining the co-occurrence
+    # materialize stops the lazy plan inlining the co-occurrence
     # self-join into every iteration (6× the work, linear lineage growth —
     # same discipline as dedup_cluster_components), and hashing on ``u``
     # first means the edge side of every iteration's join reuses this one
     # partitioning — only the (much smaller) rank table moves per round
-    edges = (
+    edges = materialize(
         pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition("u")
-        .localCheckpoint()
     )
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -931,11 +931,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: counts are integers; the clustering coefficient is one
     exact ratio per node."""
     t = Catalog(spark, sf_dir)
-    pairs = (
-        basket_pairs(t.lineitem, 2)
-        .select("u", "v")
-        .localCheckpoint()  # degree join + three self-joins: build once
-    )
+    # degree join + three self-joins: build once
+    pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
@@ -949,14 +946,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # deg is node-sized: small enough for AQE to broadcast at this SF, but
     # NOT hinted — at 1e9-node scale it must stay a shuffle join
-    oriented = (
+    oriented = materialize(
         pairs.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .localCheckpoint()
     )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = e1.join(e2, F.col("e1.dst") == F.col("e2.src")).join(
@@ -1363,11 +1359,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree table is node-sized; the >= 2-common-neighbor HAVING bounds
     the output to the dense core."""
     t = Catalog(spark, sf_dir)
-    pairs = (
-        basket_pairs(t.lineitem, 2)
-        .select("u", "v")
-        .localCheckpoint()  # feeds adjacency AND the non-edge anti-join
-    )
+    # feeds adjacency AND the non-edge anti-join
+    pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
     adj = pairs.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
     )
@@ -1468,14 +1461,13 @@ def _lpa_core(t: Catalog):
     Returns (pairs, deg, labels) — consumed by the community readout
     (``graph_label_propagation``) and the partition-quality score
     (``graph_modularity_score``) so both run one code path."""
-    pairs = (
-        basket_pairs(t.lineitem, 2)
-        .select("u", "v")
-        .localCheckpoint()  # feeds the adjacency both ways + intra counts
+    # feeds the adjacency both ways + intra counts
+    pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
+    adj = materialize(
+        pairs.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
+            pairs.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
+        )
     )
-    adj = pairs.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        pairs.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    ).localCheckpoint()
     deg = adj.groupBy(F.col("w").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -1483,7 +1475,7 @@ def _lpa_core(t: Catalog):
     # fixed rounds in lockstep with the oracle, so no ``iterate``: the label
     # chain is LINEAR — each round references its predecessor exactly ONCE
     # (through the adj join), so the plan grows linearly, not exponentially,
-    # and the per-round eager localCheckpoint the twice-referenced loops
+    # and the per-round eager materialize the twice-referenced loops
     # need (k-core, power iteration) only paid {_LPA_ROUNDS} fixed ~0.5 s
     # job-submission overheads here.  One eager checkpoint AFTER the loop
     # still gives every caller a flat, materialized-once labels table (the readouts
@@ -1506,7 +1498,7 @@ def _lpa_core(t: Catalog):
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
         )
-    return pairs, deg, labels.localCheckpoint()
+    return pairs, deg, materialize(labels)
 
 
 @register("graph_label_propagation", oracle=_lpa_oracle())
@@ -1537,7 +1529,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a per-node top-1 window — all hash-partitioned by node, no stage
     beyond the edge table's size; the label chain is LINEAR (each round
     referenced once), so there are no per-round checkpoints and
-    one eager localCheckpoint after the loop keeps every caller's
+    one eager materialize after the loop keeps every caller's
     readout flat (see _lpa_core).  At 100 TB the same loop shards by
     node; the classic
     optimization (only re-propagate changed labels) alters constants,
@@ -1650,7 +1642,8 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     half = F.col("d_c") * F.lit(1.0) / (F.lit(2) * F.col("m"))
-    terms = (
+    # feeds both the rows and the 1-row total
+    terms = materialize(
         dsum.join(intra, "lbl", "left")
         .crossJoin(F.broadcast(m))
         .select(
@@ -1669,7 +1662,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("term_q8"),
         )
-        .localCheckpoint()  # feeds both the rows and the 1-row total
     )
     qt = terms.groupBy().agg(
         F.sum("term_q8").cast("long").alias("q_total_q8")
@@ -1759,7 +1751,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree < k, recompute, repeat to the FIXED POINT.  Peeling is
     monotone, so the DuckDB oracle runs a fixed {rounds}-round chain
     (no-ops past convergence) while the Spark side runs ``iterate``: an
-    eager localCheckpoint per round truncates the plan each peel
+    eager materialize per round truncates the plan each peel
     references twice, and the peel stops once the edge count is
     unchanged, raising if convergence ever needs more rounds than the
     oracle covers rather than silently diverging.
@@ -1771,11 +1763,8 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes by degree, peel k in one pass per bucket) changes constant
     factors, not semantics."""
     t = Catalog(spark, sf_dir)
-    pairs = (
-        basket_pairs(t.lineitem, 2)
-        .select("u", "v")
-        .localCheckpoint()  # feeds the full-degree table and both peels
-    )
+    # feeds the full-degree table and both peels
+    pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
@@ -1902,17 +1891,16 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once) to the node-sized state and aggregates on the
     destination — one shuffle per iteration, the textbook distributed
     power method; the normalizer is a 1-row broadcast.  Per-iteration
-    eager localCheckpoint keeps the two-reference plan linear.
+    eager materialize keeps the two-reference plan linear.
 
     Reference parity: extends /root/reference/src/features/
     behavioral_features_engine.py:454-485 (pair counts) to spectral
     structure; the reference has no graph layer."""
     t = Catalog(spark, sf_dir)
     pairs = basket_pairs(t.lineitem, 2).select("u", "v")
-    edges = (
+    edges = materialize(
         pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition("u")
-        .localCheckpoint()
     )
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
@@ -1921,11 +1909,11 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed iterations in lockstep with the oracle, not ``iterate``: there
     # is no convergence test to share
     for _ in range(_EIG_ITERS):
-        v = (
+        # referenced twice below: keep the plan linear
+        v = materialize(
             edges.join(x.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum("x").cast("long").alias("s"))
-            .localCheckpoint()  # referenced twice below: keep the plan linear
         )
         m = v.agg(F.max("s").alias("m"))
         x = v.crossJoin(F.broadcast(m)).select(
@@ -1950,7 +1938,7 @@ graph_eigencentrality.__doc__ = graph_eigencentrality.__doc__.format(
 
 
 # ---------------------------------------------------------------------------
-# WEIGHTED graph family (round 14): the identical >= 2-basket co-occurrence
+# WEIGHTED graph family: the identical >= 2-basket co-occurrence
 # graph, but the co-basket COUNT — computed by every unweighted query and
 # then discarded — is kept as the edge weight.  The reference's pair
 # analysis COUNTS co-occurrences
@@ -1986,16 +1974,13 @@ def _weighted_graph(t: Catalog):
     (see ``_lpa_core``): nodes = parts, an edge iff co-ordered in >= 2
     baskets — only the count survives as ``wt`` instead of being
     dropped."""
-    pairs = (
-        basket_pairs(t.lineitem, 2, n="wt")
-        .localCheckpoint()  # feeds adjacency both ways + intra-weight sums
-    )
-    adj = (
+    # feeds adjacency both ways + intra-weight sums
+    pairs = materialize(basket_pairs(t.lineitem, 2, n="wt"))
+    adj = materialize(
         pairs.select(F.col("u").alias("src"), F.col("v").alias("nbr"), "wt")
         .unionAll(
             pairs.select(F.col("v").alias("src"), F.col("u").alias("nbr"), "wt")
         )
-        .localCheckpoint()
     )
     st = adj.groupBy(F.col("src").alias("node")).agg(
         F.sum("wt").cast("long").alias("strength"),
@@ -2029,7 +2014,7 @@ def _wlpa_core(t: Catalog):
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
         )
-    return pairs, st, labels.localCheckpoint()
+    return pairs, st, materialize(labels)
 
 
 def _wlpa_oracle() -> str:
@@ -2084,7 +2069,7 @@ def graph_label_propagation_weighted(spark: SparkSession, sf_dir: str) -> DataFr
     adjacency⋈labels equi-join + a keyed weight sum + a per-node top-1
     window, hash-partitioned by node.  The label chain is LINEAR (each
     round referenced once), so there are no per-round checkpoints; one
-    eager localCheckpoint after the loop keeps every caller's
+    eager materialize after the loop keeps every caller's
     readout flat (see _wlpa_core).  The weight column rides the same
     shuffles the count used; cost is unchanged at any scale."""
     t = Catalog(spark, sf_dir)
@@ -2194,7 +2179,8 @@ def graph_modularity_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     half = F.col("s_c") * F.lit(1.0) / (F.lit(2) * F.col("w"))
-    terms = (
+    # feeds both the rows and the 1-row total
+    terms = materialize(
         ssum.join(intra, "lbl", "left")
         .crossJoin(F.broadcast(wtot))
         .select(
@@ -2213,7 +2199,6 @@ def graph_modularity_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("term_q8"),
         )
-        .localCheckpoint()  # feeds both the rows and the 1-row total
     )
     qt = terms.groupBy().agg(
         F.sum("term_q8").cast("long").alias("q_total_q8")
@@ -2291,8 +2276,8 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides with the rank table to avoid a second join."""
     t = Catalog(spark, sf_dir)
     _, adj, st = _weighted_graph(t)
-    edges = adj.repartition("src").localCheckpoint()
-    st = st.localCheckpoint()  # node-sized; read every iteration + readout
+    edges = materialize(adj.repartition("src"))
+    st = materialize(st)  # node-sized; read every iteration + readout
     nn = st.agg(F.count(F.lit(1)).cast("long").alias("n"))
     base = F.floor(
         F.lit(float(_PR_SCALE * 15 // 100)) / F.col("n") + F.lit(0.5)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import r4
 from hackatonbigdata_spark.functions.fixpoint import iterate
+from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
@@ -1452,10 +1453,9 @@ ret AS (SELECT b.hour, CAST(count(*) AS BIGINT) AS n_returning
 def _hourly_users(t: Catalog) -> DataFrame:
     """Distinct (hour, user_id) over events — checkpointed, since every
     consumer reads it several times (sketch build + exact columns)."""
-    return (
+    return materialize(
         t.events.select(F.date_trunc("hour", "ts").alias("hour"), "user_id")
         .distinct()
-        .localCheckpoint()
     )
 
 
@@ -1588,13 +1588,12 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("h"),
     ).distinct()
-    sk = (
+    sk = materialize(
         hd.withColumn(
             "rn", F.row_number().over(W.partitionBy("hour").orderBy("h"))
         )
         .filter(F.col("rn") <= k)
         .select("hour", "h")
-        .localCheckpoint()
     )
     bh = _consecutive_hours(hu)
     ua = bh.join(
@@ -2425,7 +2424,7 @@ def stream_hll_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-reset counting loop) extended to the cross-window overlap
     a retention dashboard reads."""
     t = Catalog(spark, sf_dir)
-    hregs = _hll_hour_regs(t).localCheckpoint()
+    hregs = materialize(_hll_hour_regs(t))
     prev = hregs.select(
         (F.col("hour") + F.expr("interval 1 hour")).alias("hour"), "j", "mj"
     )
@@ -2600,7 +2599,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ret = _kll_cascade(vals, "d").select(
         "d", "v", "id", F.pow(2, "lvl").cast("long").alias("w")
     )
-    return _kll_readout(ret.localCheckpoint(), vals)
+    return _kll_readout(materialize(ret), vals)
 
 
 def _kll_cascade(items: DataFrame, *keys: str) -> DataFrame:
@@ -2835,9 +2834,11 @@ def sketch_kll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-hour cascade: retained items keep their LEVEL (the stored state);
     # the stored state is the ONE checkpoint: everything upstream is the
     # build (write path), everything downstream is the merge (read path)
-    hret = _kll_cascade(
-        hvals.repartition(spark.sparkContext.defaultParallelism, "d"), "d", "h"
-    ).localCheckpoint()
+    hret = materialize(
+        _kll_cascade(
+            hvals.repartition(spark.sparkContext.defaultParallelism, "d"), "d", "h"
+        )
+    )
     # day-level merge cascade over stored states only, inline rather than
     # through ``iterate``: each level injects the stored items of that
     # level, so an unchanged promotion count is not a fixpoint here.  A
@@ -2852,15 +2853,17 @@ def sketch_kll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         mi = hret.filter(F.col("lvl") == i).select("d", "v", "id")
         if promo is not None:
             mi = mi.unionByName(promo)
-        r = mi.select(
-            "d",
-            "v",
-            "id",
-            F.row_number()
-            .over(W.partitionBy("d").orderBy("v", "id"))
-            .alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy("d")).alias("c"),
-        ).localCheckpoint()
+        r = materialize(
+            mi.select(
+                "d",
+                "v",
+                "id",
+                F.row_number()
+                .over(W.partitionBy("d").orderBy("v", "id"))
+                .alias("rn"),
+                F.count(F.lit(1)).over(W.partitionBy("d")).alias("c"),
+            )
+        )
         merge_keeps.append(
             r.filter(F.col("c") <= KLL_K).select(
                 "d", "v", "id", F.lit(2**i).cast("long").alias("w")

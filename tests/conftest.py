@@ -58,7 +58,7 @@ def _spark_alive(request):
 # --- shared query-DataFrame cache (r15 suite-runtime fix) -------------------
 # Both exhaustive sweeps (oracle parity and the plan-window audit) construct
 # every registered query's DataFrame; construction is where iterative
-# operators run their eager localCheckpoint jobs, so building each DF twice
+# operators run their eager materialize jobs, so building each DF twice
 # doubled real Spark work.  DataFrames are immutable — one construction per
 # (sf_dir, name) serves both sweeps.  sf0.001 checkpoints are tiny, so
 # pinning them for the session is cheap.

@@ -4,15 +4,10 @@ materialized state comes back, and a cap without a fixpoint is loud."""
 
 from __future__ import annotations
 
-import pathlib
-
 import pytest
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.functions.fixpoint import iterate
-
-PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "hackatonbigdata_spark"
-
 
 def halve(df):
     return df.select((F.col("x") / 2).cast("long").alias("x"))
@@ -73,13 +68,3 @@ def test_iterate_budget_returns_the_states_reached(spark):
     assert [_values(s) for s in states][-1] == [0, 0, 0, 0, 1, 1, 1, 1]
     assert len(states) == 3
 
-
-def test_observation_is_used_only_by_the_fixpoint_driver():
-    """Every observed stop test goes through ``iterate``: a loop that
-    builds its own ``Observation`` has its own cadence and cap again."""
-    users = sorted(
-        str(p.relative_to(PACKAGE))
-        for p in PACKAGE.rglob("*.py")
-        if "Observation(" in p.read_text()
-    )
-    assert users == ["functions/fixpoint.py"]

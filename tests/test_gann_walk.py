@@ -1,4 +1,4 @@
-"""r15 optimization-round pins: the _gann_walk single-map guard, the
+"""Pins of the graph-ANN walk ``_gann_walk``: the single-map guard, the
 NULLS-LAST frontier comparator, and the hop-budget invariant."""
 
 from __future__ import annotations
@@ -10,10 +10,10 @@ from tests.conftest import SF_DIR
 
 
 def test_gann_map_guard_fires_below_bound(spark, monkeypatch):
-    """The broadcast single-map guard (r14 verdict #4): when the embedding
-    or graph table outgrows _GANN_MAP_MAX_ROWS the walk must raise with
-    the documented fallback message instead of silently building a map
-    value headed for the 2 GB single-object ceiling."""
+    """The broadcast single-map guard: when the embedding or graph table
+    outgrows _GANN_MAP_MAX_ROWS the walk must raise with the documented
+    fallback message instead of silently building a map value headed for
+    the 2 GB single-object ceiling."""
     monkeypatch.setattr(llm, "_GANN_MAP_MAX_ROWS", 10)
     with pytest.raises(Exception, match="single-map bound exceeded"):
         llm.similarity_graph_ann(spark, SF_DIR).count()
@@ -35,7 +35,7 @@ def test_gann_hops_invariant():
 def test_gann_frontier_comparator_nulls_last(spark):
     """The frontier comparator must sort a NULL cos AFTER every scored
     row (the row_number window it replaced ordered cos DESC = NULLS
-    LAST), never tie it into the beam by node order (r14 ADVICE)."""
+    LAST), never tie it into the beam by node order."""
     # comparator copied from _gann_walk via its module constants: rebuild
     # the lambda text exactly as the walk builds it
     cmp_sql = (

@@ -285,10 +285,11 @@ def test_lsh_calibration_scores_candidates_only(spark):
             assert not key.startswith("shingle"), line
 
 
-def test_round13_ops_bounded_shuffles(spark):
-    """Shuffle budgets for the r13 queries' FINAL plans (the walk/build
-    stages are checkpointed, so the returned plan is the readout over
-    their results): partition evolution = the two pruned scans union
+def test_partition_evolution_and_nnd_readout_bounded_shuffles(spark):
+    """Shuffle budgets for the partition-evolution and graph-ANN/NN-descent
+    FINAL plans (the walk/build stages are checkpointed, so the returned
+    plan is the readout over their results): partition evolution = the
+    two pruned scans union
     into one partial-agg + one exchange pair (≤3 leaves headroom for an
     AQE re-plan); the composed recall readout joins two checkpointed
     state tables to the ground truth (≤6, the heuristic-blend budget)."""
@@ -298,8 +299,8 @@ def test_round13_ops_bounded_shuffles(spark):
     assert s.shuffles <= 6, f"similarity_graph_ann_nnd: got {s.shuffles}"
 
 
-def test_round14_ops_bounded_shuffles(spark):
-    """Shuffle budgets for the r14 weighted-graph FINAL plans (the
+def test_weighted_graph_readouts_bounded_shuffles(spark):
+    """Shuffle budgets for the weighted-graph FINAL plans (the
     per-round evolution is checkpointed, so the returned plan is the
     readout over the final labels/ranks): the weighted LPA readout is
     labels⋈sizes⋈strengths (≤4); weighted modularity's term table is

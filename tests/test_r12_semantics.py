@@ -2190,13 +2190,29 @@ def test_binseg_matches_bruteforce_sse(spark):
 def test_ndcg_matches_python_ir_metrics(spark):
     """NDCG/precision/MRR re-derived independently in float (math.log2
     discounts, no quantization) over the same exact ranking rebuilt in
-    numpy; agreement within the per-term quantization envelope."""
+    numpy; agreement within the per-term quantization envelope.  The
+    literal discount table equals the Spark expression it stands for."""
     import math
 
     import numpy as np
     import pyarrow.parquet as pq
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
 
-    from hackatonbigdata_spark.operators.llm import _ROC_QMOD
+    from hackatonbigdata_spark.operators.llm import _NDCG_DISCOUNTS, _ROC_QMOD
+
+    i = F.col("id")
+    w_q = F.floor(F.lit(10000.0) / F.log2(i + 1) + F.lit(0.5)).cast("long")
+    discounts = (
+        spark.range(1, 6)
+        .select(i, w_q.alias("w_q"))
+        .withColumn(
+            "cum_q",
+            F.sum("w_q").over(W.orderBy("id").rowsBetween(W.unboundedPreceding, 0)),
+        )
+        .orderBy("id")
+    )
+    assert [tuple(r) for r in discounts.collect()] == _NDCG_DISCOUNTS
 
     tb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     ids = np.asarray(tb["vec_id"])
