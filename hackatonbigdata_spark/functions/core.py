@@ -6,6 +6,8 @@ expressions (JVM-side, codegen'd — no Python in the hot path).
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -62,3 +64,10 @@ def h32(col: Column) -> Column:
     ``CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)``).  The basis for
     every cross-engine-deterministic split/sample/bucket in the engine."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def py_h32(text: str) -> int:
+    """``h32`` in Python, for driver- and worker-side code that must pick
+    the same split/sample/bucket as the Spark and DuckDB expressions: the
+    first 8 hex chars of the md5 of the UTF-8 text, as an int."""
+    return int(hashlib.md5(text.encode()).hexdigest()[:8], 16)

@@ -1,4 +1,4 @@
-"""M5 — forecast-pipeline semantics (SURVEY.md §2.9-2.10).
+"""Forecast-pipeline semantics (SURVEY.md §2.9-2.10).
 
 The reference's model-adjacent dataflow re-expressed as queries:
 WMAPE-family metrics, walk-forward CV fold generation, intermittency
@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
-from hackatonbigdata_spark.functions.core import r4, wmape_expr
+from hackatonbigdata_spark.functions.core import h32, r4, wmape_expr
 from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
 
@@ -3499,21 +3499,13 @@ def calibration_subsample_uncertainty(spark: SparkSession, sf_dir: str) -> DataF
     t = Catalog(spark, sf_dir)
     f = _with_forecast(t).filter(F.col("forecast").isNotNull())
     rep = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("l_orderkey").cast("string"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h32(
+            F.concat_ws(
+                "|",
+                F.col("l_orderkey").cast("string"),
+                F.col("l_linenumber").cast("string"),
+            )
+        )
         % 20
     )
     v = f.select("actual", "forecast", rep.alias("rep"))

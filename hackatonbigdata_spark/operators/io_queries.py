@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
-from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.core import h32, py_h32, r4
 from hackatonbigdata_spark.registry import register
 from hackatonbigdata_spark.sources.io import compact_parquet, upsert_parquet
 
@@ -1404,21 +1404,13 @@ def _bloom_file_index(spark: SparkSession, path: str) -> dict[str, set[int]]:
 
     jj = spark.range(_BLOOM_FILE_K).select(FF.col("id").cast("int").alias("j"))
     pos = (
-        FF.conv(
-            FF.substring(
-                FF.md5(
-                    FF.concat(
-                        FF.col("j").cast("string"),
-                        FF.lit(":"),
-                        FF.col("o_custkey").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h32(
+            FF.concat(
+                FF.col("j").cast("string"),
+                FF.lit(":"),
+                FF.col("o_custkey").cast("string"),
+            )
+        )
         % _BLOOM_FILE_M
     )
     rows = (
@@ -1438,13 +1430,7 @@ def _bloom_file_index(spark: SparkSession, path: str) -> dict[str, set[int]]:
 def _bloom_probe_positions(key: int) -> list[int]:
     """The SAME md5 j:key rule, driver-side (md5 is md5 — bit-identical
     to the Spark expression in ``_bloom_file_index``)."""
-    import hashlib  # noqa: PLC0415 — driver-side only
-
-    return [
-        int(hashlib.md5(f"{j}:{key}".encode()).hexdigest()[:8], 16)
-        % _BLOOM_FILE_M
-        for j in range(_BLOOM_FILE_K)
-    ]
+    return [py_h32(f"{j}:{key}") % _BLOOM_FILE_M for j in range(_BLOOM_FILE_K)]
 
 
 @register(

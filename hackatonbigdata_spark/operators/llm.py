@@ -1,4 +1,4 @@
-"""M7 — LLM-training-data pipeline operators (SURVEY.md §7.2 M7).
+"""LLM-training-data pipeline operators (SURVEY.md §7.2).
 
 Deduplication (exact, n-gram Jaccard, MinHash+LSH, SimHash,
 embedding-cosine), similarity search (brute-force top-k, IVF-bucketed ANN),
@@ -71,12 +71,6 @@ def _norm_text() -> Column:
             F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "), " +", " "
         )
     )
-
-
-def _h(col: Column) -> Column:
-    """Shared 32-bit hash: first 8 hex chars of md5 as a bigint — the one
-    hash function both engines compute identically."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def _doc_words(t: Catalog) -> DataFrame:
@@ -333,7 +327,7 @@ def _minhash_candidates(sh: DataFrame) -> DataFrame:
     (the construction is byte-identical to ``dedup_minhash_lsh``'s)."""
     sig = sh.groupBy("doc_id").agg(
         *[
-            F.min(_h(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(f"m{s}")
+            F.min(h32(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(f"m{s}")
             for s in range(_N_MINHASH)
         ]
     )
@@ -401,7 +395,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — linear in corpus size."""
     t = Catalog(spark, sf_dir)
     words = _doc_words(t).select("doc_id", F.explode("w").alias("word"))
-    h = words.select("doc_id", _h(F.col("word")).alias("hw"))
+    h = words.select("doc_id", h32(F.col("word")).alias("hw"))
     bits = h.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1143,7 +1137,7 @@ def sample_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure rowwise hashing, no shuffle, no state; stratification
     reporting is one keyed agg downstream of this assignment."""
     t = Catalog(spark, sf_dir)
-    bucket = (_h(F.col("doc_id").cast("string")) % 100).alias("split_bucket")
+    bucket = (h32(F.col("doc_id").cast("string")) % 100).alias("split_bucket")
     return t.documents.select(
         "doc_id",
         "lang",
@@ -1563,7 +1557,7 @@ def seqpack_greedy_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Catalog(spark, sf_dir)
     tok = t.documents.select(
         "doc_id",
-        (_h(F.col("doc_id").cast("string")) % 8).alias("shard"),
+        (h32(F.col("doc_id").cast("string")) % 8).alias("shard"),
         F.size(F.expr(r"regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9\\s]', 0)"))
         .cast("long")
         .alias("n_tokens"),
@@ -1775,7 +1769,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.col("n_words") / 100.0, F.lit(1.0)) * 0.6
         + F.least(F.col("n_chars") / 500.0, F.lit(1.0)) * 0.4
     )
-    bucket = _h(F.col("doc_id").cast("string")) % 100
+    bucket = h32(F.col("doc_id").cast("string")) % 100
     s = (
         q.filter(score >= 0.5)
         .select(
@@ -1785,7 +1779,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(bucket < 90, "val")
             .otherwise("test")
             .alias("split"),
-            (_h(F.col("doc_id").cast("string")) % 8).alias("shard"),
+            (h32(F.col("doc_id").cast("string")) % 8).alias("shard"),
         )
     )
     w = (
@@ -3861,7 +3855,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chunk_idx",
         "start_tok",
         "n_toks",
-        _h(F.col("chunk_text")).alias("chunk_hash"),
+        h32(F.col("chunk_text")).alias("chunk_hash"),
     )
 
 
@@ -4492,7 +4486,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " k -> concat_ws(' ', w[k], w[k + 1]))"
             )
         ).alias("bigram"),
-    ).select("doc_id", "is_t", (_h(F.col("bigram")) % _DSIR_B).alias("bucket"))
+    ).select("doc_id", "is_t", (h32(F.col("bigram")) % _DSIR_B).alias("bucket"))
     g = i.groupBy("bucket").agg(
         F.sum("is_t").alias("ct"), F.sum(1 - F.col("is_t")).alias("cs")
     )
@@ -5958,7 +5952,7 @@ def _pq_codes(vecs: DataFrame, vcol: str, tag: str | None = None) -> DataFrame:
         .distinct()
         .select(
             F.col("vec_id").alias("k"),
-            _h(F.col("vec_id").cast("string")).alias("hk"),
+            h32(F.col("vec_id").cast("string")).alias("hk"),
         )
         .orderBy("hk", "k")
         .limit(_PQ_K)
@@ -6810,26 +6804,11 @@ def similarity_ivfpq_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Catalog(spark, sf_dir)
     e = materialize(_embeddings(t).withColumn("qq", _dot("emb", "emb")))
 
-    # The three eager materializations after e — the PQ
-    # reconstruction, the coarse ranking, and the O(n²) sampled-oracle
-    # exact scan — are INDEPENDENT pipelines over the same checkpointed
-    # input; submit them from two driver threads (the _gann_nnd_compare
-    # pattern) so their jobs interleave on the executors: results are
-    # identical, wall-clock is max() instead of sum()
-    def _index_side():
-        rr = _pq_reconstructed(e)
-        rk = materialize(_ivf_ranks(e), "vec_id")
-        return rr, rk
-
-    def _exact_side():
-        # checkpointed: the O(n²) sampled-oracle scan is read by one hits
-        # join per probe level and must not recompute per branch
-        return materialize(_exact_topk(e, 3).select("vec_id", "nb"), "vec_id")
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fi, fx = pool.submit(_index_side), pool.submit(_exact_side)
-        r, ranks = fi.result()
-        ex3 = fx.result()
+    r = _pq_reconstructed(e)
+    ranks = materialize(_ivf_ranks(e), "vec_id")
+    # checkpointed: the O(n²) sampled-oracle scan is read by one hits join
+    # per probe level and must not recompute per branch
+    ex3 = materialize(_exact_topk(e, 3).select("vec_id", "nb"), "vec_id")
     assign = ranks.filter(F.col("rn") == 1).select(
         "vec_id", F.col("centroid_id").alias("bucket_id")
     )
@@ -7538,18 +7517,7 @@ def dedup_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     jj = spark.range(_BLOOM_K).select(F.col("id").cast("int").alias("j"))
 
     def pos(j_col, dg_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(j_col.cast("string"), F.lit(":"), dg_col)),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BLOOM_M
-        )
+        return h32(F.concat(j_col.cast("string"), F.lit(":"), dg_col)) % _BLOOM_M
 
     stored = d.filter(F.col("doc_id") % 2 == 0)
     # bounded by m rows no matter the corpus size -> broadcast is safe by
@@ -8266,9 +8234,7 @@ def _nnd_build(
 
     hk = e.select(
         "vec_id",
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        h32(F.col("vec_id").cast("string")).alias("h"),
     )
     a, b = hk.alias("a"), hk.alias("b")
     mates = (
@@ -8669,9 +8635,10 @@ def _gann_nnd_compare(spark: SparkSession, e: DataFrame) -> DataFrame:
     # the exact side (ranked edges -> graph, ground truth, entry hub) and
     # the NND build are INDEPENDENT multi-second pipelines over the same
     # checkpointed input: submit them from two driver threads so their
-    # jobs interleave on the executors (the standard Spark concurrent-
-    # scheduler pattern) — results are identical, wall-clock is max()
-    # instead of sum()
+    # jobs interleave on the executors — results are identical; at sf0.01
+    # on 4 cores, 10 alternating fresh-process pairs built and ran
+    # similarity_graph_ann_nnd in a median 27.0 s threaded against 29.4 s
+    # serial (serial quartiles 28.2-30.3 s)
     def _exact_side():
         ranked = materialize(_exact_topk(e, _GANN_DEG))
         return ranked, _gann_entry_hub(ranked)
@@ -9927,9 +9894,9 @@ def encode_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         wf.select(
             "source",
             "cnt",
-            (_h(F.col("word")) % _FH_BUCKETS).alias("bucket"),
+            (h32(F.col("word")) % _FH_BUCKETS).alias("bucket"),
             F.when(
-                _h(F.concat(F.lit("s:"), F.col("word"))) % 2 == 0, F.lit(1)
+                h32(F.concat(F.lit("s:"), F.col("word"))) % 2 == 0, F.lit(1)
             )
             .otherwise(F.lit(-1))
             .alias("sgn"),

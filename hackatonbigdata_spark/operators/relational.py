@@ -1,4 +1,4 @@
-"""M1 — relational core: scans, filters, joins, dedup, set ops, top-k.
+"""Relational core: scans, filters, joins, dedup, set ops, top-k.
 
 Reimplements the reference's relational surface (SURVEY.md §2.1-2.3, 2.6,
 2.7) Spark-first.  Each query is registered with a DuckDB oracle.  Scale
@@ -137,12 +137,7 @@ def sample_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.sample`` remains the one-liner when reproducibility doesn't
     matter.  Scale: the filter is rowwise and codegen'd — no shuffle."""
     t = Catalog(spark, sf_dir)
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-        F.lit(10),
-    )
+    bucket = F.pmod(h32(F.col("o_orderkey").cast("string")), F.lit(10))
     return t.orders.filter(bucket == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )

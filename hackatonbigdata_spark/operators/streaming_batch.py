@@ -1,4 +1,4 @@
-"""M6 — event-stream semantics, batch-checkable form (SURVEY.md §2.11).
+"""Event-stream semantics, batch-checkable form (SURVEY.md §2.11).
 
 The reference has no streaming; its closest analogs are threshold-based
 alerting off an event bus (/root/reference/src/monitoring/alerts.py:632-662)
@@ -26,7 +26,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
-from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.core import h32, r4
 from hackatonbigdata_spark.functions.fixpoint import iterate
 from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.registry import register
@@ -1708,9 +1708,7 @@ def stream_hourly_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("hour"),
         "event_id",
         "user_id",
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        h32(F.col("event_id").cast("string")).alias("h"),
     )
     w = W.partitionBy("hour").orderBy("h", "event_id")
     return (
@@ -1834,19 +1832,7 @@ def stream_hourly_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucket(d_col, u_col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            d_col.cast("string"), F.lit(":"), u_col.cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            h32(F.concat(d_col.cast("string"), F.lit(":"), u_col.cast("string")))
             % CMS_W
         )
 
@@ -2041,21 +2027,7 @@ def stream_hourly_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(j_col, u_col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j_col.cast("string"),
-                            F.lit(":"),
-                            u_col.cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            h32(F.concat(j_col.cast("string"), F.lit(":"), u_col.cast("string")))
             % BLOOM_M
         )
 

@@ -62,6 +62,22 @@ def _load_all() -> None:
 # every other name follows in registration order.  Every name listed must
 # be registered.
 _PRIORITY: list[str] = [
+    "similarity_ivfpq_nprobe",
+    "sample_scan",
+    "io_bloom_skip_lookup",
+    "stream_hourly_sample",
+    "stream_hourly_cms",
+    "stream_hourly_bloom",
+    "dedup_bloom_gate",
+    "calibration_subsample_uncertainty",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "encode_feature_hashing",
+    "sample_stratified_split",
+    "seqpack_greedy_bins",
+    "text_chunk_windows",
+    "corpus_curation_pipeline",
+    "corpus_dsir_weights",
     "dedup_cluster_components",
     "dedup_cluster_largestar",
     "graph_kcore_decomposition",
@@ -97,7 +113,6 @@ _PRIORITY: list[str] = [
     "dedup_chunk_hashes",
     "similarity_matryoshka_eval",
     "similarity_hamming_binary",
-    "corpus_dsir_weights",
     "dedup_lsh_calibration",
     "corpus_mixture_temperature",
     "corpus_vocab_growth",
@@ -108,17 +123,13 @@ _PRIORITY: list[str] = [
     "embedding_int8_ranking",
     "dedup_savings_report",
     "quality_classifier_gd",
-    "dedup_bloom_gate",
     "corpus_budget_selection",
     "stream_hourly_distinct",
-    "stream_hourly_sample",
     "stream_user_trailing_count",
-    "stream_hourly_cms",
     "stream_hourly_value_quantiles",
     "dedup_lines_ccnet",
     "embedding_pq_eval",
     "mm_ppm_pixel_stats",
-    "stream_hourly_bloom",
     "corpus_bpe_encode",
 ]
 

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode cores come from ``SPARK_GRAFT_CPUS`` and the driver heap from
-physical RAM, so the same entrypoint works in tests on any box and would
-carry to a real cluster (where most of these configs are cluster-managed).
+Local-mode cores are the CPUs this process may run on and the driver heap
+comes from physical RAM, so the same entrypoint works in tests on any box
+and would carry to a real cluster (where most of these configs are
+cluster-managed).
 Scale notes:
 
 - AQE on: runtime partition coalescing + skew-join splitting — the reference's
@@ -32,11 +33,11 @@ def _driver_memory() -> str:
 
 
 def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

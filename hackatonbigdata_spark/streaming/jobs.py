@@ -14,23 +14,35 @@ micro-batch) streams that inject within-watermark LATE events to pin the
 out-of-order paths.
 
 Out-of-order discipline: every ORDER-dependent custom kernel
-(sessionizer, funnel, Markov transitions, running TWA, running drawdown)
-keeps a bounded buffer of in-horizon events and treats only data behind
-the watermark as final — compacted into an O(1) accumulator — because a
-late-but-within-watermark event can re-order, re-split, or merge what a
-naive kernel would have already folded (or, in append mode, already
-emitted).  Append-mode deltas are made retractable (negative counts)
-where the consumer aggregates them.
+(sessionizer, funnel, Markov transitions, running TWA, running drawdown,
+DGIM trailing count) keeps a bounded buffer of in-horizon events and
+treats only data behind the watermark as final — compacted into an O(1)
+accumulator — because a late-but-within-watermark event can re-order,
+re-split, or merge what a naive kernel would have already folded (or, in
+append mode, already emitted).  Append-mode deltas are made retractable
+(negative counts) where the consumer aggregates them.
 
-Bounded-state sketches (space-saving top-k, KMV, bottom-k sample,
-count-min, grid histogram, Bloom, HLL per hour; KLL per day) share one
-state lifecycle, ``_bucket_sketch_stream``: state is keyed by the
-event-time bucket, and the single eviction rule removes it, emitting
-nothing, once its event-time timeout fires or the watermark reaches the
-bucket end (the timeout is the bucket end).
-Each sketch supplies only its schemas, how a pandas chunk becomes items,
-its pure fold, how the sketch is stored and what rows it emits.  The
-user-keyed kernels keep their own lifecycle, with the reason at each.
+Two state lifecycles serve the custom kernels:
+
+- **Bucket-keyed** (``_bucket_sketch_stream``): the bounded-state
+  sketches (space-saving top-k, KMV, bottom-k sample, count-min, grid
+  histogram, Bloom, HLL per hour; KLL per day).  State is keyed by the
+  event-time bucket, and the single eviction rule removes it, emitting
+  nothing, once its event-time timeout fires or the watermark reaches the
+  bucket end (the timeout is the bucket end).  Each sketch supplies only
+  its schemas, how a pandas chunk becomes items, its pure fold, how the
+  sketch is stored and what rows it emits.
+- **User-keyed buffer** (``_user_buffer_stream``): Markov transitions,
+  running TWA, running drawdown and the DGIM trailing count.  State is
+  keyed by user with no timeout: a finalized accumulator plus the
+  in-horizon buffer.  Each call splits the sorted buffer at the watermark
+  (``_watermark_split``), folds the final prefix into the accumulator and
+  emits from the re-folded tail (``refold_step``; transitions use the
+  split directly).  Each kernel supplies its event fields, its step, how
+  state is loaded and stored and what rows it emits.
+
+The sessionizer, funnel, user counter and burn-rate kernels keep their own
+lifecycle, with the difference named at each.
 
 Scale: state is keyed by (window, low-cardinality dim) or user_id; the
 10-minute watermark bounds both the compacted state and every in-horizon
@@ -40,12 +52,17 @@ O(history).
 
 from __future__ import annotations
 
+import copy
+import math
+from functools import partial
+from operator import itemgetter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hackatonbigdata_spark.catalog import scan_events
-from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.core import py_h32, r4
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
     BLOOM_M,
@@ -66,6 +83,26 @@ WATERMARK = "10 minutes"
 # finalization, out-of-order repair, retraction telescoping — is testable
 # at full fidelity without a JVM (tests/test_kernel_state_machines.py
 # drives them with hypothesis over random arrival orders and batch splits).
+
+
+def _ts_us(ts) -> int:
+    """Epoch microseconds of a pandas timestamp cell."""
+    import pandas as pd  # noqa: PLC0415 — worker-side import
+
+    return int(pd.Timestamp(ts).value // 1_000)
+
+
+def _v4(value) -> int:
+    """A value on the 1e-4 integer grid: floor(1e4 * v + 0.5), the batch
+    twins' quantization."""
+    return math.floor(float(value) * 10000 + 0.5)
+
+
+def _r4(x: float) -> float:
+    """``functions.core.r4`` in Python: 4 decimals, half away from zero
+    (not Python's banker's ``round``)."""
+    return math.copysign(math.floor(abs(x) * 10000 + 0.5), x) / 10000.0
+
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 minutes, matching the built-in twin
 
@@ -123,27 +160,48 @@ def transition_tail_counts(last, types):
     return counts
 
 
+def _watermark_split(buf, new_events, wm_us):
+    """Sort the in-horizon buffer with the new events and split it at the
+    watermark: (final prefix with ts < ``wm_us``, in-horizon tail).  No
+    acceptable event can sort before the prefix; an event exactly at the
+    watermark can still be preceded by one, so it stays in the tail."""
+    buf = sorted(buf + list(new_events))
+    k = 0
+    while k < len(buf) and buf[k][0] < wm_us:
+        k += 1
+    return buf[:k], buf[k:]
+
+
 def transition_step(last_final, buf, new_events, wm_us):
     """One Markov-transition transition: returns (new_last_final, kept_buf,
     delta) where ``delta`` is the RETRACTABLE correction — after minus
     before over the in-horizon tail — whose running sum always equals the
     true in-order transition counts.  Events behind the watermark compact
     into ``last_final``."""
-    buf = sorted(buf)
-    before = transition_tail_counts(last_final, [t for _, _, t in buf])
-    buf = sorted(buf + list(new_events))
-    after = transition_tail_counts(last_final, [t for _, _, t in buf])
-    k = 0
-    while k < len(buf) and buf[k][0] < wm_us:
-        last_final = buf[k][2]
-        k += 1
-    buf = buf[k:]
+    before = transition_tail_counts(last_final, [t for _, _, t in sorted(buf)])
+    final, buf = _watermark_split(buf, new_events, wm_us)
+    after = transition_tail_counts(last_final, [t for _, _, t in final + buf])
+    if final:
+        last_final = final[-1][2]
     delta = {
         key: after.get(key, 0) - before.get(key, 0)
         for key in set(after) | set(before)
         if after.get(key, 0) != before.get(key, 0)
     }
     return last_final, buf, delta
+
+
+def refold_step(fold, project, acc, buf, new_events, wm_us):
+    """The out-of-order repair of the running-fold kernels: fold the final
+    prefix (``_watermark_split``) into the accumulator, keep the tail, and
+    return (acc, tail, emitted) where ``emitted`` is the accumulator
+    extended by the re-folded tail — the fold of every event seen, in
+    event order.  ``fold(acc, items)`` runs over ``project(event)`` items;
+    the tail re-folds a COPY of ``acc`` because a fold may mutate it
+    (``dgim_fold`` appends to its list)."""
+    final, tail = _watermark_split(buf, new_events, wm_us)
+    acc = fold(acc, [project(e) for e in final])
+    return acc, tail, fold(copy.copy(acc), [project(e) for e in tail])
 
 
 def drawdown_fold(acc, events):
@@ -157,27 +215,9 @@ def drawdown_fold(acc, events):
     return cum4, peak4, maxdd4, n
 
 
-def drawdown_step(acc, buf, new_events, wm_us):
-    """One drawdown transition: finalize the sorted prefix behind the
-    watermark into the accumulator, keep the in-horizon tail, and return
-    (acc, kept_buf, emitted) where ``emitted`` is the accumulator extended
-    by the recomputed tail — always the true event-ordered path over
-    everything seen."""
-    buf = sorted(buf + list(new_events))
-    k = 0
-    while k < len(buf) and buf[k][0] < wm_us:
-        k += 1
-    acc = drawdown_fold(acc, [v for _, _, v in buf[:k]])
-    buf = buf[k:]
-    emitted = drawdown_fold(acc, [v for _, _, v in buf])
-    return acc, buf, emitted
-
-
 def twa_fold(acc, events):
     """Fold the held-value integral (last_ts_s, last_value, vdt4, dt, n)
     over (ts_us, value) points in the given order."""
-    import math  # noqa: PLC0415 — hot only at batch granularity
-
     last_ts, last_value, vdt, dt, n = acc
     for ts_us, val in events:
         ts_s = ts_us // 1_000_000
@@ -191,20 +231,6 @@ def twa_fold(acc, events):
                 n += 1
         last_ts, last_value = ts_s, float(val)
     return last_ts, last_value, vdt, dt, n
-
-
-def twa_step(acc, buf, new_events, wm_us):
-    """One TWA transition: finalize the sorted prefix behind the watermark,
-    keep the in-horizon tail, return (acc, kept_buf, emitted) with
-    ``emitted`` the integral over everything seen, in event order."""
-    buf = sorted(buf + list(new_events))
-    k = 0
-    while k < len(buf) and buf[k][0] < wm_us:
-        k += 1
-    acc = twa_fold(acc, [(t, v) for t, _, v in buf[:k]])
-    buf = buf[k:]
-    emitted = twa_fold(acc, [(t, v) for t, _, v in buf])
-    return acc, buf, emitted
 
 
 FUNNEL_STAGES = ["signup", "view", "click", "purchase"]
@@ -355,7 +381,7 @@ def stateful_user_counter_stream(events: DataFrame) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
         )
 
-    # own lifecycle: keyed by user, no bucket end to evict at (NoTimeout)
+    # own lifecycle: commutative totals, no out-of-order buffer to repair
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -652,6 +678,61 @@ def rate_limit_stream(events: DataFrame) -> DataFrame:
     )
 
 
+# --- user-keyed out-of-order buffer lifecycle -------------------------------
+
+
+def _columns(rows, width: int) -> list:
+    """Tuples -> ``width`` parallel lists, the array columns of a state."""
+    return [[r[i] for r in rows] for i in range(width)]
+
+
+def _user_buffer_update(columns, event, empty, load, step, store, emit):
+    """The ``applyInPandasWithState`` update shared by the user-keyed
+    kernels that repair out-of-order arrivals with an in-horizon buffer.
+    Per call: start from ``load(*stored)`` or ``(empty(), [])`` as
+    ``(acc, buf)``; gather one ``(ts_us, *event(*row))`` per row of the
+    ``columns``; run ``step(acc, buf, events, watermark_us)`` ->
+    ``(acc, buf, out)``; store ``store(acc, buf)`` and emit the rows of
+    ``emit(user_id, out)``."""
+    import pandas as pd  # noqa: PLC0415 — worker-side import
+
+    def update(key, pdfs, state: GroupState):
+        acc, buf = load(*state.get) if state.exists else (empty(), [])
+        new_events = [
+            (_ts_us(ts), *event(*row))
+            for pdf in pdfs
+            for ts, *row in zip(pdf["ts"], *(pdf[c] for c in columns))
+        ]
+        acc, buf, out = step(
+            acc, buf, new_events, state.getCurrentWatermarkMs() * 1000
+        )
+        state.update(store(acc, buf))
+        rows = emit(key[0], out)
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return update
+
+
+def _user_buffer_stream(
+    events, out_schema, state_schema, output_mode, **kernel
+) -> DataFrame:
+    """Run ``_user_buffer_update(**kernel)`` per watermarked user in
+    ``output_mode``, with no timeout: nothing per user ever expires, and
+    the watermark bounds the buffer."""
+    return (
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _user_buffer_update(**kernel),
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode=output_mode,
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
 def transition_counts_stream(events: DataFrame) -> DataFrame:
     """Per-user Markov transition extraction as a custom stateful operator
     — the live twin of the batch ``seq_event_transitions`` query (whose
@@ -668,56 +749,22 @@ def transition_counts_stream(events: DataFrame) -> DataFrame:
     The running delta sum therefore equals the true in-order transition
     counts after every batch, while events older than the watermark
     compact into a single string of state."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = "prev_type string, next_type string, n_trans long"
-    state_schema = (
+    return _user_buffer_stream(
+        events,
+        "prev_type string, next_type string, n_trans long",
         "last_type string, bts array<long>, beid array<long>,"
-        " betype array<string>"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            last_final, bts, beid, betype = state.get
-            buf = list(zip(bts, beid, betype))
-        else:
-            last_final, buf = None, []
-        new_events = []
-        for pdf in pdfs:
-            for ts, eid, t in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-                new_events.append(
-                    (int(pd.Timestamp(ts).value // 1_000), int(eid), t)
-                )
-        last_final, buf, delta = transition_step(
-            last_final, buf, new_events, state.getCurrentWatermarkMs() * 1000
-        )
-        state.update(
-            (
-                last_final,
-                [t for t, _, _ in buf],
-                [e for _, e, _ in buf],
-                [y for _, _, y in buf],
-            )
-        )
-        if delta:
-            yield pd.DataFrame(
-                [
-                    {"prev_type": a, "next_type": b, "n_trans": c}
-                    for (a, b), c in delta.items()
-                ]
-            )
-
-    # own lifecycle: keyed by user, out-of-order buffer, append-mode deltas
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        " betype array<string>",
+        "append",
+        columns=("event_id", "event_type"),
+        event=lambda eid, t: (int(eid), t),
+        empty=lambda: None,
+        load=lambda last, *cols: (last, list(zip(*cols))),
+        step=transition_step,
+        store=lambda last, buf: (last, *_columns(buf, 3)),
+        emit=lambda uid, delta: [
+            {"prev_type": a, "next_type": b, "n_trans": c}
+            for (a, b), c in delta.items()
+        ],
     )
 
 
@@ -733,67 +780,33 @@ def time_weighted_avg_stream(events: DataFrame) -> DataFrame:
     running TWA (update mode overwrites), so a late-but-within-watermark
     event re-times its neighboring intervals correctly instead of being
     integrated where it arrived."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
 
-    out_schema = (
-        "user_id long, n_intervals long, span_seconds long, twa_value double"
-    )
-    state_schema = (
+    def emit(uid, integral):
+        _, _, vdt, dt, n = integral
+        if dt <= 0:
+            return []
+        return [
+            {
+                "user_id": uid,
+                "n_intervals": n,
+                "span_seconds": dt,
+                "twa_value": _r4(vdt / (dt * 10000.0)),
+            }
+        ]
+
+    return _user_buffer_stream(
+        events,
+        "user_id long, n_intervals long, span_seconds long, twa_value double",
         "last_ts long, last_value double, vdt long, dt long, n long,"
-        " bts array<long>, beid array<long>, bval array<double>"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import math  # noqa: PLC0415 — worker-side import
-
-        if state.exists:
-            last_ts, last_value, vdt, dt, n, bts, beid, bval = state.get
-            acc, buf = (last_ts, last_value, vdt, dt, n), list(
-                zip(bts, beid, bval)
-            )
-        else:
-            acc, buf = (None, None, 0, 0, 0), []
-        new_events = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                new_events.append(
-                    (int(pd.Timestamp(ts).value // 1_000), int(eid), float(val))
-                )
-        acc, buf, (_, _, sv, sd, sn) = twa_step(
-            acc, buf, new_events, state.getCurrentWatermarkMs() * 1000
-        )
-        state.update(
-            (
-                *acc,
-                [t for t, _, _ in buf],
-                [e for _, e, _ in buf],
-                [v for _, _, v in buf],
-            )
-        )
-        if sd > 0:
-            x = sv / (sd * 10000.0)
-            # r4 convention (half away from zero), not Python's banker's round
-            twa = math.copysign(math.floor(abs(x) * 10000 + 0.5), x) / 10000.0
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_intervals": [sn],
-                    "span_seconds": [sd],
-                    "twa_value": [twa],
-                }
-            )
-
-    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        " bts array<long>, beid array<long>, bval array<double>",
+        "update",
+        columns=("event_id", "value"),
+        event=lambda eid, val: (int(eid), float(val)),
+        empty=lambda: (None, None, 0, 0, 0),
+        load=lambda *s: (s[:5], list(zip(*s[5:]))),
+        step=partial(refold_step, twa_fold, itemgetter(0, 2)),
+        store=lambda acc, buf: (*acc, *_columns(buf, 3)),
+        emit=emit,
     )
 
 
@@ -850,66 +863,32 @@ def running_drawdown_stream(events: DataFrame) -> DataFrame:
     late-but-within-watermark event re-orders the path correctly instead
     of being appended where it arrived.  All arithmetic is integer 1e-4
     units — exact across batch boundaries and accumulation orders."""
-    import math  # noqa: PLC0415 — worker-side import
 
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    out_schema = (
-        "user_id long, n_events long, final_cum4 long, peak4 long, max_dd4 long"
-    )
-    state_schema = (
-        "cum4 long, peak4 long, maxdd4 long, n long,"
-        " bts array<long>, beid array<long>, bv4 array<long>"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cum4, peak4, maxdd4, n, bts, beid, bv4 = state.get
-            acc, buf = (cum4, peak4, maxdd4, n), list(zip(bts, beid, bv4))
-        else:
-            acc, buf = (0, 0, 0, 0), []
-        new_events = []
-        for pdf in pdfs:
-            for ts, eid, val in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                new_events.append(
-                    (
-                        int(pd.Timestamp(ts).value // 1_000),
-                        int(eid),
-                        math.floor(float(val) * 10000 + 0.5),
-                    )
-                )
-        acc, buf, (tc, tp, tm, tn) = drawdown_step(
-            acc, buf, new_events, state.getCurrentWatermarkMs() * 1000
-        )
-        state.update(
-            (
-                *acc,
-                [t for t, _, _ in buf],
-                [e for _, e, _ in buf],
-                [v for _, _, v in buf],
-            )
-        )
-        yield pd.DataFrame(
+    def emit(uid, path):
+        cum4, peak4, maxdd4, n = path
+        return [
             {
-                "user_id": [key[0]],
-                "n_events": [tn],
-                "final_cum4": [tc],
-                "peak4": [tp],
-                "max_dd4": [tm],
+                "user_id": uid,
+                "n_events": n,
+                "final_cum4": cum4,
+                "peak4": peak4,
+                "max_dd4": maxdd4,
             }
-        )
+        ]
 
-    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _user_buffer_stream(
+        events,
+        "user_id long, n_events long, final_cum4 long, peak4 long, max_dd4 long",
+        "cum4 long, peak4 long, maxdd4 long, n long,"
+        " bts array<long>, beid array<long>, bv4 array<long>",
+        "update",
+        columns=("event_id", "value"),
+        event=lambda eid, val: (int(eid), _v4(val)),
+        empty=lambda: (0, 0, 0, 0),
+        load=lambda *s: (s[:4], list(zip(*s[4:]))),
+        step=partial(refold_step, drawdown_fold, itemgetter(2)),
+        store=lambda acc, buf: (*acc, *_columns(buf, 3)),
+        emit=emit,
     )
 
 
@@ -934,7 +913,6 @@ def burnrate_stream(events: DataFrame) -> DataFrame:
     State and per-batch output are O(watermark delay + 6h frame) hours,
     not O(job lifetime)."""
     import bisect  # noqa: PLC0415 — worker-side import
-    import math  # noqa: PLC0415 — worker-side import
 
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
@@ -943,9 +921,6 @@ def burnrate_stream(events: DataFrame) -> DataFrame:
         " rate_1h double, rate_6h double, burn_1h double, page_alert boolean"
     )
     state_schema = "hs array<long>, na array<long>, ne array<long>"
-
-    def _r4(x: float) -> float:
-        return math.copysign(math.floor(abs(x) * 10000 + 0.5), x) / 10000.0
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -1009,7 +984,7 @@ def burnrate_stream(events: DataFrame) -> DataFrame:
         if rows:
             yield pd.DataFrame(rows)
 
-    # own lifecycle: one constant shard whose hourly grid evicts itself
+    # own lifecycle: one constant shard, not a user key; the grid evicts itself
     return (
         events.withWatermark("ts", WATERMARK)
         # materialized column, not groupBy(lit): grouping expressions must
@@ -1050,8 +1025,6 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
     Session timestamps carry epoch MICROSECONDS through state:
     ``session_window`` boundaries are microsecond-precise, so
     second-truncated state would misalign the starts."""
-    import math  # noqa: PLC0415 — worker-side import
-
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
     out_schema = (
@@ -1077,12 +1050,7 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
         if not state.hasTimedOut:
             for pdf in pdfs:
                 for ts, val in zip(pdf["ts"], pdf["value"]):
-                    new_events.append(
-                        (
-                            int(pd.Timestamp(ts).value // 1_000),
-                            math.floor(float(val) * 10000 + 0.5),
-                        )
-                    )
+                    new_events.append((_ts_us(ts), _v4(val)))
         if not buf and not new_events:
             # a key invoked with only empty chunks and no prior state has
             # nothing to track
@@ -1103,7 +1071,7 @@ def session_gap_kernel_stream(events: DataFrame) -> DataFrame:
         if final:
             yield pd.DataFrame([row(uid, s) for s in final])
 
-    # own lifecycle: keyed by user, append mode, timeout at a session close
+    # own lifecycle: an event-time timeout at each session close
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -1160,7 +1128,7 @@ def funnel_stage_kernel_stream(events: DataFrame) -> DataFrame:
                     i = FUNNEL_STAGES.index(et)
                 except ValueError:
                     continue
-                new_events.append((int(pd.Timestamp(ts).value // 1_000), i))
+                new_events.append((_ts_us(ts), i))
         if not new_events:
             return
         bufs, ts_out = funnel_step(
@@ -1183,7 +1151,7 @@ def funnel_stage_kernel_stream(events: DataFrame) -> DataFrame:
             ]
         )
 
-    # own lifecycle: keyed by user, pruned stage buffers, NoTimeout
+    # own lifecycle: per-stage buffers pruned at min(t1, watermark)
     return (
         events.withWatermark("ts", WATERMARK)
         .select("user_id", "ts", "event_type")
@@ -1221,7 +1189,7 @@ def _bucket_sketch_update(bucket, empty, load, items, fold, store, emit):
 
     def update(key, pdfs, state: GroupState):
         b = key[0]
-        end_ms = (pd.Timestamp(b).value // 1_000 + span_us) // 1000
+        end_ms = (_ts_us(b) + span_us) // 1000
         wm_ms = state.getCurrentWatermarkMs()
         if state.hasTimedOut or wm_ms >= end_ms:
             if state.exists:
@@ -1442,9 +1410,7 @@ def sample_hash(event_id: int) -> int:
     """The engine's shared 32-bit content hash (first 8 md5 hex chars of
     the DECIMAL string form) — identical to the Spark/DuckDB expression
     the batch twin ranks by, so stream and batch select the same rows."""
-    import hashlib  # noqa: PLC0415 — worker-side import
-
-    return int(hashlib.md5(str(int(event_id)).encode()).hexdigest()[:8], 16)
+    return py_h32(str(int(event_id)))
 
 
 def bottomk_update(sample: list, items, k: int = SAMPLE_K) -> list:
@@ -1561,28 +1527,6 @@ def dgim_estimate(buckets: list, t: int, window_us: int) -> tuple:
     return total - kept[0][1] // 2, len(kept)
 
 
-def dgim_step(acc: list, buf: list, new_events, wm_us: int):
-    """One trailing-count transition: merge + sort the in-horizon buffer,
-    fold the prefix behind the watermark into the finalized DGIM bucket
-    list, keep the tail, and return (acc, kept_buf, emitted_buckets,
-    t_max) where ``emitted_buckets`` is the accumulator extended by the
-    recomputed tail — the exact DGIM fold of every event seen, in event
-    order (the drawdown/TWA repair pattern).  Buckets are NEVER expired
-    in-state: that keeps the fold path identical to a one-shot fold over
-    the full sorted sequence (expiry inside the stream would change later
-    merges), at an O(log n_total) cost the sketch affords by design;
-    expiry happens only inside ``dgim_estimate`` at read time."""
-    buf = sorted(buf + list(new_events))
-    k = 0
-    while k < len(buf) and buf[k][0] < wm_us:
-        k += 1
-    acc = dgim_fold(acc, [t for t, _ in buf[:k]])
-    buf = buf[k:]
-    emitted = dgim_fold(list(acc), [t for t, _ in buf])
-    t_max = emitted[-1][0] if emitted else None
-    return acc, buf, emitted, t_max
-
-
 def trailing_count_dgim_stream(
     events: DataFrame, window_us: int = DGIM_WINDOW_US
 ) -> DataFrame:
@@ -1602,69 +1546,53 @@ def trailing_count_dgim_stream(
     ``stream_user_trailing_count`` (exact trailing count, oracled); the
     streaming tests pin the estimate EQUAL to the pure-Python DGIM fold
     of the same sorted sequence and WITHIN the published bound of the
-    twin's exact count."""
+    twin's exact count.
+
+    Buckets are NEVER expired in-state: that keeps the fold path identical
+    to a one-shot fold over the full sorted sequence (expiry inside the
+    stream would change later merges), at an O(log n_total) cost the
+    sketch affords by design; expiry happens only inside
+    ``dgim_estimate`` at read time."""
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
-    out_schema = (
-        "user_id long, n_total long, last_ts timestamp,"
-        " n_window_est long, n_buckets long"
-    )
-    state_schema = (
-        "bts array<long>, bsz array<long>,"
-        " fts array<long>, feid array<long>, n long"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            bts, bsz, fts, feid, n = state.get
-            acc, buf = list(zip(bts, bsz)), list(zip(fts, feid))
-            acc = [tuple(b) for b in acc]
-            buf = [tuple(e) for e in buf]
-        else:
-            acc, buf, n = [], [], 0
-        new_events = []
-        for pdf in pdfs:
-            for ts, eid in zip(pdf["ts"], pdf["event_id"]):
-                new_events.append(
-                    (int(pd.Timestamp(ts).value // 1_000), int(eid))
-                )
-        if not new_events:
-            return
-        n += len(new_events)
-        acc, buf, emitted, t_max = dgim_step(
-            acc, buf, new_events, state.getCurrentWatermarkMs() * 1000
-        )
-        state.update(
-            (
-                [t for t, _ in acc],
-                [s for _, s in acc],
-                [t for t, _ in buf],
-                [e for _, e in buf],
-                n,
-            )
-        )
-        est, n_kept = dgim_estimate(emitted, t_max, window_us)
-        yield pd.DataFrame(
+    def emit(uid, buckets):
+        if not buckets:
+            return []
+        t_max = buckets[-1][0]
+        est, n_kept = dgim_estimate(buckets, t_max, window_us)
+        return [
             {
-                "user_id": [key[0]],
-                "n_total": [n],
-                "last_ts": [pd.Timestamp(t_max, unit="us")],
-                "n_window_est": [est],
-                "n_buckets": [n_kept],
+                "user_id": uid,
+                "n_total": sum(size for _, size in buckets),
+                "last_ts": pd.Timestamp(t_max, unit="us"),
+                "n_window_est": est,
+                "n_buckets": n_kept,
             }
-        )
+        ]
 
-    # own lifecycle: keyed by user, out-of-order buffer, NoTimeout
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # folding never loses counts, so every event seen is in a bucket or
+    # the buffer: ``n`` is stored for its readers and derived, not loaded
+    return _user_buffer_stream(
+        events,
+        "user_id long, n_total long, last_ts timestamp,"
+        " n_window_est long, n_buckets long",
+        "bts array<long>, bsz array<long>,"
+        " fts array<long>, feid array<long>, n long",
+        "update",
+        columns=("event_id",),
+        event=lambda eid: (int(eid),),
+        empty=list,
+        load=lambda bts, bsz, fts, feid, n: (
+            list(zip(bts, bsz)),
+            list(zip(fts, feid)),
+        ),
+        step=partial(refold_step, dgim_fold, itemgetter(0)),
+        store=lambda acc, buf: (
+            *_columns(acc, 2),
+            *_columns(buf, 2),
+            sum(size for _, size in acc) + len(buf),
+        ),
+        emit=emit,
     )
 
 
@@ -1681,9 +1609,7 @@ def cms_hash(d: int, x: int, w: int = CMS_W) -> int:
     (``operators/streaming_batch.py: stream_hourly_cms``) computes in SQL
     on both engines, so the streamed counter cells and the batch-
     reconstructed ones are the same integers by definition."""
-    import hashlib  # noqa: PLC0415 — worker-side import
-
-    return int(hashlib.md5(f"{d}:{x}".encode()).hexdigest()[:8], 16) % w
+    return py_h32(f"{d}:{x}") % w
 
 
 def cms_update(counters: list, items, d: int = CMS_D, w: int = CMS_W) -> list:
@@ -1758,8 +1684,6 @@ QUANT_PCTS = (50, 90, 99)  # must match the oracled batch twin
 def hist_cent(v: float) -> int:
     """Engine-shared grid assignment: floor(100*v + 0.5) — the same
     expression the oracled batch twin computes on both engines."""
-    import math  # noqa: PLC0415 — worker-side import
-
     return int(math.floor(v * 100 + 0.5))
 
 
@@ -1842,9 +1766,7 @@ def bloom_pos(j: int, key, m: int = BLOOM_M) -> int:
     mod m — the identical expression the oracled batch twin
     ``stream_hourly_bloom`` and the batch gate ``dedup_bloom_gate``
     evaluate in SQL, so stream and batch light the same bits."""
-    import hashlib  # noqa: PLC0415 — worker-side import
-
-    return int(hashlib.md5(f"{j}:{key}".encode()).hexdigest()[:8], 16) % m
+    return py_h32(f"{j}:{key}") % m
 
 
 def bloom_update(bits: set, items, m: int = BLOOM_M, k: int = BLOOM_K) -> set:
@@ -1870,8 +1792,6 @@ def bloom_estimate(bits: set, m: int = BLOOM_M, k: int = BLOOM_K):
     -(m/k) * ln(1 - b/m), quantized to the engine's 1e-4 grid — the
     same double expression the batch twin evaluates in SQL.  None once
     the filter is saturated (every bit lit)."""
-    import math  # noqa: PLC0415 — worker-side import
-
     b = len(bits)
     if b >= m:
         return None
@@ -1982,8 +1902,6 @@ def hll_estimate(regs: list, m: int = HLL_M) -> float:
     raw estimate alpha*m*m*2^53/S is one left-associated double chain,
     and linear counting m*ln(m/V) takes over when the raw estimate is
     <= 2.5m and V > 0 registers are zero; quantized to the 1e-4 grid."""
-    import math  # noqa: PLC0415 — worker-side import
-
     s = sum(1 << (HLL_W + 1 - r) for r in regs)
     v = sum(1 for r in regs if r == 0)
     raw = _hll_alpha(m) * m * m * float(1 << (HLL_W + 1)) / s

@@ -5,7 +5,8 @@ The engine's whole correctness story rests on a few arithmetic contracts
 contract against DuckDB directly — no Spark session needed, because the
 Spark side evaluates the identical IEEE-double expression tree (Python
 floats are the same doubles), and Spark==oracle is separately proven by the
-212-query parity suite.
+212-query parity suite.  The shared hash is the one contract checked in all
+three: Spark's ``h32``, its Python twin and the oracles' DuckDB SQL.
 """
 
 from __future__ import annotations
@@ -82,6 +83,30 @@ def test_md5_hex_prefix_matches_duckdb(s):
     con = duckdb.connect()
     want = con.execute("SELECT substr(md5(?), 1, 8)", [s]).fetchone()[0]
     assert hashlib.md5(s.encode()).hexdigest()[:8] == want
+
+
+HASHED = ["", "abc", "12345", "héllo wörld ✓ 数据", "3:12345", "0:0"]
+
+
+def test_h32_agrees_in_spark_python_and_duckdb(spark, con):
+    """``h32`` (Spark), ``py_h32`` (Python) and the oracles' hash SQL
+    (DuckDB) give the same integer for empty, ASCII, non-ASCII and
+    ``"j:key"``-shaped text."""
+    from pyspark.sql import functions as F
+
+    from hackatonbigdata_spark.functions.core import h32, py_h32
+    from hackatonbigdata_spark.operators.llm import _duck_hash
+
+    rows = (
+        spark.createDataFrame(list(enumerate(HASHED)), "i int, s string")
+        .select("i", h32(F.col("s")).alias("h"))
+        .orderBy("i")
+        .collect()
+    )
+    duck = [
+        con.execute(f"SELECT {_duck_hash('?')}", [s]).fetchone()[0] for s in HASHED
+    ]
+    assert [r["h"] for r in rows] == [py_h32(s) for s in HASHED] == duck
 
 
 @settings(max_examples=300, deadline=None)

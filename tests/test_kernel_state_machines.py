@@ -15,16 +15,25 @@ the engine keeps firing event-time timeouts while one is due.
 
 from __future__ import annotations
 
+from functools import partial
+from operator import itemgetter
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hackatonbigdata_spark.streaming.jobs import (
+    dgim_estimate,
+    dgim_fold,
+    drawdown_fold,
     fold_sessions,
     funnel_stage_times,
     funnel_step,
+    refold_step,
     session_step,
     transition_step,
     transition_tail_counts,
+    twa_fold,
 )
 
 DELAY = 15
@@ -179,64 +188,95 @@ def test_funnel_machine_pruning_never_changes_the_stage_times(tape, cuts):
                 assert not seen_none
 
 
-@settings(max_examples=300, deadline=None)
-@given(events_strategy, cuts_strategy)
-def test_drawdown_machine_always_emits_the_event_ordered_path(tape, cuts):
-    """After every batch, the emitted (cum, peak, maxdd, n) must equal the
-    brute-force fold of ALL surviving events in event order — finalization
-    plus tail recompute loses nothing and orders everything."""
-    from hackatonbigdata_spark.streaming.jobs import drawdown_fold, drawdown_step
-
-    tape = [(ts, i, v) for i, (ts, v) in enumerate(tape)]
-    acc, buf = (0, 0, 0, 0), []
-    survivors = []
-    max_seen = None
-    for batch in batches_of(tape, cuts):
-        wm = max(0, (max_seen - DELAY)) if max_seen is not None else 0
-        accepted = [e for e in batch if e[0] >= wm]
-        survivors.extend(accepted)
-        acc, buf, emitted = drawdown_step(acc, buf, accepted, wm)
-        for e in batch:
-            max_seen = e[0] if max_seen is None else max(max_seen, e[0])
-        want = drawdown_fold((0, 0, 0, 0), [v for _, _, v in sorted(survivors)])
-        assert emitted == want
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=80),
-            st.floats(-5, 5, allow_nan=False, width=32),
-        ),
-        min_size=0,
-        max_size=30,
+# --- the shared watermark re-fold step ---------------------------------------
+# (fold, event projection, empty accumulator, ts unit, payload strategy) per
+# kernel that runs through ``refold_step``.  TWA's ts are microseconds so
+# the second-floor inside its fold collapses ties the same way on both
+# sides.
+REFOLDS = {
+    "drawdown": (
+        drawdown_fold,
+        itemgetter(2),
+        lambda: (0, 0, 0, 0),
+        1,
+        st.integers(-5, 5),
     ),
-    cuts_strategy,
-)
-def test_twa_machine_always_emits_the_event_ordered_integral(tape, cuts):
-    """Same identity for the held-value integral: emitted (vdt, dt, n)
-    equals the brute-force integration of the surviving events in event
-    order, after every batch.  ts here are treated as microseconds so the
-    second-floor inside the fold collapses ties the same way on both
-    sides."""
-    from hackatonbigdata_spark.streaming.jobs import twa_fold, twa_step
+    "twa": (
+        twa_fold,
+        itemgetter(0, 2),
+        lambda: (None, None, 0, 0, 0),
+        1_000_000,
+        st.floats(-5, 5, allow_nan=False, width=32).map(float),
+    ),
+    "dgim": (dgim_fold, itemgetter(0), list, 1, st.none()),
+}
 
-    tape = [(ts * 1_000_000, i, float(v)) for i, (ts, v) in enumerate(tape)]
-    acc, buf = (None, None, 0, 0, 0), []
+
+def _check_dgim_bounds(emitted, survivors, window=30):
+    """DGIM sketch invariants of an emitted bucket list: at most 2 buckets
+    per size; sizes non-increasing and timestamps non-decreasing
+    oldest-first; sizes conserve the event count; and for a trailing
+    window ending at the last event (``t_max``, read off the newest
+    bucket) the estimate obeys the structural guarantee
+    kept_total - oldest + 1 <= true <= kept_total with
+    |est - true| <= oldest/2."""
+    if not emitted:
+        assert not survivors
+        return
+    t_max = emitted[-1][0]
+    assert t_max == max(t for t, _, _ in survivors)
+    sizes = [s for _, s in emitted]
+    ts_list = [t for t, _ in emitted]
+    for s in set(sizes):
+        assert sizes.count(s) <= 2
+    assert all(sizes[i] >= sizes[i + 1] for i in range(len(sizes) - 1))
+    assert ts_list == sorted(ts_list)
+    assert sum(sizes) == len(survivors)
+    est, n_kept = dgim_estimate(emitted, t_max, window)
+    true = sum(1 for t, _, _ in survivors if t > t_max - window)
+    kept = [b for b in emitted if b[0] > t_max - window]
+    assert n_kept == len(kept)
+    if kept:
+        total = sum(s for _, s in kept)
+        oldest = kept[0][1]
+        assert total - oldest + 1 <= true <= total
+        assert abs(est - true) <= oldest / 2
+    else:
+        assert est == 0 and true == 0
+
+
+@pytest.mark.parametrize("kernel", sorted(REFOLDS))
+@settings(max_examples=300, deadline=None)
+@given(data=st.data())
+def test_refold_machine_always_emits_the_event_ordered_fold(kernel, data):
+    """After every batch, for any arrival order, batch split and
+    watermark schedule, the emitted fold must equal the brute-force fold
+    of ALL surviving events in event order — finalization plus tail
+    re-fold loses nothing and orders everything (for DGIM's no-expiry
+    buckets that is the one-shot fold) — and DGIM's emitted buckets keep
+    the sketch bounds."""
+    fold, project, empty, unit, payload = REFOLDS[kernel]
+    tape = data.draw(
+        st.lists(
+            st.tuples(st.integers(min_value=0, max_value=80), payload),
+            max_size=40,
+        )
+    )
+    cuts = data.draw(cuts_strategy)
+    tape = [(ts * unit, i, v) for i, (ts, v) in enumerate(tape)]
+    acc, buf = empty(), []
     survivors = []
     max_seen = None
     for batch in batches_of(tape, cuts):
-        wm = max(0, (max_seen - DELAY * 1_000_000)) if max_seen is not None else 0
+        wm = max(0, (max_seen - DELAY * unit)) if max_seen is not None else 0
         accepted = [e for e in batch if e[0] >= wm]
         survivors.extend(accepted)
-        acc, buf, emitted = twa_step(acc, buf, accepted, wm)
+        acc, buf, emitted = refold_step(fold, project, acc, buf, accepted, wm)
         for e in batch:
             max_seen = e[0] if max_seen is None else max(max_seen, e[0])
-        want = twa_fold(
-            (None, None, 0, 0, 0), [(t, v) for t, _, v in sorted(survivors)]
-        )
-        assert emitted == want
+        assert emitted == fold(empty(), [project(e) for e in sorted(survivors)])
+        if kernel == "dgim":
+            _check_dgim_bounds(emitted, survivors)
 
 
 @given(
@@ -342,67 +382,6 @@ def test_bottomk_sample_invariants_under_any_chunking(tape, cuts):
         )[:k]
         assert sample == want
         assert len(sample) <= k
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=80), min_size=0, max_size=40),
-    cuts_strategy,
-)
-def test_dgim_machine_matches_one_shot_fold_and_bounds(tape, cuts):
-    """DGIM state-machine identity + sketch invariants, after every batch,
-    for any arrival order, batch split, and watermark schedule: the
-    emitted bucket list equals the ONE-SHOT fold of the surviving events
-    in event order (the no-expiry design makes this an exact identity);
-    at most 2 buckets per size; sizes non-increasing and timestamps
-    non-decreasing oldest-first; sizes conserve the event count; and for
-    a trailing window the estimate obeys the structural guarantee
-    kept_total - oldest + 1 <= true <= kept_total with
-    |est - true| <= oldest/2."""
-    from hackatonbigdata_spark.streaming.jobs import (
-        dgim_estimate,
-        dgim_fold,
-        dgim_step,
-    )
-
-    W = 30
-    tape = [(ts, i) for i, ts in enumerate(tape)]
-    acc, buf = [], []
-    survivors = []
-    max_seen = None
-    for batch in batches_of(tape, cuts):
-        wm = max(0, (max_seen - DELAY)) if max_seen is not None else 0
-        accepted = [e for e in batch if e[0] >= wm]
-        survivors.extend(accepted)
-        acc, buf, emitted, t_max = dgim_step(acc, buf, accepted, wm)
-        for e in batch:
-            max_seen = e[0] if max_seen is None else max(max_seen, e[0])
-        want = dgim_fold([], [t for t, _ in sorted(survivors)])
-        assert emitted == want
-        if not emitted:
-            assert t_max is None
-            continue
-        assert t_max == max(t for t, _ in survivors)
-        sizes = [s for _, s in emitted]
-        ts_list = [t for t, _ in emitted]
-        for s in set(sizes):
-            assert sizes.count(s) <= 2
-        assert sizes == sorted(sizes, reverse=True) or all(
-            sizes[i] >= sizes[i + 1] for i in range(len(sizes) - 1)
-        )
-        assert ts_list == sorted(ts_list)
-        assert sum(sizes) == len(survivors)
-        est, n_kept = dgim_estimate(emitted, t_max, W)
-        true = sum(1 for t, _ in survivors if t > t_max - W)
-        kept = [b for b in emitted if b[0] > t_max - W]
-        assert n_kept == len(kept)
-        if kept:
-            total = sum(s for _, s in kept)
-            oldest = kept[0][1]
-            assert total - oldest + 1 <= true <= total
-            assert abs(est - true) <= oldest / 2
-        else:
-            assert est == 0 and true == 0
 
 
 @given(
@@ -772,3 +751,106 @@ def test_bucket_adapter_evicts_at_bucket_end_or_timeout(
     assert list(update(key, [_users(4, 5)], state)) == []
     assert not state.exists
     assert state.timeout_ms is None
+
+
+# --- the user-keyed buffer state adapter -------------------------------------
+# ``_user_buffer_update`` is the whole applyInPandasWithState lifecycle of
+# the user-keyed re-fold kernels.  Two kernels drive it here: an ordered
+# event log whose fold extends its list in place, and DGIM, whose fold
+# appends to its bucket list — so a tail re-fold that reused the stored
+# accumulator would show in the state.
+
+MIN_US = 60 * 1_000_000
+USER = (7,)
+
+
+def _log_fold(acc, items):
+    acc.extend(items)
+    return acc
+
+
+def _buffer_update(fold):
+    from hackatonbigdata_spark.streaming.jobs import _columns, _user_buffer_update
+
+    return _user_buffer_update(
+        columns=("event_id",),
+        event=lambda eid: (int(eid),),
+        empty=list,
+        load=lambda acc, ts, ids: (list(acc), list(zip(ts, ids))),
+        step=partial(refold_step, fold, itemgetter(0)),
+        store=lambda acc, buf: (list(acc), *_columns(buf, 2)),
+        emit=lambda uid, out: [{"user_id": uid, "item": x} for x in out],
+    )
+
+
+def _events(*minutes, first_id=0):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "ts": [pd.Timestamp(m * MIN_US, unit="us") for m in minutes],
+            "event_id": range(first_id, first_id + len(minutes)),
+        }
+    )
+
+
+def _emitted(update, pdfs, state):
+    return [
+        row for out in update(USER, pdfs, state) for row in out.to_dict("records")
+    ]
+
+
+def _rows(out):
+    return [{"user_id": USER[0], "item": x} for x in out]
+
+
+BUFFER_FOLDS = {"log": _log_fold, "dgim": dgim_fold}
+
+
+@pytest.mark.parametrize("fold", sorted(BUFFER_FOLDS))
+def test_user_buffer_adapter_round_trips_state_across_calls(fold):
+    """The second call resumes from what the first stored: the final
+    prefix folded into the accumulator, the tail buffered in event order,
+    and the emission is the fold over every event of both calls."""
+    fold = BUFFER_FOLDS[fold]
+    update = _buffer_update(fold)
+    state = FakeGroupState(wm_ms=0)
+    first = _emitted(update, [_events(0, 20), _events(5, first_id=2)], state)
+    us = [m * MIN_US for m in (0, 5, 20)]
+    assert first == _rows(fold([], us))
+    assert state.value == ([], us, [0, 2, 1])
+
+    state.wm_ms = 10 * MIN_US // 1000
+    second = _emitted(update, [_events(12, 30, first_id=3)], state)
+    us = [m * MIN_US for m in (0, 5, 12, 20, 30)]
+    assert second == _rows(fold([], us))
+    assert state.value == (fold([], us[:2]), us[2:], [3, 1, 4])
+
+
+@pytest.mark.parametrize("fold", sorted(BUFFER_FOLDS))
+def test_user_buffer_adapter_keeps_an_event_at_the_watermark(fold):
+    """Only events strictly behind the watermark are final: one exactly
+    at it can still be preceded by an accepted event, so it stays in the
+    buffer."""
+    fold = BUFFER_FOLDS[fold]
+    update = _buffer_update(fold)
+    state = FakeGroupState(wm_ms=10 * MIN_US // 1000)
+    out = _emitted(update, [_events(9, 10)], state)
+    assert out == _rows(fold([], [9 * MIN_US, 10 * MIN_US]))
+    assert state.value == (fold([], [9 * MIN_US]), [10 * MIN_US], [1])
+
+
+@pytest.mark.parametrize("fold", sorted(BUFFER_FOLDS))
+def test_user_buffer_adapter_call_without_events_re_emits(fold):
+    """A call with no events (no chunks, or only empty ones) emits what
+    the call before it emitted and stores the same events."""
+    import pandas as pd
+
+    update = _buffer_update(BUFFER_FOLDS[fold])
+    state = FakeGroupState(wm_ms=0)
+    before = _emitted(update, [_events(3, 1, 4)], state)
+    stored = state.value
+    empty = _events().astype({"ts": "datetime64[us]", "event_id": "int64"})
+    for pdfs in ([], [empty], [empty, empty]):
+        assert _emitted(update, pdfs, state) == before
+        assert state.value == stored
