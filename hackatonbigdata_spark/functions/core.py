@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -71,3 +71,33 @@ def py_h32(text: str) -> int:
     the same split/sample/bucket as the Spark and DuckDB expressions: the
     first 8 hex chars of the md5 of the UTF-8 text, as an int."""
     return int(hashlib.md5(text.encode()).hexdigest()[:8], 16)
+
+
+def both_directions(
+    half: DataFrame,
+    lo: str,
+    hi: str,
+    *same: str,
+    names: tuple[str, str] | None = None,
+    **directed: tuple[str, str],
+) -> DataFrame:
+    """Explode each undirected ``(lo, hi, ...)`` row into its two directed
+    rows ``(src, dst, *same, *directed)``, with ``(src, dst)`` = ``names``
+    (default ``(lo, hi)``).  Both rows come from the one evaluated row: a
+    mirrored union would run ``half``'s whole plan once per side.
+
+    ``same`` columns are symmetric and copied to both rows; each
+    ``directed`` entry ``name=(lo_src, hi_src)`` takes ``lo_src`` on the
+    row whose src is ``lo`` and ``hi_src`` on the other."""
+    src, dst = names or (lo, hi)
+    ends = (lo, hi)
+
+    def side(i: int) -> Column:
+        return F.struct(
+            F.col(ends[i]).alias(src),
+            F.col(ends[1 - i]).alias(dst),
+            *[F.col(c).alias(c) for c in same],
+            *[F.col(cols[i]).alias(name) for name, cols in directed.items()],
+        )
+
+    return half.select(F.explode(F.array(side(0), side(1))).alias("_p")).select("_p.*")

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1335,6 +1335,9 @@ def prophet_prep_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# No value-verified version: stage 1 is an L-BFGS logistic optimum scored
+# through exp(), which is not correctly rounded, so no second engine
+# reproduces its per-row 4dp outputs.
 @register("zero_inflated_hurdle_mllib")
 def zero_inflated_hurdle_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-inflated hurdle model as an MLlib pipeline (rows-only: model
@@ -1585,8 +1588,8 @@ def store_coldstart_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines scale bit-identical doubles; hierarchy averages divide exact
     1e4-scaled BIGINT sums.  Scale: the store-pair cosine is O(S²) on the
     STORE dimension only (stores are bounded — thousands, not fact-table
-    cardinality); at larger S the MLlib BRP-LSH twin
-    (``similarity_brp_lsh_mllib``) is the bucketed path.  Hierarchy
+    cardinality); at larger S the IVF-bucketed search of
+    ``similarity_ivf_bucketed`` is the bucketed path.  Hierarchy
     averages are tiny keyed aggregates broadcast back."""
     t = Catalog(spark, sf_dir)
     li = t.lineitem
@@ -2071,6 +2074,24 @@ def residual_diagnostics_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _forecast_deciles(v: DataFrame) -> DataFrame:
+    """``v`` plus ``forecast_decile`` (1-10): the forecast's bin among nine
+    scalar quantile edges broadcast back, so there is no global ntile
+    window."""
+    edges = v.agg(
+        *[
+            r4(F.percentile("forecast", F.lit(i / 10.0))).alias(f"q{i}")
+            for i in range(1, 10)
+        ]
+    )
+    decile = F.lit(1)
+    for i in range(1, 10):
+        decile = decile + F.when(F.col("forecast") > F.col(f"q{i}"), 1).otherwise(0)
+    return v.crossJoin(F.broadcast(edges)).select(
+        *v.columns, decile.alias("forecast_decile")
+    )
+
+
 @register(
     "calibration_curve_bins",
     oracle=f"""
@@ -2136,19 +2157,7 @@ def calibration_curve_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "forecast",
         F.floor(F.col("forecast") * 10000 + F.lit(0.5)).cast("long").alias("fl"),
     )
-    edges = v.agg(
-        *[
-            r4(F.percentile("forecast", F.lit(i / 10.0))).alias(f"q{i}")
-            for i in range(1, 10)
-        ]
-    )
-    decile = F.lit(1)
-    for i in range(1, 10):
-        decile = decile + F.when(F.col("forecast") > F.col(f"q{i}"), 1).otherwise(0)
-    binned = v.crossJoin(F.broadcast(edges)).select(
-        "actual", "fl", decile.alias("forecast_decile")
-    )
-    return binned.groupBy("forecast_decile").agg(
+    return _forecast_deciles(v).groupBy("forecast_decile").agg(
         F.count(F.lit(1)).alias("n_rows"),
         (
             F.floor(
@@ -2175,85 +2184,180 @@ def calibration_curve_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("calibration_isotonic")
+# Pool-adjacent-violators as one left fold over the distinct forecasts in
+# ascending order.  The stack holds one entry per pooled block: the running
+# totals (cw rows, cs = sum of 1e4-scaled actuals) through the block's last
+# forecast x, behind a zero sentinel.  Each point keeps the stack up to the
+# topmost block whose mean is below the mean of everything above it plus
+# the point, and pools the rest into one block — the greedy PAV pop loop
+# as one filter.  Totals are exact integers, so every mean is one
+# correctly rounded division and both engines take the same pooling path.
+_PAV_ZERO = (
+    "array(named_struct('x', cast(null as double),"
+    " 'cw', cast(0 as bigint), 'cs', cast(0 as bigint)))"
+)
+_PAV_STEP = """(st, p) -> concat(
+  slice(st, 1, 1 + array_max(filter(sequence(0, size(st) - 1), k ->
+    CASE WHEN k = 0 THEN true
+         ELSE (st[k].cs - st[k - 1].cs) / (st[k].cw - st[k - 1].cw)
+              < (element_at(st, -1).cs + p.cs - st[k].cs)
+                / (element_at(st, -1).cw + p.cw - st[k].cw) END))),
+  array(named_struct('x', p.x, 'cw', element_at(st, -1).cw + p.cw,
+                     'cs', element_at(st, -1).cs + p.cs)))"""
+
+_DUCK_PAV_STEP = """(st, q) -> list_concat(
+  st[1:list_max(list_filter(range(1, len(st) + 1), k ->
+    CASE WHEN k = 1 THEN true
+         ELSE (st[k].cs - st[k - 1].cs) / (st[k].cw - st[k - 1].cw)
+              < (st[-1].cs + q[1].cs - st[k].cs) / (st[-1].cw + q[1].cw - st[k].cw) END))],
+  [{'x': q[1].x, 'cw': st[-1].cw + q[1].cw, 'cs': st[-1].cs + q[1].cs}])"""
+
+_ISO_EDGES_SQL = ",\n".join(
+    f"         floor(quantile_cont(forecast, {i / 10}) * 10000 + 0.5) / 10000 AS q{i}"
+    for i in range(1, 10)
+)
+_ISO_DECILE_SQL = "\n".join(
+    f"           + (CASE WHEN forecast > q{i} THEN 1 ELSE 0 END)" for i in range(1, 10)
+)
+
+
+@register(
+    "calibration_isotonic",
+    oracle=f"""
+WITH f AS ({_FORECAST_SQL}),
+v AS (
+  SELECT actual, forecast,
+         CAST(floor(forecast * 10000 + 0.5) AS BIGINT) AS fl,
+         CAST(floor(actual * 10000 + 0.5) AS BIGINT) AS al
+  FROM f WHERE forecast IS NOT NULL
+), pts AS (
+  SELECT list_sort(list({{'x': forecast, 'cw': cw, 'cs': cs}})) AS pts
+  FROM (SELECT forecast, count(*) AS cw, CAST(sum(al) AS BIGINT) AS cs
+        FROM v GROUP BY forecast)
+), fold AS (
+  SELECT pts, list_reduce(
+    list_prepend([{{'x': NULL::DOUBLE, 'cw': 0::BIGINT, 'cs': 0::BIGINT}}],
+                 list_transform(pts, p -> [p])),
+    {_DUCK_PAV_STEP}) AS st
+  FROM pts
+), blocks AS (
+  SELECT pts, list_transform(range(2, len(st) + 1), k ->
+    {{'hi': st[k].x,
+     'c': (st[k].cs - st[k - 1].cs) / (st[k].cw - st[k - 1].cw) / 10000.0}}) AS bl
+  FROM fold
+), cal_map AS (
+  SELECT m.forecast, m.calibrated
+  FROM (SELECT unnest(list_transform(pts, p ->
+          {{'forecast': p.x,
+           'calibrated': list_filter(bl, b -> b.hi >= p.x)[1].c}})) AS m
+        FROM blocks)
+), cal AS (
+  SELECT v.actual, v.forecast, v.fl, v.al,
+         CAST(floor(c.calibrated * 10000 + 0.5) AS BIGINT) AS cl
+  FROM v JOIN cal_map c ON v.forecast = c.forecast
+), e AS (
+  SELECT
+{_ISO_EDGES_SQL}
+  FROM cal
+), binned AS (
+  SELECT actual, fl, al, cl,
+         1
+{_ISO_DECILE_SQL} AS forecast_decile
+  FROM cal, e
+)
+SELECT CAST(forecast_decile AS BIGINT) AS forecast_decile,
+       count(*) AS n_rows,
+       round(CAST(sum(fl) AS DOUBLE) / (count(*) * 10000.0), 4) AS mean_forecast,
+       round(CAST(sum(cl) AS DOUBLE) / (count(*) * 10000.0), 4) AS mean_calibrated,
+       round(CAST(sum(al) AS DOUBLE) / (count(*) * 10000.0), 4) AS mean_actual,
+       round(CAST(sum(CAST(fl - al AS HUGEINT) * (fl - al)) AS DOUBLE) / 100000000.0, 4)
+         AS sse_raw,
+       round(CAST(sum(CAST(cl - al AS HUGEINT) * (cl - al)) AS DOUBLE) / 100000000.0, 4)
+         AS sse_calibrated
+FROM binned
+GROUP BY forecast_decile
+""",
+)
 def calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic calibration of the rolling-mean forecast: MLlib
-    ``IsotonicRegression`` fits the monotone map forecast → actual (the
-    distributed PAVA the reference's sklearn isotonic calibrator runs
-    single-node, /root/reference/src/models/model_calibration.py:49-200),
-    then the calibrated predictions are summarized per forecast-decile.
-    Rows-only: the fitted piecewise-linear boundaries are model internals;
-    tests pin (a) calibrated means monotone non-decreasing across deciles
-    and (b) total squared error not worse than the raw forecast — guaranteed
-    on training data because the identity map is itself monotone, so the
-    isotonic L2 optimum can only improve on it.
+    """Isotonic calibration of the rolling-mean forecast: the monotone map
+    forecast → actual that minimizes squared error, fitted by
+    pool-adjacent-violators (the reference's sklearn isotonic calibrator,
+    src/models/model_calibration.py:49-200), then the
+    calibrated predictions are summarized per forecast-decile.  Total
+    squared error is never worse than the raw forecast's on the fit data:
+    the identity map is itself monotone.
 
-    Scale: the fit runs on the WEIGHTED DISTINCT-FEATURE aggregate, not the
-    raw rows — isotonic regression's optimum on (x, weight=n, y=mean)
-    groups is identical to the optimum on the underlying points (PAVA pools
-    by feature value anyway), and the engine's forecast is 4dp-quantized,
-    so 599k rows collapse to ~700 fit points at sf0.1 regardless of fact
-    size growing 1000×.  MLlib's parallel PAVA then merges a ~700-boundary
-    array on the driver, the calibration map broadcasts back onto the full
-    frame as a tiny equi-join, and the decile summary reuses the
-    broadcast-quantile-edge pattern (no global window)."""
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.regression import IsotonicRegression
-
+    The fit runs on the weighted distinct-forecast points (rows, summed
+    actual): PAV pools by feature value anyway, and the forecast lives on
+    the 1e-4 grid, so the points stay a few hundred whatever the fact size.
+    The points collect into one sorted array and ``_PAV_STEP`` folds them
+    (O(points²) in the worst case); the per-point calibrated values
+    explode back into a tiny map that broadcasts onto the full frame.
+    Calibrated values are quantized to the 1e-4 grid (within a block the
+    residuals sum to zero, so this adds at most n·(5e-5)² to the total
+    error), and every reported sum is an exact integer sum, so the oracle
+    replays the identical fold with ``list_reduce``.  The decile summary
+    shares ``calibration_curve_bins``' broadcast quantile edges."""
     t = Catalog(spark, sf_dir)
-    f = _with_forecast(t).filter(F.col("forecast").isNotNull()).select(
-        "actual", "forecast"
+    v = _with_forecast(t).filter(F.col("forecast").isNotNull()).select(
+        "actual",
+        "forecast",
+        F.floor(F.col("forecast") * 10000 + F.lit(0.5)).cast("long").alias("fl"),
+        F.floor(F.col("actual") * 10000 + F.lit(0.5)).cast("long").alias("al"),
     )
     pts = (
-        f.groupBy("forecast")
+        v.groupBy("forecast")
+        .agg(F.count(F.lit(1)).alias("cw"), F.sum("al").alias("cs"))
         .agg(
-            F.count(F.lit(1)).cast("double").alias("w"),
-            F.avg("actual").alias("label"),
+            F.sort_array(
+                F.collect_list(F.struct(F.col("forecast").alias("x"), "cw", "cs"))
+            ).alias("pts")
         )
-        .withColumn("features", array_to_vector(F.array(F.col("forecast"))))
     )
-    iso = IsotonicRegression(
-        featuresCol="features",
-        labelCol="label",
-        weightCol="w",
-        predictionCol="calibrated",
-    )
-    model = iso.fit(pts)
-    cal_map = model.transform(pts).select("forecast", "calibrated")
-    cal = f.join(F.broadcast(cal_map), "forecast").select(
-        "actual", "forecast", "calibrated"
-    )
-    edges = cal.agg(
-        *[
-            r4(F.percentile("forecast", F.lit(i / 10.0))).alias(f"q{i}")
-            for i in range(1, 10)
-        ]
-    )
-    decile = F.lit(1)
-    for i in range(1, 10):
-        decile = decile + F.when(F.col("forecast") > F.col(f"q{i}"), 1).otherwise(0)
-    raw_err = F.col("forecast") - F.col("actual")
-    cal_err = F.col("calibrated") - F.col("actual")
-    return (
-        cal.crossJoin(F.broadcast(edges))
-        .select("actual", "forecast", "calibrated", decile.alias("forecast_decile"))
-        .groupBy("forecast_decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            r4(F.avg("forecast")).alias("mean_forecast"),
-            r4(F.avg("calibrated")).alias("mean_calibrated"),
-            r4(F.avg("actual")).alias("mean_actual"),
-            r4(F.sum(raw_err * raw_err)).alias("sse_raw"),
-            r4(F.sum(cal_err * cal_err)).alias("sse_calibrated"),
+    cal_map = (
+        pts.select("pts", F.expr(f"aggregate(pts, {_PAV_ZERO}, {_PAV_STEP})").alias("st"))
+        .select(
+            "pts",
+            F.expr(
+                "transform(slice(st, 2, size(st)), (b, i) -> named_struct('hi', b.x,"
+                " 'c', (b.cs - st[i].cs) / (b.cw - st[i].cw) / 10000.0))"
+            ).alias("bl"),
         )
         .select(
-            F.col("forecast_decile").cast("long").alias("forecast_decile"),
-            "n_rows",
-            "mean_forecast",
-            "mean_calibrated",
-            "mean_actual",
-            "sse_raw",
-            "sse_calibrated",
+            F.explode(
+                F.expr(
+                    "transform(pts, p -> named_struct('forecast', p.x,"
+                    " 'calibrated', filter(bl, b -> b.hi >= p.x)[0].c))"
+                )
+            ).alias("m")
+        )
+        .select("m.forecast", "m.calibrated")
+    )
+    cal = v.join(F.broadcast(cal_map), "forecast").select(
+        "forecast",
+        "fl",
+        "al",
+        F.floor(F.col("calibrated") * 10000 + F.lit(0.5)).cast("long").alias("cl"),
+    )
+
+    def sse(c: str) -> Column:
+        d = F.col(c) - F.col("al")
+        return r4(
+            F.sum((d.cast("decimal(19,0)") * d).cast("decimal(38,0)")).cast("double")
+            / 100000000.0
+        )
+
+    n = F.count(F.lit(1))
+    return (
+        _forecast_deciles(cal)
+        .groupBy(F.col("forecast_decile").cast("long").alias("forecast_decile"))
+        .agg(
+            n.alias("n_rows"),
+            r4(F.sum("fl") / (n * 10000.0)).alias("mean_forecast"),
+            r4(F.sum("cl") / (n * 10000.0)).alias("mean_calibrated"),
+            r4(F.sum("al") / (n * 10000.0)).alias("mean_actual"),
+            sse("fl").alias("sse_raw"),
+            sse("cl").alias("sse_calibrated"),
         )
     )
 
@@ -2408,6 +2512,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept beside its oracled twin calibration_platt_exact, whose 12 GD steps
+# stop short of the optimum: log-loss 0.6929 vs 0.6980 at sf0.01.
 @register("calibration_platt")
 def calibration_platt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Platt scaling, distributed: a one-feature logistic regression maps
@@ -2774,6 +2880,8 @@ def stacking_ridge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept beside its oracled twin stacking_ridge_weights, which fits worse:
+# in-sample WMAPE 46.92 vs 48.05 at sf0.01 (36.32 vs 38.72 at sf0.001).
 @register("stacking_gbt_meta")
 def stacking_gbt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nonlinear stacking meta-learner: an MLlib gradient-boosted-trees
@@ -2783,10 +2891,10 @@ def stacking_gbt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/models/advanced_ensemble.py:407-660; conditional
     weighting via feature interactions, the one level-2 capability the
     linear solvers can't express).  Rows-only: boosted-tree split
-    thresholds aren't SQL-reproducible; tests pin the in-sample WMAPE at
-    no worse than both the closed-form ridge and the equal-weight blend
-    (tests/test_plan_audit... see tests/test_ensemble_gbt.py) and the
-    feature-importance simplex (non-negative, sums to 1).
+    thresholds aren't SQL-reproducible; tests/test_ensemble_gbt.py pins
+    the in-sample WMAPE at no worse than both the closed-form ridge and the
+    equal-weight blend, and the feature-importance simplex (non-negative,
+    sums to 1).
 
     Output one row: tree-shape stats, per-base-model importance shares
     (the "which model does the router lean on" readout, complementing
@@ -3633,9 +3741,8 @@ def calibration_platt_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp is not).  Params live as BIGINT nano-units; per-row gradients are
     quantized to integers before summing, so the entire optimizer
     trajectory — not just the final report — is bit-identical between
-    Spark and DuckDB and across any partitioning.  This graduates the
-    engine's iterative-optimizer story from rows-only (MLlib
-    ``calibration_platt``) to value-verified.
+    Spark and DuckDB and across any partitioning: the value-verified
+    counterpart of MLlib ``calibration_platt``.
 
     Calibration split mirrors ``calibration_conformal`` (even orderkeys
     fit, everything scores); the label is the same above-store-median

@@ -27,7 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
-from hackatonbigdata_spark.functions.core import r4
+from hackatonbigdata_spark.functions.core import both_directions, r4
 from hackatonbigdata_spark.functions.fixpoint import iterate
 from hackatonbigdata_spark.functions.materialize import materialize
 from hackatonbigdata_spark.operators.relational import basket_pairs
@@ -269,10 +269,7 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same discipline as dedup_cluster_components), and hashing on ``u``
     # first means the edge side of every iteration's join reuses this one
     # partitioning — only the (much smaller) rank table moves per round
-    edges = materialize(
-        pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-    )
+    edges = materialize(both_directions(pairs, "u", "v").repartition("u"))
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -934,8 +931,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree join + three self-joins: build once
     pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
     deg = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
+        pairs.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
@@ -964,9 +960,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e2.dst").alias("c"),
     )
     tn = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
+        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("n_tri"))
     )
@@ -1037,13 +1031,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_part")
     )
     pr = basket_pairs(lineitem, 3, n="n_ab")
-    d = pr.select(
-        F.col("u").alias("antecedent"), F.col("v").alias("consequent"), "n_ab"
-    ).unionAll(
-        pr.select(
-            F.col("v").alias("antecedent"), F.col("u").alias("consequent"), "n_ab"
-        )
-    )
+    d = both_directions(pr, "u", "v", "n_ab", names=("antecedent", "consequent"))
     pa = pc.select(
         F.col("l_partkey").alias("antecedent"),
         F.col("n_part").alias("n_antecedent"),
@@ -1361,9 +1349,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Catalog(spark, sf_dir)
     # feeds adjacency AND the non-edge anti-join
     pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
-    adj = pairs.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        pairs.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    )
+    adj = both_directions(pairs, "u", "v", names=("w", "nbr"))
     deg = adj.groupBy(F.col("w").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -1463,11 +1449,7 @@ def _lpa_core(t: Catalog):
     (``graph_modularity_score``) so both run one code path."""
     # feeds the adjacency both ways + intra counts
     pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
-    adj = materialize(
-        pairs.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-            pairs.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-        )
-    )
+    adj = materialize(both_directions(pairs, "u", "v", names=("w", "nbr")))
     deg = adj.groupBy(F.col("w").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -1766,8 +1748,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the full-degree table and both peels
     pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
     deg = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
+        pairs.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
@@ -1775,8 +1756,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     def core_nodes(k: int) -> DataFrame:
         def peel(edges: DataFrame) -> DataFrame:
             d = (
-                edges.select(F.col("u").alias("node"))
-                .unionAll(edges.select(F.col("v").alias("node")))
+                edges.select(F.explode(F.array("u", "v")).alias("node"))
                 .groupBy("node")
                 .agg(F.count(F.lit(1)).alias("dg"))
             )
@@ -1791,9 +1771,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         # step after the last of them is the no-op that certifies it: a
         # graph that needs one more pass raises instead of diverging
         edges = iterate(pairs, peel, F.count(F.lit(1)), _KCORE_ROUNDS + 1)[-1]
-        return edges.select(F.col("u").alias("node")).unionAll(
-            edges.select(F.col("v").alias("node"))
-        ).distinct()
+        return edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
 
     c2 = core_nodes(2).withColumnRenamed("node", "n2")
     c3 = core_nodes(3).withColumnRenamed("node", "n3")
@@ -1898,10 +1876,7 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure; the reference has no graph layer."""
     t = Catalog(spark, sf_dir)
     pairs = basket_pairs(t.lineitem, 2).select("u", "v")
-    edges = materialize(
-        pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-    )
+    edges = materialize(both_directions(pairs, "u", "v").repartition("u"))
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -1976,12 +1951,7 @@ def _weighted_graph(t: Catalog):
     dropped."""
     # feeds adjacency both ways + intra-weight sums
     pairs = materialize(basket_pairs(t.lineitem, 2, n="wt"))
-    adj = materialize(
-        pairs.select(F.col("u").alias("src"), F.col("v").alias("nbr"), "wt")
-        .unionAll(
-            pairs.select(F.col("v").alias("src"), F.col("u").alias("nbr"), "wt")
-        )
-    )
+    adj = materialize(both_directions(pairs, "u", "v", "wt", names=("src", "nbr")))
     st = adj.groupBy(F.col("src").alias("node")).agg(
         F.sum("wt").cast("long").alias("strength"),
         F.count(F.lit(1)).cast("long").alias("degree"),

@@ -62,6 +62,26 @@ def _load_all() -> None:
 # every other name follows in registration order.  Every name listed must
 # be registered.
 _PRIORITY: list[str] = [
+    "calibration_isotonic",
+    "dedup_minhash_lsh",
+    "dedup_cluster_components",
+    "dedup_cluster_largestar",
+    "dedup_lsh_calibration",
+    "dedup_report_by_source",
+    "dedup_pipeline_report",
+    "dedup_savings_report",
+    "io_upsert_roundtrip",
+    "graph_pagerank_parts",
+    "graph_eigencentrality",
+    "basket_association_rules",
+    "graph_link_prediction",
+    "graph_label_propagation",
+    "graph_modularity_score",
+    "graph_label_propagation_weighted",
+    "graph_modularity_weighted",
+    "graph_pagerank_weighted",
+    "graph_triangle_count",
+    "graph_kcore_decomposition",
     "similarity_ivfpq_nprobe",
     "sample_scan",
     "io_bloom_skip_lookup",
@@ -70,7 +90,6 @@ _PRIORITY: list[str] = [
     "stream_hourly_bloom",
     "dedup_bloom_gate",
     "calibration_subsample_uncertainty",
-    "dedup_minhash_lsh",
     "dedup_simhash",
     "encode_feature_hashing",
     "sample_stratified_split",
@@ -78,24 +97,11 @@ _PRIORITY: list[str] = [
     "text_chunk_windows",
     "corpus_curation_pipeline",
     "corpus_dsir_weights",
-    "dedup_cluster_components",
-    "dedup_cluster_largestar",
-    "graph_kcore_decomposition",
     "sketch_kll_quantiles",
     "sketch_kll_merge_daily",
     "similarity_ivf_bucketed",
     "dedup_semdedup_ivf",
     "cooccurrence_pairs",
-    "graph_pagerank_parts",
-    "graph_triangle_count",
-    "basket_association_rules",
-    "graph_link_prediction",
-    "graph_label_propagation",
-    "graph_modularity_score",
-    "graph_eigencentrality",
-    "graph_label_propagation_weighted",
-    "graph_modularity_weighted",
-    "graph_pagerank_weighted",
     "ar2_yule_walker_per_series",
     "ar2_yule_walker_sql",
     "croston_per_series",
@@ -113,7 +119,6 @@ _PRIORITY: list[str] = [
     "dedup_chunk_hashes",
     "similarity_matryoshka_eval",
     "similarity_hamming_binary",
-    "dedup_lsh_calibration",
     "corpus_mixture_temperature",
     "corpus_vocab_growth",
     "search_hybrid_rrf",
@@ -121,7 +126,6 @@ _PRIORITY: list[str] = [
     "corpus_source_kl",
     "dedup_chunk_incremental",
     "embedding_int8_ranking",
-    "dedup_savings_report",
     "quality_classifier_gd",
     "corpus_budget_selection",
     "stream_hourly_distinct",

@@ -9,7 +9,8 @@ reference's TransactionLoader/ProductLoader/StoreLoader,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 class SchemaError(ValueError):
@@ -146,24 +147,36 @@ def upsert_parquet(spark, target_path: str, updates: DataFrame, key_cols: list[s
     """Keyed upsert (MERGE) onto a plain-parquet table: update rows whose
     key appears in ``updates``, insert the rest — the feature-store refresh
     operation.  Plain parquet has no transactional MERGE, so the pattern is
-    read -> anti-join out the updated keys -> union the updates -> rewrite
+    read -> drop the rows of the updated keys -> union the updates -> rewrite
     through a staging directory and swap (the lazy source read must not be
     overwritten mid-write).  On a table format (Delta/Iceberg) the same
     call becomes a native MERGE INTO; at scale the rewrite is scoped to the
     partitions the update keys touch, not the whole table.
 
-    Returns {rows_before, rows_updated, rows_inserted, rows_after}."""
+    Returns {rows_before, rows_updated, rows_inserted, rows_after}.  The
+    counts ride the staging write as observed metrics, so the whole upsert
+    is one Spark action: a left join flags the target rows whose key is
+    updated (the key table is distinct, so no row fans out), the flagged
+    rows are dropped and the updates appended."""
     import os
     import shutil
 
     tgt = spark.read.parquet(target_path)
-    upd_keys = updates.select(*key_cols).distinct()
-    rows_before = tgt.count()
-    rows_updated = tgt.join(upd_keys, key_cols, "left_semi").count()
-    merged = tgt.join(upd_keys, key_cols, "left_anti").unionByName(updates)
+    upd_keys = updates.select(*key_cols).distinct().withColumn("_upd", F.lit(True))
+    before, after = Observation(), Observation()
+    flagged = tgt.join(upd_keys, key_cols, "left").observe(
+        before, F.count(F.lit(1)).alias("rows"), F.count("_upd").alias("updated")
+    )
+    merged = (
+        flagged.filter(F.col("_upd").isNull())
+        .select(*tgt.columns)
+        .unionByName(updates)
+        .observe(after, F.count(F.lit(1)).alias("rows"))
+    )
     staging = target_path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
-    rows_after = spark.read.parquet(staging).count()
+    rows_before, rows_updated = before.get["rows"], before.get["updated"]
+    rows_after = after.get["rows"]
     # Crash-safe swap: rename the live table aside BEFORE promoting staging,
     # so an interruption at any point leaves either the old or the new copy
     # on disk (target__old is the recovery artifact) — never neither.

@@ -1,4 +1,4 @@
-"""Math-correctness pins for the round-5 closed-form model fits.
+"""Math-correctness pins for the closed-form and fixed-iteration model fits.
 
 Oracle parity proves Spark and DuckDB agree; these tests prove the shared
 math is RIGHT, by recomputing each fit independently (numpy / brute force)
@@ -210,3 +210,35 @@ def test_platt_exact_gd_matches_numpy_and_calibrates(spark):
     assert a > 0
     assert out.mean_p.is_monotonic_increasing
     assert (out.mean_p >= 0).all() and (out.mean_p <= 1).all()
+
+
+def test_pav_fold_is_pool_adjacent_violators(spark):
+    """``calibration_isotonic``'s one-filter PAV step against the textbook
+    pop loop, on random weighted points with ties and long violator runs:
+    the same blocks, and means equal to the last bit."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from hackatonbigdata_spark.operators.forecast import _PAV_STEP, _PAV_ZERO
+
+    rng = random.Random(3)
+    pts = [(x / 4, rng.randint(1, 5), rng.randint(0, 8) * 10000) for x in range(60)]
+    blocks = []
+    for x, w, s in pts:
+        cw, cs = w, s
+        while blocks and blocks[-1][2] / blocks[-1][1] >= cs / cw:
+            _, bw, bs = blocks.pop()
+            cw, cs = cw + bw, cs + bs
+        blocks.append((x, cw, cs))
+    expected = [(x, cs / cw) for x, cw, cs in blocks]
+
+    df = spark.createDataFrame(
+        [(pts,)], "pts array<struct<x: double, cw: bigint, cs: bigint>>"
+    )
+    st = df.select(F.expr(f"aggregate(pts, {_PAV_ZERO}, {_PAV_STEP})")).first()[0]
+    got = [
+        (b.x, (b.cs - a.cs) / (b.cw - a.cw)) for a, b in zip(st, st[1:])
+    ]
+    assert got == expected
+    assert len(expected) < len(pts)  # the data did pool

@@ -54,8 +54,13 @@ OWNED_CALLS = [
     # the checkpoint dir is the deployment's choice (spark.checkpoint.dir)
     pytest.param(r"setCheckpointDir\(", [], id="setCheckpointDir"),
     # every observed stop test goes through ``iterate``: a loop that builds
-    # its own Observation has its own cadence and cap again
-    pytest.param(r"Observation\(", ["functions/fixpoint.py"], id="Observation"),
+    # its own Observation has its own cadence and cap again.  The upsert's
+    # row counts ride its one write, which is not a loop
+    pytest.param(
+        r"Observation\(",
+        ["functions/fixpoint.py", "sources/io.py"],
+        id="Observation",
+    ),
     # one materialization, which picks a mechanism a cluster can recover
     pytest.param(
         r"localCheckpoint\(|\.checkpoint\(",
@@ -83,3 +88,23 @@ def test_only_the_owner_module_calls(pattern, owners):
     ]
     users = sorted({module for module, _ in hits})
     assert users == owners, "\n".join(f"{m}:{h}" for m, h in hits)
+
+
+def test_ml_prewarm_lists_the_pyspark_ml_modules_the_package_imports():
+    """tests/conftest.py pre-imports every pyspark.ml module the package
+    imports (concurrent first imports deadlock), and nothing else."""
+    import pathlib
+    import re
+
+    import hackatonbigdata_spark
+    from tests.conftest import ML_PREWARM
+
+    root = pathlib.Path(hackatonbigdata_spark.__file__).parent
+    imported = {
+        m.group(1)
+        for path in root.rglob("*.py")
+        for m in re.finditer(
+            r"^\s*(?:from|import)\s+(pyspark\.ml(?:\.\w+)*)", path.read_text(), re.M
+        )
+    }
+    assert set(ML_PREWARM) == imported

@@ -92,6 +92,41 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     assert spark.read.parquet(dst).count() == li.count()
 
 
+def _last_sql_execution_id(spark) -> int:
+    """The newest SQL execution id in the status store, once the listener
+    bus has delivered every event (ids only grow; a count would shrink when
+    the store trims old executions)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.last().executionId() if executions.nonEmpty() else -1
+
+
+def test_upsert_parquet_is_one_sql_execution(spark, tmp_path):
+    """The returned counts ride the staging write: one upsert is one SQL
+    execution, not one per count plus the write."""
+    from hackatonbigdata_spark.sources.io import upsert_parquet
+
+    target = str(tmp_path / "features")
+    base = spark.read.parquet(f"{SF_DIR}/part.parquet").select(
+        "p_partkey", "p_brand", "p_retailprice"
+    )
+    base.write.parquet(target)
+    updates = spark.createDataFrame(
+        [(1, "Brand#99", 1.0), (10_000_001, "Brand#99", 9.99)],
+        ["p_partkey", "p_brand", "p_retailprice"],
+    )
+    n0 = base.count()
+    first = _last_sql_execution_id(spark)
+    stats = upsert_parquet(spark, target, updates, ["p_partkey"])
+    assert _last_sql_execution_id(spark) - first == 1
+    assert stats == {
+        "rows_before": n0,
+        "rows_updated": 1,
+        "rows_inserted": 1,
+        "rows_after": n0 + 1,
+    }
+
+
 def test_upsert_parquet_updates_and_inserts(spark, tmp_path):
     """Keyed MERGE onto plain parquet: updated keys take the new values,
     unknown keys append, untouched rows survive byte-for-byte."""

@@ -1,5 +1,5 @@
-"""Pins for the rows-only M7 queries (MLlib LSH paths + decode stub) and
-cross-checks between the exact and approximate dedup/similarity operators."""
+"""Pins for the rows-only decode stub, the multimodal byte kernels, and
+cross-checks between the exact and approximate dedup operators."""
 
 from __future__ import annotations
 
@@ -13,21 +13,6 @@ from tests.conftest import SF_DIR
 QUERIES = all_queries()
 
 
-def test_minhash_mllib_finds_planted_near_dups(spark):
-    """The MLlib LSH candidates must cover every exact-Jaccard≥0.5 pair —
-    at J≈0.97-0.99 the 4-table MinHash misses with probability ≈ 0."""
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in QUERIES["dedup_ngram_jaccard"](spark, SF_DIR).collect()
-    }
-    approx = {
-        (r.doc_a, r.doc_b)
-        for r in QUERIES["dedup_minhash_mllib"](spark, SF_DIR).collect()
-    }
-    assert exact, "corpus should contain planted near-dups"
-    assert exact <= approx
-
-
 def test_sql_minhash_bands_find_planted_near_dups(spark):
     exact = {
         (r.doc_a, r.doc_b)
@@ -37,23 +22,8 @@ def test_sql_minhash_bands_find_planted_near_dups(spark):
         (r.doc_a, r.doc_b)
         for r in QUERIES["dedup_minhash_lsh"](spark, SF_DIR).collect()
     }
+    assert exact, "corpus should contain planted near-dups"
     assert exact <= banded
-
-
-def test_brp_lsh_recall_against_bruteforce(spark):
-    """BRP-LSH pairs at cos≥0.45 must be a subset of the exact pair set at
-    a slightly looser threshold (cos_est is exact math on the join output,
-    so equality would hold; subset keeps the pin robust to threshold
-    boundary rounding)."""
-    brp = QUERIES["similarity_brp_lsh_mllib"](spark, SF_DIR)
-    strong = {
-        (r.vec_a, r.vec_b) for r in brp.filter(F.col("cos_est") >= 0.45).collect()
-    }
-    exact = {
-        (r.vec_a, r.vec_b)
-        for r in QUERIES["dedup_embedding_cosine"](spark, SF_DIR).collect()
-    }
-    assert strong <= exact
 
 
 def test_decode_stub_batch_shape(spark):

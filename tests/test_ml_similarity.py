@@ -1,5 +1,5 @@
-"""Pins for the MLlib-model queries (KMeans-IVF, PCA similarity, isotonic
-calibration) and the Holt-Winters per-series kernel.
+"""Pins for the MLlib-model queries (KMeans-IVF, PCA similarity, Platt
+calibration), isotonic calibration and the Holt-Winters per-series kernel.
 
 The sf0.001 embeddings are isotropic noise (max pairwise cosine ≈ 0.48), so
 an ANN recall pin against them would measure the data, not the operator.
@@ -149,8 +149,8 @@ def test_propagation_raises_at_its_round_cap(spark, monkeypatch):
 
 
 def test_priority_names_all_registered():
-    """Round-3 regression guard: every _PRIORITY name must resolve to a
-    registered query, so the verification window can't silently shrink."""
+    """Every _PRIORITY name must resolve to a registered query, so the
+    verification window can't silently shrink."""
     from hackatonbigdata_spark.registry import _PRIORITY
 
     assert set(_PRIORITY) <= set(QUERIES)

@@ -4,17 +4,16 @@ Mirrors the driver's t2 gate (row count + schema + order-insensitive values)
 at sf0.001 for speed; `pytest -m sf001` style full runs at sf0.01 happen in
 test_oracle_parity_sf001 via the SPARK_GRAFT_TEST_SF env var.
 
-r15 suite-runtime restructure (the r14 verdict's "restore a driver-visible
-green pytest summary"): the exhaustive per-name sweep is CPU-starved — one
-query at a time leaves a 32-core local master ~95% idle while the
+One query at a time would leave the local master mostly idle while the
 single-threaded driver loop pays per-job scheduling, toPandas, and DuckDB
-latency serially.  The sweep now runs in CHUNKS whose members are checked
-from a small driver thread pool (guide §2.6 — concurrent actions backfill
-the executors; results are position-independent).  Coverage is unchanged:
-every registered name is still compared against its oracle, and a failing
-chunk names each failing query with its detail.  ``io_*`` queries write
-catalog tables / scratch layouts during construction (embedded-derby DDL is
-not safely concurrent), so they run in a dedicated SERIAL chunk.
+latency serially, so the sweep runs in chunks (``tests.conftest.
+query_chunks``) whose members are checked from a small driver thread pool
+(concurrent actions backfill the executors; results are
+position-independent).  Every registered name is compared against its
+oracle, and a failing chunk names each failing query with its detail.
+``io_*`` queries write catalog tables / scratch layouts during
+construction (embedded-derby DDL is not safely concurrent), so they run in
+a dedicated serial chunk.
 """
 
 from __future__ import annotations
@@ -30,20 +29,14 @@ from hackatonbigdata_spark.oracle import (
     duckdb_connection,
 )
 from hackatonbigdata_spark.registry import all_oracles, all_queries
-from tests.conftest import cached_query_df
+from tests.conftest import cached_query_df, query_chunks
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
 
-_NAMES = sorted(QUERIES)
-_PAR = [n for n in _NAMES if not n.startswith("io_")]
-_SER = [n for n in _NAMES if n.startswith("io_")]
-_CHUNK = 16
-CHUNKS = [_PAR[i : i + _CHUNK] for i in range(0, len(_PAR), _CHUNK)]
-if _SER:
-    CHUNKS.append(_SER)
+CHUNKS = query_chunks(QUERIES)
 
 
 def _check_one(spark, name: str) -> CompareResult:
@@ -80,22 +73,17 @@ def test_query_matches_oracle(spark, i):
 
 
 def test_every_query_has_oracle_or_reason():
-    missing = sorted(set(QUERIES) - set(ORACLES))
-    # rows-only queries are allowed but must be intentional; keep the list
-    # explicit so a forgotten oracle fails loudly.
+    missing = set(QUERIES) - set(ORACLES)
+    # rows-only queries are allowed but must be intentional; the list is
+    # explicit and exact, so a forgotten oracle fails loudly and a name
+    # that gains an oracle or leaves the registry must leave the list too.
     allowed_rows_only = {
         # per-series pandas kernels leaning on pandas-internal accumulation
         # (ewm adjust=True, .autocorr) or per-step rounding: not replayable
-        # as one SQL fold; pinned by tests/test_series_kernels.py.  (Croston
-        # and AR(2) graduated to fully oracled in r5 — their math is a
-        # sequential IEEE fold both engines replay bit-exactly.)
+        # as one SQL fold; pinned by tests/test_series_kernels.py
         "ewm_pandas_per_series",
         "sequential_clamp_per_series",
         "rolling_autocorr_per_series",
-        # MLlib LSH scale paths: model-internal hash seeds aren't
-        # reproducible in SQL; pinned by tests/test_llm_multimodal.py
-        "dedup_minhash_mllib",
-        "similarity_brp_lsh_mllib",
         # deterministic fake decoder over mapInPandas; no SQL oracle by
         # design — pinned by tests/test_llm_multimodal.py
         "multimodal_decode_stub",
@@ -108,12 +96,11 @@ def test_every_query_has_oracle_or_reason():
         # production sketch path (no exact twins); equality to the audit
         # query's sketch columns pinned by tests/test_scale.py
         "agg_sketches_only",
-        # MLlib KMeans centroids / PCA basis / isotonic boundaries / Platt
-        # coefficients are model internals; recall + monotonicity pinned by
+        # MLlib KMeans centroids / PCA basis / Platt coefficients are model
+        # internals; recall and calibration pinned by
         # tests/test_ml_similarity.py
         "similarity_ivf_kmeans",
         "similarity_pca_cosine",
-        "calibration_isotonic",
         "calibration_platt",
         # per-series Holt-Winters recursion: state-dependent, not one SQL
         # statement; math pinned by tests/test_ml_similarity.py
@@ -132,4 +119,7 @@ def test_every_query_has_oracle_or_reason():
         # learn-then-encode in tests/test_r8_semantics.py
         "corpus_bpe_encode",
     }
-    assert set(missing) <= allowed_rows_only, f"queries missing oracle SQL: {missing}"
+    assert missing == allowed_rows_only, (
+        f"missing oracle SQL: {sorted(missing - allowed_rows_only)}; "
+        f"allowlisted but oracled or unregistered: {sorted(allowed_rows_only - missing)}"
+    )

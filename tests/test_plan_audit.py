@@ -8,6 +8,7 @@ import re
 
 import pytest
 
+from hackatonbigdata_spark.operators.llm import _dup_edges
 from hackatonbigdata_spark.plans.audit import (
     _final_plan,
     plan_stats,
@@ -15,7 +16,7 @@ from hackatonbigdata_spark.plans.audit import (
     unpartitioned_windows,
 )
 from hackatonbigdata_spark.registry import all_queries
-from tests.conftest import SF_DIR, cached_query_df
+from tests.conftest import SF_DIR, cached_query_df, query_chunks
 
 QUERIES = all_queries()
 
@@ -111,19 +112,11 @@ PYTHON_EXEMPT: dict[str, str] = {
 }
 
 
-# Same shape as test_oracle_parity: the exhaustive sweep constructs every
-# registered DataFrame (iterative operators run their eager checkpoint jobs
-# at construction), so the names are checked in chunks from a small driver
-# thread pool, with the io_* catalog/scratch writers in a dedicated serial
-# chunk, and constructions shared with the parity sweep via
-# tests.conftest.cached_query_df.
-_NAMES = sorted(QUERIES)
-_PAR = [n for n in _NAMES if not n.startswith("io_")]
-_SER = [n for n in _NAMES if n.startswith("io_")]
-_CHUNK = 16
-_WCHUNKS = [_PAR[i : i + _CHUNK] for i in range(0, len(_PAR), _CHUNK)]
-if _SER:
-    _WCHUNKS.append(_SER)
+# Same chunks as test_oracle_parity (tests.conftest.query_chunks): the
+# exhaustive sweep constructs every registered DataFrame (iterative
+# operators run their eager checkpoint jobs at construction), and shares
+# each construction with the parity sweep via tests.conftest.cached_query_df.
+_WCHUNKS = query_chunks(QUERIES)
 
 
 def _audited_facts(df) -> tuple:
@@ -256,8 +249,8 @@ def test_clustered_stats_prune_skips_files(spark):
 
 
 def test_multimodal_byte_kernels_have_no_byte_explode(spark):
-    """r7: the byte-level kernels build their histograms/stats ROWWISE with
-    higher-order functions — the r6 one-row-per-payload-byte explode
+    """The byte-level kernels build their histograms/stats ROWWISE with
+    higher-order functions — a one-row-per-payload-byte explode
     (~60 B Tungsten row per byte of CPU work) must stay gone.  The only
     allowed Generate is mm_patch_byte_stats' one-row-per-PATCH explode,
     which is exactly the result granularity."""
@@ -272,17 +265,36 @@ def test_multimodal_byte_kernels_have_no_byte_explode(spark):
 
 
 def test_lsh_calibration_scores_candidates_only(spark):
-    """The r8 verdict's one plan finding: true-Jaccard scoring must be
-    scoped to the banded candidates, never a shingle-keyed co-occurrence
-    self-join (a hot shingle shared by k docs would emit k²/2 pair rows
-    regardless of candidacy).  Candidates-only means every exchange keys
-    on doc ids / band buckets / the 9-level estimate grid — NO exchange
-    may partition on the shingle column itself."""
+    """True-Jaccard scoring must be scoped to the banded candidates, never
+    a shingle-keyed co-occurrence self-join (a hot shingle shared by k docs
+    would emit k²/2 pair rows regardless of candidacy).  Candidates-only
+    means every exchange keys on doc ids / band buckets / the 9-level
+    estimate grid — NO exchange may partition on the shingle column
+    itself."""
     plan = _final_plan(QUERIES["dedup_lsh_calibration"](spark, SF_DIR))
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             key = line.split("hashpartitioning(", 1)[1]
             assert not key.startswith("shingle"), line
+
+
+def _documents_scans_after_a_run(df) -> int:
+    df.write.format("noop").mode("overwrite").save()
+    return len(re.findall(r"FileScan parquet [^\n]*documents", _final_plan(df)))
+
+
+@pytest.mark.parametrize(
+    "build",
+    [QUERIES["dedup_minhash_lsh"], _dup_edges],
+    ids=["dedup_minhash_lsh", "dedup_cluster_components_edges"],
+)
+def test_minhash_signature_is_computed_once(spark, build):
+    """The MinHash signature subtree (text scan, normalization, shingle
+    explode, 8 hashes per shingle) runs once per plan: the LSH candidates
+    group the band buckets instead of self-joining them, and the
+    components' edge build emits both edge orientations from one row
+    instead of a mirrored union."""
+    assert _documents_scans_after_a_run(build(spark, SF_DIR)) == 1
 
 
 def test_partition_evolution_and_nnd_readout_bounded_shuffles(spark):
