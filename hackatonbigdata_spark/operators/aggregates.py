@@ -1383,7 +1383,7 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_users"),
         # exact: BIGINT sum(y4) then one division — order-free, unlike a
         # double sum of y4/1e4 whose accumulation order could flip the 4dp
-        # rounding at a half boundary (ADVICE r5)
+        # rounding at a half boundary
         (
             F.sum("y4").cast("long")
             * F.lit(1.0)
@@ -1640,7 +1640,7 @@ def trend_theilsen_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise slope is ONE identically-structured floor(Δqy/Δx + 0.5) on
     exact integers (double division, not integer div — slopes go
     negative, and Spark ``div`` truncates toward zero while DuckDB
-    ``//`` floors, the r5 signed-operand lesson); the median is the
+    ``//`` floors); the median is the
     engine-shared exact-percentile convention (``F.percentile`` ↔
     ``quantile_cont``) whose two-middle midpoint is an exact .5 double.
     Month index is calendar-absolute (year·12 + month), so gaps in a

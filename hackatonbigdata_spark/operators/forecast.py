@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import h32, r4, wmape_expr
 from hackatonbigdata_spark.functions.materialize import materialize
+from hackatonbigdata_spark.operators.series_kernels import _daily
 from hackatonbigdata_spark.registry import register
 
 _ORDER_SQL = "l_shipdate, l_orderkey, l_linenumber"
@@ -1149,9 +1150,7 @@ def feature_matrix_daily_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hackatonbigdata_spark.functions.core import iso_dow, safe_div
 
     t = Catalog(spark, sf_dir)
-    daily = t.lineitem.groupBy("l_suppkey", "l_shipdate").agg(
-        r4(F.sum("l_quantity")).alias("qty")
-    )
+    daily = _daily(t)
     w = W.partitionBy("l_suppkey").orderBy("l_shipdate")
     roll = w.rowsBetween(-6, 0)
     store = W.partitionBy("l_suppkey")

@@ -42,7 +42,7 @@ def _write_meta_parquet(dst: str, columns: dict[str, tuple[list, str]]) -> None:
     tombstones: a real table format commits its manifest files from the
     driver's metadata layer, never as a distributed job — and a 13-row
     ``spark.createDataFrame(...).write`` pays 5-8 s of job/commit
-    overhead per call (measured at r12), which dominated the table-
+    overhead per call, which dominated the table-
     lifecycle queries.  ``columns`` maps name -> (values, arrow type
     name in {'int32', 'int64', 'string'}); the result is a plain
     snappy parquet directory Spark reads like any other."""

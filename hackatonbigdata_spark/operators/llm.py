@@ -2616,7 +2616,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``price_elasticity_brand``: both logs quantized to BIGINT 1e-4 units,
     integer co-moments, slope as a ratio of integers.
 
-    Scale (r6 rewrite): ranks TIE on frequency (min-rank), so a word's
+    Scale: ranks TIE on frequency (min-rank), so a word's
     rank = 1 + #words with strictly higher cf, and every OLS moment
     collapses onto the DISTINCT-FREQUENCY table weighted by words-per-
     frequency — no window ever touches the vocabulary.  The one ordered
@@ -2624,7 +2624,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens)) for any corpus (frequencies > sqrt(T) number at most sqrt(T);
     distinct values below sqrt(T) number at most sqrt(T)) — single-digit
     millions of 16-byte rows even at 100 TB, vs the unbounded vocabulary
-    rank this replaces (r5 verdict's scale-killer flag)."""
+    rank this replaces."""
     t = Catalog(spark, sf_dir)
     words = _doc_words(t).select(F.explode("w").alias("word")).filter(
         F.col("word") != ""
@@ -3158,7 +3158,7 @@ def dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round 7b: exact-substring spans, BM25 retrieval, SemDeDup
+# exact-substring spans, BM25 retrieval, SemDeDup
 
 _SUBSTR_K = 40  # character-shingle length for exact-substring dedup
 
@@ -4098,7 +4098,7 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round 8: embedding compression evaluations (Matryoshka truncation, binary
+# embedding compression evaluations (Matryoshka truncation, binary
 # sign quantization) and DSIR importance weighting
 
 

@@ -1,13 +1,13 @@
-"""M7 — multimodal column handling (SURVEY.md §7.2 M7; BASELINE.json).
+"""Multimodal column handling (SURVEY.md §7.2 M7; BASELINE.json).
 
 Image/audio/video are opaque ``binary`` payloads with typed metadata; the
 engine's job is the Spark-side plumbing — schema, partitioning, Arrow batch
 shape, frame addressing — not the codec.  The container has no image/audio
 libraries, so decode of COMPRESSED formats is STUBBED behind
 ``NotImplementedError`` with a deterministic fake (documented below);
-uncompressed PCM WAV is decoded FOR REAL twice over — as pure SQL/Catalyst
-hex arithmetic (``mm_wav_pcm_stats``, oracled) and as a ``struct.unpack``
-mapInPandas kernel (``decode_wav_kernel``), pinned equal by tests.
+uncompressed PCM WAV and binary PPM are decoded FOR REAL as pure
+SQL/Catalyst arithmetic (``mm_wav_pcm_stats``, ``mm_ppm_pixel_stats``, both
+oracled); tests pin each equal to a byte-level Python decoder.
 
 The testdata has no binary table, so the payload is derived
 deterministically from ``documents.text`` (UTF-8 bytes) — byte-exact in both
@@ -15,7 +15,7 @@ engines, which keeps the metadata/frame queries oracle-checkable.
 
 Scale notes: payloads at 100 TB stay in parquet binary columns; metadata
 extraction is a narrow map (no shuffle), frame explosion multiplies rows by
-frames-per-asset (bounded by the sample stride), and the decode kernel runs
+frames-per-asset (bounded by the sample stride), and the decode stub runs
 ``mapInPandas`` so each Arrow batch amortizes Python crossing costs.
 """
 
@@ -169,23 +169,14 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round 6: byte-level deterministic kernels (no codecs needed) ----------
-# The r5 verdict asked for multimodal depth that needs no image/audio
-# libraries: magic-byte format detection, payload entropy, and per-patch
-# byte statistics — the triage passes a real media pipeline runs BEFORE any
+# --- byte-level deterministic kernels (no codecs needed) ------------------
+# Magic-byte format detection, payload entropy, and per-patch byte
+# statistics: the triage passes a real media pipeline runs BEFORE any
 # decode (cheap, codec-free, catches corrupt/mislabeled/low-information
 # payloads early).  The corpus is ASCII (octet_length == n_chars asserted in
 # tests), so byte addressing == char addressing and ascii() reads the byte
 # value; the synthetic container header is prepended deterministically by
 # doc_id so the detector has real magic bytes to parse.
-
-_MAGIC = [
-    ("png", "89504e470d0a1a0a"),  # \x89PNG\r\n\x1a\n
-    ("jpeg", "ffd8ffe0"),  # SOI + APP0
-    ("riff", "52494646"),  # 'RIFF' (wav/avi/webp family)
-    ("pdf", "25504446"),  # '%PDF'
-    ("unknown", ""),  # headerless payload
-]
 
 
 @register(
@@ -451,12 +442,10 @@ mm_patch_byte_stats.__doc__ = mm_patch_byte_stats.__doc__.replace(
 # format a decoder can handle with pure byte arithmetic.  The payload is
 # synthesized deterministically (canonical header + the doc's bytes as PCM
 # data); the DECODER both parses the header fields and computes sample
-# statistics, entirely in SQL/Catalyst expressions on the hex domain.  The
-# same decode also exists as a real struct.unpack mapInPandas kernel
-# (decode_wav_kernel), pinned equal to this oracled query by
-# tests/test_llm_multimodal.py — so the engine's decode boundary is now
-# "real for uncompressed formats; compressed codecs remain the documented
-# stub".
+# statistics, entirely in SQL/Catalyst expressions on the hex domain;
+# tests/test_llm_multimodal.py pins it equal to a struct.unpack decoder.
+# The engine's decode boundary is "real for uncompressed formats;
+# compressed codecs remain the documented stub".
 
 _WAV_RATES = [8000, 12000, 16000, 20000]
 
@@ -551,8 +540,7 @@ def mm_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions over the hex domain (hex-pair -> byte -> signed int16):
     the media-QA query a lake runs on raw uploads before any transcoding
     tier, and the proof that "decode" is only a library boundary for
-    COMPRESSED formats (the mapInPandas struct.unpack twin,
-    ``decode_wav_kernel``, is pinned equal by tests).
+    COMPRESSED formats (tests pin it equal to a struct.unpack decoder).
 
     Exactness: all parsing and sample arithmetic is integer; RMS divides
     one BIGINT sum of squares and takes an IEEE sqrt (correctly rounded
@@ -665,71 +653,6 @@ def mm_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_wav_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same WAV decode as a REAL Python decoder: struct.unpack over the
-    binary payload in an Arrow-batched ``mapInPandas`` kernel — the shape a
-    production decode tier has, with an actual working parser instead of
-    the codec stub.  tests pin its output equal to the oracled
-    ``mm_wav_pcm_stats`` SQL decode."""
-    import struct  # noqa: PLC0415 — worker-side import
-
-    t = Catalog(spark, sf_dir)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = text.encode("utf-8")
-                n_data = len(body) - (len(body) % 2)
-                body = body[:n_data]
-                rate = 8000 + (int(doc_id) * 2654435761 % 2**32 % 4) * 4000
-                payload = (
-                    b"RIFF"
-                    + struct.pack("<I", 36 + n_data)
-                    + b"WAVEfmt "
-                    + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-                    + b"data"
-                    + struct.pack("<I", n_data)
-                    + body
-                )
-                # --- the decoder: parse the header, then the PCM frames ---
-                assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-                ch, sr = struct.unpack("<H", payload[22:24])[0], struct.unpack(
-                    "<I", payload[24:28]
-                )[0]
-                bits = struct.unpack("<H", payload[34:36])[0]
-                nd = struct.unpack("<I", payload[40:44])[0]
-                samples = struct.unpack(f"<{nd // 2}h", payload[44 : 44 + nd])
-                if not samples:
-                    # match mm_wav_pcm_stats: frameless payloads are
-                    # dropped (the oracle's inner join against per-sample
-                    # stats), and min()/max() of () would raise
-                    continue
-                ssq = sum(s * s for s in samples)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "is_wav": True,
-                        "channels": ch,
-                        "sample_rate": sr,
-                        "bits": bits,
-                        "n_samples": len(samples),
-                        "min_s": min(samples),
-                        "max_s": max(samples),
-                        "ssq": ssq,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return t.documents.select("doc_id", "text", "n_chars").mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, is_wav boolean, channels int, sample_rate long,"
-            " bits int, n_samples long, min_s long, max_s long, ssq long"
-        ),
-    )
-
-
 _PPM_BASE_W = 16  # widths 16/24/32/40, hash-decorrelated from doc_id
 
 
@@ -821,9 +744,9 @@ def mm_ppm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a rowwise header parse + three bounded higher-order transforms
     (each pixel byte read exactly once, by its own channel) — one output
     row per asset straight out of the scan stage, no shuffle, no
-    explode.  The struct-level twin ``decode_ppm_kernel`` (mapInPandas)
-    is pinned equal by tests, completing the two-modality proof that the
-    codec stub is a library boundary only for COMPRESSED formats."""
+    explode.  Tests pin it equal to a byte-level Python decoder, the
+    second modality showing that the codec stub is a library boundary only
+    for COMPRESSED formats."""
     t = Catalog(spark, sf_dir)
     w = (
         F.lit(_PPM_BASE_W)
@@ -930,66 +853,6 @@ def mm_ppm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b_min",
         "b_max",
         r4(F.col("_b_sum") * F.lit(1.0) / F.col("n_pixels")).alias("b_mean"),
-    )
-
-
-def decode_ppm_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same PPM decode as a REAL Python decoder: byte-level header
-    parse + pixel iteration over the binary payload in an Arrow-batched
-    ``mapInPandas`` kernel.  tests pin its output equal to the oracled
-    pure-SQL decode ``mm_ppm_pixel_stats`` (same two-sided construction
-    as ``decode_wav_kernel`` / ``mm_wav_pcm_stats``)."""
-    t = Catalog(spark, sf_dir)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = text.encode("utf-8")
-                w = 16 + (int(doc_id) * 2654435761 % 2**32 % 4) * 8
-                h = (len(body) // 3) // w
-                if h < 1:
-                    continue
-                payload = (
-                    b"P6\n" + f"{w} {h}".encode() + b"\n255\n"
-                    + body[: 3 * w * h]
-                )
-                # --- the decoder: header up to the 3rd newline, then RGB --
-                assert payload[:3] == b"P6\n"
-                nl2 = payload.index(b"\n", 3)
-                nl3 = payload.index(b"\n", nl2 + 1)
-                dims = payload[3:nl2].split(b" ")
-                width, height = int(dims[0]), int(dims[1])
-                maxval = int(payload[nl2 + 1 : nl3])
-                npx = width * height
-                pix = payload[nl3 + 1 : nl3 + 1 + 3 * npx]
-                chans = [pix[c::3] for c in range(3)]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "is_ppm": True,
-                        "width": width,
-                        "height": height,
-                        "maxval": maxval,
-                        "n_pixels": npx,
-                        "r_min": min(chans[0]), "r_max": max(chans[0]),
-                        "r_sum": sum(chans[0]),
-                        "g_min": min(chans[1]), "g_max": max(chans[1]),
-                        "g_sum": sum(chans[1]),
-                        "b_min": min(chans[2]), "b_max": max(chans[2]),
-                        "b_sum": sum(chans[2]),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return t.documents.select("doc_id", "text").mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, is_ppm boolean, width long, height long,"
-            " maxval int, n_pixels long, r_min long, r_max long, r_sum long,"
-            " g_min long, g_max long, g_sum long, b_min long, b_max long,"
-            " b_sum long"
-        ),
     )
 
 

@@ -1,28 +1,21 @@
-"""Per-series models: pandas kernels on the Arrow/`applyInPandas` path, and
-the per-series fits that run as JVM higher-order folds.
+"""Per-series models as JVM higher-order folds over each store's daily series.
 
-SURVEY §2.12: four reference operators are genuinely not expressible as
-fixed-frame windows (EWM with pandas `adjust=True`, rolling autocorr,
-recursive smoothing clamp, Holt-Winters state).  Those run as grouped-map
-pandas kernels: each (store) / (store, product) series is one small group,
-Arrow-batched to Python, processed vectorized, returned.
-
-Croston's constant-α SES and the AR(2) Yule-Walker closed form are
-SEQUENTIAL folds of plain IEEE doubles, so they run as higher-order
-``aggregate`` folds over each series' date-sorted array, with no Python
-worker.  Their DuckDB oracles replay the identical fold over the identical
-list, so JVM and DuckDB produce the same bits; tests/test_series_kernels.py
-pins both against a plain-Python reference fit.  Kernels that lean on
-pandas-internal accumulation schemes (`ewm(adjust=True)`, `.autocorr`,
-Holt-Winters seasonal state) stay rows-only by design with property tests.
+SURVEY §2.12: EWM with pandas ``adjust=True``, the recursive ±50% clamp,
+lag-1 autocorrelation, Holt-Winters, Croston's SES and the AR(2)
+Yule-Walker fit are not fixed-frame windows, but each is a SEQUENTIAL fold
+of plain IEEE doubles over the date-sorted series.  So every one runs as a
+higher-order ``aggregate`` over the array that ``daily_series`` builds, with
+no Python worker.  Each DuckDB oracle replays the identical fold over the
+identical list (``list_reduce``; sums through ``_duck_fsum``), so both
+engines produce the same bits; tests/test_series_kernels.py pins every fold
+against a plain-Python or pandas reference over every sf0.001 series.
 
 Scale: key cardinality is millions of small series — one shuffle to the
-series grain, and each series costs O(series length).
+series grain, and each series costs O(series length) (the clamp, which
+emits an array, O(length²) in copies).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,9 +31,25 @@ def _daily(t: Catalog) -> DataFrame:
     )
 
 
+def daily_series(t: Catalog, *aggs: Column) -> DataFrame:
+    """``(l_suppkey, qs, *aggs)``: each store's daily quantities as one
+    date-sorted array, plus any further aggregates over the store's daily
+    rows (``qty``, ``l_shipdate``) that a caller passes in."""
+    seq = _daily(t).groupBy("l_suppkey").agg(
+        F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr"), *aggs
+    )
+    return seq.select(
+        "l_suppkey", F.col("arr").getField("qty").alias("qs"), *seq.columns[2:]
+    )
+
+
 _DUCK_DAILY = """daily AS (
   SELECT l_suppkey, l_shipdate, floor(sum(l_quantity) * 10000 + 0.5) / 10000 AS qty
   FROM lineitem GROUP BY 1, 2
+)"""
+
+_DUCK_SEQ = f"""{_DUCK_DAILY}, seq AS (
+  SELECT l_suppkey, list(qty ORDER BY l_shipdate) AS qs FROM daily GROUP BY l_suppkey
 )"""
 
 # sequential sum with an explicit 0.0 seed: bit-identical to Python's
@@ -55,32 +64,64 @@ def _fsum(xs: Column) -> Column:
     return F.aggregate(xs, F.lit(0.0), lambda a, x: a + x)
 
 
-@register("ewm_pandas_per_series")
+def _tail(qs: Column, k: int) -> Column:
+    """``qs`` without its first ``k`` elements (empty when shorter)."""
+    return F.slice(qs, k + 1, F.greatest(F.size(qs) - k, F.lit(0)))
+
+
+# pandas ewm(alpha=0.3, adjust=True).mean() as its own recurrence: w is the
+# total weight behind the running mean, decayed by 1 - alpha per step, and
+# the new value enters with weight 1.  pandas leaves the mean as it is when
+# the value equals it (the update would round it), so both folds do too.
+# The running sum s feeds ema_mean.  Two DuckDB 1.0 pitfalls: a bare decimal
+# literal inside a struct is DECIMAL, so every accumulator field is cast to
+# DOUBLE; and a struct-valued list_reduce step that repeats one expression
+# over the accumulator in two fields returns wrong values, so the new mean
+# is bound once through a one-element list_transform.
+_EWM_SQL = f"""
+WITH {_DUCK_SEQ}, fold AS (
+  SELECT l_suppkey, len(qs) AS n, list_reduce(
+    list_transform(qs, x -> {{'avg': x, 'w': 1.0::DOUBLE, 's': x}}),
+    (a, e) -> list_transform(
+      [CASE WHEN a.avg = e.avg THEN a.avg
+            ELSE (a.w * 0.7::DOUBLE * a.avg + e.avg) / (a.w * 0.7::DOUBLE + 1.0::DOUBLE) END],
+      v -> {{'avg': v, 'w': a.w * 0.7::DOUBLE + 1.0::DOUBLE, 's': a.s + v}})[1]) AS st
+  FROM seq
+)
+SELECT l_suppkey, round(st.avg, 4) AS ema_last, round(st.s / n, 4) AS ema_mean,
+       CAST(n AS BIGINT) AS n_days
+FROM fold
+"""
+
+
+def _ewm_step(a: Column, x: Column) -> Column:
+    w = a["w"] * F.lit(0.7)
+    avg = F.when(a["avg"] == x, a["avg"]).otherwise((w * a["avg"] + x) / (w + F.lit(1.0)))
+    return F.struct(avg.alias("avg"), (w + F.lit(1.0)).alias("w"), (a["s"] + avg).alias("s"))
+
+
+@register("ewm_pandas_per_series", oracle=_EWM_SQL)
 def ewm_pandas_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pandas-exact EWM (alpha=0.3, adjust=True) per store daily series
-    (/root/reference/src/features/temporal_features_engine.py:227-259).
+    (/root/reference/src/features/temporal_features_engine.py:227-259):
+    the last smoothed value and the mean of the smoothed series.
 
-    adjust=True weights (1-a)^i / Σ(1-a)^j are not a simple recurrence, so
-    this is the honest pandas kernel rather than the HOF fold used by
-    `ewm_daily_store`."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate")
-        ema = pdf["qty"].ewm(alpha=0.3, adjust=True).mean()
-        return pd.DataFrame(
-            {
-                "l_suppkey": pdf["l_suppkey"].iloc[:1],
-                "ema_last": [round(float(ema.iloc[-1]), 4)],
-                "ema_mean": [round(float(ema.mean()), 4)],
-                "n_days": [len(pdf)],
-            }
-        )
-
+    adjust=True divides by the decayed weight total, which is a recurrence
+    once the fold carries that total (``_ewm_step``); it equals pandas'
+    own loop bit for bit.  ``ewm_daily_store`` is the adjust=False fold."""
     t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(kernel, schema="l_suppkey long, ema_last double, ema_mean double, n_days long")
+    qs = F.col("qs")
+    x0 = F.element_at(qs, 1)
+    st = F.aggregate(
+        _tail(qs, 1),
+        F.struct(x0.alias("avg"), F.lit(1.0).alias("w"), x0.alias("s")),
+        _ewm_step,
+    )
+    return daily_series(t).select(
+        "l_suppkey",
+        r4(st["avg"]).alias("ema_last"),
+        r4(st["s"] / F.size(qs)).alias("ema_mean"),
+        F.size(qs).cast("long").alias("n_days"),
     )
 
 
@@ -129,21 +170,14 @@ def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-trivial on this dense dataset).
 
     The SES recurrences run as JVM higher-order ``aggregate`` folds over
-    each store's date-sorted daily array (the ``ewm_daily_store``
-    pattern), seeded with the first size / interval, so the DuckDB oracle's
-    no-init ``list_reduce`` replays the same doubles.  Both registered
-    names are this one fold.
+    each store's date-sorted daily array, seeded with the first size /
+    interval, so the DuckDB oracle's no-init ``list_reduce`` replays the
+    same doubles.  Both registered names are this one fold.
 
     Scale: one shuffle to the series grain, whole-stage-codegen'd folds,
     state bounded by series length."""
     t = Catalog(spark, sf_dir)
-    seq = _daily(t).groupBy("l_suppkey").agg(
-        F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr"),
-        F.percentile("qty", F.lit(0.5)).alias("thr"),
-    )
-    # project the qty array once: a getField inside the per-element filter
-    # lambda below would re-extract the whole array for every element
-    ser = seq.select("l_suppkey", F.col("arr").getField("qty").alias("qs"), "thr")
+    ser = daily_series(t, F.percentile("qty", F.lit(0.5)).alias("thr"))
     qs = F.col("qs")
     # 1-based positions of demand events (days above the series median):
     # the threshold can only ever EQUAL a data point when it IS that sorted
@@ -168,7 +202,7 @@ def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey", m.alias("m"), sizes.alias("sizes"), ivs.alias("ivs")
     )
     ses = lambda lst: F.aggregate(  # noqa: E731
-        F.slice(lst, 2, F.greatest(F.size(lst) - 1, F.lit(0))),
+        _tail(lst, 1),
         F.element_at(lst, 1).cast("double"),
         lambda a, x: F.lit(0.1) * x + F.lit(0.9) * a,
     )
@@ -185,62 +219,134 @@ def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("sequential_clamp_per_series")
-def sequential_clamp_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-dependent recursive change-rate limiter: each value may move at
-    most ±50% from the PREVIOUS CLAMPED value
-    (/root/reference/src/models/business_rules.py:231-293).  Depends on its
-    own prior output, so no fixed-frame window can express it (SURVEY
-    §7.4.1) — per-key pandas kernel with guaranteed intra-key ordering."""
+# The clamp folds into the array of clamped values; each step reads the
+# previous clamped value (the array's last element) and rounds to 4dp.
+_CLAMP_SQL = f"""
+WITH {_DUCK_DAILY}, seq AS (
+  SELECT l_suppkey, list(l_shipdate ORDER BY l_shipdate) AS ds,
+         list(qty ORDER BY l_shipdate) AS qs
+  FROM daily GROUP BY l_suppkey
+), fold AS (
+  SELECT l_suppkey, ds, qs, list_reduce(
+    list_prepend([round(qs[1], 4)], list_transform(list_slice(qs, 2, len(qs)), x -> [x])),
+    (acc, e) -> list_append(acc, round(
+      CASE WHEN acc[-1] = 0 THEN e[1]
+           ELSE least(greatest(e[1], acc[-1] * 0.5::DOUBLE), acc[-1] * 1.5::DOUBLE) END,
+      4))) AS cs
+  FROM seq
+)
+SELECT l_suppkey, unnest(ds) AS l_shipdate, unnest(qs) AS qty, unnest(cs) AS qty_clamped
+FROM fold
+"""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate").reset_index(drop=True)
-        vals = pdf["qty"].tolist()
-        out = []
-        prev = None
-        for v in vals:
-            if prev is None or prev == 0:
-                c = round(v, 4)
-            else:
-                c = round(min(max(v, prev * 0.5), prev * 1.5), 4)
-            out.append(c)
-            prev = c
-        pdf["qty_clamped"] = out
-        return pdf[["l_suppkey", "l_shipdate", "qty", "qty_clamped"]]
 
-    t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(
-            kernel,
-            schema="l_suppkey long, l_shipdate timestamp_ntz, qty double, qty_clamped double",
+def _clamp_step(prev: Column, v: Column) -> Column:
+    return r4(
+        F.when(prev == 0, v).otherwise(
+            F.least(F.greatest(v, prev * F.lit(0.5)), prev * F.lit(1.5))
         )
     )
 
 
-@register("rolling_autocorr_per_series")
+@register("sequential_clamp_per_series", oracle=_CLAMP_SQL)
+def sequential_clamp_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-dependent recursive change-rate limiter: each value may move at
+    most ±50% from the PREVIOUS CLAMPED value
+    (/root/reference/src/models/business_rules.py:231-293).  No fixed-frame
+    window expresses it (SURVEY §7.4.1), but it is a fold whose accumulator
+    is the clamped series so far; the clamped array explodes back to one
+    row per store day.
+
+    Every clamped value is rounded with ``r4`` (half away from zero) inside
+    the recursion, so the next step clamps against the rounded value.
+    Python's ties-to-even ``round(v, 4)`` gives other values on half-quantum
+    ties (``prev * 0.5``), and those propagate down the series."""
+    t = Catalog(spark, sf_dir)
+    ser = daily_series(t, F.array_sort(F.collect_list("l_shipdate")).alias("ds"))
+    qs = F.col("qs")
+    clamped = F.aggregate(
+        _tail(qs, 1),
+        F.array(r4(F.element_at(qs, 1))),
+        lambda acc, v: F.concat(acc, F.array(_clamp_step(F.element_at(acc, -1), v))),
+    )
+    return ser.select(
+        "l_suppkey",
+        F.inline(
+            F.arrays_zip(
+                F.col("ds").alias("l_shipdate"),
+                qs.alias("qty"),
+                clamped.alias("qty_clamped"),
+            )
+        ),
+    )
+
+
+# Lag-1 autocorrelation as np.corrcoef computes it over the pairs
+# (x[1:], x[:-1]): each side's mean first, then the centered products,
+# scaled by 1 / (pairs - 1).  Fewer than two pairs, or a side with zero
+# variance, gives null (pandas' NaN).
+_AC_SQL = f"""
+WITH {_DUCK_SEQ}, p AS (
+  SELECT l_suppkey, len(qs) AS n,
+         list_slice(qs, 2, len(qs)) AS a, list_slice(qs, 1, len(qs) - 1) AS b
+  FROM seq
+), m AS (
+  SELECT l_suppkey, n, a, b,
+         CASE WHEN n >= 3 THEN {_duck_fsum('a')} / (n - 1) END AS ma,
+         CASE WHEN n >= 3 THEN {_duck_fsum('b')} / (n - 1) END AS mb
+  FROM p
+), c AS (
+  SELECT l_suppkey, n, 1.0::DOUBLE / (n - 2) AS f,
+         {_duck_fsum('list_transform(range(1, n), i -> (a[i] - ma) * (b[i] - mb))')} AS sab,
+         {_duck_fsum('list_transform(a, u -> (u - ma) * (u - ma))')} AS saa,
+         {_duck_fsum('list_transform(b, v -> (v - mb) * (v - mb))')} AS sbb
+  FROM m
+)
+SELECT l_suppkey,
+       CASE WHEN n >= 3 AND saa > 0 AND sbb > 0
+            THEN round(sab * f / sqrt(saa * f) / sqrt(sbb * f), 4) END AS autocorr1,
+       CAST(n AS BIGINT) AS n_days
+FROM c
+"""
+
+
+@register("rolling_autocorr_per_series", oracle=_AC_SQL)
 def rolling_autocorr_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of each store's daily series
-    (/root/reference/src/features/temporal_features_engine.py:209-214) —
-    pandas kernel (no native Spark autocorr)."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate")
-        ac = pdf["qty"].autocorr(lag=1)
-        return pd.DataFrame(
-            {
-                "l_suppkey": pdf["l_suppkey"].iloc[:1],
-                "autocorr1": [None if pd.isna(ac) else round(float(ac), 4)],
-                "n_days": [len(pdf)],
-            }
-        )
-
+    (/root/reference/src/features/temporal_features_engine.py:209-214):
+    pandas' ``Series.autocorr(lag=1)``, a Pearson correlation of the
+    series against itself shifted by one, as two passes of ``_fsum`` folds
+    over the pairs.  pandas sums in numpy's pairwise / BLAS order, so it
+    may differ from this fold in the last bits before rounding."""
     t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(kernel, schema="l_suppkey long, autocorr1 double, n_days long")
+    qs = F.col("qs")
+    n = F.size(qs)
+    ok = n >= 3
+    a, b = _tail(qs, 1), F.slice(qs, 1, F.greatest(n - 1, F.lit(0)))
+    m = daily_series(t).select(
+        "l_suppkey",
+        n.alias("n"),
+        a.alias("a"),
+        b.alias("b"),
+        F.when(ok, _fsum(a) / (n - 1)).alias("ma"),
+        F.when(ok, _fsum(b) / (n - 1)).alias("mb"),
+    )
+    ma, mb = F.col("ma"), F.col("mb")
+    c = m.select(
+        "l_suppkey",
+        "n",
+        _fsum(F.zip_with("a", "b", lambda u, v: (u - ma) * (v - mb))).alias("sab"),
+        _fsum(F.transform("a", lambda u: (u - ma) * (u - ma))).alias("saa"),
+        _fsum(F.transform("b", lambda v: (v - mb) * (v - mb))).alias("sbb"),
+    )
+    f = F.lit(1.0) / (F.col("n") - 2)
+    return c.select(
+        "l_suppkey",
+        F.when(
+            (F.col("n") >= 3) & (F.col("saa") > 0) & (F.col("sbb") > 0),
+            r4(F.col("sab") * f / F.sqrt(F.col("saa") * f) / F.sqrt(F.col("sbb") * f)),
+        ).alias("autocorr1"),
+        F.col("n").cast("long").alias("n_days"),
     )
 
 
@@ -308,17 +414,11 @@ def ar2_yule_walker_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle to the series grain, codegen'd folds, no Python."""
     t = Catalog(spark, sf_dir)
-    seq = _daily(t).groupBy("l_suppkey").agg(
-        F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr")
+    qs = F.col("qs")
+    b = daily_series(t).select(
+        "l_suppkey", "qs", F.size(qs).alias("n"), (_fsum(qs) / F.size(qs)).alias("mu")
     )
-    qs0 = F.col("arr").getField("qty")
-    b = seq.select(
-        "l_suppkey",
-        qs0.alias("qs"),
-        F.size(qs0).alias("n"),
-        (_fsum(qs0) / F.size(qs0)).alias("mu"),
-    )
-    qs, n, mu = F.col("qs"), F.col("n"), F.col("mu")
+    n, mu = F.col("n"), F.col("mu")
     lagprod = lambda k: F.zip_with(  # noqa: E731
         F.slice(qs, 1, F.greatest(n - k, F.lit(0))),
         F.slice(qs, 1 + k, F.greatest(n - k, F.lit(0))),
@@ -361,84 +461,88 @@ def ar2_yule_walker_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def holt_winters_fit(
-    y: list[float],
-    m: int = 7,
-    alpha: float = 0.3,
-    beta: float = 0.1,
-    gamma: float = 0.2,
-    horizon: int = 7,
-) -> tuple[float, float, float] | None:
-    """Additive Holt-Winters recursion over one series: returns (level,
-    trend, h-step forecast), or None when the series is shorter than two
-    seasons.  Standard initialization: first-season mean level, mean
-    season-over-season difference for trend, de-meaned first season for the
-    seasonal state."""
-    if len(y) < 2 * m:
-        return None
-    level = float(sum(y[:m]) / m)
-    trend = float((sum(y[m : 2 * m]) / m - sum(y[:m]) / m) / m)
-    season = [float(v - level) for v in y[:m]]
-    for i in range(m, len(y)):
-        s = season[i % m]
-        prev_level = level
-        level = alpha * (y[i] - s) + (1 - alpha) * (level + trend)
-        trend = beta * (level - prev_level) + (1 - beta) * trend
-        season[i % m] = gamma * (y[i] - level) + (1 - gamma) * s
-    fc = level + horizon * trend + season[(len(y) + horizon - 1) % m]
-    return level, trend, fc
+# Additive Holt-Winters (alpha=0.3, beta=0.1, gamma=0.2, m=7).  The seed is
+# the first week's mean level, the mean week-over-week change / 7 for the
+# trend and the de-meaned first week for the season, all through the
+# 0-seeded sums.  The season is a 7-slot queue: step i (from day 8 on) reads
+# its slot at the head and appends the updated slot at the tail, so the head
+# is always slot i % 7 and the tail the slot the 7-day forecast reads.  The
+# oracle binds the new level once (the _EWM_SQL pitfall).
+_HW_SQL = f"""
+WITH {_DUCK_SEQ}, s0 AS (
+  SELECT l_suppkey, qs, len(qs) AS n, {_duck_fsum('qs[1:7]')} / 7 AS l0
+  FROM seq
+), fold AS (
+  SELECT l_suppkey, n, list_reduce(
+    list_prepend(
+      {{'l': l0, 't': ({_duck_fsum('qs[8:14]')} / 7 - l0) / 7,
+       's': list_transform(qs[1:7], v -> v - l0), 'x': 0.0::DOUBLE}},
+      list_transform(list_slice(qs, 8, len(qs)), x ->
+        {{'l': 0.0::DOUBLE, 't': 0.0::DOUBLE, 's': []::DOUBLE[], 'x': x}})),
+    (a, e) -> list_transform(
+      [0.3::DOUBLE * (e.x - a.s[1]) + 0.7::DOUBLE * (a.l + a.t)],
+      lv -> {{'l': lv, 't': 0.1::DOUBLE * (lv - a.l) + 0.9::DOUBLE * a.t,
+             's': list_append(a.s[2:7], 0.2::DOUBLE * (e.x - lv) + 0.8::DOUBLE * a.s[1]),
+             'x': 0.0::DOUBLE}})[1]) AS st
+  FROM s0
+)
+SELECT l_suppkey,
+       CASE WHEN n >= 14 THEN round(st.l, 4) END AS level,
+       CASE WHEN n >= 14 THEN round(st.t, 4) END AS trend,
+       CASE WHEN n >= 14 THEN round(st.l + 7 * st.t + st.s[7], 4) END AS forecast_7d,
+       CAST(n AS BIGINT) AS n_days
+FROM fold
+"""
 
 
-@register("holt_winters_per_series")
+def _hw_step(a: Column, x: Column) -> Column:
+    s = F.element_at(a["s"], 1)
+    level = F.lit(0.3) * (x - s) + F.lit(0.7) * (a["l"] + a["t"])
+    trend = F.lit(0.1) * (level - a["l"]) + F.lit(0.9) * a["t"]
+    season = F.concat(
+        F.slice(a["s"], 2, 6), F.array(F.lit(0.2) * (x - level) + F.lit(0.8) * s)
+    )
+    return F.struct(level.alias("l"), trend.alias("t"), season.alias("s"))
+
+
+@register("holt_winters_per_series", oracle=_HW_SQL)
 def holt_winters_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive Holt-Winters (level + trend + weekly seasonality) fit per
     store daily series — the closed-form per-series seasonal fit the
     reference runs through Prophet
     (/root/reference/src/models/prophet_seasonal.py:304-367: per-segment
-    seasonal model fit + forecast).  Smoothing recursions (alpha=0.3,
-    beta=0.1, gamma=0.2, m=7) depend on their own prior state, so this is a
-    pandas kernel, not a window rewrite; emits the final state and a 7-day-
-    ahead forecast per series.
+    seasonal model fit + forecast).  Emits the final level and trend and a
+    7-day-ahead forecast; series shorter than two weeks get nulls.
 
-    Scale: one grouped-map shuffle keyed by series; each kernel call is
-    O(series length) with O(m) state.  Millions of series parallelize
-    embarrassingly — the same shape as the reference's per-segment loop,
-    minus the driver-side iteration."""
+    The smoothing recursions depend on their own prior state, which makes
+    them a fold (``_hw_step``) whose accumulator holds the level, the trend
+    and the 7-slot season.
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("l_shipdate").reset_index(drop=True)
-        key = int(pdf["l_suppkey"].iloc[0])
-        fit = holt_winters_fit([float(v) for v in pdf["qty"]])
-        if fit is None:
-            return pd.DataFrame(
-                {
-                    "l_suppkey": [key],
-                    "level": [None],
-                    "trend": [None],
-                    "forecast_7d": [None],
-                    "n_days": [len(pdf)],
-                }
-            )
-        level, trend, fc = fit
-        return pd.DataFrame(
-            {
-                "l_suppkey": [key],
-                "level": [round(level, 4)],
-                "trend": [round(trend, 4)],
-                "forecast_7d": [round(fc, 4)],
-                "n_days": [len(pdf)],
-            }
-        )
-
+    Scale: one shuffle to the series grain; each series is O(length) with
+    O(m) state, so millions of series run in parallel — the reference's
+    per-segment loop without the driver-side iteration."""
     t = Catalog(spark, sf_dir)
-    return (
-        _daily(t)
-        .groupBy("l_suppkey")
-        .applyInPandas(
-            kernel,
-            schema=(
-                "l_suppkey long, level double, trend double,"
-                " forecast_7d double, n_days long"
-            ),
-        )
+    qs = F.col("qs")
+    week1 = F.slice(qs, 1, 7)
+    l0 = _fsum(week1) / 7
+    seed = F.struct(
+        l0.alias("l"),
+        ((_fsum(F.slice(qs, 8, 7)) / 7 - l0) / 7).alias("t"),
+        F.transform(week1, lambda v: v - l0).alias("s"),
+    )
+    st = daily_series(t).select(
+        "l_suppkey",
+        F.size(qs).alias("n"),
+        F.aggregate(_tail(qs, 7), seed, _hw_step).alias("st"),
+    )
+    ok = F.col("n") >= 14
+    level, trend = F.col("st.l"), F.col("st.t")
+    return st.select(
+        "l_suppkey",
+        F.when(ok, r4(level)).alias("level"),
+        F.when(ok, r4(trend)).alias("trend"),
+        F.when(
+            ok, r4(level + F.lit(7.0) * trend + F.element_at(F.col("st.s"), -1))
+        ).alias("forecast_7d"),
+        F.col("n").cast("long").alias("n_days"),
     )

@@ -867,7 +867,7 @@ FULL JOIN (SELECT event_id, user_id, ts, value FROM events
 )
 def stream_interval_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time FULL OUTER interval join — the third and last member of
-    the interval-join family (inner r7, left-outer r11): every matched
+    the interval-join family (after inner and left-outer): every matched
     (view, purchase) pair, every view with no in-window purchase
     null-extended once, AND every purchase with no same-user view in the
     preceding 30 minutes null-extended once.  The left-outer query answers

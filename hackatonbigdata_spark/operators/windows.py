@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.functions.core import iso_dow, r4
+from hackatonbigdata_spark.operators.series_kernels import _daily, daily_series
 from hackatonbigdata_spark.registry import register
 
 # unique intra-store ordering shared by the ordered windows below
@@ -623,22 +624,16 @@ def ewm_daily_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles; the fold order is defined by the date sort.
     """
     t = Catalog(spark, sf_dir)
-    daily = t.lineitem.groupBy("l_suppkey", "l_shipdate").agg(
-        r4(F.sum("l_quantity")).alias("qty")
-    )
-    seq = daily.groupBy("l_suppkey").agg(
-        F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr")
-    )
-    qs = F.col("arr").getField("qty")
+    qs = F.col("qs")
     ema = F.aggregate(
         F.slice(qs, 2, F.greatest(F.size(qs) - 1, F.lit(0))),
         F.element_at(qs, 1).cast("double"),
         lambda acc, x: F.lit(0.5) * x + F.lit(0.5) * acc,
     )
-    return seq.select(
+    return daily_series(t).select(
         "l_suppkey",
         r4(ema).alias("ema_qty"),
-        F.size("arr").cast("long").alias("n_days"),
+        F.size(qs).cast("long").alias("n_days"),
     )
 
 
@@ -679,13 +674,7 @@ def holt_level_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     series length (at 100 TB the per-(store,product) grain keeps arrays
     to a few hundred elements)."""
     t = Catalog(spark, sf_dir)
-    daily = t.lineitem.groupBy("l_suppkey", "l_shipdate").agg(
-        r4(F.sum("l_quantity")).alias("qty")
-    )
-    seq = daily.groupBy("l_suppkey").agg(
-        F.array_sort(F.collect_list(F.struct("l_shipdate", "qty"))).alias("arr")
-    )
-    qs = F.col("arr").getField("qty")
+    qs = F.col("qs")
     n1 = F.greatest(F.size(qs) - 1, F.lit(0))
     # first differences qs[i+1] - qs[i]
     ds = F.zip_with(F.slice(qs, 2, n1), F.slice(qs, 1, n1), lambda a, b: a - b)
@@ -699,7 +688,7 @@ def holt_level_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(ds, 1).cast("double"),
         lambda acc, x: F.lit(0.15) * x + F.lit(0.85) * acc,
     )
-    return seq.select(
+    return daily_series(t).select(
         "l_suppkey",
         r4(level).alias("holt_level"),
         F.when(F.size(qs) < 2, F.lit(0.0)).otherwise(r4(trend)).alias("holt_trend"),
@@ -742,9 +731,7 @@ def window_rolling_multiscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     adding a window size costs compute, never another exchange.  Raw
     aggregates materialize once per frame (no r4 around .over)."""
     t = Catalog(spark, sf_dir)
-    daily = t.lineitem.groupBy("l_suppkey", "l_shipdate").agg(
-        r4(F.sum("l_quantity")).alias("qty")
-    )
+    daily = _daily(t)
     base = W.partitionBy("l_suppkey").orderBy("l_shipdate")
     frames = {4: base.rowsBetween(-3, 0), 12: base.rowsBetween(-11, 0), 26: base.rowsBetween(-25, 0)}
     raw = daily.select(
@@ -1042,11 +1029,11 @@ def queue_backlog_lindley(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequential queue q_t = max(0, q_{t-1} + arrivals_t − capacity)
     — which looks like it needs a per-row loop — equals
     S_t − min(0, min_{k≤t} S_k) for the running net-flow sum S, so the
-    whole trajectory is two keyed cumulative windows, no recursion, no
-    ``applyInPandas``.  This is the fully-oracled counterpart of the
-    ``sequential_clamp_per_series`` kernel (two-sided clamps have no such
-    closed form; the one-sided floor does), and the capacity-planning
-    readout behind the reference's capacity business rule
+    whole trajectory is two keyed cumulative windows, no recursion.  The
+    two-sided ``sequential_clamp_per_series`` has no such closed form and
+    runs as a fold over each series; the one-sided floor has one.  This is
+    the capacity-planning readout behind the reference's capacity business
+    rule
     (/root/reference/src/models/business_rules.py:164-208).
 
     Exactness: arrivals are counts, capacity is the integer round-half-up

@@ -62,6 +62,18 @@ def _load_all() -> None:
 # every other name follows in registration order.  Every name listed must
 # be registered.
 _PRIORITY: list[str] = [
+    "ewm_pandas_per_series",
+    "sequential_clamp_per_series",
+    "rolling_autocorr_per_series",
+    "holt_winters_per_series",
+    "ar2_yule_walker_per_series",
+    "ar2_yule_walker_sql",
+    "croston_per_series",
+    "croston_ses_sql",
+    "ewm_daily_store",
+    "holt_level_trend",
+    "window_rolling_multiscale",
+    "feature_matrix_daily_store",
     "calibration_isotonic",
     "dedup_minhash_lsh",
     "dedup_cluster_components",
@@ -102,10 +114,6 @@ _PRIORITY: list[str] = [
     "similarity_ivf_bucketed",
     "dedup_semdedup_ivf",
     "cooccurrence_pairs",
-    "ar2_yule_walker_per_series",
-    "ar2_yule_walker_sql",
-    "croston_per_series",
-    "croston_ses_sql",
     "similarity_graph_ann",
     "similarity_graph_ann_nnd",
     "similarity_graph_ann_clustered",

@@ -12,7 +12,8 @@ Scale notes:
   adaptive skew handling is load-bearing at 100 TB, not a nicety.
 - shuffle.partitions matches local cores here; on a 1000-executor cluster it
   should be ~2-3x total cores (or left to AQE initialPartitionNum).
-- Arrow enabled: every applyInPandas/pandas_udf kernel ships columnar batches.
+- Arrow enabled: every pandas kernel (mapInPandas, applyInPandasWithState)
+  ships columnar batches.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
 """
 

@@ -1,16 +1,145 @@
-"""Pins for the rows-only decode stub, the multimodal byte kernels, and
+"""Pins for the rows-only decode stub, the multimodal byte kernels (the
+WAV and PPM SQL decodes against the Python reference decoders below), and
 cross-checks between the exact and approximate dedup operators."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hackatonbigdata_spark.catalog import Catalog
 from hackatonbigdata_spark.operators.multimodal import decode_image, fake_decode
 from hackatonbigdata_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
 QUERIES = all_queries()
+
+
+def decode_wav_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference WAV decoder: struct.unpack over the binary payload in an
+    Arrow-batched ``mapInPandas`` kernel, the shape a production decode
+    tier has.  The oracled ``mm_wav_pcm_stats`` SQL decode must equal it."""
+    import struct  # noqa: PLC0415 — worker-side import
+
+    t = Catalog(spark, sf_dir)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                body = text.encode("utf-8")
+                n_data = len(body) - (len(body) % 2)
+                body = body[:n_data]
+                rate = 8000 + (int(doc_id) * 2654435761 % 2**32 % 4) * 4000
+                payload = (
+                    b"RIFF"
+                    + struct.pack("<I", 36 + n_data)
+                    + b"WAVEfmt "
+                    + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
+                    + b"data"
+                    + struct.pack("<I", n_data)
+                    + body
+                )
+                # --- the decoder: parse the header, then the PCM frames ---
+                assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
+                ch, sr = struct.unpack("<H", payload[22:24])[0], struct.unpack(
+                    "<I", payload[24:28]
+                )[0]
+                bits = struct.unpack("<H", payload[34:36])[0]
+                nd = struct.unpack("<I", payload[40:44])[0]
+                samples = struct.unpack(f"<{nd // 2}h", payload[44 : 44 + nd])
+                if not samples:
+                    # match mm_wav_pcm_stats: frameless payloads are
+                    # dropped (the oracle's inner join against per-sample
+                    # stats), and min()/max() of () would raise
+                    continue
+                ssq = sum(s * s for s in samples)
+                rows.append(
+                    {
+                        "doc_id": doc_id,
+                        "is_wav": True,
+                        "channels": ch,
+                        "sample_rate": sr,
+                        "bits": bits,
+                        "n_samples": len(samples),
+                        "min_s": min(samples),
+                        "max_s": max(samples),
+                        "ssq": ssq,
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    return t.documents.select("doc_id", "text", "n_chars").mapInPandas(
+        kernel,
+        schema=(
+            "doc_id long, is_wav boolean, channels int, sample_rate long,"
+            " bits int, n_samples long, min_s long, max_s long, ssq long"
+        ),
+    )
+
+
+
+
+def decode_ppm_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference PPM decoder: byte-level header parse + pixel iteration over
+    the binary payload in an Arrow-batched ``mapInPandas`` kernel.  The
+    oracled pure-SQL decode ``mm_ppm_pixel_stats`` must equal it."""
+    t = Catalog(spark, sf_dir)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                body = text.encode("utf-8")
+                w = 16 + (int(doc_id) * 2654435761 % 2**32 % 4) * 8
+                h = (len(body) // 3) // w
+                if h < 1:
+                    continue
+                payload = (
+                    b"P6\n" + f"{w} {h}".encode() + b"\n255\n"
+                    + body[: 3 * w * h]
+                )
+                # --- the decoder: header up to the 3rd newline, then RGB --
+                assert payload[:3] == b"P6\n"
+                nl2 = payload.index(b"\n", 3)
+                nl3 = payload.index(b"\n", nl2 + 1)
+                dims = payload[3:nl2].split(b" ")
+                width, height = int(dims[0]), int(dims[1])
+                maxval = int(payload[nl2 + 1 : nl3])
+                npx = width * height
+                pix = payload[nl3 + 1 : nl3 + 1 + 3 * npx]
+                chans = [pix[c::3] for c in range(3)]
+                rows.append(
+                    {
+                        "doc_id": doc_id,
+                        "is_ppm": True,
+                        "width": width,
+                        "height": height,
+                        "maxval": maxval,
+                        "n_pixels": npx,
+                        "r_min": min(chans[0]), "r_max": max(chans[0]),
+                        "r_sum": sum(chans[0]),
+                        "g_min": min(chans[1]), "g_max": max(chans[1]),
+                        "g_sum": sum(chans[1]),
+                        "b_min": min(chans[2]), "b_max": max(chans[2]),
+                        "b_sum": sum(chans[2]),
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    return t.documents.select("doc_id", "text").mapInPandas(
+        kernel,
+        schema=(
+            "doc_id long, is_ppm boolean, width long, height long,"
+            " maxval int, n_pixels long, r_min long, r_max long, r_sum long,"
+            " g_min long, g_max long, g_sum long, b_min long, b_max long,"
+            " b_sum long"
+        ),
+    )
 
 
 def test_sql_minhash_bands_find_planted_near_dups(spark):
@@ -124,9 +253,6 @@ def test_wav_kernel_decode_equals_sql_decode(spark):
     is a library limitation only for COMPRESSED formats."""
     import math
 
-    from hackatonbigdata_spark.operators.multimodal import decode_wav_kernel
-    from hackatonbigdata_spark.registry import all_queries
-
     sf = "/root/testdata/sf0.001"
     got = (
         decode_wav_kernel(spark, sf).toPandas().set_index("doc_id").sort_index()
@@ -153,9 +279,6 @@ def test_ppm_kernel_decode_equals_sql_decode(spark):
     on every header field and channel statistic — the second modality of
     the honest decode boundary."""
     import math
-
-    from hackatonbigdata_spark.operators.multimodal import decode_ppm_kernel
-    from hackatonbigdata_spark.registry import all_queries
 
     sf = "/root/testdata/sf0.001"
     got = (

@@ -1,5 +1,5 @@
 """Pins for the MLlib-model queries (KMeans-IVF, PCA similarity, Platt
-calibration), isotonic calibration and the Holt-Winters per-series kernel.
+calibration), isotonic calibration and the Holt-Winters per-series fit.
 
 The sf0.001 embeddings are isotropic noise (max pairwise cosine ≈ 0.48), so
 an ANN recall pin against them would measure the data, not the operator.
@@ -14,9 +14,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from hackatonbigdata_spark.operators.series_kernels import holt_winters_fit
 from hackatonbigdata_spark.registry import all_queries
 from tests.conftest import SF_DIR
+from tests.test_series_kernels import holt_winters_fit
 
 QUERIES = all_queries()
 

@@ -78,12 +78,6 @@ def test_every_query_has_oracle_or_reason():
     # explicit and exact, so a forgotten oracle fails loudly and a name
     # that gains an oracle or leaves the registry must leave the list too.
     allowed_rows_only = {
-        # per-series pandas kernels leaning on pandas-internal accumulation
-        # (ewm adjust=True, .autocorr) or per-step rounding: not replayable
-        # as one SQL fold; pinned by tests/test_series_kernels.py
-        "ewm_pandas_per_series",
-        "sequential_clamp_per_series",
-        "rolling_autocorr_per_series",
         # deterministic fake decoder over mapInPandas; no SQL oracle by
         # design — pinned by tests/test_llm_multimodal.py
         "multimodal_decode_stub",
@@ -102,9 +96,6 @@ def test_every_query_has_oracle_or_reason():
         "similarity_ivf_kmeans",
         "similarity_pca_cosine",
         "calibration_platt",
-        # per-series Holt-Winters recursion: state-dependent, not one SQL
-        # statement; math pinned by tests/test_ml_similarity.py
-        "holt_winters_per_series",
         # MLlib GBT meta-learner: boosted-tree split thresholds are model
         # internals; not-worse-than-ridge WMAPE + importance simplex pinned
         # by tests/test_ensemble_gbt.py

@@ -44,9 +44,14 @@ def test_heuristic_blend_bounded_shuffles(spark):
     assert s.broadcasts >= 2
 
 
-def test_series_kernels_are_the_only_python(spark):
-    assert plan_stats(QUERIES["ewm_pandas_per_series"](spark, SF_DIR)).has_python_udf
-    for name in ["agg_multistat_product", "window_rolling_stats", "ewm_daily_store"]:
+def test_only_the_decode_stub_plans_python(spark):
+    assert plan_stats(QUERIES["multimodal_decode_stub"](spark, SF_DIR)).has_python_udf
+    for name in [
+        "ewm_pandas_per_series",
+        "sequential_clamp_per_series",
+        "rolling_autocorr_per_series",
+        "holt_winters_per_series",
+    ]:
         assert not plan_stats(QUERIES[name](spark, SF_DIR)).has_python_udf, name
 
 
@@ -99,16 +104,8 @@ WINDOW_EXEMPT: dict[str, str] = {
 # (no BatchEvalPython / ArrowEvalPython / FlatMapGroupsInPandas /
 # MapInPandas), so Python never enters a hot path unannounced.
 PYTHON_EXEMPT: dict[str, str] = {
-    "ewm_pandas_per_series": "pandas-exact adjust=True EWM, not a recurrence "
-    "(ewm_daily_store is the JVM fold)",
-    "holt_winters_per_series": "smoothing recursions that depend on their "
-    "own prior state",
     "multimodal_decode_stub": "mapInPandas decode plumbing around the "
     "stubbed codec",
-    "rolling_autocorr_per_series": "pandas autocorr; Spark has no native "
-    "autocorrelation",
-    "sequential_clamp_per_series": "each value depends on its own previous "
-    "clamped output",
 }
 
 
