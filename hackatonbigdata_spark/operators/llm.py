@@ -7387,19 +7387,13 @@ quality_classifier_gd.__doc__ = quality_classifier_gd.__doc__.replace(
 # lights, so the gate's verdicts (including its false positives) are
 # value-verified cross-engine rather than approximated.
 
-# the package-shared Bloom grid (sketch_params) — ONE definition with the
-# stream kernel and its oracled batch twin
+# the package-shared Bloom grid and bit rule (sketch_params) — ONE
+# definition with the stream kernel and its oracled batch twin
 from hackatonbigdata_spark.sketch_params import (  # noqa: E402
     BLOOM_K as _BLOOM_K,
     BLOOM_M as _BLOOM_M,
+    bloom_pos_sql,
 )
-
-
-def _bloom_pos_sql(j_expr: str, dg_expr: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST({j_expr} AS VARCHAR) || ':' || "
-        f"{dg_expr}), 1, 8)) AS BIGINT) % {_BLOOM_M}"
-    )
 
 
 @register(
@@ -7408,11 +7402,11 @@ def _bloom_pos_sql(j_expr: str, dg_expr: str) -> str:
 WITH d AS (SELECT doc_id, md5({_DUCK_NORM}) AS dg FROM documents),
 stored AS (SELECT dg FROM d WHERE doc_id % 2 = 0),
 jj AS (SELECT * FROM (VALUES (0),(1),(2),(3)) t(j)),
-bits AS (SELECT DISTINCT {_bloom_pos_sql('jj.j', 's.dg')} AS b
+bits AS (SELECT DISTINCT {bloom_pos_sql('jj.j', 's.dg')} AS b
          FROM stored s CROSS JOIN jj),
 inc AS (SELECT doc_id, dg FROM d),
 probe AS (SELECT i.doc_id, i.dg, jj.j,
-                 {_bloom_pos_sql('jj.j', 'i.dg')} AS b
+                 {bloom_pos_sql('jj.j', 'i.dg')} AS b
           FROM inc i CROSS JOIN jj),
 hits AS (SELECT p.doc_id,
                 CAST(sum(CASE WHEN bits.b IS NOT NULL THEN 1 ELSE 0 END)

@@ -22,7 +22,7 @@ driver-side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -241,6 +241,82 @@ FROM pr{_PR_ITERS}
     return sql
 
 
+def _basket_graph(t: Catalog, wt: Column) -> tuple[DataFrame, DataFrame]:
+    """The basket co-occurrence graph every PageRank, LPA, modularity and
+    eigencentrality query runs on: nodes are parts, an undirected edge
+    joins two parts co-ordered in >= 2 baskets, and its weight is the
+    column ``wt``, read over ``basket_pairs``' co-basket count ``wt`` and
+    cast to BIGINT.  The weighted queries pass that count; the unweighted
+    ones pass the literal 1, which turns every weighted sum into the count
+    it generalizes (strength into degree, sum(wt) into count(*)).
+
+    Returns ``(adj, nodes)``: the adjacency ``(src, nbr, wt)`` in both
+    directions, materialized once, and ``(node, degree, strength)``."""
+    pairs = basket_pairs(t.lineitem, 2, n="wt").select(
+        "u", "v", wt.cast("long").alias("wt")
+    )
+    # every round of every loop reads the edges: materialized, the
+    # co-occurrence self-join runs once instead of once per round.  No hash
+    # key: the plans that read a checkpoint shuffle it again anyway, so
+    # hashing on src cost one more job and no time was saved
+    adj = materialize(both_directions(pairs, "u", "v", "wt", names=("src", "nbr")))
+    nodes = adj.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("long").alias("degree"),
+        F.sum("wt").cast("long").alias("strength"),
+    )
+    return adj, nodes
+
+
+def _pagerank(t: Catalog, wt: Column) -> DataFrame:
+    """``(node, degree, strength, pr, pr_rank)``: {iters} rounds of
+    PageRank with damping 0.85, each node sharing its rank over its edges
+    in proportion to weight, round-half-up as (2·pr·wt + s) div (2s).  At
+    unit weight that is (2·pr + deg) div (2·deg), the uniform 1/deg split.
+    Operands are nonnegative, so Spark's truncating ``div`` equals
+    DuckDB's flooring ``//``."""
+    adj, nodes = _basket_graph(t, wt)
+    nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    pr = nodes.crossJoin(F.broadcast(nn)).select(
+        "node",
+        "strength",
+        "n",
+        F.floor(F.lit(float(_PR_SCALE)) / F.col("n") + F.lit(0.5))
+        .cast("long")
+        .alias("pr"),
+    )
+    base = F.floor(
+        F.lit(float(_PR_SCALE * 15 // 100)) / F.col("n") + F.lit(0.5)
+    ).cast("long")
+    for _ in range(_PR_ITERS):
+        # one join and one aggregate per round: the graph is undirected, so
+        # every node is some edge's nbr, and the sum of its incoming weights
+        # is its own strength, carried to the next round with the node count
+        pr = (
+            adj.join(pr.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("nbr").alias("node"))
+            .agg(
+                F.sum("wt").cast("long").alias("strength"),
+                F.max("n").alias("n"),
+                F.sum(F.expr("(pr * 2 * wt + strength) div (strength * 2)"))
+                .cast("long")
+                .alias("contrib"),
+            )
+            .select(
+                "node",
+                "strength",
+                "n",
+                (base + F.expr("(contrib * 85 + 50) div 100").cast("long")).alias("pr"),
+            )
+        )
+    wr = W.orderBy(F.col("pr").desc(), "node")
+    return pr.join(nodes.select("node", "degree"), "node").select(
+        "node", "degree", "strength", "pr", F.rank().over(wr).cast("long").alias("pr_rank")
+    )
+
+
+_pagerank.__doc__ = _pagerank.__doc__.format(iters=_PR_ITERS)
+
+
 @register("graph_pagerank_parts", oracle=_pagerank_oracle())
 def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, {iters} fixed iterations) on the basket
@@ -255,63 +331,19 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is bit-identical across engines, partition counts, and
     executor schedules — the property float PageRank never has.
 
+    This is ``graph_pagerank_weighted`` on unit edge weights (``_pagerank``).
+
     Scale: each iteration is one shuffle — edges join ranks on the source
-    key, aggregate on the destination key.  Edge and rank tables partition
-    by node hash; degrees ride along to avoid a second join.  At 100 TB
-    lineage grows linearly in iterations, so production would
-    ``materialize`` every ~5 rounds; 5 iterations here keeps the
-    oracle's unrolled CTE chain cheap."""
-    t = Catalog(spark, sf_dir)
-    pairs = basket_pairs(t.lineitem, 2).select("u", "v")
-    # materialize the edge table once, pre-partitioned on the join key:
-    # materialize stops the lazy plan inlining the co-occurrence
-    # self-join into every iteration (6× the work, linear lineage growth —
-    # same discipline as dedup_cluster_components), and hashing on ``u``
-    # first means the edge side of every iteration's join reuses this one
-    # partitioning — only the (much smaller) rank table moves per round
-    edges = materialize(both_directions(pairs, "u", "v").repartition("u"))
-    deg = edges.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    base = F.floor(
-        F.lit(float(_PR_SCALE * 15 // 100)) / F.col("n") + F.lit(0.5)
-    ).cast("long")
-    pr = deg.crossJoin(F.broadcast(nn)).select(
-        "node",
-        "deg",
-        F.floor(F.lit(float(_PR_SCALE)) / F.col("n") + F.lit(0.5))
-        .cast("long")
-        .alias("pr"),
-    )
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(pr.withColumnRenamed("node", "u"), "u")
-            .select(
-                F.col("v").alias("node"),
-                F.expr("(pr * 2 + deg) div (deg * 2)").alias("share"),
-            )
-            .groupBy("node")
-            .agg(F.sum("share").cast("long").alias("contrib"))
-        )
-        pr = (
-            deg.crossJoin(F.broadcast(nn))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    base
-                    + F.expr("(coalesce(contrib, 0) * 85 + 50) div 100").cast("long")
-                ).alias("pr"),
-            )
-        )
-    wr = W.orderBy(F.col("pr").desc(), "node")
-    return pr.select(
+    key, aggregate on the destination key.  The edge table is materialized
+    once; the rank table carries each node's strength to avoid a second
+    join.  At 100 TB lineage grows linearly in
+    iterations, so production would ``materialize`` every ~5 rounds; 5
+    iterations here keeps the oracle's unrolled CTE chain cheap."""
+    return _pagerank(Catalog(spark, sf_dir), F.lit(1)).select(
         F.col("node").alias("part_key"),
-        F.col("deg").alias("degree"),
+        "degree",
         F.col("pr").alias("pr_pico"),
-        F.rank().over(wr).cast("long").alias("pr_rank"),
+        "pr_rank",
     )
 
 
@@ -1441,36 +1473,28 @@ JOIN deg d ON d.node = l.node
     return sql
 
 
-def _lpa_core(t: Catalog):
-    """The shared LPA pipeline: the >= 2-basket edge set, symmetric
-    adjacency, degrees, and the fixed-round synchronous label evolution.
-    Returns (pairs, deg, labels) — consumed by the community readout
-    (``graph_label_propagation``) and the partition-quality score
-    (``graph_modularity_score``) so both run one code path."""
-    # feeds the adjacency both ways + intra counts
-    pairs = materialize(basket_pairs(t.lineitem, 2).select("u", "v"))
-    adj = materialize(both_directions(pairs, "u", "v", names=("w", "nbr")))
-    deg = adj.groupBy(F.col("w").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    labels = deg.select("node", F.col("node").alias("lbl"))
+def _lpa(adj: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``(node, lbl)``, materialized: {rounds} synchronous
+    label-propagation rounds over ``_basket_graph``'s adjacency.  Every
+    node starts as its own label and each round takes the label with the
+    largest incident weight sum, ties to the smaller label (Raghavan et
+    al. 2007 §IV's weighted vote; at unit weight the sum is the neighbor
+    count).  All sums are BIGINT and the tie order is
+    total, so both engines replay the same evolution."""
+    labels = nodes.select("node", F.col("node").alias("lbl"))
     # fixed rounds in lockstep with the oracle, so no ``iterate``: the label
     # chain is LINEAR — each round references its predecessor exactly ONCE
     # (through the adj join), so the plan grows linearly, not exponentially,
-    # and the per-round eager materialize the twice-referenced loops
-    # need (k-core, power iteration) only paid {_LPA_ROUNDS} fixed ~0.5 s
-    # job-submission overheads here.  One eager checkpoint AFTER the loop
-    # still gives every caller a flat, materialized-once labels table (the readouts
-    # reference it 2-3x).  Two stash A/B pairs (3-pass min, sf0.1):
-    # LPA 4.17/4.74 s with vs 4.51/5.62 s without; modularity 3.85/4.28
-    # vs 4.30/5.68 — consistently faster both pairs, modest magnitude.
+    # and needs none of the per-round materializations the twice-referenced
+    # loops (k-core, power iteration) take.  One eager checkpoint AFTER the
+    # loop gives every caller a flat, materialized-once labels table (the
+    # readouts reference it 2-3x); that measured faster than none on both
+    # the LPA and the modularity readout.
     for _ in range(_LPA_ROUNDS):
         labels = (
-            adj.join(
-                labels.select(F.col("node").alias("nbr"), "lbl"), "nbr"
-            )
-            .groupBy(F.col("w").alias("node"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
+            adj.join(labels.select(F.col("node").alias("nbr"), "lbl"), "nbr")
+            .groupBy(F.col("src").alias("node"), "lbl")
+            .agg(F.sum("wt").cast("long").alias("c"))
             .withColumn(
                 "rn",
                 F.row_number().over(
@@ -1480,7 +1504,21 @@ def _lpa_core(t: Catalog):
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
         )
-    return pairs, deg, materialize(labels)
+    return materialize(labels)
+
+
+_lpa.__doc__ = _lpa.__doc__.format(rounds=_LPA_ROUNDS)
+
+
+def _communities(t: Catalog, wt: Column) -> DataFrame:
+    """``(node, lbl, community_size, degree, strength)``: each part's
+    ``_lpa`` community with the community's size."""
+    adj, nodes = _basket_graph(t, wt)
+    labels = _lpa(adj, nodes)
+    sz = labels.groupBy("lbl").agg(
+        F.count(F.lit(1)).cast("long").alias("community_size")
+    )
+    return labels.join(sz, "lbl").join(nodes, "node")
 
 
 @register("graph_label_propagation", oracle=_lpa_oracle())
@@ -1512,24 +1550,16 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the edge table's size; the label chain is LINEAR (each round
     referenced once), so there are no per-round checkpoints and
     one eager materialize after the loop keeps every caller's
-    readout flat (see _lpa_core).  At 100 TB the same loop shards by
-    node; the classic
+    readout flat (see ``_lpa``).  This is
+    ``graph_label_propagation_weighted`` on unit edge weights.  At 100 TB
+    the same loop shards by node; the classic
     optimization (only re-propagate changed labels) alters constants,
     not semantics."""
-    t = Catalog(spark, sf_dir)
-    _, deg, labels = _lpa_core(t)
-    sz = labels.groupBy("lbl").agg(
-        F.count(F.lit(1)).cast("long").alias("community_size")
-    )
-    return (
-        labels.join(sz, "lbl")
-        .join(deg, "node")
-        .select(
-            F.col("node").alias("part"),
-            F.col("lbl").alias("community"),
-            "community_size",
-            "degree",
-        )
+    return _communities(Catalog(spark, sf_dir), F.lit(1)).select(
+        F.col("node").alias("part"),
+        F.col("lbl").alias("community"),
+        "community_size",
+        "degree",
     )
 
 
@@ -1574,6 +1604,57 @@ FROM terms CROSS JOIN qt
 """
 
 
+def _modularity(t: Catalog, wt: Column) -> DataFrame:
+    """``(lbl, community_size, w_c, s_c, term_q8, q_total_q8)``: Newman
+    modularity of ``_lpa``'s partition, Q = sum_c [ W_c/W − (S_c/(2W))² ]
+    with W the total edge weight, W_c the intra-community weight and S_c
+    the community's strength mass (Newman 2004, "Analysis of weighted
+    networks").  At unit weight these are the edge count m, the intra
+    edges L_c and the degree mass d_c.  Each term is one double
+    expression quantized to a 1e-8 BIGINT grid, and Q is the integer sum
+    of the terms."""
+    adj, nodes = _basket_graph(t, wt)
+    labels = _lpa(adj, nodes)
+    # the adjacency holds each edge in both directions: the rows leaving a
+    # community sum its strength mass S_c, and those that stay in it sum
+    # twice its intra weight W_c, so halving is exact
+    lnbr = labels.select(F.col("node").alias("nbr"), F.col("lbl").alias("ln"))
+    mass = (
+        adj.join(labels.withColumnRenamed("node", "src"), "src")
+        .join(lnbr, "nbr")
+        .groupBy("lbl")
+        .agg(
+            F.sum("wt").cast("long").alias("s_c"),
+            F.expr("sum(CASE WHEN lbl = ln THEN wt ELSE 0 END) div 2").alias("w_c"),
+        )
+    )
+    size = labels.groupBy("lbl").agg(
+        F.count(F.lit(1)).cast("long").alias("community_size")
+    )
+    wtot = mass.agg(F.expr("sum(s_c) div 2").alias("w"))
+    half = F.col("s_c") * F.lit(1.0) / (F.lit(2) * F.col("w"))
+    # feeds both the rows and the 1-row total
+    terms = materialize(
+        size.join(mass, "lbl")
+        .crossJoin(F.broadcast(wtot))
+        .select(
+            "lbl",
+            "community_size",
+            F.coalesce("w_c", F.lit(0)).cast("long").alias("w_c"),
+            "s_c",
+            F.floor(
+                (F.col("w_c") * F.lit(1.0) / F.col("w") - half * half)
+                * F.lit(100000000)
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("term_q8"),
+        )
+    )
+    qt = terms.groupBy().agg(F.sum("term_q8").cast("long").alias("q_total_q8"))
+    return terms.crossJoin(F.broadcast(qt))
+
+
 @register("graph_modularity_score", oracle=_modularity_oracle())
 def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEWMAN MODULARITY of the LPA partition — the one-number quality
@@ -1595,64 +1676,22 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integers end to end.  Q's range invariant (-0.5 <= Q < 1) and
     a from-scratch Python recompute are pinned in tests.
 
-    Scale: on top of the LPA core (see ``_lpa_core``), one
-    pairs⋈labels⋈labels count for intra edges, one labels⋈degrees
-    aggregate for degree mass, and a 1-row edge-count cross join —
-    all keyed by community; nothing beyond the edge table's size.
+    This is ``graph_modularity_weighted`` on unit edge weights
+    (``_modularity``).
+
+    Scale: on top of ``_lpa``, one adjacency⋈labels⋈labels aggregate for
+    intra edges and degree mass, one community-size count and a 1-row
+    edge-count cross join — all keyed by community; nothing beyond the
+    edge table's size.
 
     Reference parity: the reference stops at pair counts
     (/root/reference/src/features/behavioral_features_engine.py:
     454-485); this scores the block structure those pairs imply."""
-    t = Catalog(spark, sf_dir)
-    pairs, deg, labels = _lpa_core(t)  # labels checkpointed by the core
-    m = pairs.groupBy().agg(F.count(F.lit(1)).cast("long").alias("m"))
-    lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lv"))
-    intra = (
-        pairs.join(lu, "u")
-        .join(lv, "v")
-        .filter(F.col("lu") == F.col("lv"))
-        .groupBy(F.col("lu").alias("lbl"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_c"))
-    )
-    dsum = (
-        labels.join(deg, "node")
-        .groupBy("lbl")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("community_size"),
-            F.sum("degree").cast("long").alias("d_c"),
-        )
-    )
-    half = F.col("d_c") * F.lit(1.0) / (F.lit(2) * F.col("m"))
-    # feeds both the rows and the 1-row total
-    terms = materialize(
-        dsum.join(intra, "lbl", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "lbl",
-            "community_size",
-            F.coalesce("e_c", F.lit(0)).cast("long").alias("e_c"),
-            "d_c",
-            F.floor(
-                (
-                    F.coalesce("e_c", F.lit(0)) * F.lit(1.0) / F.col("m")
-                    - half * half
-                )
-                * F.lit(100000000)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("term_q8"),
-        )
-    )
-    qt = terms.groupBy().agg(
-        F.sum("term_q8").cast("long").alias("q_total_q8")
-    )
-    return terms.crossJoin(F.broadcast(qt)).select(
+    return _modularity(Catalog(spark, sf_dir), F.lit(1)).select(
         F.col("lbl").alias("community"),
         "community_size",
-        F.col("e_c").alias("intra_edges"),
-        F.col("d_c").alias("degree_sum"),
+        F.col("w_c").alias("intra_edges"),
+        F.col("s_c").alias("degree_sum"),
         "term_q8",
         "q_total_q8",
     )
@@ -1865,8 +1904,8 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization keeps the step closed over integers; it rescales, not
     reorients, so the fixed direction is the same eigenvector.
 
-    Scale: each iteration joins the edge table (pre-partitioned on u,
-    checkpointed once) to the node-sized state and aggregates on the
+    Scale: each iteration joins ``_basket_graph``'s edge table
+    (materialized once) to the node-sized state and aggregates on the
     destination — one shuffle per iteration, the textbook distributed
     power method; the normalizer is a 1-row broadcast.  Per-iteration
     eager materialize keeps the two-reference plan linear.
@@ -1874,20 +1913,15 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: extends /root/reference/src/features/
     behavioral_features_engine.py:454-485 (pair counts) to spectral
     structure; the reference has no graph layer."""
-    t = Catalog(spark, sf_dir)
-    pairs = basket_pairs(t.lineitem, 2).select("u", "v")
-    edges = materialize(both_directions(pairs, "u", "v").repartition("u"))
-    deg = edges.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    x = deg.select("node", F.lit(_EIG_SCALE).cast("long").alias("x"))
+    adj, nodes = _basket_graph(Catalog(spark, sf_dir), F.lit(1))
+    x = nodes.select("node", F.lit(_EIG_SCALE).cast("long").alias("x"))
     # fixed iterations in lockstep with the oracle, not ``iterate``: there
     # is no convergence test to share
     for _ in range(_EIG_ITERS):
         # referenced twice below: keep the plan linear
         v = materialize(
-            edges.join(x.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"))
+            adj.join(x.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("nbr").alias("node"))
             .agg(F.sum("x").cast("long").alias("s"))
         )
         m = v.agg(F.max("s").alias("m"))
@@ -1898,7 +1932,7 @@ def graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x"),
         )
     wr = W.orderBy(F.col("x").desc(), "node")
-    return deg.join(x, "node").select(
+    return nodes.join(x, "node").select(
         F.col("node").alias("part"),
         "degree",
         F.col("x").alias("eig_scaled"),
@@ -1914,8 +1948,9 @@ graph_eigencentrality.__doc__ = graph_eigencentrality.__doc__.format(
 
 # ---------------------------------------------------------------------------
 # WEIGHTED graph family: the identical >= 2-basket co-occurrence
-# graph, but the co-basket COUNT — computed by every unweighted query and
-# then discarded — is kept as the edge weight.  The reference's pair
+# graph with the co-basket COUNT kept as the edge weight.  It is the
+# general case: ``_basket_graph`` with unit weights gives the unweighted
+# queries above, so each algorithm has one body.  The reference's pair
 # analysis COUNTS co-occurrences
 # (/root/reference/src/features/behavioral_features_engine.py:457-485), so
 # the weighted forms (weighted LPA votes, weighted Newman Q, strength-
@@ -1940,51 +1975,6 @@ st AS MATERIALIZED (
   SELECT src AS node, CAST(sum(wt) AS BIGINT) AS strength,
          CAST(count(*) AS BIGINT) AS degree
   FROM adj GROUP BY 1)"""
-
-
-def _weighted_graph(t: Catalog):
-    """The Spark twin of ``_weighted_edge_sql``: (pairs, adj, st), with
-    pairs and adj eagerly checkpointed (both feed several consumers).
-    The edge CONTRACT is the one every unweighted graph query declares
-    (see ``_lpa_core``): nodes = parts, an edge iff co-ordered in >= 2
-    baskets — only the count survives as ``wt`` instead of being
-    dropped."""
-    # feeds adjacency both ways + intra-weight sums
-    pairs = materialize(basket_pairs(t.lineitem, 2, n="wt"))
-    adj = materialize(both_directions(pairs, "u", "v", "wt", names=("src", "nbr")))
-    st = adj.groupBy(F.col("src").alias("node")).agg(
-        F.sum("wt").cast("long").alias("strength"),
-        F.count(F.lit(1)).cast("long").alias("degree"),
-    )
-    return pairs, adj, st
-
-
-def _wlpa_core(t: Catalog):
-    """Weighted synchronous LPA: ``_lpa_core``'s fixed-round evolution
-    with the vote changed from neighbor COUNT to neighbor WEIGHT SUM
-    (Raghavan et al. 2007 §IV's weighted form) — ties broken (weight
-    desc, label asc), all sums BIGINT, so the evolution is exact set
-    algebra both engines replay identically.  Returns
-    (pairs, st, labels)."""
-    pairs, adj, st = _weighted_graph(t)
-    labels = st.select("node", F.col("node").alias("lbl"))
-    # linear chain: no per-round checkpoint needed — one eager checkpoint
-    # after the loop (see _lpa_core)
-    for _ in range(_LPA_ROUNDS):
-        labels = (
-            adj.join(labels.select(F.col("node").alias("nbr"), "lbl"), "nbr")
-            .groupBy(F.col("src").alias("node"), "lbl")
-            .agg(F.sum("wt").cast("long").alias("c"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("node").orderBy(F.col("c").desc(), "lbl")
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select("node", "lbl")
-        )
-    return pairs, st, materialize(labels)
 
 
 def _wlpa_oracle() -> str:
@@ -2040,23 +2030,14 @@ def graph_label_propagation_weighted(spark: SparkSession, sf_dir: str) -> DataFr
     window, hash-partitioned by node.  The label chain is LINEAR (each
     round referenced once), so there are no per-round checkpoints; one
     eager materialize after the loop keeps every caller's
-    readout flat (see _wlpa_core).  The weight column rides the same
+    readout flat (see ``_lpa``).  The weight column rides the same
     shuffles the count used; cost is unchanged at any scale."""
-    t = Catalog(spark, sf_dir)
-    _, st, labels = _wlpa_core(t)
-    sz = labels.groupBy("lbl").agg(
-        F.count(F.lit(1)).cast("long").alias("community_size")
-    )
-    return (
-        labels.join(sz, "lbl")
-        .join(st, "node")
-        .select(
-            F.col("node").alias("part"),
-            F.col("lbl").alias("community"),
-            "community_size",
-            "strength",
-            "degree",
-        )
+    return _communities(Catalog(spark, sf_dir), F.col("wt")).select(
+        F.col("node").alias("part"),
+        F.col("lbl").alias("community"),
+        "community_size",
+        "strength",
+        "degree",
     )
 
 
@@ -2119,61 +2100,16 @@ def graph_modularity_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     end.  The range invariant (-0.5 <= Q < 1) and a from-scratch
     Python recompute are pinned in tests.
 
-    Scale: on top of the weighted LPA core, one pairs⋈labels⋈labels
-    weight sum for intra mass, one labels⋈strengths aggregate, and a
-    1-row total cross join — all keyed by community; nothing beyond the
-    edge table's size.
+    Scale: on top of ``_lpa``, one adjacency⋈labels⋈labels aggregate for
+    intra weight and strength mass, one community-size count and a 1-row
+    total cross join — all keyed by community; nothing beyond the edge
+    table's size.
 
     Reference parity: the reference stops at pair counts
     (/root/reference/src/features/behavioral_features_engine.py:
     457-485); this scores the weighted block structure those counts
     imply."""
-    t = Catalog(spark, sf_dir)
-    pairs, st, labels = _wlpa_core(t)  # labels checkpointed by the core
-    wtot = pairs.groupBy().agg(F.sum("wt").cast("long").alias("w"))
-    lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lv"))
-    intra = (
-        pairs.join(lu, "u")
-        .join(lv, "v")
-        .filter(F.col("lu") == F.col("lv"))
-        .groupBy(F.col("lu").alias("lbl"))
-        .agg(F.sum("wt").cast("long").alias("w_c"))
-    )
-    ssum = (
-        labels.join(st, "node")
-        .groupBy("lbl")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("community_size"),
-            F.sum("strength").cast("long").alias("s_c"),
-        )
-    )
-    half = F.col("s_c") * F.lit(1.0) / (F.lit(2) * F.col("w"))
-    # feeds both the rows and the 1-row total
-    terms = materialize(
-        ssum.join(intra, "lbl", "left")
-        .crossJoin(F.broadcast(wtot))
-        .select(
-            "lbl",
-            "community_size",
-            F.coalesce("w_c", F.lit(0)).cast("long").alias("w_c"),
-            "s_c",
-            F.floor(
-                (
-                    F.coalesce("w_c", F.lit(0)) * F.lit(1.0) / F.col("w")
-                    - half * half
-                )
-                * F.lit(100000000)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("term_q8"),
-        )
-    )
-    qt = terms.groupBy().agg(
-        F.sum("term_q8").cast("long").alias("q_total_q8")
-    )
-    return terms.crossJoin(F.broadcast(qt)).select(
+    return _modularity(Catalog(spark, sf_dir), F.col("wt")).select(
         F.col("lbl").alias("community"),
         "community_size",
         F.col("w_c").alias("intra_weight"),
@@ -2241,58 +2177,15 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     far below 2^63 for any co-basket count this schema can produce.)
 
     Scale: identical shuffle shape to the unweighted query — edges
-    pre-partitioned on the source key once (checkpointed), one
-    edges⋈ranks join + destination-keyed sum per iteration; strength
-    rides with the rank table to avoid a second join."""
-    t = Catalog(spark, sf_dir)
-    _, adj, st = _weighted_graph(t)
-    edges = materialize(adj.repartition("src"))
-    st = materialize(st)  # node-sized; read every iteration + readout
-    nn = st.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    base = F.floor(
-        F.lit(float(_PR_SCALE * 15 // 100)) / F.col("n") + F.lit(0.5)
-    ).cast("long")
-    pr = st.crossJoin(F.broadcast(nn)).select(
-        "node",
-        "strength",
-        F.floor(F.lit(float(_PR_SCALE)) / F.col("n") + F.lit(0.5))
-        .cast("long")
-        .alias("pr"),
-    )
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(pr.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("nbr").alias("node"),
-                F.expr("(pr * 2 * wt + strength) div (strength * 2)").alias(
-                    "share"
-                ),
-            )
-            .groupBy("node")
-            .agg(F.sum("share").cast("long").alias("contrib"))
-        )
-        pr = (
-            st.select("node", "strength")
-            .crossJoin(F.broadcast(nn))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                "strength",
-                (
-                    base
-                    + F.expr("(coalesce(contrib, 0) * 85 + 50) div 100").cast(
-                        "long"
-                    )
-                ).alias("pr"),
-            )
-        )
-    wr = W.orderBy(F.col("pr").desc(), "node")
-    return pr.join(st.select("node", "degree"), "node").select(
+    materialized once, one edges⋈ranks join + destination-keyed sum per
+    iteration (``_pagerank``); strength rides with the rank table to
+    avoid a second join."""
+    return _pagerank(Catalog(spark, sf_dir), F.col("wt")).select(
         F.col("node").alias("part_key"),
         "degree",
         "strength",
         F.col("pr").alias("pr_pico"),
-        F.rank().over(wr).cast("long").alias("pr_rank"),
+        "pr_rank",
     )
 
 

@@ -201,9 +201,11 @@ def croston_ses_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = stepped.select(
         "l_suppkey", m.alias("m"), sizes.alias("sizes"), ivs.alias("ivs")
     )
+    # a series with no demand event has no sizes: the seed is null there
+    # (the forecast is null below two events anyway)
     ses = lambda lst: F.aggregate(  # noqa: E731
         _tail(lst, 1),
-        F.element_at(lst, 1).cast("double"),
+        F.try_element_at(lst, F.lit(1)).cast("double"),
         lambda a, x: F.lit(0.1) * x + F.lit(0.9) * a,
     )
     fit = se.select(
@@ -439,12 +441,15 @@ def ar2_yule_walker_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r0 * r0 - r1 * r1).alias("den"),
     )
     den = F.col("den")
+    # a constant or one-day series has den = 0: its fit is null (ok is
+    # false), and neither division nor the lag-2 read may abort the query
+    solvable = den > 0
     p = d.select(
         "l_suppkey", "n", "mu", "r0", "r1", "r2", "den",
-        (r1 * (r0 - r2) / den).alias("phi1"),
-        ((r0 * r2 - r1 * r1) / den).alias("phi2"),
+        F.when(solvable, r1 * (r0 - r2) / den).alias("phi1"),
+        F.when(solvable, (r0 * r2 - r1 * r1) / den).alias("phi2"),
         F.element_at(qs, -1).alias("y1"),
-        F.element_at(qs, -2).alias("y2"),
+        F.try_element_at(qs, F.lit(-2)).alias("y2"),
         ((n >= 5) & (r0 > 0) & (den > 0)).alias("ok"),
     )
     phi1, phi2 = F.col("phi1"), F.col("phi2")

@@ -33,11 +33,18 @@ from hackatonbigdata_spark.registry import register
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
     BLOOM_M,
+    CMS_D,
+    CMS_MONITORED,
+    CMS_W,
     HLL_ALPHA64,
     HLL_M,
     HLL_W,
     KLL_K,
     KLL_LEVELS,
+    KMV_K,
+    QUANT_PCTS,
+    SAMPLE_K,
+    bloom_pos_sql,
 )
 
 
@@ -1487,9 +1494,6 @@ def _returning_exact(hu: DataFrame) -> DataFrame:
     )
 
 
-KMV_OVERLAP_K = 32  # bottom-k budget (== streaming/jobs.py KMV_K)
-
-
 @register(
     "sketch_kmv_overlap",
     oracle=f"""
@@ -1501,7 +1505,7 @@ hd AS (SELECT DISTINCT hour,
 sk AS (SELECT hour, h FROM (
          SELECT hour, h, row_number() OVER (PARTITION BY hour ORDER BY h)
                 AS rn
-         FROM hd) WHERE rn <= {KMV_OVERLAP_K}),
+         FROM hd) WHERE rn <= {KMV_K}),
 uni AS (SELECT hour, h, mn FROM (
           SELECT u.hour, u.h, row_number() OVER (PARTITION BY u.hour
                                                  ORDER BY u.h) AS mn
@@ -1510,7 +1514,7 @@ uni AS (SELECT hour, h, mn FROM (
                 UNION
                 SELECT bh.hour, sk.h FROM bh
                 JOIN sk ON sk.hour = bh.hour) u)
-        WHERE mn <= {KMV_OVERLAP_K}),
+        WHERE mn <= {KMV_K}),
 st AS (SELECT uni.hour,
               CAST(count(*) AS BIGINT) AS n_merged,
               CAST(max(uni.h) AS BIGINT) AS kth,
@@ -1522,9 +1526,9 @@ st AS (SELECT uni.hour,
        LEFT JOIN sk pb ON pb.hour = uni.hour AND pb.h = uni.h
        GROUP BY 1),
 est AS (SELECT hour, n_merged, n_matches,
-               n_merged < {KMV_OVERLAP_K} AS is_exact,
-               CASE WHEN n_merged < {KMV_OVERLAP_K} THEN n_merged
-                    ELSE CAST(floor(({KMV_OVERLAP_K} - 1)
+               n_merged < {KMV_K} AS is_exact,
+               CASE WHEN n_merged < {KMV_K} THEN n_merged
+                    ELSE CAST(floor(({KMV_K} - 1)
                               * CAST({1 << 52} AS DOUBLE) / (kth + 1)
                               + 0.5) AS BIGINT) END AS est_union
         FROM st)
@@ -1539,7 +1543,7 @@ FROM est LEFT JOIN ret ON ret.hour = est.hour
 def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (bottom-k) SET INTERSECTION — the exact-under-budget
     companion to ``stream_hll_returning_users``'s inclusion-exclusion:
-    hour-over-hour returning users from each hour's {KMV_OVERLAP_K}
+    hour-over-hour returning users from each hour's {KMV_K}
     smallest user-id hashes.  The union sketch of two bottom-k sets is
     the bottom-k of their union (a pure set-of-minima merge); every
     union-sketch member that lies in BOTH input sketches is a certified
@@ -1566,9 +1570,9 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(matches·est_union/|K| + 0.5) — single identically-structured
     float expressions on exact integers.
 
-    Scale: state is {KMV_OVERLAP_K} longs per hour (the kernel already
+    Scale: state is {KMV_K} longs per hour (the kernel already
     holds it); the query shuffles one row per (hour, user) for the
-    distinct, then everything is ≤{KMV_OVERLAP_K}-rows-per-hour —
+    distinct, then everything is ≤{KMV_K}-rows-per-hour —
     the audience-overlap readout every sketch store serves.
 
     Reference parity: the per-key windowed monitoring count
@@ -1576,7 +1580,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-reset counting loop), answered from bounded sketch state
     with an exactness certificate instead of a full recount."""
     t = Catalog(spark, sf_dir)
-    k = KMV_OVERLAP_K
+    k = KMV_K
     hu = _hourly_users(t)
     hd = hu.select(
         "hour",
@@ -1671,9 +1675,6 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_K = 8  # bottom-k uniform sample size per hour
-
-
 @register(
     "stream_hourly_sample",
     oracle=f"""
@@ -1761,11 +1762,6 @@ def stream_user_trailing_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_window"),
         )
     )
-
-
-CMS_D = 4  # count-min sketch depth (hash rows)
-CMS_W = 64  # count-min sketch width (buckets per row)
-CMS_MONITORED = 8  # point-query set: user ids 0..7
 
 
 def _cms_bucket_sql(d_expr: str, u_expr: str) -> str:
@@ -1878,9 +1874,6 @@ stream_hourly_cms.__doc__ = (
 )
 
 
-QUANT_PCTS = (50, 90, 99)  # per-hour percentiles the histogram kernel serves
-
-
 @register(
     "stream_hourly_value_quantiles",
     oracle=f"""
@@ -1963,20 +1956,13 @@ def stream_hourly_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
 # this twin can never desync.
 
 
-def _bloom_pos_sql(j_expr: str, u_expr: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST({j_expr} AS VARCHAR) || ':' || "
-        f"CAST({u_expr} AS VARCHAR)), 1, 8)) AS BIGINT) % {BLOOM_M}"
-    )
-
-
 @register(
     "stream_hourly_bloom",
     oracle=f"""
 WITH c AS (SELECT DISTINCT date_trunc('hour', ts) AS hour, user_id
            FROM events),
 jj AS (SELECT * FROM (VALUES {', '.join(f'({j})' for j in range(BLOOM_K))}) t(j)),
-bits AS (SELECT DISTINCT hour, {_bloom_pos_sql('jj.j', 'c.user_id')} AS b
+bits AS (SELECT DISTINCT hour, {bloom_pos_sql('jj.j', 'CAST(c.user_id AS VARCHAR)')} AS b
          FROM c CROSS JOIN jj),
 bc AS (SELECT hour, CAST(count(*) AS BIGINT) AS n_bits_set
        FROM bits GROUP BY 1),

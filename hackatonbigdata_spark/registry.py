@@ -62,14 +62,29 @@ def _load_all() -> None:
 # every other name follows in registration order.  Every name listed must
 # be registered.
 _PRIORITY: list[str] = [
-    "ewm_pandas_per_series",
-    "sequential_clamp_per_series",
-    "rolling_autocorr_per_series",
-    "holt_winters_per_series",
+    "graph_pagerank_parts",
+    "graph_pagerank_weighted",
+    "graph_label_propagation",
+    "graph_label_propagation_weighted",
+    "graph_modularity_score",
+    "graph_modularity_weighted",
+    "graph_eigencentrality",
     "ar2_yule_walker_per_series",
     "ar2_yule_walker_sql",
     "croston_per_series",
     "croston_ses_sql",
+    "sketch_kmv_overlap",
+    "stream_hourly_sample",
+    "stream_hourly_cms",
+    "stream_hourly_value_quantiles",
+    "sketch_kll_quantiles",
+    "sketch_kll_merge_daily",
+    "stream_hourly_bloom",
+    "dedup_bloom_gate",
+    "ewm_pandas_per_series",
+    "sequential_clamp_per_series",
+    "rolling_autocorr_per_series",
+    "holt_winters_per_series",
     "ewm_daily_store",
     "holt_level_trend",
     "window_rolling_multiscale",
@@ -83,24 +98,13 @@ _PRIORITY: list[str] = [
     "dedup_pipeline_report",
     "dedup_savings_report",
     "io_upsert_roundtrip",
-    "graph_pagerank_parts",
-    "graph_eigencentrality",
     "basket_association_rules",
     "graph_link_prediction",
-    "graph_label_propagation",
-    "graph_modularity_score",
-    "graph_label_propagation_weighted",
-    "graph_modularity_weighted",
-    "graph_pagerank_weighted",
     "graph_triangle_count",
     "graph_kcore_decomposition",
     "similarity_ivfpq_nprobe",
     "sample_scan",
     "io_bloom_skip_lookup",
-    "stream_hourly_sample",
-    "stream_hourly_cms",
-    "stream_hourly_bloom",
-    "dedup_bloom_gate",
     "calibration_subsample_uncertainty",
     "dedup_simhash",
     "encode_feature_hashing",
@@ -109,8 +113,6 @@ _PRIORITY: list[str] = [
     "text_chunk_windows",
     "corpus_curation_pipeline",
     "corpus_dsir_weights",
-    "sketch_kll_quantiles",
-    "sketch_kll_merge_daily",
     "similarity_ivf_bucketed",
     "dedup_semdedup_ivf",
     "cooccurrence_pairs",
@@ -138,7 +140,6 @@ _PRIORITY: list[str] = [
     "corpus_budget_selection",
     "stream_hourly_distinct",
     "stream_user_trailing_count",
-    "stream_hourly_value_quantiles",
     "dedup_lines_ccnet",
     "embedding_pq_eval",
     "mm_ppm_pixel_stats",

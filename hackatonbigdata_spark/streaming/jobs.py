@@ -66,10 +66,16 @@ from hackatonbigdata_spark.functions.core import py_h32, r4
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
     BLOOM_M,
+    CMS_D,
+    CMS_MONITORED,
+    CMS_W,
     HLL_ALPHA64,
     HLL_M,
     HLL_W,
     KLL_K,
+    KMV_K,
+    QUANT_PCTS,
+    SAMPLE_K,
 )
 
 WATERMARK = "10 minutes"
@@ -1316,7 +1322,6 @@ def heavyhitters_topk_stream(events: DataFrame, k: int = HH_K) -> DataFrame:
     )
 
 
-KMV_K = 32  # bottom-k budget per hour bucket
 _M64 = (1 << 64) - 1
 _M63 = (1 << 63) - 1  # sketch hashes masked to 63 bits (fit a signed long)
 
@@ -1401,9 +1406,6 @@ def distinct_kmv_stream(events: DataFrame, k: int = KMV_K) -> DataFrame:
             dict(zip(("n_users", "exact"), kmv_estimate(sketch, k)))
         ],
     )
-
-
-SAMPLE_K = 8  # bottom-k uniform-sample budget per hour (== batch twin's)
 
 
 def sample_hash(event_id: int) -> int:
@@ -1598,10 +1600,6 @@ def trailing_count_dgim_stream(
 
 # --- count-min sketch: per-hour frequency point queries ---------------------
 
-CMS_D = 4  # sketch depth — must match the oracled batch twin
-CMS_W = 64  # sketch width
-CMS_MONITORED = tuple(range(8))  # point-query keys: user ids 0..7
-
 
 def cms_hash(d: int, x: int, w: int = CMS_W) -> int:
     """Engine-shared CMS bucket hash: first 8 hex chars of md5("d:x") mod
@@ -1640,7 +1638,7 @@ def freq_cms_stream(
     events: DataFrame,
     d: int = CMS_D,
     w: int = CMS_W,
-    monitored: tuple = CMS_MONITORED,
+    monitored: tuple = tuple(range(CMS_MONITORED)),
 ) -> DataFrame:
     """Per-hour frequency point queries with BOUNDED state: each hour
     bucket holds one d x w count-min sketch (Cormode & Muthukrishnan
@@ -1677,8 +1675,6 @@ def freq_cms_stream(
 
 
 # --- fixed-grid histogram: per-hour exact quantiles -------------------------
-
-QUANT_PCTS = (50, 90, 99)  # must match the oracled batch twin
 
 
 def hist_cent(v: float) -> int:

@@ -69,6 +69,14 @@ OWNED_CALLS = [
     ),
     # the Python twin of the cross-engine hash ``h32`` lives beside it
     pytest.param(r"hexdigest\(\)\[:8\]", ["functions/core.py"], id="py_h32"),
+    # stream kernels and their batch twins must agree on every sketch
+    # parameter, so each is assigned once, in sketch_params
+    pytest.param(
+        r"^(BLOOM_M|BLOOM_K|HLL_M|HLL_W|HLL_ALPHA64|KLL_K|KLL_LEVELS"
+        r"|KMV_K|SAMPLE_K|CMS_D|CMS_W|CMS_MONITORED|QUANT_PCTS)\b\s*[:=]",
+        ["sketch_params.py"],
+        id="sketch_params",
+    ),
 ]
 
 

@@ -2060,58 +2060,6 @@ def test_stl_residuals_match_python_decomposition(spark):
     assert border <= max(2, len(want) // 20), (border, len(want), len(got))
 
 
-def test_eigencentrality_trajectory_and_direction(spark):
-    """Two independent pins: (1) the integer power-method trajectory
-    replicated exactly in pure Python over DuckDB-pulled adjacency —
-    every eig_scaled value must match bit-for-bit; (2) the resulting
-    direction must align with numpy's true principal eigenvector of the
-    adjacency matrix (cosine > 0.999), proving eight iterations actually
-    converge in direction on this graph."""
-    import numpy as np
-
-    import duckdb
-
-    from hackatonbigdata_spark.operators.sequence import _EIG_ITERS, _EIG_SCALE
-
-    edges = duckdb.connect().execute(f"""
-        WITH items AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM '{SF_DIR}/lineitem.parquet'
-        )
-        SELECT a.l_partkey, b.l_partkey
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2
-    """).fetchall()
-    nbrs: dict[int, list[int]] = {}
-    for u, v in edges:
-        nbrs.setdefault(u, []).append(v)
-        nbrs.setdefault(v, []).append(u)
-    nodes = sorted(nbrs)
-    x = {n: _EIG_SCALE for n in nodes}
-    for _ in range(_EIG_ITERS):
-        s = {n: sum(x[m] for m in nbrs[n]) for n in nodes}
-        mx = max(s.values())
-        x = {n: (2 * _EIG_SCALE * s[n] + mx) // (2 * mx) for n in nodes}
-    got = {
-        r.part: r for r in QUERIES["graph_eigencentrality"](spark, SF_DIR).collect()
-    }
-    assert set(got) == set(nodes)
-    for n in nodes:
-        assert got[n].eig_scaled == x[n], (n, got[n].eig_scaled, x[n])
-        assert got[n].degree == len(nbrs[n])
-    idx = {n: i for i, n in enumerate(nodes)}
-    A = np.zeros((len(nodes), len(nodes)))
-    for u, ms in nbrs.items():
-        for m in ms:
-            A[idx[u], idx[m]] = 1.0
-    w, V = np.linalg.eigh(A)
-    true_vec = np.abs(V[:, np.argmax(w)])
-    ours = np.array([x[n] for n in nodes], dtype=float)
-    cos = ours @ true_vec / (np.linalg.norm(ours) * np.linalg.norm(true_vec))
-    assert cos > 0.999, cos
-
-
 def test_srm_check_matches_python(spark):
     """SRM re-derived independently: distinct (type, user) sets in
     Python, the textbook two-cell sum (O-E)^2/E (not the operator's
@@ -2323,38 +2271,6 @@ def test_metric_family_cross_consistency(spark):
             pr[k].prevalence
             - roc[k].n_pos / (roc[k].n_pos + roc[k].n_neg)
         ) <= 1e-3
-
-
-def test_graph_family_shares_one_edge_set(spark):
-    """Five graph operators declare the same >= 2-basket co-occurrence
-    graph; the per-node degree columns of PageRank, triangle counting,
-    k-core, and eigencentrality must be identical node-for-node, and
-    link prediction's candidate pairs must never include an existing
-    edge (its anti-join contract) — drift in any one query's edge
-    construction breaks this immediately."""
-    pr = {r.part_key: r.degree for r in QUERIES["graph_pagerank_parts"](spark, SF_DIR).collect()}
-    tri = {r.part: r.degree for r in QUERIES["graph_triangle_count"](spark, SF_DIR).collect()}
-    kc = {r.part: r.degree for r in QUERIES["graph_kcore_decomposition"](spark, SF_DIR).collect()}
-    eig = {r.part: r.degree for r in QUERIES["graph_eigencentrality"](spark, SF_DIR).collect()}
-    assert pr == tri == kc == eig
-    import duckdb
-
-    edges = {
-        (u, v)
-        for u, v in duckdb.connect().execute(f"""
-            WITH items AS (
-              SELECT DISTINCT l_orderkey, l_partkey
-              FROM '{SF_DIR}/lineitem.parquet'
-            )
-            SELECT a.l_partkey, b.l_partkey
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2 HAVING count(*) >= 2
-        """).fetchall()
-    }
-    lp = QUERIES["graph_link_prediction"](spark, SF_DIR).collect()
-    assert all((r.part_a, r.part_b) not in edges for r in lp)
-    assert all(r.part_a in pr and r.part_b in pr for r in lp)
 
 
 def test_ece_consistent_with_calibration_curve(spark):

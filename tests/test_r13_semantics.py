@@ -570,138 +570,3 @@ def test_expire_snapshots_swap_is_crash_recoverable(spark, tmp_path):
     # fc is the dir-listing-minus-manifest orphan (snapshot 1 is gone)
     paths = {r.path for r in spark.read.parquet(man).collect()}
     assert paths == {os.path.join(base, "fa")}
-
-
-# --- label-propagation communities ------------------------------------------
-
-
-def test_label_propagation_matches_python(spark):
-    """Synchronous LPA re-derived in pure Python from DuckDB-loaded
-    lineitem: the >= 2-basket edge set, node-id init, and four rounds of
-    mode-of-neighbor-labels with the (count desc, label asc) tie order —
-    matched node for node.  Plus the structural invariants: every
-    community is contained in one connected component (labels cannot
-    cross components), and community sizes partition the node set."""
-    import duckdb
-
-    from hackatonbigdata_spark.operators.sequence import _LPA_ROUNDS
-
-    rows = duckdb.connect().execute(f"""
-        WITH items AS (SELECT DISTINCT l_orderkey, l_partkey
-                       FROM '{SF_DIR}/lineitem.parquet')
-        SELECT a.l_partkey, b.l_partkey
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2
-    """).fetchall()
-    adj: dict[int, list[int]] = {}
-    for u, v in rows:
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
-    lbl = {v: v for v in adj}
-    for _ in range(_LPA_ROUNDS):
-        new = {}
-        for v, nbs in adj.items():
-            counts: dict[int, int] = {}
-            for u in nbs:
-                counts[lbl[u]] = counts.get(lbl[u], 0) + 1
-            new[v] = min(counts, key=lambda k: (-counts[k], k))
-        lbl = new
-    sizes: dict[int, int] = {}
-    for v in adj:
-        sizes[lbl[v]] = sizes.get(lbl[v], 0) + 1
-
-    got = QUERIES["graph_label_propagation"](spark, SF_DIR).collect()
-    assert len(got) == len(adj) > 0
-    for r in got:
-        assert r.community == lbl[r.part], f"part {r.part}"
-        assert r.community_size == sizes[lbl[r.part]]
-        assert r.degree == len(adj[r.part])
-    # invariant: no label crosses a connected component (union-find)
-    parent = {v: v for v in adj}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in rows:
-        parent[find(u)] = find(v)
-    comp_of_label: dict[int, int] = {}
-    for v in adj:
-        c = find(v)
-        assert comp_of_label.setdefault(lbl[v], c) == c, (
-            f"label {lbl[v]} spans two components"
-        )
-    # sizes partition the node set
-    assert sum(sizes.values()) == len(adj)
-
-
-def test_modularity_matches_python(spark):
-    """Newman modularity re-derived from scratch in Python: the same
-    edge set and LPA labels (the previous test's replay), intra-edge and
-    degree-mass counts per community, each term quantized to the 1e-8
-    grid with round-half-up, Q as the integer sum — matched row for row.
-    Plus the metric's range invariant -0.5 <= Q < 1."""
-    import duckdb
-
-    from hackatonbigdata_spark.operators.sequence import _LPA_ROUNDS
-
-    rows = duckdb.connect().execute(f"""
-        WITH items AS (SELECT DISTINCT l_orderkey, l_partkey
-                       FROM '{SF_DIR}/lineitem.parquet')
-        SELECT a.l_partkey, b.l_partkey
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2
-    """).fetchall()
-    adj: dict[int, list[int]] = {}
-    for u, v in rows:
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
-    lbl = {v: v for v in adj}
-    for _ in range(_LPA_ROUNDS):
-        new = {}
-        for v, nbs in adj.items():
-            counts: dict[int, int] = {}
-            for u in nbs:
-                counts[lbl[u]] = counts.get(lbl[u], 0) + 1
-            new[v] = min(counts, key=lambda k: (-counts[k], k))
-        lbl = new
-
-    import math
-
-    m = len(rows)
-    e_c: dict[int, int] = {}
-    for u, v in rows:
-        if lbl[u] == lbl[v]:
-            e_c[lbl[u]] = e_c.get(lbl[u], 0) + 1
-    d_c: dict[int, int] = {}
-    size: dict[int, int] = {}
-    for v, nbs in adj.items():
-        d_c[lbl[v]] = d_c.get(lbl[v], 0) + len(nbs)
-        size[lbl[v]] = size.get(lbl[v], 0) + 1
-    term = {
-        c: int(
-            math.floor(
-                (e_c.get(c, 0) / m - (d_c[c] / (2 * m)) ** 2) * 1e8 + 0.5
-            )
-        )
-        for c in d_c
-    }
-    q8 = sum(term.values())
-
-    got = QUERIES["graph_modularity_score"](spark, SF_DIR).collect()
-    assert len(got) == len(d_c) > 0
-    for r in got:
-        c = r.community
-        assert (
-            r.community_size,
-            r.intra_edges,
-            r.degree_sum,
-            r.term_q8,
-            r.q_total_q8,
-        ) == (size[c], e_c.get(c, 0), d_c[c], term[c], q8), f"community {c}"
-    # Newman's range: -1/2 <= Q < 1 (on the 1e-8 grid)
-    assert -50_000_000 <= q8 < 100_000_000

@@ -2,15 +2,11 @@
 
 Same contract as test_r7..r13_semantics: the oracle parity suite proves
 Spark == DuckDB; these tests guard against both engines computing the
-same WRONG thing by re-deriving behavior independently (weighted LPA /
-weighted Newman Q / weighted PageRank replayed in pure Python), and
-extend the graph family's shared edge-set contract to the weighted
-queries.
+same WRONG thing by re-deriving behavior independently.  The weighted
+graph pins live in test_graph.py.
 """
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 
@@ -19,191 +15,6 @@ from hackatonbigdata_spark.registry import all_queries
 QUERIES = all_queries()
 
 from tests.conftest import SF_DIR  # noqa: E402
-
-
-def _weighted_edges():
-    """The weighted >= 2-basket edge list [(u, v, wt)] straight from
-    DuckDB — the independent rebuild of the family's shared contract."""
-    return duckdb.connect().execute(f"""
-        WITH items AS (SELECT DISTINCT l_orderkey, l_partkey
-                       FROM '{SF_DIR}/lineitem.parquet')
-        SELECT a.l_partkey, b.l_partkey, CAST(count(*) AS BIGINT)
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2
-    """).fetchall()
-
-
-def _wadj(rows):
-    adj: dict[int, list[tuple[int, int]]] = {}
-    for u, v, w in rows:
-        adj.setdefault(u, []).append((v, w))
-        adj.setdefault(v, []).append((u, w))
-    return adj
-
-
-def _wlpa_labels(adj, rounds):
-    """Synchronous weighted LPA in pure Python: vote = sum of incident
-    edge weights per neighbor label, tie (weight desc, label asc)."""
-    lbl = {v: v for v in adj}
-    for _ in range(rounds):
-        new = {}
-        for v, nbs in adj.items():
-            votes: dict[int, int] = {}
-            for u, w in nbs:
-                votes[lbl[u]] = votes.get(lbl[u], 0) + w
-            new[v] = min(votes, key=lambda k: (-votes[k], k))
-        lbl = new
-    return lbl
-
-
-def test_weighted_lpa_matches_python(spark):
-    """Weighted LPA re-derived in pure Python from DuckDB-loaded
-    lineitem, matched node for node; strength/degree re-derived from
-    the same edge list; community sizes partition the node set."""
-    from hackatonbigdata_spark.operators.sequence import _LPA_ROUNDS
-
-    rows = _weighted_edges()
-    adj = _wadj(rows)
-    lbl = _wlpa_labels(adj, _LPA_ROUNDS)
-    sizes: dict[int, int] = {}
-    for v in adj:
-        sizes[lbl[v]] = sizes.get(lbl[v], 0) + 1
-
-    got = QUERIES["graph_label_propagation_weighted"](spark, SF_DIR).collect()
-    assert len(got) == len(adj) > 0
-    for r in got:
-        assert r.community == lbl[r.part], f"part {r.part}"
-        assert r.community_size == sizes[lbl[r.part]]
-        assert r.degree == len(adj[r.part])
-        assert r.strength == sum(w for _, w in adj[r.part])
-        # every weight is a >= 2-basket count, so strength >= 2*degree
-        assert r.strength >= 2 * r.degree
-    assert sum(sizes.values()) == len(adj)
-
-
-def test_weighted_modularity_matches_python(spark):
-    """Weighted Newman Q re-derived from scratch: the weighted-LPA
-    partition, intra-weight and strength-mass sums per community, each
-    term quantized to the 1e-8 grid round-half-up, Q as the integer
-    sum — matched row for row.  Plus the range invariant
-    -0.5 <= Q < 1."""
-    from hackatonbigdata_spark.operators.sequence import _LPA_ROUNDS
-
-    rows = _weighted_edges()
-    adj = _wadj(rows)
-    lbl = _wlpa_labels(adj, _LPA_ROUNDS)
-
-    wtot = sum(w for _, _, w in rows)
-    w_c: dict[int, int] = {}
-    for u, v, w in rows:
-        if lbl[u] == lbl[v]:
-            w_c[lbl[u]] = w_c.get(lbl[u], 0) + w
-    s_c: dict[int, int] = {}
-    size: dict[int, int] = {}
-    for v, nbs in adj.items():
-        s_c[lbl[v]] = s_c.get(lbl[v], 0) + sum(w for _, w in nbs)
-        size[lbl[v]] = size.get(lbl[v], 0) + 1
-    term = {
-        c: int(
-            math.floor(
-                (w_c.get(c, 0) / wtot - (s_c[c] / (2 * wtot)) ** 2) * 1e8
-                + 0.5
-            )
-        )
-        for c in s_c
-    }
-    q8 = sum(term.values())
-
-    got = QUERIES["graph_modularity_weighted"](spark, SF_DIR).collect()
-    assert len(got) == len(s_c) > 0
-    for r in got:
-        c = r.community
-        assert (
-            r.community_size,
-            r.intra_weight,
-            r.strength_sum,
-            r.term_q8,
-            r.q_total_q8,
-        ) == (size[c], w_c.get(c, 0), s_c[c], term[c], q8), f"community {c}"
-    assert -0.5e8 <= q8 < 1e8
-
-
-def test_weighted_pagerank_matches_python(spark):
-    """The weighted-PageRank integer fixpoint replayed in pure Python:
-    picoprob grid, share = (2·pr·wt + s) // (2s), damping
-    (85·s + 50) // 100 — matched node for node after the full
-    iteration count, so any drift in the share rule or the grid shows
-    immediately."""
-    from hackatonbigdata_spark.operators.sequence import (
-        _PR_ITERS,
-        _PR_SCALE,
-    )
-
-    rows = _weighted_edges()
-    adj = _wadj(rows)
-    strength = {v: sum(w for _, w in nbs) for v, nbs in adj.items()}
-    n = len(adj)
-    pr = {v: int(math.floor(_PR_SCALE / n + 0.5)) for v in adj}
-    base = int(math.floor(_PR_SCALE * 15 // 100 / n + 0.5))
-    for _ in range(_PR_ITERS):
-        contrib = {v: 0 for v in adj}
-        for u, nbs in adj.items():
-            s = strength[u]
-            for v, w in nbs:
-                contrib[v] += (2 * pr[u] * w + s) // (2 * s)
-        pr = {v: base + (85 * contrib[v] + 50) // 100 for v in adj}
-
-    got = QUERIES["graph_pagerank_weighted"](spark, SF_DIR).collect()
-    assert len(got) == n > 0
-    ranks = sorted(((-p, v) for v, p in pr.items()))
-    rank_of = {}
-    for i, (negp, v) in enumerate(ranks):
-        rank_of[v] = (
-            rank_of[ranks[i - 1][1]]
-            if i and ranks[i - 1][0] == negp
-            else i + 1
-        )
-    for r in got:
-        assert r.pr_pico == pr[r.part_key], f"part {r.part_key}"
-        assert r.strength == strength[r.part_key]
-        assert r.degree == len(adj[r.part_key])
-        assert r.pr_rank == rank_of[r.part_key]
-    # total probability mass conservation on the grid: sum pr ~ SCALE
-    # (exact up to one grid unit of rounding per node per iteration)
-    assert abs(sum(pr.values()) - _PR_SCALE) <= n * (_PR_ITERS + 1)
-
-
-def test_weighted_family_shares_unweighted_edge_set(spark):
-    """The weighted trio declares the SAME graph as the unweighted
-    shelf: node sets identical, per-node degree identical, and the two
-    strength readouts (weighted LPA vs weighted PageRank) agree — drift
-    in any one query's edge construction breaks this immediately."""
-    wl = {
-        r.part: r
-        for r in QUERIES["graph_label_propagation_weighted"](
-            spark, SF_DIR
-        ).collect()
-    }
-    wp = {
-        r.part_key: r
-        for r in QUERIES["graph_pagerank_weighted"](spark, SF_DIR).collect()
-    }
-    up = {
-        r.part_key: r.degree
-        for r in QUERIES["graph_pagerank_parts"](spark, SF_DIR).collect()
-    }
-    ul = {
-        r.part: r.degree
-        for r in QUERIES["graph_label_propagation"](spark, SF_DIR).collect()
-    }
-    assert set(wl) == set(wp) == set(up) == set(ul)
-    for k in wl:
-        assert wl[k].degree == wp[k].degree == up[k] == ul[k]
-        assert wl[k].strength == wp[k].strength
-    # weighted modularity's community sizes partition the same node set
-    wm = QUERIES["graph_modularity_weighted"](spark, SF_DIR).collect()
-    assert sum(r.community_size for r in wm) == len(wl)
 
 
 # --- planted-cluster ANN fixture --------------------------------------------

@@ -23,7 +23,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from hackatonbigdata_spark.registry import all_queries
+from hackatonbigdata_spark.oracle import compare_frames
+from hackatonbigdata_spark.registry import all_oracles, all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -51,7 +52,9 @@ def daily_pdf() -> pd.DataFrame:
 # autocorrelation), a constant run (zero variance; EWM values equal to the
 # running mean), zeros (the clamp passes a value after a 0), a short trend
 # (the two sides of the lag pairs have different means), repeats, and the
-# 13/14-day boundary of Holt-Winters.
+# 13/14-day boundary of Holt-Winters.  Series 1-3 get null Croston and
+# AR(2) fits: 1 and 3 have no day above their median and an AR(2)
+# denominator r0² - r1² of 0; 2 has one event and fewer than 5 days.
 EDGE_SERIES: dict[int, list[float]] = {
     1: [5.0],
     2: [3.0, 4.0],
@@ -240,10 +243,33 @@ def test_sequential_clamp_properties(spark, daily_pdf):
             prev = v
 
 
+def oracle_check(name: str):
+    """The query equals its DuckDB oracle over ``sf_dir``'s lineitem."""
+
+    def check(spark, sf_dir: str, daily: pd.DataFrame) -> None:
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'")
+        want = con.execute(all_oracles()[name]).fetchdf()
+        con.close()
+        got = all_queries()[name](spark, sf_dir).toPandas()
+        assert len(got) == daily["l_suppkey"].nunique()
+        res = compare_frames(name, got, want)
+        assert res.ok, res.detail
+
+    return check
+
+
 @pytest.mark.parametrize(
     "check",
-    [check_ewm, check_holt_winters, check_autocorr, check_clamp],
-    ids=["ewm", "holt_winters", "autocorr", "clamp"],
+    [
+        check_ewm,
+        check_holt_winters,
+        check_autocorr,
+        check_clamp,
+        oracle_check("croston_ses_sql"),
+        oracle_check("ar2_yule_walker_sql"),
+    ],
+    ids=["ewm", "holt_winters", "autocorr", "clamp", "croston", "ar2"],
 )
 def test_fold_equals_reference_on_edge_series(spark, edge_sf_dir, check):
     check(spark, edge_sf_dir, _daily_pdf(edge_sf_dir))
